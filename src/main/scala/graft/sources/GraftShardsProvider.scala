@@ -46,10 +46,30 @@ import scala.util.Try
   * wraps it in [[GraftShardsSource]], which applies the seek position to
   * each micro-batch. Re-implementing that metadata log inside a custom
   * MicroBatchStream would duplicate proven machinery and gain nothing.
+  * `getBatch` alone is NOT delegated: the inner source's version resolves
+  * the batch's file paths through a fresh file index, which re-lists them
+  * and, past 32 paths, runs a Spark listing job per micro-batch. The
+  * bridge's [[FileSourceBridge.ParquetStream.getBatch]] builds the same
+  * relation from the same log without listing.
   *
-  * SCALE: everything here is per-query-start control plane. The data
-  * plane is the inner file source's partitioned scan; the one driver-side
-  * step is `latest`'s per-shard end resolution — an O(shard count)
+  * MISSING FILES: a file admitted into a batch but deleted before that
+  * batch is built — or rebuilt, when a restart replays an uncommitted
+  * batch — is skipped with a warning and the rest of the batch is
+  * delivered. This is the inner file source's own policy for a vanished
+  * path, kept as is (pinned in GraftShardsProviderSpec). A file that
+  * vanishes after the batch is planned fails the scan, unless
+  * `spark.sql.files.ignoreMissingFiles` is set.
+  *
+  * SCALE: the per-trigger control plane runs on the driver and starts no
+  * Spark job. `getBatch` reads the batch's log entries and makes one
+  * `listStatus` per directory the batch touches; `maxRecordsPerTrigger`
+  * adds one `listStatus` per stream directory, a read of the admitted-file
+  * log and one footer read per newly pending file ([[RecordAdmission]]).
+  * Like the inner source's own per-trigger listing, these listings see
+  * every retained file of the directories they visit. Otherwise
+  * everything here is per-query-start control plane. The data plane is
+  * the inner file source's partitioned scan; the one driver-side step is
+  * `latest`'s per-shard end resolution — an O(shard count)
   * aggregate COLLECTED to the driver, persisted into the source's
   * checkpoint metadata so a RESTART reuses the original subscribe point
   * instead of re-resolving it against a moved stream (checkpoint-stable,
@@ -87,7 +107,7 @@ final class GraftShardsProvider extends StreamSourceProvider with DataSourceRegi
     // definition). Idempotent when the directory exists.
     val root = new org.apache.hadoop.fs.Path(cfg.path)
     root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root)
-    val inner = FileSourceBridge.parquetStreamSource(
+    val stream = FileSourceBridge.parquetStream(
       spark, metadataPath, cfg.schema, cfg.path,
       cfg.maxFilesPerTrigger.map(n => "maxFilesPerTrigger" -> n.toString).toMap)
     val seek: DataFrame => DataFrame = cfg.position match {
@@ -98,9 +118,10 @@ final class GraftShardsProvider extends StreamSourceProvider with DataSourceRegi
         val ends = GraftShardsSource.loadOrResolveLatestEnds(spark, metadataPath, cfg)
         df => GraftShardsSource.afterEnds(df, ends, cfg.schema)
     }
-    new GraftShardsSource(inner, cfg.schema, seek,
+    new GraftShardsSource(stream, cfg.schema, seek,
       recordAdmission = cfg.maxRecordsPerTrigger.map(cap =>
-        new RecordAdmission(spark, metadataPath, cfg.path, cap)))
+        new RecordAdmission(spark.sparkContext.hadoopConfiguration, cfg.path, cap,
+          () => stream.admittedFiles())))
   }
 }
 
@@ -196,15 +217,19 @@ object GraftShardsConfig {
 
 /** The stream source `format("graft-shards")` resolves to: delegates all
   * offset tracking, admission control and `AvailableNow` preparation to
-  * the inner parquet `FileStreamSource`, and applies the validated seek
-  * position to every micro-batch it serves. The wrapper adds no state of
-  * its own, so the WAL/commit-log semantics the StreamingSpec suite pins
-  * (at-least-once replay, takeover, degraded stores) hold unchanged.
+  * the inner parquet `FileStreamSource`, builds each micro-batch from that
+  * source's metadata log through [[FileSourceBridge.ParquetStream.getBatch]]
+  * (no listing job), and applies the validated seek position to every
+  * micro-batch it serves. The wrapper adds no state of its own, so the
+  * WAL/commit-log semantics the StreamingSpec suite pins (at-least-once
+  * replay, takeover, degraded stores) hold unchanged.
   */
-final class GraftShardsSource(inner: Source, override val schema: StructType,
-    seek: DataFrame => DataFrame, recordAdmission: Option[RecordAdmission] = None)
+final class GraftShardsSource(stream: FileSourceBridge.ParquetStream,
+    override val schema: StructType, seek: DataFrame => DataFrame,
+    private[sources] val recordAdmission: Option[RecordAdmission] = None)
   extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
+  private val inner = stream.source
   private val admission: Source with SupportsAdmissionControl with SupportsTriggerAvailableNow =
     inner match {
       case s: Source with SupportsAdmissionControl with SupportsTriggerAvailableNow => s
@@ -214,7 +239,7 @@ final class GraftShardsSource(inner: Source, override val schema: StructType,
 
   override def getOffset: Option[V1Offset] = inner.getOffset
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame =
-    seek(inner.getBatch(start, end))
+    seek(stream.getBatch(start, end))
   override def commit(end: V1Offset): Unit = inner.commit(end)
   override def commit(end: ConnectorOffset): Unit = inner.commit(end)
   override def initialOffset(): ConnectorOffset = inner.initialOffset()
@@ -270,54 +295,75 @@ final class GraftShardsSource(inner: Source, override val schema: StructType,
   * the way KCL's bound is per-GetRecords-call).
   *
   * Per trigger: pending = current listing minus the files the inner
-  * source's own metadata log already admitted ([[FileSourceBridge
-  * .admittedFiles]] — no duplicated seen-files state); record counts come
-  * from parquet FOOTERS (exact row counts, no data read), cached per path
-  * for the life of the query. The file cap is CONSERVATIVE: the largest k
-  * such that the k LARGEST pending files still fit the cap — whichever k
-  * files the inner source then picks, the batch cannot exceed the cap.
-  * Always >= 1 so a single oversized file still makes progress (any
-  * file-granularity admission must; KCL likewise delivers at least one
-  * fetch).
+  * source's own metadata log already admitted (`admitted`, read from
+  * [[FileSourceBridge.ParquetStream.admittedFiles]] — no duplicated
+  * seen-files state); record counts come from parquet FOOTERS (exact row
+  * counts, no data read), cached while the file is pending. The file cap
+  * is CONSERVATIVE: the largest k such that the k LARGEST pending files
+  * still fit the cap — whichever k files the inner source then picks, the
+  * batch cannot exceed the cap. Always >= 1 so a single oversized file
+  * still makes progress (any file-granularity admission must; KCL
+  * likewise delivers at least one fetch).
   *
-  * SCALE: control plane only — one listing (the inner source does its own
-  * anyway) plus one footer read per NOT-yet-admitted file, each cached
-  * forever after. Nothing is proportional to records or retained bytes.
+  * SCALE: control plane only — one directory walk (the inner source does
+  * its own anyway) plus one footer read per newly pending file. Nothing is
+  * proportional to records or retained bytes:
+  *  - the walk is one `listStatus` per directory. `listFiles(root, true)`
+  *    would build a `LocatedFileStatus` per file, which on the local FS
+  *    copies — and so looks up — each file's permission and owner;
+  *  - footer reads share one `ParquetReadOptions`, built once here.
+  *    `ParquetFileReader.open(InputFile)` builds a fresh one from the
+  *    whole Hadoop conf per file, which costs more than the footer read;
+  *  - the footer cache holds only the pending files: a file's entry is
+  *    dropped on the first trigger after it is admitted.
   */
-final class RecordAdmission(spark: SparkSession, metadataPath: String,
-    streamPath: String, val cap: Long) {
+final class RecordAdmission(conf: org.apache.hadoop.conf.Configuration,
+    streamPath: String, val cap: Long, admitted: () => Set[org.apache.hadoop.fs.Path]) {
+  import org.apache.hadoop.fs.{FileStatus, Path}
 
-  private val footerRows = scala.collection.mutable.HashMap.empty[org.apache.hadoop.fs.Path, Long]
+  private val readOptions = org.apache.parquet.HadoopReadOptions.builder(conf).build()
 
-  private def recordCount(p: org.apache.hadoop.fs.Path, conf: org.apache.hadoop.conf.Configuration): Long =
-    footerRows.getOrElseUpdate(p, {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    })
+  // footer row counts of the pending files at the last trigger
+  private var footerRows = Map.empty[Path, Long]
+
+  private[sources] def cachedFooterPaths: Set[Path] = footerRows.keySet
+
+  private def recordCount(s: FileStatus): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, readOptions)
+    try r.getRecordCount finally r.close()
+  }
+
+  /** The not-yet-admitted parquet data files under the stream root, by
+    * qualified path: every directory, recursively; files named `_*` or
+    * `.*` (markers, `.crc` sidecars) and non-`.parquet` files are skipped.
+    */
+  private[sources] def pendingFiles(): Seq[(Path, FileStatus)] = {
+    val root = new Path(streamPath)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) return Nil
+    val done = admitted()
+    val pending = scala.collection.mutable.ArrayBuffer.empty[(Path, FileStatus)]
+    val dirs = scala.collection.mutable.Stack(root)
+    while (dirs.nonEmpty) fs.listStatus(dirs.pop()).foreach { f =>
+      val name = f.getPath.getName
+      if (f.isDirectory) dirs.push(f.getPath)
+      else if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) {
+        val q = fs.makeQualified(f.getPath)
+        if (!done.contains(q)) pending += q -> f
+      }
+    }
+    pending.toSeq
+  }
 
   /** Largest k with the k largest pending files' records <= cap; >= 1. */
   def safeFileCap(): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(streamPath)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return 1
-    val admitted = org.apache.spark.sql.graftbridge.FileSourceBridge
-      .admittedFiles(spark, metadataPath)
-    val pending = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) {
-        val q = fs.makeQualified(f.getPath)
-        if (!admitted.contains(q)) pending += q
-      }
-    }
-    if (pending.isEmpty) return 1
-    val countsDesc = pending.map(recordCount(_, conf)).sortBy(-_)
+    footerRows = pendingFiles().iterator.map { case (q, f) =>
+      q -> footerRows.getOrElse(q, recordCount(f))
+    }.toMap
+    val countsDesc = footerRows.values.toArray.sortBy(-_)
     var sum = 0L; var k = 0
-    while (k < countsDesc.size && sum + countsDesc(k) <= cap) { sum += countsDesc(k); k += 1 }
+    while (k < countsDesc.length && sum + countsDesc(k) <= cap) { sum += countsDesc(k); k += 1 }
     math.max(k, 1)
   }
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.streaming.{ShardedEvents, StreamControl}
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.{Offset => ConnectorOffset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -413,6 +414,196 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
       }
       e.getMessage should include("maxRecordsPerTrigger")
     }
+  }
+
+  // ---- getBatch builds the micro-batch without a listing job ----
+
+  private def partFileCount(dir: String): Int =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("shard=")).map { d =>
+      d.listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    }.sum
+
+  /** Job descriptions of every Spark job `body` starts, in order. A
+    * sentinel job afterwards flushes the listener: the bus delivers one
+    * listener's events in order, so once the sentinel is seen every
+    * earlier job has been too.
+    */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    val sentinel = s"graft-spec-flush-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(sentinel), "listener never saw the sentinel job")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.takeWhile(_ != sentinel)
+  }
+
+  test("getBatch: a micro-batch of more than 32 files runs no listing job and serves the batch table") {
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // paths, resolving a batch through DataSource.resolveRelation runs a
+    // "Listing leaf files" job with one task per file — per micro-batch,
+    // replays included. Ten tranches over 4 shard dirs give >32 files in
+    // few enough directories that the inner source's own root listing
+    // stays on the driver, so any listing job is the batch's.
+    val base = newBase()
+    val dir = s"$base/shards"
+    val events = batchEvents
+    for (t <- 0 until 10) ShardedEvents.appendTranche(events.filter(pmod(col("event_id"), lit(10)) === t), dir, 4)
+    val files = partFileCount(dir)
+    assert(files > 32, s"fixture must exceed the discovery threshold, got $files files")
+    val got = mutable.Buffer.empty[(Long, Int)]
+    val batchFiles = mutable.Buffer.empty[Int]
+    val jobs = jobDescriptions {
+      val q = open(dir, "trim_horizon", Map("maxFilesPerTrigger" -> (files * 2).toString))
+        .select(col("event_id"), col("shard"), input_file_name())
+        .writeStream
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val all = b.collect()
+          batchFiles.synchronized { batchFiles += all.map(_.getString(2)).distinct.length }
+          val rows = all.map(r => (r.getLong(0), r.getInt(1)))
+          got.synchronized { got ++= rows }
+          ()
+        }
+        .start()
+      q.awaitTermination()
+      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+    }
+    batchFiles.synchronized(batchFiles.toVector) shouldBe Vector(files)
+    val listing = jobs.filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"micro-batch ran listing jobs: $listing")
+    got.synchronized(got.toVector).sorted shouldBe
+      events.select(col("event_id"), pmod(col("user_id"), lit(4)).cast("int"))
+        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+  }
+
+  test("missing file: a file deleted before its uncommitted batch replays is skipped, not an error") {
+    // the documented policy, as the inner file source has it: a logged
+    // file that no longer exists when its batch is (re)built is skipped
+    // with a warning; the rest of the batch is delivered
+    val base = newBase()
+    val dir = s"$base/shards"
+    val events = batchEvents
+    ShardedEvents.appendTranche(events, dir, 4)
+    val ckpt = s"$base/ckpt"
+    def run(failFirst: Boolean): (Seq[Long], Seq[String]) = {
+      val got = mutable.Buffer.empty[Long]
+      val inputs = mutable.Buffer.empty[String]
+      val q = open(dir, "trim_horizon", Map("maxFilesPerTrigger" -> "100"))
+        .select(col("event_id"), input_file_name())
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val all = b.collect()
+          inputs.synchronized { inputs ++= all.map(_.getString(1)).distinct }
+          if (failFirst) throw new RuntimeException("injected stop before commit")
+          got.synchronized { got ++= all.map(_.getLong(0)) }
+          ()
+        }
+        .start()
+      try q.awaitTermination() catch { case _: Exception if failFirst => () }
+      if (!failFirst) assert(q.exception.isEmpty, s"replay failed: ${q.exception}")
+      (got.synchronized(got.toVector), inputs.synchronized(inputs.toVector))
+    }
+    val (_, admitted) = run(failFirst = true)
+    assert(admitted.size >= 2, s"batch 0 must admit several files, got $admitted")
+    assert(StreamControl.checkpointCommits(ckpt) == 0, "batch 0 must stay uncommitted")
+    val gone = new org.apache.hadoop.fs.Path(new java.net.URI(admitted.head))
+    val goneIds = spark.read.parquet(gone.toString).select("event_id").collect().map(_.getLong(0)).toSet
+    val fs = gone.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(goneIds.nonEmpty && fs.delete(gone, false))
+    val (ids, replayed) = run(failFirst = false)
+    replayed.toSet shouldBe admitted.toSet - admitted.head
+    ids.sorted shouldBe events.select("event_id").collect().map(_.getLong(0))
+      .filterNot(goneIds).sorted.toSeq
+  }
+
+  test("maxRecordsPerTrigger: the footer cache holds only pending files, never an admitted one") {
+    // the source driven trigger by trigger: each latestOffset recomputes
+    // the pending set and the footer cache with it, so after a trigger
+    // the cache may hold the files that trigger then admitted, but none
+    // an EARLIER trigger admitted; once the drain is done it is empty
+    val base = newBase()
+    val dir = s"$base/shards"
+    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") % 2 === 0), dir, 4)
+    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") % 2 =!= 0), dir, 4)
+    val src = new GraftShardsProvider().createSource(spark.sqlContext, s"$base/meta", None,
+      "graft-shards", Map("path" -> dir, "startingPosition" -> "trim_horizon",
+        "maxRecordsPerTrigger" -> "300")).asInstanceOf[GraftShardsSource]
+    val ra = src.recordAdmission.get
+    // a second, read-only view of the same source log
+    val log = org.apache.spark.sql.graftbridge.FileSourceBridge.parquetStream(
+      spark, s"$base/meta", ShardedEvents.schema, dir, Map.empty)
+    var admitted = Set.empty[org.apache.hadoop.fs.Path]
+    var start: Option[ConnectorOffset] = None
+    var batches = 0
+    var drained = false
+    try while (!drained) {
+      val end = src.latestOffset(start.orNull, src.getDefaultReadLimit)
+      ra.cachedFooterPaths.intersect(admitted) shouldBe empty
+      drained = start.contains(end)
+      if (!drained) {
+        admitted = log.admittedFiles()
+        start = Some(end)
+        batches += 1
+      }
+    } finally { src.stop(); log.source.stop() }
+    assert(batches >= 3, s"the cap must split the drain, got $batches batches")
+    admitted.size shouldBe partFileCount(dir)
+    ra.cachedFooterPaths shouldBe empty
+  }
+
+  test("RecordAdmission: the listStatus walk finds exactly the files a recursive listFiles does") {
+    import org.apache.hadoop.fs.Path
+    val base = newBase()
+    val dir = s"$base/shards"
+    ShardedEvents.appendTranche(batchEvents, dir, 4) // part files, .crc sidecars, _SUCCESS
+    val root = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    val part = fs.listStatus(new Path(dir, "shard=1")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    // a nested shard directory, plus files the walk must skip
+    val nested = new Path(dir, "shard=1/nested/part-nested.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, nested, false, conf)
+    for (skip <- Seq("shard=0/_tmp.parquet", "shard=0/.hidden.parquet", "shard=0/notes.txt",
+        "shard=0/part-x.parquet.crc"))
+      fs.create(new Path(dir, skip)).close()
+
+    // the pre-walk selection: recursive listFiles, filtered by file name
+    val viaListFiles = {
+      val out = mutable.Set.empty[Path]
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val f = it.next()
+        val name = f.getPath.getName
+        if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith("."))
+          out += fs.makeQualified(f.getPath)
+      }
+      out.toSet
+    }
+    val walk = new RecordAdmission(conf, dir, 1000L, () => Set.empty)
+    walk.pendingFiles().map(_._1).toSet shouldBe viaListFiles
+    viaListFiles should contain(fs.makeQualified(nested))
+    viaListFiles.map(_.getName).filter(n => n.contains("_tmp") || n.contains("hidden") ||
+      n.endsWith(".crc") || n.endsWith(".txt")) shouldBe empty
+    // admitted files leave the pending set
+    val one = fs.makeQualified(nested)
+    new RecordAdmission(conf, dir, 1000L, () => Set(one)).pendingFiles().map(_._1).toSet shouldBe
+      viaListFiles - one
   }
 
   test("format stream checkpoints like any source: WAL offsets commit per epoch") {

@@ -1,7 +1,5 @@
 package graft
 import java.lang.management.ManagementFactory
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.StateStoreBridge
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main. Per-query timing methodology:
@@ -18,11 +16,12 @@ import scala.jdk.CollectionConverters._
   *    needed for counting — it under-measures projection/window queries);
   *  - failures propagate: a broken query must fail the bench run loudly,
   *    not score ~0 s;
-  *  - cross-query residue is scrubbed after every run (`scrub` below): the
-  *    ~39 streaming queries each load state-store providers keyed by their
-  *    fresh-per-run checkpoint dir into `StateStore.loadedProviders` (never
-  *    evicted on query stop — s2 alone pins ~100k dedup keys per run) and
-  *    register a `graft_mem_*` memory-sink temp view whose rows
+  *  - cross-query residue is scrubbed after every run
+  *    (`GraftSession.scrub`): the ~39 streaming queries each load
+  *    state-store providers keyed by their fresh-per-run checkpoint dir
+  *    into `StateStore.loadedProviders` (never evicted on query stop —
+  *    s2 alone pins ~100k dedup keys per run) and register a
+  *    `graft_mem_*` memory-sink temp view whose rows
   *    `clearCache()` does not drop. Left in place, 195 query executions
   *    accumulate enough heap that GC pressure inflates allocation-heavy
   *    queries (d26/d27) 4-30x — the r6 bench artifact measured the harness,
@@ -295,10 +294,10 @@ object Bench {
     if (m.find()) m.group(1).toInt.max(1) else 1
   }
 
-  private def gcTimeMs: Long =
+  private[graft] def gcTimeMs: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
 
-  private def processCpuNs: Long =
+  private[graft] def processCpuNs: Long =
     ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
       case _ => -1L
@@ -369,46 +368,23 @@ object Bench {
     java.nio.file.Files.deleteIfExists(lastJson)
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default = the deployment's canonical local[32] (32 executor
-    // threads, shuffle.partitions=32). The scaffold's old default of 4
-    // silently measured a different engine config: at sf0.1 a local[4]
-    // run walls ~35% higher than local[32], which against a local[32]
-    // baseline reads as a phantom regression. SPARK_GRAFT_CPUS overrides
-    // for constrained boxes, and the JSON records which was used.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts was TIMESTAMP(NANOS) in older testdata generations (harmless
-      // for the current micros schema); graft.Tables.events normalizes either.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    // the deployment's canonical local[32] unless SPARK_GRAFT_CPUS says
+    // otherwise (GraftSession.builder). A local[4] run at sf0.1 walls ~35%
+    // higher than local[32], so the JSON records which parallelism ran.
+    val spark = GraftSession.builder().getOrCreate()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("WARN")
 
     def runOnce(name: String): Unit =
       try {
         // label every job with its query so the UI / listener audits
-        // (ScratchJobs, event logs) attribute stages without guessing
+        // (`Probe jobs`, event logs) attribute stages without guessing
         spark.sparkContext.setJobDescription(s"bench: $name")
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       } catch {
         case e: Throwable => throw new QueryFailed(name, e)
       } finally spark.sparkContext.setJobDescription(null)
-
-    // Scrub cross-query residue (see scaladoc): evict every state-store
-    // provider the streaming queries loaded and drop their memory-sink temp
-    // views so the rows become collectable. Runs OUTSIDE the timed window.
-    def scrub(): Unit = {
-      spark.catalog.clearCache()
-      StateStoreBridge.unloadAll()
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("graft_mem_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-    }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val lowParWallGate = 1.0 * replicationOf(sfDir)
@@ -431,7 +407,7 @@ object Bench {
       val t0 = System.nanoTime()
       runOnce(n)
       coldSec(n) = (System.nanoTime() - t0) / 1e9
-      scrub()
+      GraftSession.scrub(spark)
     } // warm-up
     allCoreSamples += allCoreSpinProbe()
     allCoreSamples += allCoreSpinProbe()
@@ -465,7 +441,7 @@ object Bench {
       val st1 = stealSec()
       val steal = if (st0 >= 0 && st1 >= 0) st1 - st0 else -1.0
       val m = Measure(dt, (processCpuNs - cpu0) / 1e9, (gcTimeMs - gc0) / 1e3, spin, steal)
-      scrub()
+      GraftSession.scrub(spark)
       m
     }
     val sampleEvery = math.max(1, names.size / 4)

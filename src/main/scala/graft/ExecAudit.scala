@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** EXECUTED-plan audit: run a query to completion (noop sink) and count
-  * the physical markers in its FINAL plan — the post-AQE executed tree,
-  * not the pre-execution estimate ScanAudit/ScanProfileSpec pin. This is
+/** EXECUTED-plan audit: run a query to completion and count the
+  * physical markers in its FINAL plan — the post-AQE executed tree, not
+  * the pre-execution estimate `Probe scan`/ScanProfileSpec pin. This is
   * the instrument behind the r15 cache-revert claim ("the plain forms'
   * canonically-equal exchanges ReusedExchange into one kernel pass at
   * runtime"): the logical scan count of those plans is HIGHER than the
   * physical pass count, and only the executed plan shows the difference.
-  * ExecutedPlanSpec pins the counts for exactly those queries.
-  * Usage: `runMain graft.ExecAudit <name>[,<name>...]`.
+  * ExecutedPlanSpec pins the counts for exactly those queries; `Probe
+  * exec` prints them for any query.
   */
 object ExecAudit {
 
@@ -50,30 +50,5 @@ object ExecAudit {
       nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ReusedExchangeExec]),
       imts.size,
       imts.map(_.relation.cacheBuilder).distinct.size)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val names = args(0).split(',').toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    for (name <- names) {
-      spark.catalog.clearCache()
-      val df = SparkEntry.queries(name)(spark, sf)
-      val st = executedStats(df)
-      println(s"EXEC $name directScans=${st.directParquetScans} " +
-        s"reusedExchange=${st.reusedExchanges} inMemoryScans=${st.inMemoryScans} " +
-        s"distinctCaches=${st.distinctCaches}")
-      if (sys.env.contains("EXEC_AUDIT_DUMP"))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"/tmp/exec_$name.txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-    }
-    spark.stop()
   }
 }

@@ -1,17 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Plan-build-only audit: for every registered BATCH query, the number
-  * of physical file scans in the (pre-execution) plan and which columns
-  * each scan reads (usage: runMain graft.ScanAudit [minScans]). A query
+/** Plan-build-only audit: the physical file scans of a query's
+  * (pre-execution) plan and which columns each scan reads. A query
   * re-reading a wide column it could carry through a projection is the
-  * most expensive silent plan regression at 100 TB — this prints the
-  * whole suite's scan profile in one pass so a new redundancy shows up
-  * as a diff, not as a bench surprise. ScanProfileSpec pins the
-  * resulting per-query counts, so a regression fails the test suite
-  * too. Streaming queries are skipped (plan construction starts their
-  * source setup).
+  * most expensive silent plan regression at 100 TB — `Probe scan` prints
+  * the whole suite's scan profile in one pass so a new redundancy shows
+  * up as a diff, not as a bench surprise, and ScanProfileSpec pins the
+  * per-query counts, so a regression fails the test suite too.
   */
 object ScanAudit {
 
@@ -34,34 +31,5 @@ object ScanAudit {
         val pushed = s.metadata.getOrElse("PushedFilters", "[]")
         s"[${cols.mkString(" ")}] pushed=$pushed"
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val minScans = args.headOption.map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!name.startsWith("s")) {
-        try {
-          // drop every live cache first: CacheManager substitutes ANY
-          // matching subtree at plan time, so a cache registered by an
-          // earlier query in this loop would hide a later query's own
-          // scans (cross-query adoption is real and useful at runtime,
-          // but the audit pins each query's INTRINSIC profile)
-          spark.catalog.clearCache()
-          val scans = fileScans(fn(spark, sf))
-          if (scans.size >= minScans)
-            println(s"SCANS $name n=${scans.size}\n  " + scans.mkString("\n  "))
-        } catch { case e: Throwable =>
-          println(s"SCANS $name ERROR ${e.getClass.getSimpleName}")
-        }
-      }
-    }
-    spark.stop()
   }
 }

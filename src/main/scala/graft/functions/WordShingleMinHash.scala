@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * family, the base hash only drives candidate RECALL: emitted pairs are
   * verified with exact shingle-set Jaccard, so swapping the hash cannot
   * change the oracle result, only which non-pairs are examined (recall
-  * re-audited via graft.RecallCheck: 256/256 at sf0.1).
+  * re-audited via `Test/runMain graft.RecallCheck`: 256/256 at sf0.1).
   *
   * Fewer than `shingleWords` words yields the empty-set signature (all
   * Long.MaxValue); callers filter those rows like d2 always has.

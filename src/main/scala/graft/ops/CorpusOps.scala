@@ -62,7 +62,8 @@ object CorpusOps {
   // threshold itself, <2e-6 at s >= 0.65, negligible above. (12 bands was
   // ~0.5% at s = 0.6 — too loose for an exact-equality oracle; a
   // borderline pair in a regenerated corpus could flip the gate. Re-run
-  // graft.RecallCheck whenever the corpus or these parameters change.)
+  // `Test/runMain graft.RecallCheck` whenever the corpus or these
+  // parameters change.)
   // d14 (char grams, threshold 0.7, high background) uses all 96 in 32
   // bands of 3 rows. The seed pool is append-only: Seeds(i) depends only
   // on i, so widening it never changes existing signatures. Candidate
@@ -111,7 +112,7 @@ object CorpusOps {
   /** [[nearDupPairs]]'s one live lowered-text cache: the `(doc_id, t)`
     * projection feeds the signature kernel AND both verify join sides —
     * before this each consumer re-read the text column and re-ran
-    * lower/trim (ScanAudit: three document scans; now one). The persist
+    * lower/trim (`Probe scan`: three document scans; now one). The persist
     * is the text column itself (one spill-ready extra copy,
     * MEMORY_AND_DISK) — the [[ReplaceOnCallCache]] trade d49/d53 make
     * for their hash streams, here buying two deleted full-text scans
@@ -288,7 +289,8 @@ object CorpusOps {
     // key, and fixed-width longs compare/serialize several times cheaper
     // than ~40-char strings. A cross-band 2^-64 hash collision can only
     // ADD a candidate pair, which the exact verify then rejects — recall
-    // and the emitted pairs are unchanged (RecallCheck re-confirmed).
+    // and the emitted pairs are unchanged (`Test/runMain graft.RecallCheck`
+    // re-confirmed).
     val bandKeys = (0 until bands).map { b =>
       xxhash64((0 until rowsPerBand).map(r => col("mh").getItem(b * rowsPerBand + r)): _*)
     }
@@ -1433,7 +1435,7 @@ object CorpusOps {
     val docs = Tables.documents(spark, sfDir)
     // nmin as a global window over the O(langs) aggregate, not a
     // crossJoin with a second aggregate of the same counts — the join
-    // form re-derived counts and re-scanned the lang column (ScanAudit:
+    // form re-derived counts and re-scanned the lang column (`Probe scan`:
     // 3 scans -> 2); the unpartitioned window is over |langs| rows
     val rates = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
       .withColumn("nmin", min(col("n")).over(

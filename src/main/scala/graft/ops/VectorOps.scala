@@ -259,7 +259,7 @@ object VectorOps {
     */
   /** [[srpNearDupPairs]]'s one live corpus cache: the `(vec_id, v)`
     * relation feeds the signature kernel AND both verify join sides —
-    * ScanAudit read SIX embedding scans for d16 (the planted-corpus
+    * `Probe scan` read SIX embedding scans for d16 (the planted-corpus
     * union doubled every consumer's scan count) — now one. The persist
     * is one spill-ready copy of the vector corpus
     * ([[ReplaceOnCallCache]]; the d2DocsCache trade for vectors).

@@ -72,17 +72,17 @@ import scala.util.Try
   * `latest`'s per-shard end resolution — an O(shard count)
   * aggregate COLLECTED to the driver, persisted into the source's
   * checkpoint metadata so a RESTART reuses the original subscribe point
-  * instead of re-resolving it against a moved stream (checkpoint-stable,
-  * unlike a re-run of the harness-level
-  * [[ShardedEvents.readStreamFrom]]). Two `latest` costs are NOT O(shard
-  * count) and are handled explicitly: (a) the one-time end resolution
-  * itself aggregates over the retained stream — a single column-pruned
-  * pass over (shard, event_id), paid once per stream lifetime, never on
-  * restart; (b) batch 0's scan would otherwise read every pre-subscribe
-  * file just to join-discard it, so [[GraftShardsSource.afterEnds]]
-  * plants a coarse `event_id > min(end)` prefilter under the exact join
-  * — pushable to parquet row-group stats, which skip the retained
-  * history unread (plan-pinned in GraftShardsProviderSpec).
+  * instead of re-resolving it against a moved stream (checkpoint-stable).
+  * Each micro-batch then applies the frozen cut as one filter against a
+  * map literal — no join, no extra Spark job. Two `latest` costs are NOT
+  * O(shard count) and are handled explicitly: (a) the one-time end
+  * resolution itself aggregates over the retained stream — a single
+  * column-pruned pass over (shard, event_id), paid once per stream
+  * lifetime, never on restart; (b) batch 0's scan would otherwise read
+  * every pre-subscribe file just to discard it, so
+  * [[GraftShardsSource.afterEnds]] adds a coarse `event_id > min(end)`
+  * prefilter — pushable to parquet row-group stats, which skip the
+  * retained history unread (plan-pinned in GraftShardsProviderSpec).
   */
 final class GraftShardsProvider extends StreamSourceProvider with DataSourceRegister {
 
@@ -116,7 +116,7 @@ final class GraftShardsProvider extends StreamSourceProvider with DataSourceRegi
         df => df.filter(col("ts") >= lit(ts).cast("timestamp"))
       case GraftShardsConfig.Latest =>
         val ends = GraftShardsSource.loadOrResolveLatestEnds(spark, metadataPath, cfg)
-        df => GraftShardsSource.afterEnds(df, ends, cfg.schema)
+        df => GraftShardsSource.afterEnds(df, ends)
     }
     new GraftShardsSource(stream, cfg.schema, seek,
       recordAdmission = cfg.maxRecordsPerTrigger.map(cap =>
@@ -431,31 +431,29 @@ object GraftShardsSource {
   }
 
   /** Kinesis `LATEST` filter: drop records at or before the frozen end of
-    * their shard; shards with no snapshot row (created after subscribe)
+    * their shard; shards with no snapshot entry (created after subscribe)
     * pass through whole.
     *
-    * The exact per-shard cut is a broadcast join, which parquet cannot
-    * push into the scan — alone it would make batch 0 READ every
-    * pre-subscribe file just to discard it, a real cost against a long
-    * retained stream. A coarse scan-PUSHABLE prefilter fixes that:
-    * `event_id > min(start_after)`. Sound because event_id is the
-    * STREAM-assigned sequence number ([[ShardedEvents.Seek.Latest]]):
-    * for a snapshotted shard, min <= that shard's own frozen end, so
-    * nothing the exact filter keeps is dropped; for a post-subscribe
-    * shard, sequence numbers are assigned at append time and increase
-    * stream-wide (the Kinesis model), so its records all sit above every
-    * pre-subscribe end. Parquet row-group stats on event_id then skip
-    * the retained history without reading it.
+    * One filter, no join: the snapshot is O(shard count), so the exact
+    * per-shard cut looks the shard up in a map literal — a missing shard
+    * reads null and passes. Parquet cannot push that lookup into the
+    * scan, so alone it would make batch 0 READ every pre-subscribe file
+    * just to discard it, a real cost against a long retained stream. A
+    * coarse scan-PUSHABLE prefilter fixes that: `event_id > min(end)`.
+    * Sound because event_id is the STREAM-assigned sequence number
+    * (Kinesis `LATEST` seeks a sequence position, and the stream assigns
+    * sequence numbers at append time): for a snapshotted shard, min <=
+    * that shard's own frozen end, so nothing the exact filter keeps is
+    * dropped; for a post-subscribe shard, sequence numbers increase
+    * stream-wide, so its records all sit above every pre-subscribe end.
+    * Parquet row-group stats on event_id then skip the retained history
+    * without reading it.
     */
-  def afterEnds(df: DataFrame, ends: Seq[(Int, Long)], schema: StructType): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val endsDf = ends.toDF("shard", "start_after")
-    val coarse =
-      if (ends.isEmpty) df
-      else df.filter(col("event_id") > lit(ends.map(_._2).min))
-    coarse.join(broadcast(endsDf), Seq("shard"), "left")
-      .filter(col("start_after").isNull || col("event_id") > col("start_after"))
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-  }
+  def afterEnds(df: DataFrame, ends: Seq[(Int, Long)]): DataFrame =
+    if (ends.isEmpty) df
+    else {
+      val end = typedLit(ends.toMap).apply(col("shard"))
+      df.filter(col("event_id") > lit(ends.map(_._2).min))
+        .filter(end.isNull || col("event_id") > end)
+    }
 }

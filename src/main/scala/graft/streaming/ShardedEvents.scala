@@ -142,57 +142,4 @@ object ShardedEvents {
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.parquet(dir)
   }
-
-  /** Initial stream position (O10) — the three seek modes the reference
-    * enumerates (ConsumerConfig.scala:115-139: `trim-horizon`, `latest`,
-    * `at-timestamp`).
-    */
-  sealed trait Seek
-  object Seek {
-    /** Start at the oldest retained record of every shard. */
-    case object TrimHorizon extends Seek
-    /** Start at the first record with event time >= `ts` (pushed to the scan). */
-    final case class AtTimestamp(ts: String) extends Seek
-    /** Start at the current END of each shard: only records appended after
-      * the stream opens are delivered, and shards created later are read
-      * from their beginning — Kinesis `LATEST` semantics. "End" is a
-      * SEQUENCE position: event_id plays the sequence number here and, as
-      * in Kinesis (where the stream assigns them), must be monotone per
-      * shard — a producer re-sending an old payload gets a new event_id,
-      * it does not reuse the old one.
-      */
-    case object Latest extends Seek
-  }
-
-  /** Open the stream at a seek position. `Latest` resolves each shard's
-    * current end sequence ONCE, at open time — one per-shard aggregate
-    * collected to O(shard count) rows, the same shard-iterator resolution
-    * any Kinesis subscribe performs. (It must be eager: a lazy static
-    * DataFrame in a stream-static join is re-evaluated every micro-batch,
-    * which would advance the seek point as new records land.) The frozen
-    * snapshot then anti-filters the stream via a broadcast join; shards
-    * created after open have no snapshot row and pass through whole.
-    */
-  def readStreamFrom(spark: SparkSession, dir: String, seek: Seek,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = seek match {
-    case Seek.TrimHorizon => readStream(spark, dir, maxFilesPerTrigger)
-    case Seek.AtTimestamp(ts) =>
-      readStream(spark, dir, maxFilesPerTrigger).filter(col("ts") >= lit(ts).cast("timestamp"))
-    case Seek.Latest =>
-      import spark.implicits._
-      val ends = spark.read.schema(schema).parquet(dir)
-        .groupBy(col("shard")).agg(max(col("event_id")).as("start_after"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      val endsDf = ends.toDF("shard", "start_after")
-      // coarse scan-pushable prefilter under the exact per-shard join —
-      // same construction and soundness argument as
-      // GraftShardsSource.afterEnds (sequence numbers increase stream-wide)
-      val stream = readStream(spark, dir, maxFilesPerTrigger)
-      val coarse =
-        if (ends.isEmpty) stream
-        else stream.filter(col("event_id") > lit(ends.map(_._2).min))
-      coarse.join(broadcast(endsDf), Seq("shard"), "left")
-        .filter(col("start_after").isNull || col("event_id") > col("start_after"))
-        .drop("start_after")
-  }
 }

@@ -139,7 +139,7 @@ object StreamingQueries {
     *  - `parallelPartitionDiscovery.threshold=512`: the sharded stream
     *    layouts hold ~40 part files, just past the default 32-path
     *    threshold, so EVERY micro-batch's source listing launched a
-    *    distributed listing job (ScratchJobs: one "Listing leaf files"
+    *    distributed listing job (`Probe jobs`: one "Listing leaf files"
     *    job per batch per query) to stat a few dozen local files.
     *    Driver-side listing is the right side of that trade until the
     *    file count reaches the thousands; a 100 TB object-store layout
@@ -197,8 +197,8 @@ object StreamingQueries {
   }
 
   /** Streaming initial-position seek (O10, ConsumerConfig.scala:115-139 in
-    * the reference): the stream starts at the position described by
-    * [[ShardedEvents.Seek]]. `at-timestamp` is a pushed-down event-time
+    * the reference): the stream starts at the `graft-shards`
+    * `startingPosition`. `at-timestamp` is a pushed-down event-time
     * predicate — the same seek the Kinesis connector's
     * `startingPosition=at_timestamp` performs, expressed declaratively so
     * it prunes at the scan.

@@ -1,12 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+/** Recall audit for the LSH near-dup operators (d2, d14, d16) against
+  * brute-force all-pairs truth at sf0.1. Test scope: the O(N^2) truth
+  * joins must never ship. Usage: `Test/runMain graft.RecallCheck`.
+  */
 object RecallCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.1"
     val docs = Tables.documents(spark, sf)

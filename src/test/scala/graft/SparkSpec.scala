@@ -35,21 +35,11 @@ trait SparkSpec extends BeforeAndAfterAll { self: Suite =>
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts was TIMESTAMP(NANOS) in older testdata generations (harmless
-      // for the current micros schema); graft.Tables.events normalizes either.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the production deployment hooks — specs run under them so the
-      // real paths are tested: the SQL function surface
-      // (GraftExtensionsSpec) and config-driven stats registration, the
-      // reflective ConsumerStats.scala:33-42 analog (StreamingSpec).
-      // streamingQueryListeners is a STATIC conf: builder-time only.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    // the production session at 4 cores, plus the config-driven stats
+    // registration — the reflective ConsumerStats.scala:33-42 analog
+    // (StreamingSpec). streamingQueryListeners is a STATIC conf:
+    // builder-time only.
+    val s = GraftSession.builder(4)
       .config("spark.sql.streaming.streamingQueryListeners",
         "graft.streaming.GraftStats")
       .getOrCreate()

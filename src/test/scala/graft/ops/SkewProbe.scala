@@ -1,5 +1,4 @@
 package graft.ops
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Far-point probe for the band skew guard: one pathological band bucket
@@ -12,9 +11,7 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 15000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val banded = ((0L until n).map(i => (i, 0, 7L)) ++

@@ -290,6 +290,38 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
       s"coarse latest prefilter not pushed into the batch scan:\n$lastPlan")
   }
 
+  test("latest: the per-shard cut is one filter — no broadcast, no join in the micro-batch plan") {
+    // the frozen snapshot is O(shard count): looking the shard up in a
+    // map literal costs no exchange, no per-batch local relation and no
+    // broadcast job, where a join to the snapshot paid all three
+    val base = newBase()
+    val dir = s"$base/shards"
+    val ids = batchEvents.select("event_id").collect().map(_.getLong(0)).sorted
+    val cut = ids(ids.length / 2)
+    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") <= cut), dir, 4)
+    val ckpt = s"$base/ckpt"
+    collectIds(open(dir, "latest"), ckpt) shouldBe empty
+    // appended after subscribe, into 4 new shards too: all of it flows
+    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") > cut), dir, 8)
+    val got = mutable.Buffer.empty[Long]
+    val q = open(dir, "latest")
+      .select("event_id")
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        got.synchronized { got ++= b.collect().map(_.getLong(0)) }
+        ()
+      }
+      .start()
+    q.awaitTermination()
+    val lastPlan = org.apache.spark.sql.graftbridge.StreamPlanBridge.lastExecutedPlan(q)
+    assert(lastPlan.contains("FileScan"), s"no executed micro-batch plan captured:\n$lastPlan")
+    assert(!lastPlan.contains("BroadcastExchange") && !lastPlan.contains("Join"),
+      s"latest cut still joins the snapshot:\n$lastPlan")
+    got.synchronized(got.sorted.toVector) shouldBe ids.filter(_ > cut).toVector
+  }
+
   test("options: seek-column validation is case-insensitive, like Spark's column resolution") {
     // a caller schema naming the columns 'TS'/'EVENT_ID' resolves fine in
     // the seek filters (Spark's default resolution is case-insensitive),

@@ -1261,7 +1261,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     ShardedEvents.appendTranche(events.filter(col("event_id") <= cut), dir, 4)
 
     val got = mutable.Buffer.empty[Long]
-    val q = ShardedEvents.readStreamFrom(spark, dir, ShardedEvents.Seek.Latest)
+    val q = spark.readStream.format("graft-shards")
+      .option("path", dir)
+      .option("startingPosition", "latest")
+      .load()
       .select("event_id")
       .writeStream
       .option("checkpointLocation", s"$base/ckpt")

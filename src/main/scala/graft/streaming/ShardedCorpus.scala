@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,22 +32,5 @@ object ShardedCorpus {
     ShardedEvents.routed(Tables.documents(spark, sfDir), col("doc_id"), col("doc_id"), NumShards)
       .write.mode("overwrite").partitionBy("shard").parquet(outDir)
     ShardedEvents.sequenceFileClock(outDir)
-  }
-
-  /** Open the corpus stream through the PACKAGED source: the provider's
-    * schema is caller-overridable (`.schema(...)`), so the one registered
-    * `format("graft-shards")` serves both record layouts — events by
-    * default, documents here. `trim_horizon` because corpus ingest always
-    * replays the full retained stream; the seek positions that need
-    * event/sequence columns (`latest`, `at_timestamp`) validate their
-    * required columns against the caller schema and are simply not used
-    * here.
-    */
-  def readStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.format("graft-shards").schema(schema)
-      .option("path", dir)
-      .option("startingPosition", "trim_horizon")
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.load()
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,17 +30,5 @@ object ShardedEmbeddings {
     ShardedEvents.routed(Tables.embeddings(spark, sfDir), col("vec_id"), col("vec_id"), NumShards)
       .write.mode("overwrite").partitionBy("shard").parquet(outDir)
     ShardedEvents.sequenceFileClock(outDir)
-  }
-
-  /** Open the embedding stream through the PACKAGED source (caller
-    * schema, `trim_horizon` — ingest replays the full retained stream,
-    * as [[ShardedCorpus.readStream]]).
-    */
-  def readStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.format("graft-shards").schema(schema)
-      .option("path", dir)
-      .option("startingPosition", "trim_horizon")
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.load()
   }
 }

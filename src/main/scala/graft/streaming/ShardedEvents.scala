@@ -5,16 +5,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The Kinesis-shaped streaming source simulation (O1, SURVEY.md §1.4).
+/** The PRODUCER side of the Kinesis-shaped sharded stream (O1,
+  * SURVEY.md §1.4): the layout, the routing and the file clock.
   *
   * The reference's source is a merged stream of per-shard ordered record
-  * queues (KinesisSource.scala:46-95, 188-204). Spark's file stream source
-  * gives the same model offline: the event table is laid out as one
-  * directory per shard (shard = hash of the partition key, exactly how
-  * Kinesis routes partitionKey -> shard), and `readStream` tails the
-  * directory tree with declarative admission control
-  * (`maxFilesPerTrigger` — O2/O9's bounded-queue backpressure collapses
-  * into pull-based micro-batching).
+  * queues (KinesisSource.scala:46-95, 188-204). Here the event table is
+  * laid out as one directory per shard (shard = hash of the partition
+  * key, exactly how Kinesis routes partitionKey -> shard), each shard an
+  * ordered run of part files whose modification times are its arrival
+  * clock. Reading is not done here: every consumer — gate query, spec or
+  * library user — opens the layout through the registered
+  * `format("graft-shards")` source ([[graft.sources.GraftShardsProvider]];
+  * the gates and specs call it through [[StreamingQueries.shardStream]]),
+  * whose options carry the seek position and admission control.
   *
   * At 100 TB: the shard directories are the stream's partitions; a real
   * Kinesis connector surfaces shards as input partitions the same way.
@@ -84,10 +87,10 @@ object ShardedEvents {
   /** Append one tranche of records routed across `numShards` shards — the
     * RE-SHARDING analog. A split widens the shard set (4→8: records route
     * to child shards, new `shard=N` dirs appear), a merge narrows it
-    * (8→2). A live `readStream` discovers the new directories on its next
-    * micro-batch listing, exactly as KCL workers pick up child shards
-    * after a resharding event; the reference proves consumer completeness
-    * across both transitions (KinesisSourceTest.scala:182-228).
+    * (8→2). A live `graft-shards` stream discovers the new directories on
+    * its next micro-batch listing, exactly as KCL workers pick up child
+    * shards after a resharding event; the reference proves consumer
+    * completeness across both transitions (KinesisSourceTest.scala:182-228).
     */
   def appendTranche(events: DataFrame, outDir: String, numShards: Int): Unit = {
     val before = partFiles(outDir).map(_.getAbsolutePath).toSet
@@ -123,23 +126,5 @@ object ShardedEvents {
     df.withColumn("shard", pmod(key, lit(numShards)).cast("int"))
       .repartitionByRange(width, col("shard"), order)
       .sortWithinPartitions(col("shard"), order)
-  }
-
-  /** Open the sharded directory as a stream. `maxFilesPerTrigger` is the
-    * record-intake admission control (O9) and the `throttle` analog (C7):
-    * it bounds work per micro-batch the way the reference's size-0 queue
-    * bounds the KCL thread.
-    */
-  def readStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    openStream(spark, dir, schema, maxFilesPerTrigger)
-
-  /** The one file-stream opener behind every sharded source (events +
-    * corpus): schema'd parquet tail with optional admission control.
-    */
-  private[streaming] def openStream(spark: SparkSession, dir: String,
-      streamSchema: StructType, maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val r = spark.readStream.schema(streamSchema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(dir)
   }
 }

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end Structured Streaming queries wired into the driver's
   * CORRECTNESS gate: each runs a real streaming query — sharded file
@@ -31,20 +32,72 @@ object StreamingQueries {
 
   private val runCounter = new AtomicLong(0)
 
-  // The sharded layout is the SOURCE (static at query time), so it is
-  // materialized once per (JVM, sfDir); every query run still gets a
-  // fresh checkpoint location and result table.
-  private val shardCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // Each sharded layout is the SOURCE (static at query time), so it is
+  // materialized once per (JVM, layout, sfDir); every query run still gets
+  // a fresh checkpoint location and result table.
+  private val shardDirs = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  private def freshDirs(spark: SparkSession, sfDir: String): (String, String, String) = {
-    val shardDir = shardCache.computeIfAbsent(sfDir, { _ =>
-      val d = Files.createTempDirectory("graft-stream-").toString + "/shards"
-      ShardedEvents.materialize(spark, sfDir, d)
+  private def shardDir(layout: String, sfDir: String)(write: String => Unit): String =
+    shardDirs.computeIfAbsent((layout, sfDir), { _ =>
+      val d = Files.createTempDirectory(s"graft-$layout-").toString + "/shards"
+      write(d)
       d
     })
-    val runId = runCounter.incrementAndGet()
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    (shardDir, ckpt, s"graft_mem_${runId}_${System.nanoTime()}")
+
+  private def eventShards(spark: SparkSession, sfDir: String): String =
+    shardDir("events", sfDir)(ShardedEvents.materialize(spark, sfDir, _))
+  private def corpusShards(spark: SparkSession, sfDir: String): String =
+    shardDir("corpus", sfDir)(ShardedCorpus.materialize(spark, sfDir, _))
+  private def embedShards(spark: SparkSession, sfDir: String): String =
+    shardDir("embed", sfDir)(ShardedEmbeddings.materialize(spark, sfDir, _))
+
+  /** Open a sharded stream directory through the REGISTERED source — the
+    * packaged `format("graft-shards")` entry point a library user calls
+    * ([[graft.sources.GraftShardsProvider]], the
+    * `KinesisSource(consumerConfig)` analog). It is the one reader of
+    * every gate query, spec and test harness, so the CORRECTNESS gate and
+    * the crash specs run the surface a user deploys. `schema` selects the
+    * record layout (events by default; [[ShardedCorpus.schema]],
+    * [[ShardedEmbeddings.schema]]); `maxFilesPerTrigger` is the
+    * record-intake admission control (O9) and the `throttle` analog (C7):
+    * it bounds work per micro-batch the way the reference's size-0 queue
+    * bounds the KCL thread.
+    *
+    * The schema is declared with the `shard` partition column last. The
+    * inner file source delivers each batch as data columns, then
+    * partition columns, and Spark binds a batch to the declared schema by
+    * POSITION, so a caller schema with `shard` earlier (the bounded
+    * trackers' `..., shard, ts`) would swap two columns' values.
+    */
+  private[graft] def shardStream(spark: SparkSession, dir: String,
+      schema: StructType = ShardedEvents.schema,
+      maxFilesPerTrigger: Option[Int] = None,
+      startingPosition: String = "trim_horizon"): DataFrame = {
+    val (shard, data) = schema.partition(_.name == "shard")
+    val r = spark.readStream.format("graft-shards").schema(StructType(data ++ shard))
+      .option("path", dir)
+      .option("startingPosition", startingPosition)
+    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
+    r.load()
+  }
+
+  /** Run one `Trigger.AvailableNow` query to completion on a fresh
+    * checkpoint directory; a failed query throws here.
+    */
+  private def runAvailableNow(w: DataStreamWriter[Row]): Unit =
+    w.option("checkpointLocation", Files.createTempDirectory("graft-ckpt-").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** Run `df` to completion into a fresh memory-sink table and return it.
+    * The table is named `graft_mem_*`, the prefix
+    * [[graft.GraftSession.scrub]] drops result views by.
+    */
+  private def runToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
+    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
+    runAvailableNow(df.writeStream.outputMode(mode).format("memory").queryName(mem))
+    df.sparkSession.table(mem)
   }
 
   /** Streaming state-partition sizing rule (guide §2.2/§5, r15 verdict
@@ -89,19 +142,6 @@ object StreamingQueries {
       }
     } catch { case _: Throwable => 0L }
 
-  /** Run `body` with streaming-state partitioning sized to these queries'
-    * state volume, restoring the session default afterwards. The state
-    * partition count is checkpoint-PERMANENT (fixed at the first batch
-    * forever), so a streaming job must size it deliberately instead of
-    * inheriting the batch shuffle default: every stateful operator keeps
-    * one or more store instances per partition, and when state is small
-    * the per-store load/commit overhead dominates the actual work. Sizing
-    * is scale-adaptive ([[statePartitionsFor]] over the query's source
-    * table bytes — at fixture SFs it lands on the sweep-optimal floor, at
-    * corpus scale it grows with the data). Session-conf scoping is safe
-    * here because the driver runs queries sequentially; the restore keeps
-    * batch queries on the session default.
-    */
   // per-source sizing shorthands: each streaming query derives its state
   // width from ITS source table's bytes (events / documents / embeddings)
   private def eventsStateParts(sfDir: String): Int =
@@ -136,23 +176,37 @@ object StreamingQueries {
     *    and never recover from it, so the sidecars are pure small-file
     *    I/O (2× the checkpoint file count) with nothing to protect; a
     *    durable production checkpoint keeps the default.
-    *  - `parallelPartitionDiscovery.threshold=512`: the sharded stream
-    *    layouts hold ~40 part files, just past the default 32-path
-    *    threshold, so EVERY micro-batch's source listing launched a
-    *    distributed listing job (`Probe jobs`: one "Listing leaf files"
-    *    job per batch per query) to stat a few dozen local files.
-    *    Driver-side listing is the right side of that trade until the
-    *    file count reaches the thousands; a 100 TB object-store layout
-    *    crosses 512 and gets the distributed listing back automatically.
     */
   private val ScopedStreamConfs = Seq(
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "512")
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
-  private def withStateSizing[T](spark: SparkSession, partitions: Int = MinStatePartitions)(body: => T): T = {
-    val confs = ("spark.sql.shuffle.partitions" -> partitions.toString) +: ScopedStreamConfs
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+  /** Run `body` with streaming-state partitioning sized to these queries'
+    * state volume, restoring the session default afterwards. The state
+    * partition count is checkpoint-PERMANENT (fixed at the first batch
+    * forever), so a streaming job must size it deliberately instead of
+    * inheriting the batch shuffle default: every stateful operator keeps
+    * one or more store instances per partition, and when state is small
+    * the per-store load/commit overhead dominates the actual work. Sizing
+    * is scale-adaptive ([[statePartitionsFor]] over the query's source
+    * table bytes — at fixture SFs it lands on the sweep-optimal floor, at
+    * corpus scale it grows with the data). Session-conf scoping is safe
+    * here because the driver runs queries sequentially; the restore keeps
+    * batch queries on the session default. `extra` adds confs that one
+    * query needs (s5's state-store provider) to the same scope.
+    */
+  private def withStateSizing[T](spark: SparkSession, partitions: Int,
+      extra: (String, String)*)(body: => T): T =
+    withConfs(spark, (("spark.sql.shuffle.partitions" -> partitions.toString) +:
+      ScopedStreamConfs) ++ extra)(body)
+
+  /** Set `confs` on the session for the duration of `body`, then restore
+    * each key to its prior value: re-set when it had one, unset when it
+    * had none — also when `body` throws.
+    */
+  private[streaming] def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val explicit = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> explicit.get(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {
@@ -161,39 +215,17 @@ object StreamingQueries {
     }
   }
 
-  /** Open the sharded event stream through the REGISTERED source — the
-    * packaged `format("graft-shards")` entry point a library user calls
-    * (see [[graft.sources.GraftShardsProvider]], the
-    * `KinesisSource(consumerConfig)` analog). The s1–s3 gate queries run
-    * through this path so the CORRECTNESS gate exercises the packaged
-    * surface, not just the harness-level [[ShardedEvents.readStream]].
-    */
-  private def formatStream(spark: SparkSession, dir: String, startingPosition: String): DataFrame =
-    spark.readStream.format("graft-shards")
-      .option("path", dir)
-      .option("startingPosition", startingPosition)
-      .load()
-
   /** Hourly tumbling-window aggregation over the event stream with a
     * 1-hour watermark: the windowed-aggregation + watermark surface the
     * reference delegates entirely to downstream code (SURVEY.md §2D).
     */
   def s1StreamHourlyAgg(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val (shardDir, ckpt, mem) = freshDirs(spark, sfDir)
-    val q = formatStream(spark, shardDir, "trim_horizon")
+    val result = shardStream(spark, eventShards(spark, sfDir))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
       .select(col("window.start").as("hour_start"), col("event_type"), col("n"), col("total"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
 
   /** Streaming initial-position seek (O10, ConsumerConfig.scala:115-139 in
@@ -213,19 +245,10 @@ object StreamingQueries {
     seekAgg(spark, sfDir, "trim_horizon")
 
   private def seekAgg(spark: SparkSession, sfDir: String, startingPosition: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val (shardDir, ckpt, mem) = freshDirs(spark, sfDir)
-    val q = formatStream(spark, shardDir, startingPosition)
+    val result = shardStream(spark, eventShards(spark, sfDir), startingPosition = startingPosition)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
 
   /** Arbitrary per-key state in the correctness gate: the
@@ -235,65 +258,39 @@ object StreamingQueries {
     * cumulative count, via one ranking window) must equal the batch
     * aggregation — all distributed, no driver-side collection.
     */
-  def s4StreamPerKeyState(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val (shardDir, ckpt, _) = freshDirs(spark, sfDir)
-    val out = Files.createTempDirectory("graft-state-out-").toString
-    val q = PerKeyTracker.track(ShardedEvents.readStream(spark, shardDir))
-      .toDF("user_id", "state")
-      .select(col("user_id"), col("state.n").as("n"),
-        col("state.min_id").as("min_id"), col("state.max_id").as("max_id"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        IdempotentSink.writeBatch(df, batchId, out)
-      }
-      .start()
-    q.awaitTermination()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n").desc)
-    val sinkSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "user_id BIGINT, n BIGINT, min_id BIGINT, max_id BIGINT")
-    IdempotentSink.readAll(spark, out, sinkSchema)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("user_id"), col("n"), col("min_id"), col("max_id"))
-  }
+  def s4StreamPerKeyState(spark: SparkSession, sfDir: String): DataFrame =
+    perKeyFinal(spark, sfDir, PerKeyTracker.track)
 
   /** s4's twin on Spark 4's `transformWithState` (PerKeyTracker.trackTws):
     * identical per-key semantics and the same oracle, but state lives in
     * named ValueState handles in the RocksDB state store — the API and
     * provider combination that scales state beyond executor heap. The
-    * provider conf is scoped to this query (read at query start) and
-    * restored afterwards so the other streaming gates keep their default
-    * (HDFS-backed in-memory) provider.
+    * provider conf joins this query's conf scope (read at query start),
+    * so the other streaming gates keep their default (HDFS-backed
+    * in-memory) provider.
     */
-  def s5StreamPerKeyTws(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val (shardDir, ckpt, _) = freshDirs(spark, sfDir)
-    val out = Files.createTempDirectory("graft-tws-out-").toString
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = PerKeyTracker.trackTws(ShardedEvents.readStream(spark, shardDir))
-        .toDF("user_id", "state")
-        .select(col("user_id"), col("state.n").as("n"),
-          col("state.min_id").as("min_id"), col("state.max_id").as("max_id"))
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          IdempotentSink.writeBatch(df, batchId, out)
-        }
-        .start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+  def s5StreamPerKeyTws(spark: SparkSession, sfDir: String): DataFrame =
+    perKeyFinal(spark, sfDir, PerKeyTracker.trackTws,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** The body s4 and s5 share: `tracker` over the event stream, each
+    * micro-batch's cumulative emissions into the idempotent per-batch
+    * sink, then the final emission per key (largest cumulative count).
+    */
+  private def perKeyFinal(spark: SparkSession, sfDir: String,
+      tracker: DataFrame => Dataset[(Long, PerKeyTracker.KeyState)],
+      confs: (String, String)*): DataFrame = withStateSizing(spark, eventsStateParts(sfDir), confs: _*) {
+    val out = Files.createTempDirectory("graft-state-out-").toString
+    runAvailableNow(tracker(shardStream(spark, eventShards(spark, sfDir)))
+      .toDF("user_id", "state")
+      .select(col("user_id"), col("state.n").as("n"),
+        col("state.min_id").as("min_id"), col("state.max_id").as("max_id"))
+      .writeStream
+      .outputMode("update")
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        IdempotentSink.writeBatch(df, batchId, out)
+      })
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n").desc)
     val sinkSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -344,8 +341,7 @@ object StreamingQueries {
     * the honest two-sided state cost; no lever left at this SF.
     */
   def s6StreamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val (shardDir, ckpt, mem) = freshDirs(spark, sfDir)
-    val events = ShardedEvents.readStream(spark, shardDir)
+    val events = shardStream(spark, eventShards(spark, sfDir))
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"),
         col("event_id").as("p_id"), col("value").as("p_value"))
@@ -354,21 +350,13 @@ object StreamingQueries {
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
       .withWatermark("c_ts", "35 days")
-    val q = purchases.join(clicks,
+    val result = purchases.join(clicks,
         col("user_id") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
         col("c_ts") <= col("p_ts"))
       .select(col("p_id"), col("c_id"), col("user_id"),
         round(col("p_value"), 2).as("p_value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** Streaming dedup + per-type counts: `dropDuplicates` over the record
@@ -379,43 +367,12 @@ object StreamingQueries {
     * `dropDuplicatesWithinWatermark` so state is GC'd by event time.
     */
   def s2StreamDedupCount(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val (shardDir, ckpt, mem) = freshDirs(spark, sfDir)
-    val q = formatStream(spark, shardDir, "trim_horizon")
+    val result = shardStream(spark, eventShards(spark, sfDir))
       .dropDuplicates(Seq("event_id"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_distinct"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
-
-  // corpus ingest is materialized once per (JVM, sfDir), like the event
-  // shards above
-  private val corpusShardCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def corpusShardDir(spark: SparkSession, sfDir: String): String =
-    corpusShardCache.computeIfAbsent(sfDir, { _ =>
-      val d = Files.createTempDirectory("graft-corpus-").toString + "/shards"
-      ShardedCorpus.materialize(spark, sfDir, d)
-      d
-    })
-
-  // embedding ingest is materialized once per (JVM, sfDir), like the
-  // corpus shards above
-  private val embedShardCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def embedShardDir(spark: SparkSession, sfDir: String): String =
-    embedShardCache.computeIfAbsent(sfDir, { _ =>
-      val d = Files.createTempDirectory("graft-embed-").toString + "/shards"
-      ShardedEmbeddings.materialize(spark, sfDir, d)
-      d
-    })
 
   /** INCREMENTAL vector-store ingest — IVF index MAINTENANCE at ingest,
     * completing the at-ingest family (s7 exact doc dedup, s8 near-dup,
@@ -440,25 +397,15 @@ object StreamingQueries {
     */
   def s14StreamAnnIngest(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShardDir(spark, sfDir)
+    val shardDir = embedShards(spark, sfDir)
     val cents = graft.ops.VectorOps.exactLabelCentroids(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = ShardedEmbeddings.readStream(spark, shardDir, maxFilesPerTrigger)
+    val result = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
       .select(col("vec_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
       .withColumn("cell", graft.ops.VectorOps.nearestCellExpr(cents, col("v")))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
 
   /** FULL vector-index build at ingest — s14 plus the PQ half: arriving
@@ -482,12 +429,10 @@ object StreamingQueries {
     */
   def s15StreamPqIngest(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShardDir(spark, sfDir)
+    val shardDir = embedShards(spark, sfDir)
     val cents = graft.ops.VectorOps.exactLabelCentroids(spark, sfDir)
     val books = graft.ops.VectorOps.trainedPqCodebooks(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = ShardedEmbeddings.readStream(spark, shardDir, maxFilesPerTrigger)
+    val result = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
       .select(col("vec_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
       .withColumn("cell", graft.ops.VectorOps.nearestCellExpr(cents, col("v")))
@@ -495,15 +440,7 @@ object StreamingQueries {
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"),
         sum(col("code_key")).as("code_sum"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
 
   /** QUALITY GATE at ingest — d45's DSIR importance weights running as an
@@ -530,23 +467,13 @@ object StreamingQueries {
     */
   def s16StreamDsirGate(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val (wts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("dsir", sfDir)(
       graft.ops.CorpusOps.dsirGate(spark, sfDir))
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger)
+    val result = shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
       .select(col("doc_id"), graft.ops.CorpusOps.dsirScore(wts, col("text")).as("score"))
       .filter(col("score") >= cutoff)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** PERPLEXITY admission at ingest — d47's CCNet quality screen as the
@@ -567,23 +494,13 @@ object StreamingQueries {
     */
   def s21StreamPplGate(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val (bigWts, ctxWts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("ppl", sfDir)(
       graft.ops.CorpusOps.pplGate(spark, sfDir))
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = graft.ops.CorpusOps.pplScored(
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger), bigWts, ctxWts)
+    val result = graft.ops.CorpusOps.pplScored(
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), bigWts, ctxWts)
       .filter(col("avg_fx") >= cutoff)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** WINNOW-SKETCH maintenance at ingest — the d52 fingerprint index's
@@ -607,25 +524,15 @@ object StreamingQueries {
     */
   def s17StreamWinnowIngest(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = graft.ops.CorpusOps.winnowSelected(
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger))
+    val shardDir = corpusShards(spark, sfDir)
+    val result = graft.ops.CorpusOps.winnowSelected(
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger))
       .select(col("doc_id"), size(col("sel")).cast("long").as("n_sel"),
         aggregate(col("sel"), lit(0L),
           (acc, g) => acc + pmod(g.getField("gh"), lit(1L << 40))).as("gh_sum"),
         aggregate(col("sel"), lit(0L), (acc, g) => acc + g.getField("pos")).as("pos_sum"))
       .filter(col("n_sel") > 0)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** INCREMENTAL corpus dedup — `ops.CorpusOps.d1ExactDedup`'s fingerprint
@@ -644,23 +551,13 @@ object StreamingQueries {
     * applies verbatim).
     */
   def s7StreamCorpusDedup(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = ShardedCorpus.readStream(spark, shardDir)
+    val shardDir = corpusShards(spark, sfDir)
+    val result = shardStream(spark, shardDir, ShardedCorpus.schema)
       .select(col("lang"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
       .dropDuplicates(Seq("lang", "fp"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_unique"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
 
   // encoder codegen requires these to be publicly accessible
@@ -726,26 +623,16 @@ object StreamingQueries {
   def s8StreamNearDup(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
     import spark.implicits._
-    val shardDir = corpusShardDir(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
+    val shardDir = corpusShards(spark, sfDir)
     val banded = graft.ops.CorpusOps.bandedKeyRows(
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger))
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger))
       .as[BandedKeyRow]
     val cands = banded
       .groupByKey(_.band_key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(candidateTracker)
-    val q = verifiedPairs(cands.toDF().dropDuplicates(Seq("a_id", "b_id")),
+    val result = verifiedPairs(cands.toDF().dropDuplicates(Seq("a_id", "b_id")),
         graft.Tables.documents(spark, sfDir))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** The verify stage of the side-table layout: candidate (a_id, b_id)
@@ -809,9 +696,15 @@ object StreamingQueries {
       out.result().iterator
     }
 
-  // tranche-2-only shard dirs for s12, cached per (JVM, sfDir) like the
-  // full corpus dirs above
-  private val seededShardCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The tranche-2 (`doc_id >= cut`) shard dirs s12 and s13 stream,
+    * materialized once per (JVM, sfDir) like the full layouts.
+    */
+  private def tranche2Shards(docs: DataFrame, sfDir: String, cut: Long): String =
+    shardDir("corpus-t2", sfDir) { d =>
+      ShardedEvents.routed(docs.filter(col("doc_id") >= cut),
+          col("doc_id"), col("doc_id"), ShardedCorpus.NumShards)
+        .write.mode("overwrite").partitionBy("shard").parquet(d)
+    }
 
   /** s12: the near-dup tracker RESUMED against an existing corpus — the
     * gate-query form of the initial-state bootstrap
@@ -843,31 +736,15 @@ object StreamingQueries {
       .groupByKey(_.band_key)
       .mapGroups { (k, it) => k -> BucketIds(it.map(_.doc_id).toList) }
       .groupByKey(_._1).mapValues(_._2)
-    val shardDir = seededShardCache.computeIfAbsent(sfDir, { _ =>
-      val d = Files.createTempDirectory("graft-corpus-t2-").toString + "/shards"
-      ShardedEvents.routed(docs.filter(col("doc_id") >= cut),
-          col("doc_id"), col("doc_id"), ShardedCorpus.NumShards)
-        .write.mode("overwrite").partitionBy("shard").parquet(d)
-      d
-    })
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
+    val shardDir = tranche2Shards(docs, sfDir, cut)
     val banded = graft.ops.CorpusOps.bandedKeyRows(
-        ShardedCorpus.readStream(spark, shardDir))
+        shardStream(spark, shardDir, ShardedCorpus.schema))
       .as[BandedKeyRow]
     val cands = banded
       .groupByKey(_.band_key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, seed)(candidateTracker)
-    val q = verifiedPairs(cands.toDF().dropDuplicates(Seq("a_id", "b_id")), docs)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    val result = verifiedPairs(cands.toDF().dropDuplicates(Seq("a_id", "b_id")), docs)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** s13: the dup-span tracker RESUMED against an existing corpus —
@@ -902,29 +779,13 @@ object StreamingQueries {
           multi = occs.exists(o => o.doc_id != first.doc_id || o.pos != first.pos))
       }
       .groupByKey(_._1).mapValues(_._2)
-    val shardDir = seededShardCache.computeIfAbsent(sfDir, { _ =>
-      val d = Files.createTempDirectory("graft-corpus-t2-").toString + "/shards"
-      ShardedEvents.routed(docs.filter(col("doc_id") >= cut),
-          col("doc_id"), col("doc_id"), ShardedCorpus.NumShards)
-        .write.mode("overwrite").partitionBy("shard").parquet(d)
-      d
-    })
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val marked = occurrences(ShardedCorpus.readStream(spark, shardDir))
+    val shardDir = tranche2Shards(docs, sfDir, cut)
+    val marked = occurrences(shardStream(spark, shardDir, ShardedCorpus.schema))
       .groupByKey(_.gh)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, seed)(dupPositionTracker)
-    val q = marked.toDF()
+    val result = marked.toDF()
       .dropDuplicates(Seq("doc_id", "pos"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** One w-word window occurrence of the document ingest stream (see
@@ -995,11 +856,9 @@ object StreamingQueries {
   def s11StreamDupPositions(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
     import spark.implicits._
-    val shardDir = corpusShardDir(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
+    val shardDir = corpusShards(spark, sfDir)
     // no length pre-filter — see the matching note in CorpusOps.dupSpans
-    val occurrences = ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger)
+    val occurrences = shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
       .select(col("doc_id"),
         posexplode(graft.functions.WordWindowMd5.wordWindowMd5(
           lower(trim(col("text"))), 8)))
@@ -1008,17 +867,9 @@ object StreamingQueries {
     val marked = occurrences
       .groupByKey(_.gh)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(dupPositionTracker)
-    val q = marked.toDF()
+    val result = marked.toDF()
       .dropDuplicates(Seq("doc_id", "pos"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** [[GramOccurrence]] carrying its ingest event time. */
@@ -1279,26 +1130,16 @@ object StreamingQueries {
     * commutative.
     */
   def s10StreamContamination(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
+    val shardDir = corpusShards(spark, sfDir)
     val evalGrams = graft.ops.CorpusOps.gramHashRows(
         graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 97 === 0))
       .select(col("gh")).distinct()
-    val q = graft.ops.CorpusOps.gramHashRows(
-        ShardedCorpus.readStream(spark, shardDir).filter(col("doc_id") % 97 =!= 0))
+    val result = graft.ops.CorpusOps.gramHashRows(
+        shardStream(spark, shardDir, ShardedCorpus.schema).filter(col("doc_id") % 97 =!= 0))
       .join(broadcast(evalGrams), "gh")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
 
   /** SEMANTIC contamination gate at ingest — d56 running as the arrival
@@ -1314,14 +1155,12 @@ object StreamingQueries {
     */
   def s18StreamSemanticGate(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShardDir(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
+    val shardDir = embedShards(spark, sfDir)
     val ev = graft.Tables.embeddings(spark, sfDir)
       .filter(pmod(col("vec_id"), lit(25L)) === 0L)
       .select(col("vec_id").as("eval_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("evv"))
-    val q = ShardedEmbeddings.readStream(spark, shardDir, maxFilesPerTrigger)
+    val result = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
       .filter(pmod(col("vec_id"), lit(25L)) =!= 0L)
       .select(col("vec_id").as("train_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
@@ -1329,15 +1168,7 @@ object StreamingQueries {
       .withColumn("sim", graft.ops.VectorOps.cosine(col("evv"), col("v")))
       .filter(col("sim") >= graft.ops.VectorOps.SemDedupThreshold)
       .select(col("eval_id"), col("train_id"), round(col("sim"), 6).as("sim"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** Constant arrival slice for [[s19StreamAnnLookup]]'s gate row: the
@@ -1377,22 +1208,19 @@ object StreamingQueries {
   def s19StreamAnnLookup(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       querySlice: Option[Long] = Some(AnnQuerySlice)): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShardDir(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val shardDir = embedShards(spark, sfDir)
     val out = Files.createTempDirectory("graft-annq-out-").toString
     val index = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id").as("n_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("nv"),
         col("label").as("n_label"))
-    val arrivals = ShardedEmbeddings.readStream(spark, shardDir, maxFilesPerTrigger)
-    val q = querySlice.fold(arrivals)(s => arrivals.filter(col("vec_id") < s))
+    val arrivals = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
+    runAvailableNow(querySlice.fold(arrivals)(s => arrivals.filter(col("vec_id") < s))
       .select(col("vec_id").as("q_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("qv"),
         col("label").as("q_label"))
       .writeStream
       .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
@@ -1404,9 +1232,7 @@ object StreamingQueries {
           .filter(col("rn") <= 3)
           .select(col("q_id"), col("n_id"), round(col("sim"), 6).as("sim"), col("rn"))
         IdempotentSink.writeBatch(top, batchId, out)
-      }
-      .start()
-    q.awaitTermination()
+      })
     IdempotentSink.readAll(spark, out, org.apache.spark.sql.types.StructType.fromDDL(
       "q_id BIGINT, n_id BIGINT, sim DOUBLE, rn INT"))
   }
@@ -1424,26 +1250,16 @@ object StreamingQueries {
     */
   def s20StreamBloomGate(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val bm = graft.ops.TrainedModelCache.getOrTrain("bloom", sfDir)(
       graft.ops.CorpusOps.bloomBitmap(graft.Tables.documents(spark, sfDir)))
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger)
+    val result = shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
       .filter(pmod(col("doc_id"), lit(2L)) === 1L)
       .select(col("doc_id"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
       .select(col("doc_id"),
         when(graft.ops.CorpusOps.bloomHit(bm, col("fp")), lit(1L))
           .otherwise(lit(0L)).as("hit"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** NOVELTY GATE at ingest — d66's window-Bloom admission running at
@@ -1459,23 +1275,13 @@ object StreamingQueries {
     */
   def s22StreamNoveltyGate(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val bm = graft.ops.TrainedModelCache.getOrTrain("window-bloom", sfDir)(
       graft.ops.CorpusOps.windowBloomBitmap(graft.Tables.documents(spark, sfDir)))
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = graft.ops.CorpusOps.noveltyGateWith(bm,
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger)
+    val result = graft.ops.CorpusOps.noveltyGateWith(bm,
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
           .filter(pmod(col("doc_id"), lit(2L)) === 1L))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** Min-K% MEMORIZATION firewall at ingest — d67's membership-inference
@@ -1493,23 +1299,13 @@ object StreamingQueries {
     */
   def s23StreamMinkGate(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val (bigWts, ctxWts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("mink", sfDir)(
       graft.ops.CorpusOps.minkGate(spark, sfDir))
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = graft.ops.CorpusOps.minkScored(
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger), bigWts, ctxWts)
+    val result = graft.ops.CorpusOps.minkScored(
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), bigWts, ctxWts)
       .filter(col("mink_fx") < cutoff)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** RARE-TOKEN (OOV/gibberish) firewall at ingest — d73's frequency
@@ -1526,23 +1322,13 @@ object StreamingQueries {
     */
   def s24StreamRareGate(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val (cms, total, cutoff) = graft.ops.TrainedModelCache.getOrTrain("rare", sfDir)(
       graft.ops.CorpusOps.rareGate(spark, sfDir))
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = graft.ops.CorpusOps.rareGateWith(cms, total, cutoff,
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger)
+    val result = graft.ops.CorpusOps.rareGateWith(cms, total, cutoff,
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
           .filter(pmod(col("doc_id"), lit(2L)) === 1L))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** Streaming event-time SESSIONIZATION: the native `session_window`
@@ -1561,21 +1347,12 @@ object StreamingQueries {
     * mode with the same plan and watermark-bounded state.
     */
   def s9StreamSession(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val (shardDir, ckpt, mem) = freshDirs(spark, sfDir)
-    val q = ShardedEvents.readStream(spark, shardDir)
+    val result = shardStream(spark, eventShards(spark, sfDir))
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "1 hour"), col("user_id"))
       .agg(min(col("ts")).as("session_start"), count(lit(1)).as("n_events"))
       .select(col("user_id"), col("session_start"), col("n_events"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    runToMemory(result, OutputMode.Complete())
   }
 
   /** DRIFTING-TARGET temperature rebalance at ingest (the s-series twin
@@ -1594,21 +1371,11 @@ object StreamingQueries {
     */
   def s25StreamDriftMix(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val sched = graft.ops.CorpusOps.driftMixSchedule(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = graft.ops.CorpusOps.driftMixAdmit(
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger), sched)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    val result = graft.ops.CorpusOps.driftMixAdmit(
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), sched)
+    runToMemory(result, OutputMode.Append())
   }
 
   /** PERIODIC LM REFRESH at ingest (the drifting-LM variant the surveys
@@ -1625,20 +1392,10 @@ object StreamingQueries {
     */
   def s26StreamLmRefresh(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShardDir(spark, sfDir)
+    val shardDir = corpusShards(spark, sfDir)
     val m = graft.ops.CorpusOps.lmRefreshModel(spark, sfDir)
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val mem = s"graft_mem_${runCounter.incrementAndGet()}_${System.nanoTime()}"
-    val q = graft.ops.CorpusOps.lmRefreshScored(
-        ShardedCorpus.readStream(spark, shardDir, maxFilesPerTrigger), m)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(mem)
+    val result = graft.ops.CorpusOps.lmRefreshScored(
+        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), m)
+    runToMemory(result, OutputMode.Append())
   }
 }

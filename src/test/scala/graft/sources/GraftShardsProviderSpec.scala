@@ -171,12 +171,13 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("schema override: a caller schema serves a different record layout (the corpus stream)") {
-    // one registered source, two record layouts: ShardedCorpus.readStream
-    // routes through format("graft-shards") with .schema(documents)
+    // one registered source, two record layouts: the stream opener passes
+    // the documents schema through format("graft-shards")
     val base = newBase()
     val dir = s"$base/shards"
     graft.streaming.ShardedCorpus.materialize(spark, sf001, dir)
-    val df = graft.streaming.ShardedCorpus.readStream(spark, dir)
+    val df = graft.streaming.StreamingQueries.shardStream(spark, dir,
+      graft.streaming.ShardedCorpus.schema)
     df.schema shouldBe graft.streaming.ShardedCorpus.schema
     val got = mutable.Buffer.empty[Long]
     val q = df.select("doc_id")
@@ -267,9 +268,9 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("latest: coarse min-end prefilter is PUSHED into the micro-batch parquet scan (scale pin)") {
-    // the exact per-shard cut is a broadcast join — not pushable — so
-    // batch 0 would READ the whole retained stream just to discard it.
-    // afterEnds plants `event_id > min(end)` under the join; it must
+    // the exact per-shard cut is a map-literal lookup by shard — not
+    // pushable — so batch 0 would READ the whole retained stream just to
+    // discard it. afterEnds plants `event_id > min(end)` beside it; it must
     // reach the scan's PushedFilters so row-group stats skip the
     // retained history unread
     val base = newBase()

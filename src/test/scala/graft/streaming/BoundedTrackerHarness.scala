@@ -106,22 +106,21 @@ object BoundedTrackerHarness {
       tracker: DataFrame => DataFrame, decode: Row => A,
       got: mutable.Buffer[A],
       progress: mutable.Buffer[StateOperatorProgress]): Unit = {
-    val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val wmKey = "spark.sql.streaming.multipleWatermarkPolicy"
-    spark.conf.set(checkKey, "false")
-    spark.conf.set(wmKey, "max")
-    val q = try tracker(ShardedEvents.openStream(spark, dir, schemaTs, None))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val rows = df.collect().toSeq.map(decode)
-        got.synchronized { got ++= rows }
-        ()
-      }
-      .start()
-    finally { spark.conf.unset(checkKey); spark.conf.unset(wmKey) }
+    val q = StreamingQueries.withConfs(spark, Seq(
+        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
+        "spark.sql.streaming.multipleWatermarkPolicy" -> "max")) {
+      tracker(StreamingQueries.shardStream(spark, dir, schemaTs))
+        .writeStream
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val rows = df.collect().toSeq.map(decode)
+          got.synchronized { got ++= rows }
+          ()
+        }
+        .start()
+    }
     q.awaitTermination()
     assert(q.exception.isEmpty, s"tranche run failed: ${q.exception}")
     progress ++= q.recentProgress.flatMap(_.stateOperators)

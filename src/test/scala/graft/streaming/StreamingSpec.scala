@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.streaming.StreamingQueries.{shardStream, withConfs}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -36,13 +37,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
   private def batchEventIds = graft.Tables.events(spark, sf001)
     .select("event_id").collect().map(_.getLong(0)).toSeq
 
+  // the store a 100 TB-state deployment runs: RocksDB with per-batch
+  // changelog checkpointing
+  private val RocksDbChangelogConfs = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
   test("at-least-once: crash after side effect, restart replays exactly the uncommitted batch") {
     val base = newBase()
     val shards = shardDir(base)
     val ckpt = s"$base/ckpt"
     received.clear(); crashed = false; crashOnBatch = 2L
 
-    def start() = ShardedEvents.readStream(spark, shards, maxFilesPerTrigger = Some(1))
+    def start() = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
       .select("event_id")
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -93,7 +101,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val out = s"$base/out"
     crashed = false; crashOnBatch = 2L
 
-    def start() = ShardedEvents.readStream(spark, shards, maxFilesPerTrigger = Some(1))
+    def start() = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
       .select("event_id", "user_id", "event_type")
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -135,7 +143,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       .set("fs.flaky.impl", classOf[FlakyCheckpointFs].getName)
     val got = mutable.Buffer.empty[Long]
 
-    def start(ckpt: String) = ShardedEvents.readStream(spark, shards, maxFilesPerTrigger = Some(1))
+    def start(ckpt: String) = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
       .select("event_id")
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -202,7 +210,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = shardDir(base)
     val ckpt = s"$base/ckpt"
-    val q = ShardedEvents.readStream(spark, dir)
+    val q = shardStream(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
       .writeStream
@@ -230,7 +238,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val stats = new GraftStats
     spark.streams.addListener(stats)
     try {
-      val q = ShardedEvents.readStream(spark, shards)
+      val q = shardStream(spark, shards)
         .groupBy(col("event_type")).count()
         .writeStream
         .outputMode("complete")
@@ -267,7 +275,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val rows0 = g.rows.get()
     val base = newBase()
     val shards = shardDir(base)
-    val q = ShardedEvents.readStream(spark, shards)
+    val q = shardStream(spark, shards)
       .select("event_id")
       .writeStream
       .format("noop")
@@ -298,7 +306,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val shards = shardDir(base)
     try {
-      val q = ShardedEvents.readStream(spark, shards)
+      val q = shardStream(spark, shards)
         .dropDuplicates(Seq("event_id"))
         .groupBy(col("event_type")).count()
         .writeStream
@@ -326,7 +334,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
         s"per-query gauge for ${q.id} missing or shallow: $firstDepth")
       // ...and must survive a SECOND stateful query reporting a much
       // smaller depth (the unkeyed gauges, by contract, get overwritten)
-      val q2 = ShardedEvents.readStream(spark, shards)
+      val q2 = shardStream(spark, shards)
         .groupBy(col("event_type")).count()
         .writeStream
         .outputMode("complete")
@@ -362,7 +370,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       // q1: per-type event counts after exact dedup (s2's shape);
       // q2: per-lang distinct-fingerprint corpus dedup (s7's shape);
       // 1-file triggers force many batches so the executions interleave
-      val q1 = ShardedEvents.readStream(spark, eventShards, maxFilesPerTrigger = Some(1))
+      val q1 = shardStream(spark, eventShards, maxFilesPerTrigger = Some(1))
         .dropDuplicates(Seq("event_id"))
         .groupBy(col("event_type")).count()
         .writeStream.outputMode("complete").format("memory")
@@ -370,7 +378,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
         .option("checkpointLocation", s"$base/ckpt1")
         .trigger(Trigger.AvailableNow())
         .start()
-      val q2 = ShardedCorpus.readStream(spark, docShards, maxFilesPerTrigger = Some(1))
+      val q2 = shardStream(spark, docShards, ShardedCorpus.schema, maxFilesPerTrigger = Some(1))
         .select(col("lang"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
         .dropDuplicates(Seq("lang", "fp"))
         .groupBy(col("lang")).agg(count(lit(1)).as("n_unique"))
@@ -428,10 +436,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     ShardedEvents.appendTranche(events, dirB, 2) // different shard set => different gauge shape
     try {
       def run(dir: String, ckpt: String) = GraftStats.observeShardRows(
-          spark.readStream.format("graft-shards")
-            .option("path", dir)
-            .option("startingPosition", "trim_horizon")
-            .load(),
+          shardStream(spark, dir),
           col("shard"))
         .select("event_id")
         .writeStream.format("noop")
@@ -482,10 +487,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     ShardedEvents.appendTranche(events.filter(col("event_id") <= cut), dir, 2)
     try {
       val q = GraftStats.observeShardRows(
-          spark.readStream.format("graft-shards")
-            .option("path", dir)
-            .option("startingPosition", "trim_horizon")
-            .load(),
+          shardStream(spark, dir),
           col("shard"))
         .select("event_id")
         .writeStream.format("noop")
@@ -541,17 +543,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val shards = shardDir(base)
     val ckpt = s"$base/ckpt"
     val out = s"$base/out"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(changelogKey, "true")
     @volatile var crashedOnce = false
-    try {
+    withConfs(spark, RocksDbChangelogConfs) {
       def start() = PerKeyTracker.trackTws(
-          ShardedEvents.readStream(spark, shards, maxFilesPerTrigger = Some(1)))
+          shardStream(spark, shards, maxFilesPerTrigger = Some(1)))
         .toDF("user_id", "state")
         .select(col("user_id"), col("state.n").as("n"),
           col("state.min_id").as("min_id"), col("state.max_id").as("max_id"))
@@ -571,12 +566,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       intercept[Exception] { start().awaitTermination() }
       val q2 = start(); q2.awaitTermination()
       assert(q2.exception.isEmpty)
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-      spark.conf.unset(changelogKey)
     }
 
     // the checkpoint really is changelog-based: per-batch .changelog
@@ -611,7 +600,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val shards = shardDir(base)
     val mem = s"inspect_${System.nanoTime()}"
-    val q = ShardedEvents.readStream(spark, shards, maxFilesPerTrigger = Some(2))
+    val q = shardStream(spark, shards, maxFilesPerTrigger = Some(2))
       .groupBy(col("event_type")).count()
       .writeStream
       .outputMode("complete")
@@ -635,7 +624,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val shards = shardDir(base)
     val finalStates = mutable.Map.empty[Long, PerKeyTracker.KeyState]
     val q = PerKeyTracker.track(
-        ShardedEvents.readStream(spark, shards, maxFilesPerTrigger = Some(2)))
+        shardStream(spark, shards, maxFilesPerTrigger = Some(2)))
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", s"$base/ckpt")
@@ -660,7 +649,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val shards = shardDir(base)
     val arrivals = mutable.Buffer.empty[(Long, Long)] // (user_id, event_id)
-    val q = ShardedEvents.readStream(spark, shards, maxFilesPerTrigger = Some(1))
+    val q = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
       .select("user_id", "event_id")
       .writeStream
       .option("checkpointLocation", s"$base/ckpt")
@@ -689,7 +678,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // instance) started on the dead consumer's checkpointLocation resumes
     // at its first uncommitted epoch. A is killed ABRUPTLY while an epoch
     // is open (held open deterministically by a latch), so the takeover
-    // exercises the uncommitted-epoch path, not a graceful drain.
+    // exercises the uncommitted-epoch path, not a graceful drain. Both
+    // consumers read the packaged graft-shards source, the entry point a
+    // library user deploys.
     val base = newBase()
     val shards = shardDir(base)
     val ckpt = s"$base/ckpt"
@@ -697,8 +688,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val reachedHeldEpoch = new java.util.concurrent.CountDownLatch(1)
     val releaseHeldEpoch = new java.util.concurrent.CountDownLatch(1)
 
-    def start(who: String, holdBatch: Long) = ShardedEvents
-      .readStream(spark, shards, maxFilesPerTrigger = Some(1))
+    def start(who: String, holdBatch: Long) = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
       .select("event_id")
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -761,7 +751,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val shards = shardDir(base)
     def consume(which: String, pred: org.apache.spark.sql.Column): Seq[Long] = {
       val got = mutable.Buffer.empty[Long]
-      val q = ShardedEvents.readStream(spark, shards)
+      val q = shardStream(spark, shards)
         .filter(pred)
         .select("event_id")
         .writeStream
@@ -805,7 +795,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // every record written TWICE: at-least-once delivery with duplicates
     ShardedEvents.appendTranche(tranches.head.union(tranches.head), dir, 4)
     val got = mutable.Buffer.empty[Long]
-    val q = ShardedEvents.readStream(spark, dir)
+    val q = shardStream(spark, dir)
       .withWatermark("ts", "1 minute")
       .dropDuplicatesWithinWatermark("event_id")
       .select("event_id")
@@ -944,24 +934,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val allPairs = graft.ops.CorpusOps.d2MinhashLsh(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(changelogKey, "true")
     val got = mutable.Buffer.empty[(Long, Long, Double)]
     val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
-    try tranches.foreach { t =>
-      appendDocTranche(t, dir)
-      runBoundedNearDupTranche(dir, s"$base/ckpt", got, tracker)
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
+    withConfs(spark, RocksDbChangelogConfs) {
+      tranches.foreach { t =>
+        appendDocTranche(t, dir)
+        runBoundedNearDupTranche(dir, s"$base/ckpt", got, tracker)
       }
-      spark.conf.unset(changelogKey)
     }
 
     // same contract as the default-store test: sound, in-tranche
@@ -1133,7 +1112,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       tranche(Some(tsCuts(1)), None))
 
     ShardedEvents.appendTranche(tranches.head, dir, 4)
-    val src = ShardedEvents.readStream(spark, dir)
+    val src = shardStream(spark, dir)
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
       .withWatermark("p_ts", "1 minute")
@@ -1209,7 +1188,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
 
     ShardedEvents.appendTranche(tranches.head, dir, 4)
     val got = mutable.Buffer.empty[(Long, java.sql.Timestamp, Long)]
-    val q = ShardedEvents.readStream(spark, dir)
+    val q = shardStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "1 hour"), col("user_id"))
       .agg(min(col("ts")).as("session_start"), count(lit(1)).as("n_events"))
@@ -1261,10 +1240,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     ShardedEvents.appendTranche(events.filter(col("event_id") <= cut), dir, 4)
 
     val got = mutable.Buffer.empty[Long]
-    val q = spark.readStream.format("graft-shards")
-      .option("path", dir)
-      .option("startingPosition", "latest")
-      .load()
+    val q = shardStream(spark, dir, startingPosition = "latest")
       .select("event_id")
       .writeStream
       .option("checkpointLocation", s"$base/ckpt")
@@ -1288,8 +1264,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("re-sharding: stream stays complete across a shard split (4->8) and merge (8->2)") {
     // the reference's resharding it-tests prove no record is lost or
     // duplicated when the shard set changes under a live consumer
-    // (KinesisSourceTest.scala:182-228); here the shard set changes
-    // between micro-batches and the same completeness oracle must hold
+    // (KinesisSourceTest.scala:182-228) on its packaged KinesisSource; here
+    // the shard set changes between micro-batches under the packaged
+    // graft-shards source and the same completeness oracle must hold
     val base = newBase()
     val dir = s"$base/shards"
     val events = graft.Tables.events(spark, sf001)
@@ -1298,7 +1275,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     ShardedEvents.appendTranche(events.filter(col("event_id") <= c1), dir, 4)
 
     val arrivals = mutable.Buffer.empty[(Int, Long)] // (shard, event_id)
-    val q = ShardedEvents.readStream(spark, dir)
+    val q = shardStream(spark, dir)
       .select("shard", "event_id")
       .writeStream
       .option("checkpointLocation", s"$base/ckpt")
@@ -1332,117 +1309,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     got.size shouldBe got.map(_._2).distinct.size          // nothing duplicated
     // each record observed from exactly one shard (exclusive routing)
     got.groupBy(_._2).values.foreach(v => assert(v.map(_._1).distinct.size == 1))
-  }
-
-  test("re-sharding through format(\"graft-shards\"): complete across split (4->8) and merge (8->2)") {
-    // twin of the harness-level re-sharding test above, driven through the
-    // REGISTERED source a library user actually calls — the reference
-    // proves resharding completeness on its packaged KinesisSource, not a
-    // test harness (KinesisSourceTest.scala:182-228), so the packaged
-    // path must carry the same guarantee
-    val base = newBase()
-    val dir = s"$base/shards"
-    val events = graft.Tables.events(spark, sf001)
-    val ids = batchEventIds.sorted
-    val (c1, c2) = (ids(ids.size / 3), ids(2 * ids.size / 3))
-    ShardedEvents.appendTranche(events.filter(col("event_id") <= c1), dir, 4)
-
-    val arrivals = mutable.Buffer.empty[(Int, Long)] // (shard, event_id)
-    val q = spark.readStream.format("graft-shards")
-      .option("path", dir)
-      .option("startingPosition", "trim_horizon")
-      .load()
-      .select("shard", "event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = df.collect().map(r => (r.getInt(0), r.getLong(1)))
-        arrivals.synchronized { arrivals ++= rows }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    arrivals.synchronized {
-      assert(arrivals.map(_._2).toSet == ids.filter(_ <= c1).toSet)
-      assert(arrivals.forall(_._1 < 4), "pre-split tranche must live in 4 shards")
-    }
-
-    // SPLIT 4->8 under the live packaged source
-    ShardedEvents.appendTranche(events.filter(col("event_id") > c1 && col("event_id") <= c2), dir, 8)
-    q.processAllAvailable()
-    arrivals.synchronized {
-      assert(arrivals.exists(_._1 >= 4), "split children must be discovered and consumed")
-    }
-
-    // MERGE 8->2
-    ShardedEvents.appendTranche(events.filter(col("event_id") > c2), dir, 2)
-    q.processAllAvailable()
-    StreamControl.stopGracefully(q)
-
-    val got = arrivals.synchronized(arrivals.toVector)
-    got.map(_._2).toSet shouldBe ids.toSet                 // nothing lost
-    got.size shouldBe got.map(_._2).distinct.size          // nothing duplicated
-    got.groupBy(_._2).values.foreach(v => assert(v.map(_._1).distinct.size == 1))
-  }
-
-  test("takeover through format(\"graft-shards\"): B resumes killed A's checkpoint — no gap, bounded overlap") {
-    // twin of the harness-level takeover test above on the packaged
-    // source: the checkpoint-is-the-lease handoff must hold for the
-    // entry point a library user deploys (KinesisSourceTest.scala:129-180)
-    val base = newBase()
-    val shards = shardDir(base)
-    val ckpt = s"$base/ckpt"
-    val deliveries = mutable.Buffer.empty[(String, Long, Seq[Long])]
-    val reachedHeldEpoch = new java.util.concurrent.CountDownLatch(1)
-    val releaseHeldEpoch = new java.util.concurrent.CountDownLatch(1)
-
-    def start(who: String, holdBatch: Long) = spark.readStream.format("graft-shards")
-      .option("path", shards)
-      .option("startingPosition", "trim_horizon")
-      .option("maxFilesPerTrigger", "1")
-      .load()
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val batchIds = df.collect().map(_.getLong(0)).toSeq
-        deliveries.synchronized { deliveries += ((who, batchId, batchIds)) }
-        if (batchId == holdBatch) {
-          reachedHeldEpoch.countDown()
-          releaseHeldEpoch.await(10, java.util.concurrent.TimeUnit.SECONDS)
-        }
-        ()
-      }
-      .start()
-
-    val qA = start("A", holdBatch = 2L)
-    reachedHeldEpoch.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-    qA.stop() // abrupt kill with epoch 2 open
-    releaseHeldEpoch.countDown()
-    try qA.awaitTermination() catch { case _: Exception => () }
-    val commitsAtTakeover = StreamControl.checkpointCommits(ckpt)
-    assert(commitsAtTakeover == 2L,
-      s"A must die with epoch 2 OPEN (committed prefix = epochs 0-1), got $commitsAtTakeover")
-
-    val qB = start("B", holdBatch = -1L)
-    qB.awaitTermination()
-    assert(qB.exception.isEmpty)
-    assert(StreamControl.checkpointOffsets(ckpt) == StreamControl.checkpointCommits(ckpt))
-
-    val d = deliveries.synchronized(deliveries.toVector)
-    val aIds = d.filter(_._1 == "A").flatMap(_._3)
-    val bIds = d.filter(_._1 == "B").flatMap(_._3)
-    assert(aIds.nonEmpty && bIds.nonEmpty)
-    d.filter(_._1 == "B").map(_._2).min shouldBe commitsAtTakeover
-    (aIds ++ bIds).distinct.sorted shouldBe batchEventIds.sorted
-    val heldEpochIds = d.filter(r => r._1 == "A" && r._2 == 2L).flatMap(_._3).toSet
-    assert(heldEpochIds.nonEmpty, "A must have entered the held epoch before dying")
-    aIds.toSet.intersect(bIds.toSet) shouldBe heldEpochIds
-    val committedByA = d.filter(r => r._1 == "A" && r._2 < commitsAtTakeover).flatMap(_._3).toSet
-    assert(committedByA.intersect(bIds.toSet).isEmpty,
-      "epochs A committed must not be redelivered to B")
   }
 
   test("streaming result == batch result (the reference's core oracle) for s1/s2") {
@@ -1672,5 +1538,61 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val batchMarked = docs.join(dup, "gh").select(col("doc_id"), col("pos"))
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batchMarked).isEmpty && batchMarked.exceptAll(streamed).isEmpty)
+  }
+
+  test("conf scope: each key gets its prior value back, set or unset, also when the body throws") {
+    val (wasSet, wasUnset) =
+      ("spark.sql.shuffle.partitions", "spark.sql.streaming.multipleWatermarkPolicy")
+    val prior = spark.conf.get(wasSet)
+    spark.conf.unset(wasUnset)
+    val scope = Seq(wasSet -> "3", wasUnset -> "max")
+    def assertRestored(): Unit = {
+      spark.conf.get(wasSet) shouldBe prior
+      assert(!spark.conf.getAll.contains(wasUnset), s"$wasUnset left set after the scope")
+    }
+    withConfs(spark, scope) {
+      spark.conf.get(wasSet) shouldBe "3"
+      spark.conf.get(wasUnset) shouldBe "max"
+    }
+    assertRestored()
+    intercept[IllegalStateException] {
+      withConfs(spark, scope)(throw new IllegalStateException("body failed"))
+    }
+    assertRestored()
+    // a gate with an extra scoped conf (s5's state-store provider) leaves
+    // the session exactly as it found it
+    val before = spark.conf.getAll
+    StreamingQueries.s5StreamPerKeyTws(spark, sf001).count()
+    spark.conf.getAll shouldBe before
+  }
+
+  test("every stream reader under src/ opens format(\"graft-shards\")") {
+    // the gates and the crash specs must replay the source a user deploys;
+    // a plain file-source reader (`readStream...parquet(`) anywhere under
+    // src/ is a second delivery path the at-least-once specs do not cover
+    import scala.jdk.CollectionConverters._
+    val token = "read" + "Stream"
+    // the call chain after the token, one level of nested parentheses deep
+    val chain = (java.util.regex.Pattern.quote(token) +
+      """((?:\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\))*)""").r
+    val call = """\.\s*(\w+)\s*\(((?:[^()]|\([^()]*\))*)\)""".r
+    val files = Seq("src/main", "src/test").flatMap { d =>
+      Files.walk(java.nio.file.Paths.get(d)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+    }
+    val offenders = files.flatMap { f =>
+      val text = Files.readString(f)
+      chain.findAllMatchIn(text).flatMap { m =>
+        val line = text.substring(text.lastIndexOf('\n', m.start) + 1, m.start).trim
+        val comment = line.startsWith("*") || line.startsWith("/") || line.contains("//")
+        val calls = call.findAllMatchIn(m.group(1)).map(c => c.group(1) -> c.group(2).trim).toSeq
+        val opened = calls.takeWhile { case (name, _) => name != "format" }
+        val ok = calls.drop(opened.size).headOption.contains("format" -> "\"graft-shards\"") &&
+          opened.forall { case (name, _) => name == "schema" || name == "option" }
+        if (comment || ok) None
+        else Some(s"${f.getFileName}:${text.substring(0, m.start).count(_ == '\n') + 1}")
+      }
+    }
+    offenders shouldBe empty
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.streaming.ShardedEvents
+import graft.streaming.ShardLayout
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset => ConnectorOffset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
@@ -160,7 +160,7 @@ object GraftShardsConfig {
       fail("required option 'path' is missing (the sharded stream directory)"))
     if (path.trim.isEmpty) fail("option 'path' must not be empty")
 
-    val schema = userSchema.getOrElse(ShardedEvents.schema)
+    val schema = userSchema.getOrElse(ShardLayout.Events.schema)
 
     // presence AND type: a wrong-typed seek column would otherwise pass
     // load() and crash mid-resolution with a raw ClassCastException,
@@ -238,8 +238,17 @@ final class GraftShardsSource(stream: FileSourceBridge.ParquetStream,
     }
 
   override def getOffset: Option[V1Offset] = inner.getOffset
+
+  /** The batch is projected to the declared schema BY NAME. The inner
+    * file source delivers data columns, then the `shard` partition
+    * column, and Spark binds a batch to the declared schema by position,
+    * so a caller schema with `shard` before another column would
+    * otherwise get the two columns' values swapped. When the order
+    * already matches, the optimizer drops the projection.
+    */
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame =
     seek(stream.getBatch(start, end))
+      .select(schema.fieldNames.map(c => col("`" + c.replace("`", "``") + "`")).toSeq: _*)
   override def commit(end: V1Offset): Unit = inner.commit(end)
   override def commit(end: ConnectorOffset): Unit = inner.commit(end)
   override def initialOffset(): ConnectorOffset = inner.initialOffset()

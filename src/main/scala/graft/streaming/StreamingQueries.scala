@@ -32,24 +32,17 @@ object StreamingQueries {
 
   private val runCounter = new AtomicLong(0)
 
-  // Each sharded layout is the SOURCE (static at query time), so it is
-  // materialized once per (JVM, layout, sfDir); every query run still gets
+  // Each shard tree is the SOURCE (static at query time), so it is
+  // materialized once per (JVM, tree, sfDir); every query run still gets
   // a fresh checkpoint location and result table.
   private val shardDirs = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  private def shardDir(layout: String, sfDir: String)(write: String => Unit): String =
-    shardDirs.computeIfAbsent((layout, sfDir), { _ =>
-      val d = Files.createTempDirectory(s"graft-$layout-").toString + "/shards"
+  private def shardDir(tree: String, sfDir: String)(write: String => Unit): String =
+    shardDirs.computeIfAbsent((tree, sfDir), { _ =>
+      val d = Files.createTempDirectory(s"graft-$tree-").toString + "/shards"
       write(d)
       d
     })
-
-  private def eventShards(spark: SparkSession, sfDir: String): String =
-    shardDir("events", sfDir)(ShardedEvents.materialize(spark, sfDir, _))
-  private def corpusShards(spark: SparkSession, sfDir: String): String =
-    shardDir("corpus", sfDir)(ShardedCorpus.materialize(spark, sfDir, _))
-  private def embedShards(spark: SparkSession, sfDir: String): String =
-    shardDir("embed", sfDir)(ShardedEmbeddings.materialize(spark, sfDir, _))
 
   /** Open a sharded stream directory through the REGISTERED source — the
     * packaged `format("graft-shards")` entry point a library user calls
@@ -57,24 +50,16 @@ object StreamingQueries {
     * `KinesisSource(consumerConfig)` analog). It is the one reader of
     * every gate query, spec and test harness, so the CORRECTNESS gate and
     * the crash specs run the surface a user deploys. `schema` selects the
-    * record layout (events by default; [[ShardedCorpus.schema]],
-    * [[ShardedEmbeddings.schema]]); `maxFilesPerTrigger` is the
-    * record-intake admission control (O9) and the `throttle` analog (C7):
-    * it bounds work per micro-batch the way the reference's size-0 queue
-    * bounds the KCL thread.
-    *
-    * The schema is declared with the `shard` partition column last. The
-    * inner file source delivers each batch as data columns, then
-    * partition columns, and Spark binds a batch to the declared schema by
-    * POSITION, so a caller schema with `shard` earlier (the bounded
-    * trackers' `..., shard, ts`) would swap two columns' values.
+    * record layout (a [[ShardLayout]]'s, events by default);
+    * `maxFilesPerTrigger` is the record-intake admission control (O9) and
+    * the `throttle` analog (C7): it bounds work per micro-batch the way
+    * the reference's size-0 queue bounds the KCL thread.
     */
   private[graft] def shardStream(spark: SparkSession, dir: String,
-      schema: StructType = ShardedEvents.schema,
+      schema: StructType = ShardLayout.Events.schema,
       maxFilesPerTrigger: Option[Int] = None,
       startingPosition: String = "trim_horizon"): DataFrame = {
-    val (shard, data) = schema.partition(_.name == "shard")
-    val r = spark.readStream.format("graft-shards").schema(StructType(data ++ shard))
+    val r = spark.readStream.format("graft-shards").schema(schema)
       .option("path", dir)
       .option("startingPosition", startingPosition)
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
@@ -117,11 +102,7 @@ object StreamingQueries {
   private[streaming] val StateBytesPerPartition: Long = 64L << 20
 
   private[streaming] def statePartitionsFor(bytes: Long): Int =
-    // SPARK_GRAFT_STATE_PARTS: measurement override for partition sweeps
-    // (the r15/r16 A/B harness); unset in any deployed configuration
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.trim.toInt).getOrElse(
-      math.min(4096L, math.max(MinStatePartitions.toLong,
-        bytes / StateBytesPerPartition)).toInt)
+    math.min(4096L, math.max(MinStatePartitions.toLong, bytes / StateBytesPerPartition)).toInt
 
   /** On-disk bytes of `sfDir/table` (regular files under it) — the cheap
     * O(files) size probe behind [[statePartitionsFor]]; 0 when missing
@@ -142,15 +123,6 @@ object StreamingQueries {
       }
     } catch { case _: Throwable => 0L }
 
-  // per-source sizing shorthands: each streaming query derives its state
-  // width from ITS source table's bytes (events / documents / embeddings)
-  private def eventsStateParts(sfDir: String): Int =
-    statePartitionsFor(sourceBytes(sfDir, "events.parquet"))
-  private def corpusStateParts(sfDir: String): Int =
-    statePartitionsFor(sourceBytes(sfDir, "documents.parquet"))
-  private def embedStateParts(sfDir: String): Int =
-    statePartitionsFor(sourceBytes(sfDir, "embeddings.parquet"))
-
   /** Session confs scoped around every gate query, with the reasoning:
     *
     *  - `noDataMicroBatches.enabled=false`: after the data batches, Spark
@@ -162,10 +134,14 @@ object StreamingQueries {
     *    stream-stream joins (emission happens at match time; the no-data
     *    batch only evicts state, and an AvailableNow run terminates
     *    anyway), watermark-free fMGWS/dedup chains (no watermark, nothing
-    *    to finalize), or stateless projections. Measured A/B (r16): s6
-    *    CPU 10.6 → 8.7 s, wall 2.15 → 1.66 s; oracle 130/130 after the
-    *    change. At deployment the same setting is the standard trade for
-    *    append-mode sinks that tolerate one-batch emission latency; forms
+    *    to finalize), or stateless projections. Re-measured against the
+    *    production default (`plans/r20/`: `Probe time` at sf0.1, 4 cores,
+    *    median of 4 warm runs over 2 alternating blocks per side): s6
+    *    7.37 CPU-s with the entry vs 8.68 without (wall 2.74 vs 4.35 s),
+    *    a delta above the with-entry runs' own 1.01 CPU-s range; s1, s2
+    *    and s9 move within their spread. At deployment the same setting
+    *    is the standard trade for append-mode sinks that tolerate
+    *    one-batch emission latency; forms
     *    that NEED the finalization batch (eager eviction for the bounded
     *    trackers' state plateau) must re-enable it — the bounded-tracker
     *    spec harness owns its own confs, not this scope.
@@ -181,24 +157,47 @@ object StreamingQueries {
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
-  /** Run `body` with streaming-state partitioning sized to these queries'
-    * state volume, restoring the session default afterwards. The state
-    * partition count is checkpoint-PERMANENT (fixed at the first batch
-    * forever), so a streaming job must size it deliberately instead of
-    * inheriting the batch shuffle default: every stateful operator keeps
-    * one or more store instances per partition, and when state is small
-    * the per-store load/commit overhead dominates the actual work. Sizing
-    * is scale-adaptive ([[statePartitionsFor]] over the query's source
-    * table bytes — at fixture SFs it lands on the sweep-optimal floor, at
-    * corpus scale it grows with the data). Session-conf scoping is safe
-    * here because the driver runs queries sequentially; the restore keeps
-    * batch queries on the session default. `extra` adds confs that one
-    * query needs (s5's state-store provider) to the same scope.
+  /** The gate runner's scope, wrapped around a gate's WHOLE body,
+    * training included: streaming-state partitioning sized to the
+    * query's state volume, plus [[ScopedStreamConfs]] and the `confs`
+    * one gate needs (s5's state-store provider), each restored
+    * afterwards. The state partition count is checkpoint-PERMANENT
+    * (fixed at the first batch forever), so a streaming job must size it
+    * deliberately instead of inheriting the batch shuffle default: every
+    * stateful operator keeps one or more store instances per partition,
+    * and when state is small the per-store load/commit overhead dominates
+    * the actual work. Sizing is scale-adaptive ([[statePartitionsFor]]
+    * over `layout.table`'s bytes — at fixture SFs it lands on the
+    * sweep-optimal floor, at corpus scale it grows with the data).
+    * Session-conf scoping is safe here because the driver runs queries
+    * sequentially; the restore keeps batch queries on the session
+    * default.
     */
-  private def withStateSizing[T](spark: SparkSession, partitions: Int,
-      extra: (String, String)*)(body: => T): T =
-    withConfs(spark, (("spark.sql.shuffle.partitions" -> partitions.toString) +:
-      ScopedStreamConfs) ++ extra)(body)
+  private def gateScope[T](spark: SparkSession, sfDir: String, layout: ShardLayout,
+      confs: (String, String)*)(body: => T): T =
+    withConfs(spark, (("spark.sql.shuffle.partitions" ->
+      statePartitionsFor(sourceBytes(sfDir, layout.table)).toString) +: ScopedStreamConfs) ++ confs)(body)
+
+  /** The gate runner's stream: `layout`'s shard tree of `sfDir`,
+    * materialized once per (JVM, layout, sfDir), opened through
+    * `graft-shards`.
+    */
+  private def layoutStream(spark: SparkSession, sfDir: String, layout: ShardLayout,
+      maxFilesPerTrigger: Option[Int] = None, startingPosition: String = "trim_horizon"): DataFrame =
+    shardStream(spark, shardDir(layout.name, sfDir)(layout.materialize(spark, sfDir, _)),
+      layout.schema, maxFilesPerTrigger, startingPosition)
+
+  /** The gate runner: `query` over [[layoutStream]], inside [[gateScope]],
+    * run to completion into a memory sink under `mode`. The foreachBatch
+    * gates (s4, s5, s19) and the tranche gates (s12, s13) use the same
+    * scope and opener directly.
+    */
+  private def runGate(spark: SparkSession, sfDir: String, layout: ShardLayout, mode: OutputMode,
+      maxFilesPerTrigger: Option[Int] = None, startingPosition: String = "trim_horizon")(
+      query: DataFrame => DataFrame): DataFrame =
+    gateScope(spark, sfDir, layout) {
+      runToMemory(query(layoutStream(spark, sfDir, layout, maxFilesPerTrigger, startingPosition)), mode)
+    }
 
   /** Set `confs` on the session for the duration of `body`, then restore
     * each key to its prior value: re-set when it had one, unset when it
@@ -219,14 +218,13 @@ object StreamingQueries {
     * 1-hour watermark: the windowed-aggregation + watermark surface the
     * reference delegates entirely to downstream code (SURVEY.md §2D).
     */
-  def s1StreamHourlyAgg(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val result = shardStream(spark, eventShards(spark, sfDir))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("window.start").as("hour_start"), col("event_type"), col("n"), col("total"))
-    runToMemory(result, OutputMode.Complete())
-  }
+  def s1StreamHourlyAgg(spark: SparkSession, sfDir: String): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Events, OutputMode.Complete()) {
+      _.withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
+        .select(col("window.start").as("hour_start"), col("event_type"), col("n"), col("total"))
+    }
 
   /** Streaming initial-position seek (O10, ConsumerConfig.scala:115-139 in
     * the reference): the stream starts at the `graft-shards`
@@ -244,12 +242,11 @@ object StreamingQueries {
   def s3StreamSeekTrim(spark: SparkSession, sfDir: String): DataFrame =
     seekAgg(spark, sfDir, "trim_horizon")
 
-  private def seekAgg(spark: SparkSession, sfDir: String, startingPosition: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val result = shardStream(spark, eventShards(spark, sfDir), startingPosition = startingPosition)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-    runToMemory(result, OutputMode.Complete())
-  }
+  private def seekAgg(spark: SparkSession, sfDir: String, startingPosition: String): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Events, OutputMode.Complete(), startingPosition = startingPosition) {
+      _.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
+    }
 
   /** Arbitrary per-key state in the correctness gate: the
     * mapGroupsWithState tracker (O6's surface) runs over the sharded
@@ -280,9 +277,9 @@ object StreamingQueries {
     */
   private def perKeyFinal(spark: SparkSession, sfDir: String,
       tracker: DataFrame => Dataset[(Long, PerKeyTracker.KeyState)],
-      confs: (String, String)*): DataFrame = withStateSizing(spark, eventsStateParts(sfDir), confs: _*) {
+      confs: (String, String)*): DataFrame = gateScope(spark, sfDir, ShardLayout.Events, confs: _*) {
     val out = Files.createTempDirectory("graft-state-out-").toString
-    runAvailableNow(tracker(shardStream(spark, eventShards(spark, sfDir)))
+    runAvailableNow(tracker(layoutStream(spark, sfDir, ShardLayout.Events))
       .toDF("user_id", "state")
       .select(col("user_id"), col("state.n").as("n"),
         col("state.min_id").as("min_id"), col("state.max_id").as("max_id"))
@@ -340,24 +337,23 @@ object StreamingQueries {
     * mid-run, so no eviction happens under ANY delay). s6's wall is
     * the honest two-sided state cost; no lever left at this SF.
     */
-  def s6StreamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val events = shardStream(spark, eventShards(spark, sfDir))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("p_ts"),
-        col("event_id").as("p_id"), col("value").as("p_value"))
-      .withWatermark("p_ts", "35 days")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_id"))
-      .withWatermark("c_ts", "35 days")
-    val result = purchases.join(clicks,
-        col("user_id") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
-        col("c_ts") <= col("p_ts"))
-      .select(col("p_id"), col("c_id"), col("user_id"),
-        round(col("p_value"), 2).as("p_value"))
-    runToMemory(result, OutputMode.Append())
-  }
+  def s6StreamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Events, OutputMode.Append()) { events =>
+      val purchases = events.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"), col("value").as("p_value"))
+        .withWatermark("p_ts", "35 days")
+      val clicks = events.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+          col("event_id").as("c_id"))
+        .withWatermark("c_ts", "35 days")
+      purchases.join(clicks,
+          col("user_id") === col("c_user") &&
+          col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
+          col("c_ts") <= col("p_ts"))
+        .select(col("p_id"), col("c_id"), col("user_id"),
+          round(col("p_value"), 2).as("p_value"))
+    }
 
   /** Streaming dedup + per-type counts: `dropDuplicates` over the record
     * id is the replay-collapse operator in stream form (the reference's
@@ -366,13 +362,12 @@ object StreamingQueries {
     * correctness harness replays a bounded table); production uses
     * `dropDuplicatesWithinWatermark` so state is GC'd by event time.
     */
-  def s2StreamDedupCount(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val result = shardStream(spark, eventShards(spark, sfDir))
-      .dropDuplicates(Seq("event_id"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_distinct"))
-    runToMemory(result, OutputMode.Complete())
-  }
+  def s2StreamDedupCount(spark: SparkSession, sfDir: String): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Events, OutputMode.Complete()) {
+      _.dropDuplicates(Seq("event_id"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_distinct"))
+    }
 
   /** INCREMENTAL vector-store ingest — IVF index MAINTENANCE at ingest,
     * completing the at-ingest family (s7 exact doc dedup, s8 near-dup,
@@ -396,17 +391,15 @@ object StreamingQueries {
     * signal a real index uses to decide WHEN to retrain.
     */
   def s14StreamAnnIngest(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShards(spark, sfDir)
-    val cents = graft.ops.VectorOps.exactLabelCentroids(spark, sfDir)
-    val result = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
-      .select(col("vec_id"),
-        graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
-      .withColumn("cell", graft.ops.VectorOps.nearestCellExpr(cents, col("v")))
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
-    runToMemory(result, OutputMode.Complete())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Embeddings, OutputMode.Complete(), maxFilesPerTrigger) { stream =>
+      val cents = graft.ops.VectorOps.exactLabelCentroids(spark, sfDir)
+      stream.select(col("vec_id"),
+          graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
+        .withColumn("cell", graft.ops.VectorOps.nearestCellExpr(cents, col("v")))
+        .groupBy(col("cell"))
+        .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
+    }
 
   /** FULL vector-index build at ingest — s14 plus the PQ half: arriving
     * embeddings are assigned to their coarse cell AND PQ-ENCODED against
@@ -428,20 +421,18 @@ object StreamingQueries {
     * PQ compression: each vector is scanned once, at arrival.
     */
   def s15StreamPqIngest(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShards(spark, sfDir)
-    val cents = graft.ops.VectorOps.exactLabelCentroids(spark, sfDir)
-    val books = graft.ops.VectorOps.trainedPqCodebooks(spark, sfDir)
-    val result = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
-      .select(col("vec_id"),
-        graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
-      .withColumn("cell", graft.ops.VectorOps.nearestCellExpr(cents, col("v")))
-      .withColumn("code_key", graft.ops.VectorOps.pqCodeKeyExpr(books, col("v")))
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"),
-        sum(col("code_key")).as("code_sum"))
-    runToMemory(result, OutputMode.Complete())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Embeddings, OutputMode.Complete(), maxFilesPerTrigger) { stream =>
+      val cents = graft.ops.VectorOps.exactLabelCentroids(spark, sfDir)
+      val books = graft.ops.VectorOps.trainedPqCodebooks(spark, sfDir)
+      stream.select(col("vec_id"),
+          graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
+        .withColumn("cell", graft.ops.VectorOps.nearestCellExpr(cents, col("v")))
+        .withColumn("code_key", graft.ops.VectorOps.pqCodeKeyExpr(books, col("v")))
+        .groupBy(col("cell"))
+        .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"),
+          sum(col("code_key")).as("code_sum"))
+    }
 
   /** QUALITY GATE at ingest — d45's DSIR importance weights running as an
     * admission filter: the weight table and the admission threshold (the
@@ -466,15 +457,13 @@ object StreamingQueries {
     * and the 1000-executor stream filters at wire speed.
     */
   def s16StreamDsirGate(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val (wts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("dsir", sfDir)(
-      graft.ops.CorpusOps.dsirGate(spark, sfDir))
-    val result = shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
-      .select(col("doc_id"), graft.ops.CorpusOps.dsirScore(wts, col("text")).as("score"))
-      .filter(col("score") >= cutoff)
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      val (wts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("dsir", sfDir)(
+        graft.ops.CorpusOps.dsirGate(spark, sfDir))
+      stream.select(col("doc_id"), graft.ops.CorpusOps.dsirScore(wts, col("text")).as("score"))
+        .filter(col("score") >= cutoff)
+    }
 
   /** PERPLEXITY admission at ingest — d47's CCNet quality screen as the
     * s16 shape with a FIXED LM: the hashed add-one bigram model and the
@@ -493,15 +482,13 @@ object StreamingQueries {
     * consciously out of scope — its per-batch semantics are undefined).
     */
   def s21StreamPplGate(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val (bigWts, ctxWts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("ppl", sfDir)(
-      graft.ops.CorpusOps.pplGate(spark, sfDir))
-    val result = graft.ops.CorpusOps.pplScored(
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), bigWts, ctxWts)
-      .filter(col("avg_fx") >= cutoff)
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      val (bigWts, ctxWts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("ppl", sfDir)(
+        graft.ops.CorpusOps.pplGate(spark, sfDir))
+      graft.ops.CorpusOps.pplScored(stream, bigWts, ctxWts)
+        .filter(col("avg_fx") >= cutoff)
+    }
 
   /** WINNOW-SKETCH maintenance at ingest — the d52 fingerprint index's
     * WRITE path (the s14/s15 at-ingest family applied to the overlap
@@ -523,17 +510,15 @@ object StreamingQueries {
     * ingests: the d53 join side reads the accumulated sketch table.
     */
   def s17StreamWinnowIngest(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val result = graft.ops.CorpusOps.winnowSelected(
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger))
-      .select(col("doc_id"), size(col("sel")).cast("long").as("n_sel"),
-        aggregate(col("sel"), lit(0L),
-          (acc, g) => acc + pmod(g.getField("gh"), lit(1L << 40))).as("gh_sum"),
-        aggregate(col("sel"), lit(0L), (acc, g) => acc + g.getField("pos")).as("pos_sum"))
-      .filter(col("n_sel") > 0)
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      graft.ops.CorpusOps.winnowSelected(stream)
+        .select(col("doc_id"), size(col("sel")).cast("long").as("n_sel"),
+          aggregate(col("sel"), lit(0L),
+            (acc, g) => acc + pmod(g.getField("gh"), lit(1L << 40))).as("gh_sum"),
+          aggregate(col("sel"), lit(0L), (acc, g) => acc + g.getField("pos")).as("pos_sum"))
+        .filter(col("n_sel") > 0)
+    }
 
   /** INCREMENTAL corpus dedup — `ops.CorpusOps.d1ExactDedup`'s fingerprint
     * running at ingest: documents arrive on a sharded stream, each
@@ -550,15 +535,13 @@ object StreamingQueries {
     * `dropDuplicatesWithinWatermark` to bound it (the s2 production note
     * applies verbatim).
     */
-  def s7StreamCorpusDedup(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val result = shardStream(spark, shardDir, ShardedCorpus.schema)
-      .select(col("lang"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
-      .dropDuplicates(Seq("lang", "fp"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_unique"))
-    runToMemory(result, OutputMode.Complete())
-  }
+  def s7StreamCorpusDedup(spark: SparkSession, sfDir: String): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Complete()) {
+      _.select(col("lang"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
+        .dropDuplicates(Seq("lang", "fp"))
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_unique"))
+    }
 
   // encoder codegen requires these to be publicly accessible
   /** One banded KEY row of the ingest stream (see
@@ -621,19 +604,16 @@ object StreamingQueries {
     * a different batch), not only within one.
     */
   def s8StreamNearDup(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int]): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    import spark.implicits._
-    val shardDir = corpusShards(spark, sfDir)
-    val banded = graft.ops.CorpusOps.bandedKeyRows(
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger))
-      .as[BandedKeyRow]
-    val cands = banded
-      .groupByKey(_.band_key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(candidateTracker)
-    val result = verifiedPairs(cands.toDF().dropDuplicates(Seq("a_id", "b_id")),
+      maxFilesPerTrigger: Option[Int]): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      import spark.implicits._
+      val cands = graft.ops.CorpusOps.bandedKeyRows(stream)
+        .as[BandedKeyRow]
+        .groupByKey(_.band_key)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(candidateTracker)
+      verifiedPairs(cands.toDF().dropDuplicates(Seq("a_id", "b_id")),
         graft.Tables.documents(spark, sfDir))
-    runToMemory(result, OutputMode.Append())
-  }
+    }
 
   /** The verify stage of the side-table layout: candidate (a_id, b_id)
     * rows meet the doc-keyed gram-set table on both endpoints and the
@@ -696,15 +676,13 @@ object StreamingQueries {
       out.result().iterator
     }
 
-  /** The tranche-2 (`doc_id >= cut`) shard dirs s12 and s13 stream,
-    * materialized once per (JVM, sfDir) like the full layouts.
+  /** The tranche-2 (`doc_id >= cut`) corpus stream s12 and s13 read: a
+    * [[ShardLayout.Corpus]] shard tree written once per (JVM, sfDir) like
+    * the full layouts, opened through `graft-shards`.
     */
-  private def tranche2Shards(docs: DataFrame, sfDir: String, cut: Long): String =
-    shardDir("corpus-t2", sfDir) { d =>
-      ShardedEvents.routed(docs.filter(col("doc_id") >= cut),
-          col("doc_id"), col("doc_id"), ShardedCorpus.NumShards)
-        .write.mode("overwrite").partitionBy("shard").parquet(d)
-    }
+  private def tranche2Stream(spark: SparkSession, docs: DataFrame, sfDir: String, cut: Long): DataFrame =
+    shardStream(spark, shardDir("corpus-t2", sfDir)(
+      ShardLayout.Corpus.append(docs.filter(col("doc_id") >= cut), _)), ShardLayout.Corpus.schema)
 
   /** s12: the near-dup tracker RESUMED against an existing corpus — the
     * gate-query form of the initial-state bootstrap
@@ -727,7 +705,7 @@ object StreamingQueries {
     * WHOLE corpus's gram sets (cross-tranche pairs need tranche-1
     * grams).
     */
-  def s12StreamNearDupSeeded(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
+  def s12StreamNearDupSeeded(spark: SparkSession, sfDir: String): DataFrame = gateScope(spark, sfDir, ShardLayout.Corpus) {
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sfDir)
     val cut = (docs.agg(max(col("doc_id"))).collect().head.getLong(0) + 1L) / 2L
@@ -736,9 +714,7 @@ object StreamingQueries {
       .groupByKey(_.band_key)
       .mapGroups { (k, it) => k -> BucketIds(it.map(_.doc_id).toList) }
       .groupByKey(_._1).mapValues(_._2)
-    val shardDir = tranche2Shards(docs, sfDir, cut)
-    val banded = graft.ops.CorpusOps.bandedKeyRows(
-        shardStream(spark, shardDir, ShardedCorpus.schema))
+    val banded = graft.ops.CorpusOps.bandedKeyRows(tranche2Stream(spark, docs, sfDir, cut))
       .as[BandedKeyRow]
     val cands = banded
       .groupByKey(_.band_key)
@@ -760,7 +736,7 @@ object StreamingQueries {
     * duplicate arrives in the stream marks its old position too, which
     * batch-over-tranche-1 could not have known.
     */
-  def s13StreamDupSeeded(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
+  def s13StreamDupSeeded(spark: SparkSession, sfDir: String): DataFrame = gateScope(spark, sfDir, ShardLayout.Corpus) {
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sfDir)
     val cut = (docs.agg(max(col("doc_id"))).collect().head.getLong(0) + 1L) / 2L
@@ -779,8 +755,7 @@ object StreamingQueries {
           multi = occs.exists(o => o.doc_id != first.doc_id || o.pos != first.pos))
       }
       .groupByKey(_._1).mapValues(_._2)
-    val shardDir = tranche2Shards(docs, sfDir, cut)
-    val marked = occurrences(shardStream(spark, shardDir, ShardedCorpus.schema))
+    val marked = occurrences(tranche2Stream(spark, docs, sfDir, cut))
       .groupByKey(_.gh)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, seed)(dupPositionTracker)
     val result = marked.toDF()
@@ -854,23 +829,20 @@ object StreamingQueries {
     * micro-batches — the cross-batch retroactive emission path.
     */
   def s11StreamDupPositions(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int]): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    import spark.implicits._
-    val shardDir = corpusShards(spark, sfDir)
-    // no length pre-filter — see the matching note in CorpusOps.dupSpans
-    val occurrences = shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
-      .select(col("doc_id"),
-        posexplode(graft.functions.WordWindowMd5.wordWindowMd5(
-          lower(trim(col("text"))), 8)))
-      .select(col("col").as("gh"), col("doc_id"), col("pos").cast("long").as("pos"))
-      .as[GramOccurrence]
-    val marked = occurrences
-      .groupByKey(_.gh)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(dupPositionTracker)
-    val result = marked.toDF()
-      .dropDuplicates(Seq("doc_id", "pos"))
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int]): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      import spark.implicits._
+      // no length pre-filter — see the matching note in CorpusOps.dupSpans
+      stream.select(col("doc_id"),
+          posexplode(graft.functions.WordWindowMd5.wordWindowMd5(
+            lower(trim(col("text"))), 8)))
+        .select(col("col").as("gh"), col("doc_id"), col("pos").cast("long").as("pos"))
+        .as[GramOccurrence]
+        .groupByKey(_.gh)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(dupPositionTracker)
+        .toDF()
+        .dropDuplicates(Seq("doc_id", "pos"))
+    }
 
   /** [[GramOccurrence]] carrying its ingest event time. */
   case class GramOccurrenceTs(gh: Long, doc_id: Long, pos: Long, ts: java.sql.Timestamp)
@@ -1129,18 +1101,16 @@ object StreamingQueries {
     * independent because the probe is per-gram and counts are
     * commutative.
     */
-  def s10StreamContamination(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val evalGrams = graft.ops.CorpusOps.gramHashRows(
-        graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 97 === 0))
-      .select(col("gh")).distinct()
-    val result = graft.ops.CorpusOps.gramHashRows(
-        shardStream(spark, shardDir, ShardedCorpus.schema).filter(col("doc_id") % 97 =!= 0))
-      .join(broadcast(evalGrams), "gh")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shared"))
-    runToMemory(result, OutputMode.Complete())
-  }
+  def s10StreamContamination(spark: SparkSession, sfDir: String): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Complete()) { stream =>
+      val evalGrams = graft.ops.CorpusOps.gramHashRows(
+          graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 97 === 0))
+        .select(col("gh")).distinct()
+      graft.ops.CorpusOps.gramHashRows(stream.filter(col("doc_id") % 97 =!= 0))
+        .join(broadcast(evalGrams), "gh")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_shared"))
+    }
 
   /** SEMANTIC contamination gate at ingest — d56 running as the arrival
     * check (the embedding-space twin of [[s10StreamContamination]]'s
@@ -1154,22 +1124,20 @@ object StreamingQueries {
     * pruning applies verbatim at ingest).
     */
   def s18StreamSemanticGate(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShards(spark, sfDir)
-    val ev = graft.Tables.embeddings(spark, sfDir)
-      .filter(pmod(col("vec_id"), lit(25L)) === 0L)
-      .select(col("vec_id").as("eval_id"),
-        graft.ops.VectorOps.vecAsDouble(col("embedding")).as("evv"))
-    val result = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
-      .filter(pmod(col("vec_id"), lit(25L)) =!= 0L)
-      .select(col("vec_id").as("train_id"),
-        graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
-      .crossJoin(broadcast(ev))
-      .withColumn("sim", graft.ops.VectorOps.cosine(col("evv"), col("v")))
-      .filter(col("sim") >= graft.ops.VectorOps.SemDedupThreshold)
-      .select(col("eval_id"), col("train_id"), round(col("sim"), 6).as("sim"))
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Embeddings, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      val ev = graft.Tables.embeddings(spark, sfDir)
+        .filter(pmod(col("vec_id"), lit(25L)) === 0L)
+        .select(col("vec_id").as("eval_id"),
+          graft.ops.VectorOps.vecAsDouble(col("embedding")).as("evv"))
+      stream.filter(pmod(col("vec_id"), lit(25L)) =!= 0L)
+        .select(col("vec_id").as("train_id"),
+          graft.ops.VectorOps.vecAsDouble(col("embedding")).as("v"))
+        .crossJoin(broadcast(ev))
+        .withColumn("sim", graft.ops.VectorOps.cosine(col("evv"), col("v")))
+        .filter(col("sim") >= graft.ops.VectorOps.SemDedupThreshold)
+        .select(col("eval_id"), col("train_id"), round(col("sim"), 6).as("sim"))
+    }
 
   /** Constant arrival slice for [[s19StreamAnnLookup]]'s gate row: the
     * deployed lookup shape is a FIXED query rate against a growing index,
@@ -1207,14 +1175,13 @@ object StreamingQueries {
     */
   def s19StreamAnnLookup(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None,
-      querySlice: Option[Long] = Some(AnnQuerySlice)): DataFrame = withStateSizing(spark, embedStateParts(sfDir)) {
-    val shardDir = embedShards(spark, sfDir)
+      querySlice: Option[Long] = Some(AnnQuerySlice)): DataFrame = gateScope(spark, sfDir, ShardLayout.Embeddings) {
     val out = Files.createTempDirectory("graft-annq-out-").toString
     val index = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id").as("n_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("nv"),
         col("label").as("n_label"))
-    val arrivals = shardStream(spark, shardDir, ShardedEmbeddings.schema, maxFilesPerTrigger)
+    val arrivals = layoutStream(spark, sfDir, ShardLayout.Embeddings, maxFilesPerTrigger)
     runAvailableNow(querySlice.fold(arrivals)(s => arrivals.filter(col("vec_id") < s))
       .select(col("vec_id").as("q_id"),
         graft.ops.VectorOps.vecAsDouble(col("embedding")).as("qv"),
@@ -1249,18 +1216,16 @@ object StreamingQueries {
     * ingest tier runs at wire speed against last year's corpus.
     */
   def s20StreamBloomGate(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val bm = graft.ops.TrainedModelCache.getOrTrain("bloom", sfDir)(
-      graft.ops.CorpusOps.bloomBitmap(graft.Tables.documents(spark, sfDir)))
-    val result = shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
-      .filter(pmod(col("doc_id"), lit(2L)) === 1L)
-      .select(col("doc_id"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
-      .select(col("doc_id"),
-        when(graft.ops.CorpusOps.bloomHit(bm, col("fp")), lit(1L))
-          .otherwise(lit(0L)).as("hit"))
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      val bm = graft.ops.TrainedModelCache.getOrTrain("bloom", sfDir)(
+        graft.ops.CorpusOps.bloomBitmap(graft.Tables.documents(spark, sfDir)))
+      stream.filter(pmod(col("doc_id"), lit(2L)) === 1L)
+        .select(col("doc_id"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
+        .select(col("doc_id"),
+          when(graft.ops.CorpusOps.bloomHit(bm, col("fp")), lit(1L))
+            .otherwise(lit(0L)).as("hit"))
+    }
 
   /** NOVELTY GATE at ingest — d66's window-Bloom admission running at
     * the ingest tier: the history half's window bitmap is batch-built
@@ -1274,15 +1239,12 @@ object StreamingQueries {
     * wire speed against last year's corpus.
     */
   def s22StreamNoveltyGate(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val bm = graft.ops.TrainedModelCache.getOrTrain("window-bloom", sfDir)(
-      graft.ops.CorpusOps.windowBloomBitmap(graft.Tables.documents(spark, sfDir)))
-    val result = graft.ops.CorpusOps.noveltyGateWith(bm,
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
-          .filter(pmod(col("doc_id"), lit(2L)) === 1L))
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      val bm = graft.ops.TrainedModelCache.getOrTrain("window-bloom", sfDir)(
+        graft.ops.CorpusOps.windowBloomBitmap(graft.Tables.documents(spark, sfDir)))
+      graft.ops.CorpusOps.noveltyGateWith(bm, stream.filter(pmod(col("doc_id"), lit(2L)) === 1L))
+    }
 
   /** Min-K% MEMORIZATION firewall at ingest — d67's membership-inference
     * screen (Shi et al. 2024) running at the ingest tier: the bigram LM
@@ -1298,15 +1260,13 @@ object StreamingQueries {
     * firewall fails closed. Stateless, no state store, no watermark.
     */
   def s23StreamMinkGate(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val (bigWts, ctxWts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("mink", sfDir)(
-      graft.ops.CorpusOps.minkGate(spark, sfDir))
-    val result = graft.ops.CorpusOps.minkScored(
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), bigWts, ctxWts)
-      .filter(col("mink_fx") < cutoff)
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      val (bigWts, ctxWts, cutoff) = graft.ops.TrainedModelCache.getOrTrain("mink", sfDir)(
+        graft.ops.CorpusOps.minkGate(spark, sfDir))
+      graft.ops.CorpusOps.minkScored(stream, bigWts, ctxWts)
+        .filter(col("mink_fx") < cutoff)
+    }
 
   /** RARE-TOKEN (OOV/gibberish) firewall at ingest — d73's frequency
     * screen running at the ingest tier: the history half's Count-Min
@@ -1321,15 +1281,13 @@ object StreamingQueries {
     * no watermark.
     */
   def s24StreamRareGate(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val (cms, total, cutoff) = graft.ops.TrainedModelCache.getOrTrain("rare", sfDir)(
-      graft.ops.CorpusOps.rareGate(spark, sfDir))
-    val result = graft.ops.CorpusOps.rareGateWith(cms, total, cutoff,
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger)
-          .filter(pmod(col("doc_id"), lit(2L)) === 1L))
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      val (cms, total, cutoff) = graft.ops.TrainedModelCache.getOrTrain("rare", sfDir)(
+        graft.ops.CorpusOps.rareGate(spark, sfDir))
+      graft.ops.CorpusOps.rareGateWith(cms, total, cutoff,
+        stream.filter(pmod(col("doc_id"), lit(2L)) === 1L))
+    }
 
   /** Streaming event-time SESSIONIZATION: the native `session_window`
     * operator (q_session_window's batch twin) run as a streaming
@@ -1346,14 +1304,13 @@ object StreamingQueries {
     * compares a full table); production emits closed sessions in append
     * mode with the same plan and watermark-bounded state.
     */
-  def s9StreamSession(spark: SparkSession, sfDir: String): DataFrame = withStateSizing(spark, eventsStateParts(sfDir)) {
-    val result = shardStream(spark, eventShards(spark, sfDir))
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "1 hour"), col("user_id"))
-      .agg(min(col("ts")).as("session_start"), count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_start"), col("n_events"))
-    runToMemory(result, OutputMode.Complete())
-  }
+  def s9StreamSession(spark: SparkSession, sfDir: String): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Events, OutputMode.Complete()) {
+      _.withWatermark("ts", "1 hour")
+        .groupBy(session_window(col("ts"), "1 hour"), col("user_id"))
+        .agg(min(col("ts")).as("session_start"), count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("session_start"), col("n_events"))
+    }
 
   /** DRIFTING-TARGET temperature rebalance at ingest (the s-series twin
     * of d44 the r10-r12 surveys consciously deferred): the id axis
@@ -1370,13 +1327,10 @@ object StreamingQueries {
     * drifting gate oracle-checkable at all.
     */
   def s25StreamDriftMix(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val sched = graft.ops.CorpusOps.driftMixSchedule(spark, sfDir)
-    val result = graft.ops.CorpusOps.driftMixAdmit(
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), sched)
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      graft.ops.CorpusOps.driftMixAdmit(stream, graft.ops.CorpusOps.driftMixSchedule(spark, sfDir))
+    }
 
   /** PERIODIC LM REFRESH at ingest (the drifting-LM variant the surveys
     * deferred alongside s25): every arrival scores under the bigram LM
@@ -1391,11 +1345,8 @@ object StreamingQueries {
     * arrival's (doc_id, epoch, n_bigrams, avg_fx).
     */
   def s26StreamLmRefresh(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateSizing(spark, corpusStateParts(sfDir)) {
-    val shardDir = corpusShards(spark, sfDir)
-    val m = graft.ops.CorpusOps.lmRefreshModel(spark, sfDir)
-    val result = graft.ops.CorpusOps.lmRefreshScored(
-        shardStream(spark, shardDir, ShardedCorpus.schema, maxFilesPerTrigger), m)
-    runToMemory(result, OutputMode.Append())
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runGate(spark, sfDir, ShardLayout.Corpus, OutputMode.Append(), maxFilesPerTrigger) { stream =>
+      graft.ops.CorpusOps.lmRefreshScored(stream, graft.ops.CorpusOps.lmRefreshModel(spark, sfDir))
+    }
 }

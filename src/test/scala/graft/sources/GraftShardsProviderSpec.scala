@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.streaming.{ShardedEvents, StreamControl}
+import graft.streaming.{ShardLayout, StreamControl}
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.read.streaming.{Offset => ConnectorOffset}
@@ -25,7 +25,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def shardDir(base: String): String = {
     val dir = s"$base/shards"
-    ShardedEvents.materialize(spark, sf001, dir)
+    ShardLayout.Events.materialize(spark, sf001, dir)
     dir
   }
 
@@ -103,7 +103,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
       .option("path", newBase())
       .option("startingPosition", "trim_horizon")
       .load()
-    df.schema shouldBe ShardedEvents.schema
+    df.schema shouldBe ShardLayout.Events.schema
   }
 
   // ---- starting positions deliver the right record sets ----
@@ -136,8 +136,8 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
       .start()
     q.awaitTermination()
     // one shard file per micro-batch: at least one batch per shard
-    assert(batches >= ShardedEvents.NumShards,
-      s"expected >=${ShardedEvents.NumShards} single-file batches, got $batches")
+    assert(batches >= ShardLayout.Events.numShards,
+      s"expected >=${ShardLayout.Events.numShards} single-file batches, got $batches")
   }
 
   test("latest: subscribe point is frozen at first start and survives restart (checkpoint-stable)") {
@@ -149,12 +149,12 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val (c1, c2) = (ids(ids.length / 3), ids(2 * ids.length / 3))
 
     // tranche 1 exists BEFORE the subscribe: must never be delivered
-    ShardedEvents.appendTranche(events.filter(col("event_id") <= c1), dir, 4)
+    ShardLayout.Events.append(events.filter(col("event_id") <= c1), dir, 4)
     val got1 = collectIds(open(dir, "latest"), ckpt)
     assert(got1.isEmpty, s"latest must skip the pre-subscribe records, got ${got1.take(5)}")
 
     // tranche 2 appended after the subscribe: delivered on the next run
-    ShardedEvents.appendTranche(
+    ShardLayout.Events.append(
       events.filter(col("event_id") > c1 && col("event_id") <= c2), dir, 4)
     val got2 = collectIds(open(dir, "latest"), ckpt)
     got2.sorted shouldBe ids.filter(i => i > c1 && i <= c2).toSeq
@@ -164,7 +164,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // subscribe point, so only records after the ORIGINAL ends arrive;
     // nothing already delivered is re-delivered (offsets) and nothing
     // pre-subscribe leaks in (snapshot)
-    ShardedEvents.appendTranche(events.filter(col("event_id") > c2), dir, 4)
+    ShardLayout.Events.append(events.filter(col("event_id") > c2), dir, 4)
     val got3 = collectIds(open(dir, "latest"), ckpt)
     got3.sorted shouldBe ids.filter(_ > c2).toSeq
     assert(StreamControl.checkpointOffsets(ckpt) == StreamControl.checkpointCommits(ckpt))
@@ -175,10 +175,10 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // the documents schema through format("graft-shards")
     val base = newBase()
     val dir = s"$base/shards"
-    graft.streaming.ShardedCorpus.materialize(spark, sf001, dir)
+    graft.streaming.ShardLayout.Corpus.materialize(spark, sf001, dir)
     val df = graft.streaming.StreamingQueries.shardStream(spark, dir,
-      graft.streaming.ShardedCorpus.schema)
-    df.schema shouldBe graft.streaming.ShardedCorpus.schema
+      graft.streaming.ShardLayout.Corpus.schema)
+    df.schema shouldBe graft.streaming.ShardLayout.Corpus.schema
     val got = mutable.Buffer.empty[Long]
     val q = df.select("doc_id")
       .writeStream
@@ -195,6 +195,43 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
   }
 
+  test("caller schema: every column is bound by NAME, wherever `shard` sits") {
+    // Spark binds each micro-batch to the declared schema by position and
+    // the inner file source delivers `shard` last; without the by-name
+    // projection in getBatch, both schemas below swap two columns' values
+    import org.apache.spark.sql.types.StructType
+    val base = newBase()
+    val dir = shardDir(base)
+    val fields = ShardLayout.Events.schema.fields
+    val (head, tail) = fields.init.splitAt(2) // (event_id, ts), (user_id, ...)
+    val shardFirst = StructType(fields.last +: fields.init)
+    val shardMid = StructType(head ++ (fields.last +: tail))
+    Seq(shardFirst, shardMid).zipWithIndex.foreach { case (schema, i) =>
+      val got = mutable.Buffer.empty[org.apache.spark.sql.Row]
+      val q = spark.readStream.format("graft-shards").schema(schema)
+        .option("path", dir)
+        .option("startingPosition", "trim_horizon")
+        .load()
+        .writeStream
+        .option("checkpointLocation", s"$base/ckpt$i")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val rows = b.collect()
+          got.synchronized { got ++= rows }
+          ()
+        }
+        .start()
+      q.awaitTermination()
+      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      val want = spark.read.schema(ShardLayout.Events.schema).parquet(dir)
+        .select(schema.fieldNames.map(col).toSeq: _*).collect()
+      def byId(rows: Seq[org.apache.spark.sql.Row]) =
+        rows.map(r => r.getAs[Long]("event_id") -> r.toSeq).toMap
+      got.size shouldBe want.length
+      byId(got.toSeq) shouldBe byId(want.toSeq)
+    }
+  }
+
   test("latest: subscribing BEFORE the stream directory exists starts clean, later records flow") {
     // the canonical Kinesis LATEST shape: the consumer subscribes before
     // the producer has written anything — start() must not fail on the
@@ -207,7 +244,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     assert(got1.isEmpty, s"empty subscribe must deliver nothing, got ${got1.take(5)}")
 
     val events = batchEvents
-    ShardedEvents.appendTranche(events, dir, 4)
+    ShardLayout.Events.append(events, dir, 4)
     val got2 = collectIds(open(dir, "latest"), ckpt)
     got2.sorted shouldBe events.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
   }
@@ -236,7 +273,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // event_id — the config must say so at load(), not fail mid-query
     val e = intercept[IllegalArgumentException] {
       spark.readStream.format("graft-shards")
-        .schema(graft.streaming.ShardedCorpus.schema)
+        .schema(graft.streaming.ShardLayout.Corpus.schema)
         .option("path", "/tmp/x")
         .option("startingPosition", "latest")
         .load()
@@ -275,7 +312,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // retained history unread
     val base = newBase()
     val dir = s"$base/shards"
-    ShardedEvents.appendTranche(batchEvents, dir, 4) // retained pre-subscribe history
+    ShardLayout.Events.append(batchEvents, dir, 4) // retained pre-subscribe history
     val q = open(dir, "latest")
       .select("event_id")
       .writeStream
@@ -299,11 +336,11 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val dir = s"$base/shards"
     val ids = batchEvents.select("event_id").collect().map(_.getLong(0)).sorted
     val cut = ids(ids.length / 2)
-    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") <= cut), dir, 4)
+    ShardLayout.Events.append(batchEvents.filter(col("event_id") <= cut), dir, 4)
     val ckpt = s"$base/ckpt"
     collectIds(open(dir, "latest"), ckpt) shouldBe empty
     // appended after subscribe, into 4 new shards too: all of it flows
-    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") > cut), dir, 8)
+    ShardLayout.Events.append(batchEvents.filter(col("event_id") > cut), dir, 8)
     val got = mutable.Buffer.empty[Long]
     val q = open(dir, "latest")
       .select("event_id")
@@ -353,7 +390,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // multi-batch drain still delivers everything exactly once
     val base = newBase()
     val dir = s"$base/shards"
-    ShardedEvents.appendTranche(batchEvents, dir, 4) // 4 files, ~250 records each
+    ShardLayout.Events.append(batchEvents, dir, 4) // 4 files, ~250 records each
     val cap = 300L
     val batchSizes = mutable.Buffer.empty[Long]
     val got = mutable.Buffer.empty[Long]
@@ -381,7 +418,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("maxRecordsPerTrigger composes with maxFilesPerTrigger: the tighter bound wins") {
     val base = newBase()
     val dir = s"$base/shards"
-    ShardedEvents.appendTranche(batchEvents, dir, 4)
+    ShardLayout.Events.append(batchEvents, dir, 4)
     var batches = 0
     // record cap admits everything; the 1-file cap must still hold
     val q = open(dir, "trim_horizon",
@@ -404,7 +441,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // exactly once
     val base = newBase()
     val dir = s"$base/shards"
-    ShardedEvents.appendTranche(batchEvents, dir, 4)
+    ShardLayout.Events.append(batchEvents, dir, 4)
     val cap = 300L
     val got = mutable.Buffer.empty[Long]
     val sizes = mutable.Buffer.empty[Long]
@@ -492,7 +529,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     val events = batchEvents
-    for (t <- 0 until 10) ShardedEvents.appendTranche(events.filter(pmod(col("event_id"), lit(10)) === t), dir, 4)
+    for (t <- 0 until 10) ShardLayout.Events.append(events.filter(pmod(col("event_id"), lit(10)) === t), dir, 4)
     val files = partFileCount(dir)
     assert(files > 32, s"fixture must exceed the discovery threshold, got $files files")
     val got = mutable.Buffer.empty[(Long, Int)]
@@ -529,7 +566,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     val events = batchEvents
-    ShardedEvents.appendTranche(events, dir, 4)
+    ShardLayout.Events.append(events, dir, 4)
     val ckpt = s"$base/ckpt"
     def run(failFirst: Boolean): (Seq[Long], Seq[String]) = {
       val got = mutable.Buffer.empty[Long]
@@ -571,15 +608,15 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // an EARLIER trigger admitted; once the drain is done it is empty
     val base = newBase()
     val dir = s"$base/shards"
-    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") % 2 === 0), dir, 4)
-    ShardedEvents.appendTranche(batchEvents.filter(col("event_id") % 2 =!= 0), dir, 4)
+    ShardLayout.Events.append(batchEvents.filter(col("event_id") % 2 === 0), dir, 4)
+    ShardLayout.Events.append(batchEvents.filter(col("event_id") % 2 =!= 0), dir, 4)
     val src = new GraftShardsProvider().createSource(spark.sqlContext, s"$base/meta", None,
       "graft-shards", Map("path" -> dir, "startingPosition" -> "trim_horizon",
         "maxRecordsPerTrigger" -> "300")).asInstanceOf[GraftShardsSource]
     val ra = src.recordAdmission.get
     // a second, read-only view of the same source log
     val log = org.apache.spark.sql.graftbridge.FileSourceBridge.parquetStream(
-      spark, s"$base/meta", ShardedEvents.schema, dir, Map.empty)
+      spark, s"$base/meta", ShardLayout.Events.schema, dir, Map.empty)
     var admitted = Set.empty[org.apache.hadoop.fs.Path]
     var start: Option[ConnectorOffset] = None
     var batches = 0
@@ -603,7 +640,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     import org.apache.hadoop.fs.Path
     val base = newBase()
     val dir = s"$base/shards"
-    ShardedEvents.appendTranche(batchEvents, dir, 4) // part files, .crc sidecars, _SUCCESS
+    ShardLayout.Events.append(batchEvents, dir, 4) // part files, .crc sidecars, _SUCCESS
     val root = new Path(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)

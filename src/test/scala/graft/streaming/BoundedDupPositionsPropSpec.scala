@@ -53,7 +53,7 @@ class BoundedDupPositionsPropSpec extends AnyFunSuite with SparkSpec with Matche
       val got = mutable.Buffer.empty[(Long, Long)]
       val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
       parts.foreach { t =>
-        appendTranche(t, dir)
+        ShardLayout.Corpus.append(t, dir)
         runTranche(spark, dir, s"$base/ckpt",
           StreamingQueries.boundedDupPositions(_, s"${sc.watermarkSec} seconds",
             ttlMs = sc.ttlSec * 1000L),

@@ -41,7 +41,7 @@ class BoundedNearDupPropSpec extends AnyFunSuite with SparkSpec with Matchers {
       val got = mutable.Buffer.empty[(Long, Long)]
       val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
       parts.foreach { t =>
-        appendTranche(t, dir)
+        ShardLayout.Corpus.append(t, dir)
         runTranche(spark, dir, s"$base/ckpt",
           StreamingQueries.boundedNearDupPairs(_, s"${sc.watermarkSec} seconds",
             ttlMs = sc.ttlSec * 1000L),

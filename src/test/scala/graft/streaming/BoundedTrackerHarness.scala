@@ -9,7 +9,7 @@ import scala.collection.mutable
 
 /** The ONE test harness for the bounded stateful trackers
   * (`StreamingQueries.boundedDupPositions` / `boundedNearDupPairs`):
-  * corpus generation, tranche routing, and the scoped-conf
+  * corpus generation, tranche cuts, and the scoped-conf
   * `AvailableNow` runner the example-based `StreamingSpec` tests and
   * both ScalaCheck property specs share. The deployment-contract conf
   * handling lives HERE and only here — a future conf change has exactly
@@ -35,7 +35,7 @@ object BoundedTrackerHarness {
     * their watermarks on.
     */
   val schemaTs: StructType =
-    StructType(ShardedCorpus.schema.fields :+ StructField("ts", TimestampType))
+    StructType(ShardLayout.Corpus.schema.fields :+ StructField("ts", TimestampType))
 
   /** One generated corpus + run shape. `copyOf(i) = j` makes doc i an
     * exact text copy of doc j < i (planting guaranteed duplicate windows
@@ -90,11 +90,6 @@ object BoundedTrackerHarness {
     all.filter(col("doc_id") < sc.cuts._1),
     all.filter(col("doc_id") >= sc.cuts._1 && col("doc_id") < sc.cuts._2),
     all.filter(col("doc_id") >= sc.cuts._2))
-
-  /** Route one tranche into the sharded stream directory (append). */
-  def appendTranche(t: DataFrame, dir: String): Unit =
-    ShardedEvents.routed(t, col("doc_id"), col("doc_id"), ShardedCorpus.NumShards)
-      .write.mode("append").partitionBy("shard").parquet(dir)
 
   /** One `AvailableNow` run of `tracker` over the current corpus dir,
     * resuming from `ckpt`, under the deployment-contract confs (scoped

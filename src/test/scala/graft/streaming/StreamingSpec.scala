@@ -30,7 +30,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def shardDir(base: String): String = {
     val dir = s"$base/shards"
-    ShardedEvents.materialize(spark, sf001, dir)
+    ShardLayout.Events.materialize(spark, sf001, dir)
     dir
   }
 
@@ -365,7 +365,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val eventShards = shardDir(base)
     val docShards = s"$base/docshards"
-    ShardedCorpus.materialize(spark, sf001, docShards)
+    ShardLayout.Corpus.materialize(spark, sf001, docShards)
     try {
       // q1: per-type event counts after exact dedup (s2's shape);
       // q2: per-lang distinct-fingerprint corpus dedup (s7's shape);
@@ -378,7 +378,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
         .option("checkpointLocation", s"$base/ckpt1")
         .trigger(Trigger.AvailableNow())
         .start()
-      val q2 = shardStream(spark, docShards, ShardedCorpus.schema, maxFilesPerTrigger = Some(1))
+      val q2 = shardStream(spark, docShards, ShardLayout.Corpus.schema, maxFilesPerTrigger = Some(1))
         .select(col("lang"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
         .dropDuplicates(Seq("lang", "fp"))
         .groupBy(col("lang")).agg(count(lit(1)).as("n_unique"))
@@ -432,8 +432,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val dirA = s"$base/shardsA"
     val dirB = s"$base/shardsB"
     val events = graft.Tables.events(spark, sf001)
-    ShardedEvents.appendTranche(events, dirA, 4) // 4-shard stream
-    ShardedEvents.appendTranche(events, dirB, 2) // different shard set => different gauge shape
+    ShardLayout.Events.append(events, dirA, 4) // 4-shard stream
+    ShardLayout.Events.append(events, dirB, 2) // different shard set => different gauge shape
     try {
       def run(dir: String, ckpt: String) = GraftStats.observeShardRows(
           shardStream(spark, dir),
@@ -484,7 +484,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val events = graft.Tables.events(spark, sf001)
     val ids = batchEventIds.sorted
     val cut = ids(ids.size / 2)
-    ShardedEvents.appendTranche(events.filter(col("event_id") <= cut), dir, 2)
+    ShardLayout.Events.append(events.filter(col("event_id") <= cut), dir, 2)
     try {
       val q = GraftStats.observeShardRows(
           shardStream(spark, dir),
@@ -502,7 +502,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       assert(before.keySet == Set(0, 1), s"pre-split gauge shards: $before")
 
       // SPLIT 2 -> 4 under the live query: children 2 and 3 appear
-      ShardedEvents.appendTranche(events.filter(col("event_id") > cut), dir, 4)
+      ShardLayout.Events.append(events.filter(col("event_id") > cut), dir, 4)
       q.processAllAvailable()
       StreamControl.stopGracefully(q)
       val deadline = System.nanoTime() + 10_000_000_000L
@@ -765,8 +765,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
         .start()
       q.awaitTermination(); got.toSeq
     }
-    val a = consume("a", col("shard") < ShardedEvents.NumShards / 2)
-    val b = consume("b", col("shard") >= ShardedEvents.NumShards / 2)
+    val a = consume("a", col("shard") < ShardLayout.Events.numShards / 2)
+    val b = consume("b", col("shard") >= ShardLayout.Events.numShards / 2)
     assert(a.nonEmpty && b.nonEmpty)
     assert(a.toSet.intersect(b.toSet).isEmpty, "consumers must hold exclusive sets")
     (a ++ b).sorted shouldBe batchEventIds.sorted
@@ -793,7 +793,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       tranche(Some(tsCuts(1)), None))
 
     // every record written TWICE: at-least-once delivery with duplicates
-    ShardedEvents.appendTranche(tranches.head.union(tranches.head), dir, 4)
+    ShardLayout.Events.append(tranches.head.union(tranches.head), dir, 4)
     val got = mutable.Buffer.empty[Long]
     val q = shardStream(spark, dir)
       .withWatermark("ts", "1 minute")
@@ -811,7 +811,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       .start()
     q.processAllAvailable()
     tranches.tail.foreach { t =>
-      ShardedEvents.appendTranche(t.union(t), dir, 4)
+      ShardLayout.Events.append(t.union(t), dir, 4)
       q.processAllAvailable()
     }
     val stateRows = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal)
@@ -845,7 +845,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       r => (r.getLong(0), r.getLong(1)), got, tracker)
 
   private def appendDocTranche(t: org.apache.spark.sql.DataFrame, dir: String): Unit =
-    BoundedTrackerHarness.appendTranche(t, dir)
+    ShardLayout.Corpus.append(t, dir)
 
   private def dupGramRel(t: org.apache.spark.sql.DataFrame) = t
     .select(col("doc_id"), posexplode(graft.functions.WordWindowMd5.wordWindowMd5(
@@ -989,7 +989,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
 
     val base = newBase()
     val dir = s"$base/shards"
-    BoundedTrackerHarness.appendTranche(tranche2, dir) // the stream sees ONLY new arrivals
+    ShardLayout.Corpus.append(tranche2, dir) // the stream sees ONLY new arrivals
     val got = mutable.Buffer.empty[(Long, Long)]
     val progress = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
     BoundedTrackerHarness.runTranche[(Long, Long)](spark, dir, s"$base/ckpt",
@@ -1111,7 +1111,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       tranche(Some(tsCuts(0)), Some(tsCuts(1))),
       tranche(Some(tsCuts(1)), None))
 
-    ShardedEvents.appendTranche(tranches.head, dir, 4)
+    ShardLayout.Events.append(tranches.head, dir, 4)
     val src = shardStream(spark, dir)
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
@@ -1137,7 +1137,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       .start()
     q.processAllAvailable()
     tranches.tail.foreach { t =>
-      ShardedEvents.appendTranche(t, dir, 4)
+      ShardLayout.Events.append(t, dir, 4)
       q.processAllAvailable()
     }
     val stateRows = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal)
@@ -1186,7 +1186,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       tranche(Some(tsCuts(0)), Some(tsCuts(1))),
       tranche(Some(tsCuts(1)), None))
 
-    ShardedEvents.appendTranche(tranches.head, dir, 4)
+    ShardLayout.Events.append(tranches.head, dir, 4)
     val got = mutable.Buffer.empty[(Long, java.sql.Timestamp, Long)]
     val q = shardStream(spark, dir)
       .withWatermark("ts", "1 hour")
@@ -1205,7 +1205,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       .start()
     q.processAllAvailable()
     tranches.tail.foreach { t =>
-      ShardedEvents.appendTranche(t, dir, 4)
+      ShardLayout.Events.append(t, dir, 4)
       q.processAllAvailable()
     }
     val stateRows = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal)
@@ -1237,7 +1237,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val events = graft.Tables.events(spark, sf001)
     val ids = batchEventIds.sorted
     val cut = ids(ids.size / 2)
-    ShardedEvents.appendTranche(events.filter(col("event_id") <= cut), dir, 4)
+    ShardLayout.Events.append(events.filter(col("event_id") <= cut), dir, 4)
 
     val got = mutable.Buffer.empty[Long]
     val q = shardStream(spark, dir, startingPosition = "latest")
@@ -1255,7 +1255,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     got.synchronized(assert(got.isEmpty, "latest must skip everything before the subscribe point"))
 
     // appended after open: delivered — including into a NEW shard set (8)
-    ShardedEvents.appendTranche(events.filter(col("event_id") > cut), dir, 8)
+    ShardLayout.Events.append(events.filter(col("event_id") > cut), dir, 8)
     q.processAllAvailable()
     StreamControl.stopGracefully(q)
     got.synchronized(got.sorted.toVector) shouldBe ids.filter(_ > cut).toVector
@@ -1272,7 +1272,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val events = graft.Tables.events(spark, sf001)
     val ids = batchEventIds.sorted
     val (c1, c2) = (ids(ids.size / 3), ids(2 * ids.size / 3))
-    ShardedEvents.appendTranche(events.filter(col("event_id") <= c1), dir, 4)
+    ShardLayout.Events.append(events.filter(col("event_id") <= c1), dir, 4)
 
     val arrivals = mutable.Buffer.empty[(Int, Long)] // (shard, event_id)
     val q = shardStream(spark, dir)
@@ -1293,14 +1293,14 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     }
 
     // SPLIT 4->8: child shards appear as new dirs under the live stream
-    ShardedEvents.appendTranche(events.filter(col("event_id") > c1 && col("event_id") <= c2), dir, 8)
+    ShardLayout.Events.append(events.filter(col("event_id") > c1 && col("event_id") <= c2), dir, 8)
     q.processAllAvailable()
     arrivals.synchronized {
       assert(arrivals.exists(_._1 >= 4), "split children must be discovered and consumed")
     }
 
     // MERGE 8->2: later records collapse back into two shards
-    ShardedEvents.appendTranche(events.filter(col("event_id") > c2), dir, 2)
+    ShardLayout.Events.append(events.filter(col("event_id") > c2), dir, 2)
     q.processAllAvailable()
     StreamControl.stopGracefully(q)
 

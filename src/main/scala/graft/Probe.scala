@@ -28,7 +28,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    sampled per query — a scaling table built from these numbers
   *    carries the bench artifact's contention evidence;
   *  - `jobs`: one warm run, then the measured run's Spark job count,
-  *    per-job task counts and ten slowest stages — the number to watch
+  *    per-job task counts and every completed stage in stage-id order
+  *    (tasks, wall) — a stable listing two runs can diff; the number to watch
   *    when a query's wall looks wrong but its plan looks right (the r15
   *    finding that d55/d50 are orchestration floors, not data costs);
   *  - `exec`: [[ExecAudit.executedStats]] of the post-AQE executed plan;
@@ -136,8 +137,8 @@ object Probe {
           val (jobs, stages) = (jobLog.asScala.toSeq, stageLog.asScala.toSeq)
           println(f"QUERY $name wall $wall%.2f s jobs ${jobs.size} stages ${stages.size}")
           jobs.foreach { case (id, d, t) => println(f"  job $id%4d tasks $t%3d  $d") }
-          stages.sortBy(-_._3).take(10).foreach { case (id, n, w, t) =>
-            println(f"  stage $id%4d $w%6d ms tasks $t%3d  $n")
+          stages.sortBy(_._1).foreach { case (id, n, w, t) =>
+            println(f"  stage $id%4d tasks $t%3d $w%6d ms  $n")
           }
         }
 

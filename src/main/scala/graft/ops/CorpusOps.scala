@@ -130,9 +130,7 @@ object CorpusOps {
     * fused [[graft.functions.WordShingleJaccard]] kernel from the raw
     * texts — the join payload is the ~300-char documents, not the ~3x
     * larger materialized shingle arrays, and shingle sets are built only
-    * for the O(candidates) rows banding emitted. (For precomputed
-    * feature sets, [[bandedNearDupPairs]] remains the generic entry
-    * point.)
+    * for the O(candidates) rows banding emitted.
     */
   def nearDupPairs(docs: DataFrame): DataFrame = {
     val k = Bands * RowsPerBand
@@ -206,31 +204,6 @@ object CorpusOps {
       .select(col("a_id"), col("b_id"), round(col("j"), 6).as("jaccard"))
   }
 
-  /** Banded MinHash-LSH + exact-Jaccard verification over any
-    * `(doc_id, shingles: array<string>)` feature table. Banding shape is
-    * per-caller: bands*rowsPerBand hash functions are drawn from [[Seeds]]
-    * (which holds [[NumHashes]] — callers must stay within it).
-    */
-  private def bandedNearDupPairs(sh: DataFrame, threshold: Double,
-      bands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame = {
-    // Signature computed entirely PER ROW: base hash = xxhash64 (it only
-    // drives candidate RECALL — emitted pairs are verified with exact
-    // Jaccard, so the oracle does not depend on the hash), then the
-    // affine minima in one fused native loop
-    // (graft.functions.MinHashSignature). No explode, no shuffle.
-    val k = bands * rowsPerBand
-    val sig = sh
-      .withColumn("hs", expr(s"transform(shingles, s -> pmod(xxhash64(s), ${MinhashP}L))"))
-      .withColumn("mh", graft.functions.MinHashSignature.minhashSignature(
-        col("hs"), Seeds.take(k).map(_._1), Seeds.take(k).map(_._2), MinhashP))
-      .select(col("doc_id"), col("mh"))
-    verifyCandidates(candidatePairs(sig, bands, rowsPerBand), sh, threshold)
-  }
-
-  /** LSH banding over a `(doc_id, mh: array<long>)` signature table:
-    * candidate pairs are docs sharing any band — an equi-join on the band
-    * key, never all-pairs.
-    */
   /** Upscale-only shuffle width for the pair families' heavy exchanges
     * (candidate buckets, pair aggregation): est rows / 100k, never below
     * the session layout and capped at 4096. At gate scale this IS the
@@ -281,6 +254,10 @@ object CorpusOps {
       df.repartition(parts, keys: _*)
     else df
 
+  /** LSH banding over a `(doc_id, mh: array<long>)` signature table:
+    * candidate pairs are docs sharing any band — an equi-join on the band
+    * key, never all-pairs.
+    */
   private def candidatePairs(sig: DataFrame, bands: Int, rowsPerBand: Int,
       minBands: Int = 1, parts: Int = 0): DataFrame = {
     require(bands * rowsPerBand <= NumHashes)
@@ -498,23 +475,6 @@ object CorpusOps {
       .count()
     (if (minBands > 1) grouped.filter(col("count") >= minBands) else grouped)
       .drop("count")
-  }
-
-  /** Exact-Jaccard verification of candidate pairs against the
-    * `(doc_id, shingles)` feature table. The feature projection is
-    * recomputed on this branch rather than cached: the rescan is pruned
-    * to (doc_id, text) and touches only candidate docs after the join,
-    * which at scale is far cheaper than persisting the full feature set.
-    */
-  private def verifyCandidates(cands: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
-    val sa = sh.select(col("doc_id").as("a_id"), col("shingles").as("sa"))
-    val sb = sh.select(col("doc_id").as("b_id"), col("shingles").as("sb"))
-    cands.join(sa, "a_id").join(sb, "b_id")
-      .withColumn("j",
-        size(array_intersect(col("sa"), col("sb"))).cast("double") /
-          size(array_union(col("sa"), col("sb"))))
-      .filter(col("j") >= threshold)
-      .select(col("a_id"), col("b_id"), round(col("j"), 6).as("jaccard"))
   }
 
   /** Corpus text analysis per (lang, source): document counts, whitespace
@@ -1146,10 +1106,10 @@ object CorpusOps {
     * survivor set is `doc_id = cluster_id`.
     *
     * SCALE: the pair graph is LSH-sized (O(true near-dups), not O(N²) —
-    * see [[nearDupPairs]]) and [[GraphOps.connectedComponents]] is a
-    * join-per-round propagation over exactly that edge list, so the
-    * clustering step touches only documents that have at least one
-    * near-dup. The DuckDB oracle recomputes the closure with a recursive
+    * see [[nearDupPairs]]) and [[GraphOps.connectedComponents]] runs
+    * over exactly that edge list (a driver union-find at this size, star
+    * contraction above its cap), so the clustering step touches only
+    * documents that have at least one near-dup. The DuckDB oracle recomputes the closure with a recursive
     * CTE over the brute-force pair set.
     */
   def d25DedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2279,9 +2239,9 @@ object CorpusOps {
     * in at least one containment pair.
     *
     * SCALE: edges are d49's (already hot-capped) pairs normalized to
-    * undirected form; components run GraphOps' min-label propagation
-    * (O(log n) rounds, checkpointed — the d25 machinery verbatim); the
-    * size window partitions by cluster over O(involved docs) rows.
+    * undirected form; components run [[GraphOps.connectedComponents]]
+    * (the d25 machinery verbatim); the size window partitions by cluster
+    * over O(involved docs) rows.
     */
   def d51ContainmentClusters(spark: SparkSession, sfDir: String): DataFrame =
     containmentClustersOver(Tables.documents(spark, sfDir))
@@ -3669,14 +3629,6 @@ object CorpusOps {
     * no matter the corpus size.
     */
   private[graft] val DriftEpochs = 16L
-
-  /** Window width for `sfDir`'s id range: ceil-ish so every doc_id maps
-    * into epochs [0, DriftEpochs). One max() aggregate.
-    */
-  private[graft] def driftEpochWidth(spark: SparkSession, sfDir: String): Long = {
-    val mx = Tables.documents(spark, sfDir).agg(max(col("doc_id"))).head().getLong(0)
-    mx / DriftEpochs + 1
-  }
 
   /** The trained drift-mix schedule: for every (epoch, lang), the
     * 2^20-fixed-point admission threshold p derived from the CLOSED

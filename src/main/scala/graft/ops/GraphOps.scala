@@ -3,20 +3,20 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed connected components over an undirected edge list — the
-  * graph primitive behind near-dup CLUSTERING (a pair list alone cannot
-  * drive dedup: keep/drop decisions need the transitive closure, or two
-  * docs that each match a third survive together).
+/** Connected components over an undirected edge list — the graph
+  * primitive behind near-dup CLUSTERING (a pair list alone cannot drive
+  * dedup: keep/drop decisions need the transitive closure, or two docs
+  * that each match a third survive together).
   *
   * Reference analog: the reference has no graph operator; this supports
   * the dedup family the LLM-pipeline layer adds on top of §2.
   */
 object GraphOps {
 
-  /** Plan truncation with a DETERMINISTIC block lifecycle for the
-    * iterative loops below: re-rooting the Dataset on its computed RDD
-    * keeps the logical plan O(1) per round — each round's plan references
-    * the previous round's several times, so an untruncated plan grows
+  /** Plan truncation with a DETERMINISTIC block lifecycle for the star
+    * loop below: re-rooting the Dataset on its computed RDD keeps the
+    * logical plan O(1) per round — each round's plan references the
+    * previous round's several times, so an untruncated plan grows
     * geometrically and PLANNING dwarfs execution within ~8 rounds —
     * while leaving persist()/unpersist() in full control of the cached
     * blocks. (`localCheckpoint` also truncates, but its blocks are freed
@@ -29,28 +29,16 @@ object GraphOps {
   private def truncated(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 
-  /** Which strategy the last [[connectedComponents]] call used —
-    * "propagation", "star-direct" (path fast path) or "star-escalated"
-    * (mid-loop switch). Routing is a pure PERFORMANCE decision (both
-    * strategies are exact), so correctness specs alone cannot pin it;
-    * GraphOpsSpec reads this to guard the measured d25/d51 regression
-    * class (shallow forests routed to log-n star rounds). Observability
-    * only — no production path reads it.
+  /** How the last [[connectedComponents]] call finished, with the
+    * canonical edge count its entry check read: "local-finish" (driver
+    * union-find at entry), or the star loop's "local-entry",
+    * "local-midloop" or "distributed" finish. Every finish is exact, so
+    * correctness specs alone cannot tell them apart; GraphOpsSpec reads
+    * this to pin which one ran. Observability only — no production path
+    * reads it.
     */
   private[graft] val lastRoute =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-
-  /** Propagation-loop rounds of the last [[connectedComponents]] call
-    * that ran the loop (0 for star-direct) — observability for the
-    * pointer-jumping O(log diameter) claim, same spec-only role as
-    * [[lastRoute]].
-    */
-  private[graft] val lastRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Star-contraction rounds of the last [[connectedComponentsStar]]/
-    * star-routed call — same spec/diagnostic-only role as [[lastRounds]].
-    */
-  private[graft] val lastStarRounds = new java.util.concurrent.atomic.AtomicInteger(0)
+    new java.util.concurrent.atomic.AtomicReference[(String, Long)](("", 0L))
 
   /** Local-finish budget: a graph is finished on the DRIVER when its
     * CANONICAL (one row per undirected edge, src <= dst) edge count is
@@ -61,19 +49,18 @@ object GraphOps {
     * union-find's LongMap, ~48 B/node open-addressed — ~64 MB worst
     * case at the cap, not the raw 16 MB). The explicit-bound
     * discipline of the hot-key collect (`CorpusOps.MaxHotBandBuckets`).
-    * Above it the distributed loops run untouched, so no
-    * deployment-scale graph ever lands on the driver at entry; the
-    * star loop's shrinking edge set may cross it mid-run, which is
-    * exactly the point (the tail rounds are the floor-bound ones).
+    * Above it the star loop runs distributed, so no deployment-scale
+    * graph ever lands on the driver at entry; its shrinking edge set
+    * may cross the cap mid-run, which is exactly the point (the tail
+    * rounds are the floor-bound ones).
     */
   private[graft] val LocalFinishEdgeCap = 1L << 20
 
-  /** Which finish the last star loop used — "distributed",
-    * "local-entry" or "local-midloop". Observability for specs only,
-    * like [[lastRoute]].
+  /** Round bound of the star loop: contraction takes O(log n) rounds
+    * independent of diameter (Kiveris et al.), so a graph still changing
+    * after 40 rounds throws rather than returning unfinished labels.
     */
-  private[graft] val lastStarFinish =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
+  private val StarMaxRounds = 40
 
   /** Bounded driver collect of a two-long-column edge frame as PACKED
     * primitive long arrays, one per partition ([a0,b0,a1,b1,...]) — no
@@ -152,105 +139,60 @@ object GraphOps {
       .toDF(aName, bName)
   }
 
-  /** The star stage's one live cache of the ORIGINAL edge list: it is
-    * read three times (canonical-edge distinct, the fused stats pass,
-    * and the final node-labeling join — the last at the CALLER's action,
-    * after this op returned, so a plain persist/unpersist pair cannot
-    * cover it). For a source like d63's — a parquet scan plus a semi
-    * join — leaving it uncached re-executes that plan per read.
+  /** The one live cache of the symmetrized edge list. The local finish
+    * reads it twice (pre-pass, collect) and drops it; the star path also
+    * derives the node list from it, whose labeling join runs at the
+    * CALLER's action, after this op returned — so a plain
+    * persist/unpersist pair cannot cover it. For a source like d63's — a
+    * parquet scan plus a semi join — leaving it uncached would re-execute
+    * that plan per read.
     */
-  private val starRawCache = new ReplaceOnCallCache
+  private val symCache = new ReplaceOnCallCache
 
-  /** The returned frames reference the loop's final cached round (star's
-    * fixpoint edge set / propagation's label table) at the caller's
-    * action time — the same outlives-the-return lifetime, so the same
-    * replace-on-next-call contract instead of a leaked persist per call.
+  /** The returned star frame references the loop's final cached round
+    * (the fixpoint edge set) at the caller's action time — the same
+    * outlives-the-return lifetime, so the same replace-on-next-call
+    * contract instead of a leaked persist per call.
     */
   private val starFixpointCache = new ReplaceOnCallCache
-  private val labelsCache = new ReplaceOnCallCache
 
-  /** Min-label propagation WITH POINTER JUMPING: every node starts
-    * labeled with its own id; each round every node takes the min of its
-    * own and its neighbors' labels (the propagation step) and then
-    * follows its label one hop through the label table itself
-    * (label[v] <- label[label[v]] — the shortcut-doubling step of
-    * pointer-jumping/Shiloach-Vishkin lineage). Fixpoint = every node
-    * holds its component's minimum id. Deterministic (min is
-    * order-independent) and exact: labels only decrease and stay node
-    * ids of the same component, and a fixpoint of the combined operator
-    * is necessarily a fixpoint of pure propagation (the jump can only
-    * lower a label, so stability forces nbr_min(v) = label(v) for all
-    * v), which is exactly the component minimum.
+  /** Connected components of an undirected edge list `(a, b)`: one row
+    * `(id, label)` per node of the edge list, self-loop-only nodes
+    * included, with `label` = the smallest node id in the component and
+    * both columns in the input's id type. Exact and deterministic for
+    * any id range, negative ids included. One pipeline:
     *
-    * Output: (id, label) — one row per node of the edge list, `label` =
-    * smallest node id in the component.
+    *  - symmetrize with one consumption of the edge plan, cached;
+    *  - one cheap no-shuffle pre-pass reads the canonical edge count and
+    *    the minimum node id;
+    *  - LOCAL FINISH: a graph whose canonical count fits
+    *    [[LocalFinishEdgeCap]] — an EXPLICIT driver-memory budget; see
+    *    the cap's doc for the measured footprint — is finished on the
+    *    driver: one bounded packed-primitive collect of the canonical
+    *    edges, an exact union-find, and the labels parallelize back as
+    *    packed chunks. A distributed round is a fixed stack of shuffle
+    *    stages whose cost at small edge counts is pure scheduling and
+    *    planning floor (measured: the d60 sf0.1 graph, 1439 edges, ~4.5 s
+    *    of floors for millisecond-sized data), so below the cap the
+    *    driver pass is 10-100x cheaper. Every graph the suite builds
+    *    lands here (`plans/r21/`: d25, d51, d60 and d63 at sf0.01 and
+    *    sf0.1).
+    *  - above the cap, large-star/small-star contraction ([[starLoop]]):
+    *    O(log n) rounds independent of diameter, with its own local
+    *    finish once contraction shrinks the edge set under the cap.
     *
-    * SCALE: each round is one equi-join of the symmetrized edge list with
-    * the label table (both hash-partitioned on the join key — a real
-    * cluster co-partitions them once and reuses the layout every round)
-    * plus NODE-sized hook/jump joins (build sides have unique keys, so
-    * no group can fan out); nothing is ever collected to the driver
-    * except the one-row convergence checksum. Round count: hooking and
-    * jumping compound every label's reach per round, so convergence
-    * takes O(log2(diameter)) rounds instead of O(diameter) — measured:
-    * the d60 sf0.1 graph 23 -> 5 loop rounds (1 plain + 4 accelerated),
-    * a 300-node cycle ~6 where it previously hit the escalation
-    * threshold. Near-dup graphs (tiny
-    * star/clique components, diameter 1-2) still converge on the loop's
-    * first no-change pass, paying one cheap extra node join. Graphs
-    * still unconverged after 2*ceil(log2(sym-edge count)) loop rounds
-    * (diameter beyond ~2^(rounds/2) — nothing a real corpus produces)
-    * AUTO-ESCALATE: the call hands the ORIGINAL edge list to
-    * [[connectedComponentsStar]] (O(log n) rounds independent of
-    * diameter) instead of burning rounds or throwing. Negative node
-    * ids (legal here, rejected by the star stage's potential
-    * precondition) disable BOTH star routes: jumped propagation bounded
-    * by maxIter is exact for them at any diameter it can reach, which
-    * the old min-label form was not.
-    *
-    * Round accounting: initialization FUSES the first propagation round
-    * (label = min(id, neighbors)), so `maxIter` loop rounds admit up to
-    * maxIter+1 effective propagation rounds; on escalation, the star
-    * stage runs under max(maxIter, 40) rounds of its own. Propagation
-    * itself never throws on non-convergence — escalation is also the
-    * unconverged-at-maxIter fallback (star contraction with its own
-    * bound is strictly better than failing); only the star stage's
-    * bound remains a hard stop.
-    *
-    * Convergence check: labels only ever decrease, so the label sum
-    * (per-value cast to DECIMAL(38,0) BEFORE summing — no int64 overflow
-    * at any id range, no float drift) is strictly decreasing until
-    * fixpoint; one single-row aggregate per round detects it without a
-    * second join.
-    *
-    * LOCAL FINISH (the round-floor cut): a graph whose CANONICAL edge
-    * count fits [[LocalFinishEdgeCap]] — an EXPLICIT driver-memory
-    * budget; see the cap's doc for the measured footprint — skips the
-    * loop entirely: one bounded packed-primitive collect of the
-    * canonical edges, an exact union-find, and the labels parallelize
-    * back as packed chunks. Every distributed
-    * round here is a fixed stack of shuffle stages whose cost at small
-    * edge counts is pure scheduling+planning floor (measured: the d60
-    * sf0.1 graph, 1439 edges, 5 rounds, ~4.5 s of floors for
-    * millisecond-sized data), so below the cap the driver pass is
-    * 10-100x cheaper — and at deployment scale the cap is simply never
-    * hit at entry, while the STAR loop's shrinking edge set (toward one
-    * edge per non-root node — m >> n dense components collapse fast)
-    * can cross it mid-run (see [[starLoop]]'s mid-loop check), cutting
-    * tail rounds of floors there too. Both
-    * routes are exact and deterministic (min-id labels); GraphOpsSpec
-    * pins local ≡ distributed on random graphs via the cap parameter,
-    * and the d63 gate shape is additionally pinned distributed-vs-local
-    * end-to-end.
+    * GraphOpsSpec pins the star path (`localCap = 0`) against the local
+    * finish on chains, cycles, duplicates, self-loops, Int and negative
+    * ids, random graphs and the d63 gate shape.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame =
-    connectedComponentsBounded(edges, maxIter, LocalFinishEdgeCap)
+  def connectedComponents(edges: DataFrame): DataFrame =
+    connectedComponentsBounded(edges, LocalFinishEdgeCap)
 
   /** [[connectedComponents]] with an explicit local-finish cap —
-    * `localCap = 0` forces the distributed loops (the spec's lever and
-    * the far-point probes' distributed-path measurement hook).
+    * `localCap = 0` sends every non-empty graph to the star loop (the
+    * spec's lever).
     */
-  private[graft] def connectedComponentsBounded(edges: DataFrame, maxIter: Int,
+  private[graft] def connectedComponentsBounded(edges: DataFrame,
       localCap: Long): DataFrame = {
     val e = edges.toDF("a", "b")
     // symmetrize with ONE consumption of the edge plan (explode to both
@@ -260,292 +202,41 @@ object GraphOps {
     // accurate in-memory stats flip its joins to broadcasts — broadcast
     // build subtrees don't share exchange reuse across union branches,
     // so d51/d25 re-ran their whole pair pipeline per branch (measured:
-    // d51 38.4 -> 17.5 CPU-s at sf0.1 from this change alone)
-    val symRaw = e.select(explode(array(
+    // d51 38.4 -> 17.5 CPU-s at sf0.1 from this change alone). Every
+    // node — self-loop-only ones included — then appears as src.
+    val sym = symCache.register(e.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("sd"))
-      .select(col("sd.src").as("src"), col("sd.dst").as("dst"))
-      .persist()
-    // CHEAP routing pre-pass: one narrow no-shuffle aggregate over the
-    // symmetrized list — the sym-edge count (the local-finish decision)
-    // and the min node id (every node appears as src, so min(src) IS
-    // the graph minimum — negative ids must stay OFF both star routes:
-    // the star stage's potential precondition rejects them, and jumped
-    // propagation handles them exactly, ADVICE r11). This materializes
-    // the cache either way; the shuffle-bearing label/degree stats
-    // build ONLY on the distributed path below, so a below-cap graph
-    // never pays their groupBy.
-    val pre = symRaw
-      .agg(count(lit(1)), min(col("src")).cast("decimal(38,0)"),
-        // canonical row count (src <= dst side): the local-finish check
-        // compares the SAME edge-count definition as the star loop's
-        // mid-run check — what the driver would actually collect
+      .select(col("sd.src").as("src"), col("sd.dst").as("dst")))
+    // CHEAP pre-pass: one narrow no-shuffle aggregate that also
+    // materializes the cache — the canonical row count (src <= dst side,
+    // what the driver would collect: the same edge-count definition as
+    // the star loop's mid-run check) and min(src), which IS the graph
+    // minimum (the star potential's base)
+    val pre = sym
+      .agg(min(col("src")).cast("decimal(38,0)"),
         count(when(col("src") <= col("dst"), 1))).head()
-    val nEdges = pre.getLong(0)
-    val nCanon = pre.getLong(2)
-    val starSafe = nEdges == 0 || pre.getDecimal(1).signum() >= 0
+    val nCanon = pre.getLong(1)
 
-    // LOCAL FINISH (before any routing — it beats both distributed
-    // strategies wherever it applies, and absorbs the empty graph): the
-    // whole graph fits the driver budget, so one bounded collect of the
-    // canonical side of the cached symmetrized list (src <= dst keeps
-    // each undirected edge and every self-loop; duplicates are
-    // union-find no-ops) replaces diameter-or-log many rounds of
-    // shuffle-stage floors. Exact for ANY id range including negatives;
-    // output ids keep the input's column type (the Int-id contract,
-    // cast back losslessly).
-    if (nCanon <= localCap || nEdges == 0) {
-      val spark = symRaw.sparkSession
-      val chunks = collectPackedEdges(symRaw.filter(col("src") <= col("dst")))
-      val idType = symRaw.schema("src").dataType
-      symRaw.unpersist()
+    if (nCanon <= localCap) {
+      // LOCAL FINISH (the empty graph included): one bounded collect of
+      // the canonical side (src <= dst keeps each undirected edge and
+      // every self-loop; duplicates are union-find no-ops). Output ids
+      // keep the input's column type (the Int-id contract, cast back
+      // losslessly).
+      val spark = sym.sparkSession
+      val chunks = collectPackedEdges(sym.filter(col("src") <= col("dst")))
+      val idType = sym.schema("src").dataType
+      sym.unpersist()
       val labs = unionFindLabels(chunks)
-      lastRoute.set("local-finish")
-      lastRounds.set(0)
+      lastRoute.set(("local-finish", nCanon))
       return packedLabelsDf(spark, labs, "id", "label")
         .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
     }
-
-    // every node of an edge list appears as src after symmetrization, so
-    // the per-round join below is inner and total. Initialization FUSES
-    // the first propagation round (label = min(id, neighbors)) — one
-    // aggregate instead of a distinct plus a full join round; star and
-    // clique components (the dedup-graph norm) then converge on the
-    // loop's first no-change pass.
-    // `deg` rides the same aggregate for free (same shuffle) — it feeds
-    // only the path-shape routing probe and the node count below and is
-    // projected away before the caller sees the result
-    var labels: DataFrame = symRaw.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("label"),
-        count(lit(1)).as("deg"))
-      .withColumnRenamed("src", "id")
-      .persist()
-
-    def checksum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-
-    // ONE fused stats pass for the remaining routing inputs (each driver
-    // job here is sequential wall time at the loop's scheduling floor):
-    // the convergence checksum, the node count and the routing probe's
-    // max degree — the edge count and sign probe already rode the cheap
-    // pre-pass.
-    val stats = labels
-      .agg(sum(col("label").cast("decimal(38,0)")), count(lit(1)),
-        max(col("deg")))
-      .head()
-    var prev = stats.getDecimal(0)
-    locally {
-      val nNodes = stats.getLong(1)
-      val maxDeg = stats.getLong(2)
-      // PATH-SHAPED fast path: route straight to star contraction only
-      // for graphs that are BOTH forest-sparse (sym edges < 2*nodes —
-      // exact for dup-free edge lists) AND max-degree <= 2, i.e. unions
-      // of simple paths — the one family whose diameter (~nodes per
-      // component) makes propagation catastrophically worse than star's
-      // O(log n). Forest-sparsity ALONE is the wrong discriminant: the
-      // star/pair forests near-dup graphs are made of (d25/d51) have
-      // diameter <= 2 and converge in 1-2 propagation rounds — routing
-      // them to star contraction was MEASURED to cost d25 2.1 -> 5.4 s
-      // and d51 1.6 -> 6.1 s at sf0.1, more than the 9.9 -> 5.5 s it
-      // bought d63's chains. Both probes ride the one stats pass, and a
-      // multigraph's duplicate edges overcount BOTH nEdges and deg —
-      // i.e. fail CLOSED into the propagation path, whose escalation
-      // threshold still bounds the damage. The star stage reuses the
-      // CACHED symmetrized list (canonical = src < dst side of it), so
-      // the source edge plan is never re-executed on this route.
-      if (starSafe && nEdges < 2L * nNodes && maxDeg <= 2L) {
-        labels.unpersist()
-        lastRoute.set("star-direct")
-        lastRounds.set(0)
-        return starFromSym(symRaw, math.max(maxIter, 40), localCap)
-      }
-      // Size the loop's layout to the GRAPH, not the session default: the
-      // per-round cost on a small graph is pure task scheduling (dozens of
-      // shuffle tasks over a few hundred cached rows, times diameter many
-      // rounds — measured 8s of a 9.6s d60 run before this). One O(1)
-      // stats read (the d9 nBlocks precedent) picks the partition count; a
-      // 100 TB edge list keeps the session layout untouched. Partitioning
-      // BY THE JOIN KEY also co-locates every round's probe side — which
-      // is why the repartition is NOT skipped when parts equals the
-      // session width: the one-time key-hash exchange lets the cached edge
-      // list satisfy the loop join's distribution every round, saving
-      // (rounds - 1) full re-exchanges of the edge list.
-      val sessionParts = symRaw.rdd.getNumPartitions.max(1)
-      val parts = math.max(1L, math.min(sessionParts.toLong, nEdges / 50000L + 1L)).toInt
-      val sym = symRaw.repartition(parts, col("dst")).persist()
-      // escalation threshold: 2*ceil(log2(sym-edge count)) loop rounds
-      // before handing over to star contraction. The factor 2 is
-      // calibrated, not cosmetic: thresholded near-dup graphs at toy
-      // scale are stringy (measured: the d60 sf0.1 graph, 2878 sym
-      // edges — exactly AT the cycle boundary, so past the sparsity
-      // check — converges in 23 rounds, 2x its log2 of 12), and a
-      // restart they'd survive in-budget costs ~2x the finish; only
-      // deep graphs the path-shape probe can't see (long CYCLES, dense
-      // lattices) should pay the mid-loop strategy switch.
-      val escalateAfter =
-        math.max(8, 2 * (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, nEdges - 1))))
-      var converged = false
-      var round = 0
-      // negative ids cannot escalate (star's precondition); jumped
-      // propagation under the full maxIter budget is exact for them
-      val loopBound = if (starSafe) math.min(maxIter, escalateAfter) else maxIter
-      while (!converged && round < loopBound) {
-        // NOT repartitioned inside the round: an explicit graph-width
-        // repartition between the join and the aggregate was tried and
-        // REVERTED with data (d60 warm 6.0 -> 7.1 s at sf0.1) — the
-        // extra exchange's stage floor costs more than narrowing the
-        // aggregate's session-width exchange saves
-        // ROUND 0 is plain min-label propagation: the near-dup norm
-        // (shallow star/clique forests, d25/d51) converges on this very
-        // round, and the acceleration below would only add its stages to
-        // their one-round plans (measured: d25 +0.3 s at sf0.1).
-        //
-        // Rounds >= 1 add HOOKING + POINTER JUMPS (the Shiloach–Vishkin
-        // pairing): every node's PREVIOUS root additionally learns the
-        // best neighbor-min its members just saw, then every node
-        // follows its label twice through the label table. Without the
-        // hook, a pointer at a LOCAL minimum is a dead end (label[m]=m)
-        // and the jump cannot compound on randomly-numbered graphs —
-        // measured on the d60 sf0.1 graph: 23 rounds plain, 16 with
-        // jump alone, 4 with hook + jump.
-        val interim = new scala.collection.mutable.ArrayBuffer[DataFrame](2)
-        val prop = sym.join(labels, sym("dst") === labels("id"))
-          .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-          .join(labels, col("src") === labels("id"))
-        val next = (if (round == 0)
-          truncated(prop
-            .select(col("id"), least(col("label"), col("nbr_min")).as("label")))
-        else {
-          val pre = truncated(prop
-            .select(col("id"), least(col("label"), col("nbr_min")).as("label"),
-              col("label").as("old"), col("nbr_min")))
-            .persist()
-          interim += pre
-          val hooks = pre.groupBy(col("old")).agg(min(col("nbr_min")).as("hmin"))
-            .select(col("old").as("hk"), col("hmin")) // fresh names: hooks derives from pre
-          val nm = truncated(
-            pre.join(hooks, col("id") === col("hk"), "left")
-              .select(col("id"),
-                least(col("label"), coalesce(col("hmin"), col("label"))).as("label")))
-            .persist()
-          interim += nm
-          // the jumps are total (every label is a node id, so the inner
-          // join drops nothing) and their build keys unique; nm's blocks
-          // back all references — the whole round is still materialized
-          // by the one checksum job below
-          val jmp = nm.select(col("id").as("jid"), col("label").as("jlabel"))
-          truncated(
-            nm.join(jmp, col("label") === col("jid"))
-              .select(col("id"), col("jlabel").as("label"))
-              .join(jmp, col("label") === col("jid"))
-              .select(col("id"), col("jlabel").as("label")))
-        }).persist()
-        val cur = checksum(next) // materializes the round's blocks
-        converged = cur.compareTo(prev) == 0
-        prev = cur
-        labels.unpersist()
-        interim.foreach(_.unpersist()) // consumed into next's blocks
-        labels = next
-        // round 1's checksum materialized sym's blocks through symRaw —
-        // drop the raw copy so the loop never holds the edge list twice
-        if (round == 0) symRaw.unpersist()
-        round += 1
-      }
-      lastRounds.set(round)
-      if (!converged && starSafe) { // past the threshold: switch strategies
-        labels.unpersist()
-        sym.unpersist()
-        lastRoute.set("star-escalated")
-        // symRaw was dropped from cache after round 1; the star stage's
-        // own cache re-registers it (one source re-evaluation — the same
-        // price the pre-fused shape paid to rebuild from `edges`)
-        return starFromSym(symRaw, math.max(maxIter, 40), localCap)
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents (negative-id graph, no star fallback) did not converge in $maxIter rounds")
-      sym.unpersist()
-    } // (the empty graph exits through the local-finish path above)
-    lastRoute.set("propagation")
-    // the caller's action reads the final cached label table after this
-    // returns — replace-on-next-call instead of a leaked persist
-    val out = labelsCache.register(labels)
-    // the loop's select already dropped the routing-only deg column on
-    // every path that ran a round; only the empty-graph path (prev ==
-    // null, zero rows) still carries it — project it away so the output
-    // contract is (id, label) everywhere
-    if (out.columns.contains("deg")) out.select(col("id"), col("label"))
-    else out
-  }
-
-  /** Alternating large-star/small-star connected components (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC'14): the
-    * O(log n)-round escalation of [[connectedComponents]] for graphs
-    * whose diameter is NOT small — long chains, lattices, social graphs.
-    * Each round contracts the edge set toward per-component stars whose
-    * center is the component minimum, independent of diameter:
-    *
-    *  - large-star: every node points its LARGER neighbors at the
-    *    minimum of its closed neighborhood;
-    *  - small-star: every node points its smaller neighbors (and
-    *    itself) at that minimum.
-    *
-    * Output contract is identical to [[connectedComponents]]:
-    * (id, label) — one row per node of the edge list, self-loop-only
-    * nodes included — with label = smallest node id in the component
-    * (GraphOpsSpec pins equality on chains, cycles, self-loops and
-    * random graphs).
-    *
-    * SCALE: each half-round is one map-side-partial min aggregation +
-    * one equi-join on node id — the same co-partitionable shape as
-    * propagation — but the ROUND COUNT is O(log n) in the worst case
-    * instead of O(diameter), and the edge set shrinks monotonically
-    * toward one edge per non-root node. Convergence = the canonical
-    * edge set reaches a fixpoint, detected with an exact DECIMAL(38,0)
-    * potential (sum of endpoint ids, each cast to decimal BEFORE the
-    * add so no id range can wrap int64): both stars only ever REPLACE
-    * an edge endpoint by a strictly smaller label, so the potential
-    * strictly decreases until fixpoint — same no-second-join trick as
-    * [[connectedComponents]], and collision-free for the non-negative
-    * ids this engine uses because dedup can only remove positive terms.
-    */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 40): DataFrame =
-    connectedComponentsStarBounded(edges, maxIter, LocalFinishEdgeCap)
-
-  /** [[connectedComponentsStar]] with an explicit local-finish cap —
-    * 0 forces the distributed loop (spec/probe lever).
-    */
-  private[graft] def connectedComponentsStarBounded(edges: DataFrame, maxIter: Int,
-      localCap: Long): DataFrame = {
-    val raw = starRawCache.register(edges.toDF("x", "y"))
-    val e0 = raw.filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-    // nodes of the ORIGINAL edge list (self-loops included — the
-    // contraction drops them, the contract keeps them): star contraction
-    // also drops isolated-star members from intermediate edge sets, so
-    // labels are resolved against this list at the end
-    val nodes = raw.select(col("x").as("id")).union(raw.select(col("y").as("id")))
-      .distinct()
-    starLoop(e0, nodes, maxIter, localCap)
-  }
-
-  /** [[connectedComponentsStar]] entered from [[connectedComponents]]'s
-    * routing with the already-built (and usually already-cached)
-    * SYMMETRIZED list (src, dst): canonical edges are its src < dst
-    * side, and symmetrization guarantees every node — self-loop-only
-    * ones included — appears as src, so the node list needs no union.
-    * Registering through the same cache keeps one live copy and avoids
-    * re-executing the caller's source edge plan (for a gate like d63
-    * that plan is a parquet scan plus a semi join, re-run three times
-    * on the public path before this).
-    */
-  private def starFromSym(symRaw: DataFrame, maxIter: Int, localCap: Long): DataFrame = {
-    val sym = starRawCache.register(symRaw)
     val e0 = sym.filter(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b")).distinct()
-    val nodes = sym.select(col("src").as("id")).distinct()
-    starLoop(e0, nodes, maxIter, localCap)
+    starLoop(e0, sym.select(col("src").as("id")).distinct(), pre.getDecimal(0),
+      localCap, nCanon)
   }
 
   /** Large-star half-round: for u with closed-neighborhood min m, emit
@@ -600,15 +291,36 @@ object GraphOps {
   private[graft] def starRound(e: DataFrame, parts: Int): DataFrame =
     smallStar(largeStar(e, parts), parts)
 
-  private def starLoop(e0: DataFrame, nodes: DataFrame, maxIter: Int,
-      localCap: Long): DataFrame = {
+  /** Alternating large-star/small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14) over the
+    * canonical edge set `e0` (a < b), labeling `nodes` (every node of the
+    * edge list) with [[connectedComponents]]' contract. Each round
+    * contracts the edge set toward per-component stars whose center is
+    * the component minimum, in O(log n) rounds independent of diameter;
+    * each half-round is one map-side-partial min aggregation plus one
+    * equi-join on node id, and the edge set shrinks monotonically toward
+    * one edge per non-root node.
+    *
+    * Convergence = the canonical edge set reaches a fixpoint, detected
+    * with an exact DECIMAL(38,0) potential: the sum over edges of
+    * (a - lo) + (b - lo), with `lo` the graph minimum. Every term is
+    * positive whatever the id signs, both stars only ever REPLACE an
+    * endpoint by a strictly smaller label, and dedup only removes
+    * positive terms, so the potential strictly decreases until the
+    * fixpoint. The shift is applied on the driver (sum - 2·lo·count), so
+    * the aggregate does no id arithmetic and no id range can wrap.
+    */
+  private def starLoop(e0: DataFrame, nodes: DataFrame, lo: java.math.BigDecimal,
+      localCap: Long, nCanon: Long): DataFrame = {
     // the potential AND the surviving edge count in one per-round job:
     // the count feeds the mid-loop local-finish check below for free
     def potential(df: DataFrame): (java.math.BigDecimal, Long) = {
       val r = df.agg(
         sum(col("a").cast("decimal(38,0)") + col("b").cast("decimal(38,0)")),
         count(lit(1))).head()
-      (r.getDecimal(0), r.getLong(1))
+      val n = r.getLong(1)
+      (Option(r.getDecimal(0))
+        .map(_.subtract(lo.multiply(java.math.BigDecimal.valueOf(2L * n)))).orNull, n)
     }
 
     // LOCAL FINISH (see [[connectedComponents]]): union-find the current
@@ -626,60 +338,38 @@ object GraphOps {
       val chunks = collectPackedEdges(edgesNow)
       val labs = unionFindLabels(chunks)
       edgesNow.unpersist()
-      lastStarFinish.set(how)
+      lastRoute.set((how, nCanon))
       val idType = nodes.schema("id").dataType
       val labelled = packedLabelsDf(spark, labs, "b", "root")
         .select(col("b").cast(idType).as("b"), col("root").cast(idType).as("root"))
-      return nodes.join(broadcast(labelled), nodes("id") === col("b"), "left")
+      nodes.join(broadcast(labelled), nodes("id") === col("b"), "left")
         .select(col("id"), coalesce(col("root"), col("id")).as("label"))
     }
 
     var cur = e0.persist()
-    // ONE first pass fuses the three loop preliminaries (the round floors
-    // here are sequential driver jobs, so every fused job is wall time):
-    // the initial potential, the edge count that sizes the loop's
-    // partition layout, and the monotonicity precondition's min id.
-    // e0 is canonical (a <= b), so min(a) IS the min endpoint of every
-    // surviving edge; a negative id appearing ONLY as a self-loop never
-    // enters `cur` (filtered above), can't touch the potential, and
-    // correctly labels itself through the final coalesce — so checking
-    // e0 rather than the raw list is exactly as safe and one job cheaper.
-    val stats = cur
-      .agg(sum(col("a").cast("decimal(38,0)") + col("b").cast("decimal(38,0)")),
-        count(lit(1)),
-        // decimal, not getLong: min(a) inherits the EDGE LIST's id type
-        // (Int ids are legal public input) — the pre-fusion probe read
-        // through the same cast and must keep doing so
-        min(col("a")).cast("decimal(38,0)"))
-      .head()
-    var prev = stats.getDecimal(0)
+    // ONE first pass (the round floors here are sequential driver jobs,
+    // so every fused job is wall time): the initial potential and the
+    // edge count that sizes the loop's partition layout
+    val (p0, n0) = potential(cur)
+    var prev = p0
     if (prev != null) { // null = no edges survive: every node labels itself below
-      if (stats.getDecimal(2).signum() < 0) {
-        // reject BEFORE entering the loop, and don't leak the canonical
-        // edge set the stats pass just materialized into cache
-        cur.unpersist()
-        throw new IllegalArgumentException(
-          s"connectedComponentsStar requires non-negative node ids (min id = ${stats.getDecimal(2)}); " +
-            "fold ids through a non-negative mapping first")
-      }
-      // entry-time local finish: the whole canonical set fits the
-      // driver budget (the precondition check above stays first — the
-      // negative-id contract must not become cap-dependent)
-      if (stats.getLong(1) <= localCap) return finishLocally(cur, "local-entry")
-      // Size the loop's exchanges to the GRAPH, not the session default —
-      // the propagation loop's precedent (measured there: 9.6 -> 5.8 s at
-      // sf0.1): every exchange inside the loop is an explicit repartition
-      // at this width, and each groupBy/join downstream of one is planned
-      // WITHOUT its own session-width exchange because the repartition
-      // already satisfies its required distribution. A 100 TB edge list
-      // keeps the session layout (min() caps at the session width).
+      // entry-time local finish: the DISTINCT non-loop edge set fits the
+      // driver budget though the entry count (duplicates and self-loops
+      // included) did not
+      if (n0 <= localCap) return finishLocally(cur, "local-entry")
+      // Size the loop's exchanges to the GRAPH, not the session default
+      // (the same sizing once cut d60 from 9.6 to 5.8 s at sf0.1):
+      // every exchange inside the loop is an explicit repartition at this
+      // width, and each groupBy/join downstream of one is planned WITHOUT
+      // its own session-width exchange because the repartition already
+      // satisfies its required distribution. A 100 TB edge list keeps
+      // the session layout (min() caps at the session width).
       val sessionParts = cur.rdd.getNumPartitions.max(1)
-      val parts = math.max(1L,
-        math.min(sessionParts.toLong, stats.getLong(1) / 50000L + 1L)).toInt
+      val parts = math.max(1L, math.min(sessionParts.toLong, n0 / 50000L + 1L)).toInt
 
       var converged = false
       var round = 0
-      while (!converged && round < maxIter) {
+      while (!converged && round < StarMaxRounds) {
         val next = truncated(starRound(cur, parts)).persist()
         val (p, nEdges) = potential(next) // materializes next's blocks
         converged = p.compareTo(prev) == 0
@@ -694,17 +384,13 @@ object GraphOps {
         // is all scheduling floor. Checked after the convergence update
         // so a converged round exits through the fixpoint path
         // unchanged.
-        if (!converged && nEdges <= localCap) {
-          lastStarRounds.set(round)
-          return finishLocally(cur, "local-midloop")
-        }
+        if (!converged && nEdges <= localCap) return finishLocally(cur, "local-midloop")
       }
-      lastStarRounds.set(round)
       if (!converged)
         throw new IllegalStateException(
-          s"connectedComponentsStar did not converge in $maxIter rounds")
+          s"connectedComponents star loop did not converge in $StarMaxRounds rounds")
     }
-    lastStarFinish.set("distributed")
+    lastRoute.set(("distributed", nCanon))
     // fixpoint edge set is a star per component: (root, member). Roots,
     // isolated and self-loop-only nodes label themselves.
     nodes.join(starFixpointCache.register(cur).groupBy(col("b"))
@@ -713,18 +399,17 @@ object GraphOps {
       .select(col("id"), coalesce(col("root"), col("id")).as("label"))
   }
 
-  /** d63_chain_components: the HIGH-DIAMETER gate for the auto-escalating
-    * components path. The corpus ids (contiguous by construction) are
-    * chained into blocks of 250 — edge (i, i+1) whenever both ids exist
-    * and cross no block boundary — giving components of constant
-    * diameter 249 whose COUNT scales with the corpus. Min-label
-    * propagation would need ~249 rounds; [[connectedComponents]]'s
-    * path-shape probe (forest-sparse AND max degree 2) routes the chain
-    * graph straight to [[connectedComponentsStar]], so this row gates
-    * the O(log n) contraction end-to-end (labels = each block's
-    * smallest id, replayed analytically by the oracle). The left-semi
-    * existence probe keeps the edge list correct for any id range
-    * without assuming the max.
+  /** d63_chain_components: the HIGH-DIAMETER gate. The corpus ids
+    * (contiguous by construction) are chained into blocks of 250 — edge
+    * (i, i+1) whenever both ids exist and cross no block boundary —
+    * giving components of constant diameter 249 whose COUNT scales with
+    * the corpus (labels = each block's smallest id, replayed analytically
+    * by the oracle). Its canonical edge count is one per document, far
+    * under [[LocalFinishEdgeCap]] at every shipped scale, so the row
+    * runs the local finish; GraphOpsSpec's d63-shape pin runs the same
+    * edge list through the star loop and checks the labels agree. The
+    * left-semi existence probe keeps the edge list correct for any id
+    * range without assuming the max.
     */
   def d63ChainComponents(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val ids = graft.Tables.documents(spark, sfDir).select(col("doc_id"))

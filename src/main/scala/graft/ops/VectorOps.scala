@@ -787,27 +787,18 @@ object VectorOps {
     *
     * SCALE: edges are the already-thinned kNN top-k (O(k·N), not the
     * quadratic candidate set), symmetrized and thresholded on the 6-dp
-    * similarity both engines agree on; components run GraphOps'
-    * checkpointed min-label propagation (O(log n) rounds — the
-    * d25/d51 machinery verbatim); the size window partitions by
-    * cluster over O(involved vectors) rows.
+    * similarity both engines agree on; components run
+    * [[GraphOps.connectedComponents]] (the d25/d51 machinery verbatim),
+    * which consumes the edge plan once into its own cache, so the kNN
+    * subplan runs once; the size window partitions by cluster over
+    * O(involved vectors) rows.
     */
-  /** [[d60SemanticClusters]]' one live edge cache (see
-    * [[ReplaceOnCallCache]] — the returned clustering references it
-    * lazily, so the op can't unpersist before the caller's action).
-    */
-  private val d60EdgeCache = new ReplaceOnCallCache
-
   def d60SemanticClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    // persist: the symmetrization inside connectedComponents references
-    // the edge relation twice (union with its mirror), and the kNN
-    // subplan behind it is the expensive part (the d13 pattern);
-    // replace-on-next-call bounds a long session to one live cache
-    val edges = d60EdgeCache.register(d58KnnGraph(spark, sfDir)
+    val edges = d58KnnGraph(spark, sfDir)
       .filter(col("sim") >= ClusterTau)
       .select(least(col("q_id"), col("n_id")).as("a"),
         greatest(col("q_id"), col("n_id")).as("b"))
-      .distinct())
+      .distinct()
     val w = Window.partitionBy(col("cluster_id"))
     GraphOps.connectedComponents(edges)
       .select(col("id").as("vec_id"), col("label").as("cluster_id"))

@@ -7,14 +7,14 @@ import org.scalatest.matchers.should.Matchers
 
 class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
 
-  /** Distributed-path components (localCap = 0 disables the local
-    * finisher): the loop/routing behavior pins below run against THIS,
-    * because the public default finishes every test-sized graph on the
-    * driver — the local ≡ distributed pins at the bottom close the loop.
+  /** Distributed-path components (localCap = 0 sends every non-empty
+    * graph to the star loop): the correctness pins below run against
+    * THIS, because the public default finishes every test-sized graph on
+    * the driver — the local ≡ distributed pins close the loop.
     */
-  private def cc(edges: Seq[(Long, Long)], maxIter: Int = 25): Map[Long, Long] = {
+  private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    GraphOps.connectedComponentsBounded(edges.toDF("a", "b"), maxIter, 0L)
+    GraphOps.connectedComponentsBounded(edges.toDF("a", "b"), 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -25,10 +25,23 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  private def route: String = GraphOps.lastRoute.get()._1
+
+  /** Deterministic LCG edge set over `n` ids starting at `base`: mid-size
+    * components with nontrivial structure, no fixture or RNG dependence.
+    */
+  private def lcgEdges(seed: Long, m: Int, n: Long, base: Long = 0L): Seq[(Long, Long)] = {
+    var x = seed
+    def next(): Long = { x = (x * 6364136223846793005L + 1442695040888963407L) >>> 1; x }
+    (1 to m).map(_ => (base + next() % n, base + next() % n))
+      .filter { case (a, b) => a != b }
+  }
+
   test("a 6-node chain needs multiple propagation rounds and still labels everyone with the min") {
-    // diameter 5: strictly more rounds than a star, exercises the loop
+    // diameter 5: strictly more star rounds than a star-shaped graph
     val labels = cc(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)))
     labels shouldBe (1L to 6L).map(_ -> 1L).toMap
+    route shouldBe "distributed"
   }
 
   test("disjoint components keep distinct minimum labels; cycles terminate") {
@@ -40,6 +53,9 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
       10L -> 10L, 11L -> 10L, 12L -> 10L,
       7L -> 7L, 20L -> 7L,
       30L -> 30L, 31L -> 30L)
+    // a 300-node cycle: diameter 150, O(log n) star rounds
+    val cycle = (0L until 300L).map(i => (i, (i + 1) % 300L))
+    cc(cycle) shouldBe (0L until 300L).map(_ -> 0L).toMap
   }
 
   test("duplicate and reversed edges do not change the fixpoint") {
@@ -48,73 +64,17 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("empty edge list yields an empty labeling") {
+    // zero canonical edges fit any cap, so both calls finish at entry
     cc(Seq.empty) shouldBe Map.empty
     ccLocal(Seq.empty) shouldBe Map.empty
   }
 
-  test("a diameter far past maxIter routes to star contraction and stays exact (path fast path)") {
-    // 300-node chain: propagation alone would blow the default 25-round
-    // budget (pre-escalation this threw); the path-shape probe (forest-
-    // sparse, max degree 2) hands it to star contraction before the loop
+  test("large-star/small-star agrees with propagation on a long chain (its worst case)") {
+    // the comparison side is the driver union-find: a 300-node chain,
+    // diameter 299, against O(log n) star rounds
     val chain = (1L until 300L).map(i => (i, i + 1))
     cc(chain) shouldBe (1L to 300L).map(_ -> 1L).toMap
-    GraphOps.lastRoute.get() shouldBe "star-direct"
-  }
-
-  test("a long CYCLE converges on jumped propagation in O(log diameter) rounds") {
-    // 300-node cycle: sym edges = 2*nodes defeats the forest-sparsity
-    // probe, so propagation runs — diameter 150 used to stall it at the
-    // escalation threshold; pointer jumping doubles every label's reach
-    // per round, so it must now converge WITHIN the threshold, in
-    // ~log2(150) rounds (one extra no-change round detects the fixpoint)
-    val cycle = (0L until 300L).map(i => (i, (i + 1) % 300L))
-    cc(cycle) shouldBe (0L until 300L).map(_ -> 0L).toMap
-    GraphOps.lastRoute.get() shouldBe "propagation"
-    GraphOps.lastRounds.get() should be <= 10
-  }
-
-  test("an exhausted loop budget still escalates MID-LOOP to star contraction and stays exact") {
-    // jumping makes natural escalation unreachable (log2(diameter) always
-    // beats 2*log2(edges)), but the mid-loop strategy switch remains the
-    // safety net for an explicit too-small maxIter — force it and pin
-    // both the route and exactness
-    val cycle = (0L until 300L).map(i => (i, (i + 1) % 300L))
-    cc(cycle, maxIter = 3) shouldBe (0L until 300L).map(_ -> 0L).toMap
-    GraphOps.lastRoute.get() shouldBe "star-escalated"
-  }
-
-  test("negative node ids stay on propagation (no star route) and label exactly") {
-    // the star potential requires non-negative ids; jumped propagation
-    // has no such precondition — a negative-id path graph must neither
-    // throw nor route to a star stage (ADVICE r11)
-    val path = Seq((-5L, -4L), (-4L, -3L), (-3L, 7L), (7L, 8L))
-    cc(path) shouldBe Map(-5L -> -5L, -4L -> -5L, -3L -> -5L, 7L -> -5L, 8L -> -5L)
-    GraphOps.lastRoute.get() shouldBe "propagation"
-  }
-
-  test("star/pair forests stay on the propagation path (the d25/d51 shape is NOT path-routed)") {
-    // a star forest is forest-sparse but has a degree-5 hub — the
-    // path-shape probe must keep it on propagation, which converges on
-    // the fused first round (this pin is the measured 2.1->5.4s d25
-    // regression guard: routing shallow forests to star contraction
-    // costs log-n rounds where propagation needs one)
-    val stars = (1L to 5L).map(i => (0L, i)) ++ (10L to 12L).map(i => (9L, i))
-    cc(stars) shouldBe
-      ((0L to 5L).map(_ -> 0L) ++ (9L to 12L).map(_ -> 9L)).toMap
-    GraphOps.lastRoute.get() shouldBe "propagation"
-  }
-
-  private def ccStar(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    import spark.implicits._
-    GraphOps.connectedComponentsStarBounded(edges.toDF("a", "b"), 40, 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
-  test("large-star/small-star agrees with propagation on a long chain (its worst case)") {
-    // diameter 19: propagation needs ~19 rounds, star contraction O(log n)
-    val chain = (1L until 20L).map(i => (i, i + 1))
-    ccStar(chain) shouldBe cc(chain)
-    ccStar(chain) shouldBe (1L to 20L).map(_ -> 1L).toMap
+    ccLocal(chain) shouldBe cc(chain)
   }
 
   test("large-star/small-star agrees with propagation on cycles, bridges and duplicates") {
@@ -123,79 +83,82 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
       (7L, 20L), (20L, 7L), (7L, 20L),    // duplicated + reversed pair
       (30L, 31L), (31L, 32L), (32L, 33L), // path
       (0L, 40L))                          // min-id zero endpoint
-    ccStar(edges) shouldBe cc(edges)
+    cc(edges) shouldBe ccLocal(edges)
   }
 
   test("self-loop-only nodes keep a row in every implementation") {
     val edges = Seq((5L, 5L), (1L, 2L))
     val expected = Map(5L -> 5L, 1L -> 1L, 2L -> 1L)
     cc(edges) shouldBe expected
-    ccStar(edges) shouldBe expected
     ccLocal(edges) shouldBe expected
   }
 
   test("large-star/small-star agrees with propagation on a pseudo-random graph") {
-    // deterministic LCG edge set: multiple mid-size components with
-    // nontrivial structure (no fixture dependence, no RNG nondeterminism)
-    var x = 12345L
-    def next(): Long = { x = (x * 6364136223846793005L + 1442695040888963407L) >>> 1; x }
-    val edges = (1 to 120).map { _ =>
-      val a = next() % 60; val b = next() % 60
-      (a, b)
-    }.filter { case (a, b) => a != b }
-    ccStar(edges) shouldBe cc(edges)
+    val edges = lcgEdges(12345L, 120, 60L)
+    cc(edges) shouldBe ccLocal(edges)
   }
 
   test("star contraction on the empty graph is empty") {
-    ccStar(Seq.empty) shouldBe Map.empty
-  }
-
-  test("star contraction rejects negative node ids (convergence-check precondition)") {
-    // the precondition must not become cap-dependent: the public default
-    // (local finisher armed) and the forced-distributed loop both throw
-    import spark.implicits._
-    for (cap <- Seq(0L, GraphOps.LocalFinishEdgeCap)) {
-      val ex = intercept[IllegalArgumentException] {
-        GraphOps.connectedComponentsStarBounded(
-          Seq((-1L, 2L), (2L, 3L)).toDF("x", "y"), 40, cap)
-      }
-      assert(ex.getMessage.contains("non-negative"))
-    }
+    // self-loops alone leave the star loop an EMPTY canonical edge set:
+    // no round runs, and every node labels itself through the closing join
+    cc(Seq((4L, 4L), (9L, 9L))) shouldBe Map(4L -> 4L, 9L -> 9L)
+    route shouldBe "distributed"
   }
 
   test("star contraction accepts non-Long numeric id columns (Int ids)") {
-    // the fused stats pass reads min(a) through a decimal cast — a raw
-    // getLong here was a ClassCastException on Int-typed edge lists,
-    // which the pre-fusion probe accepted
+    // the pre-pass reads min(src) through a decimal cast — a raw getLong
+    // there is a ClassCastException on Int-typed edge lists
     import spark.implicits._
-    val out = GraphOps.connectedComponentsStarBounded(
-        Seq((1, 2), (2, 3), (5, 6)).toDF("x", "y"), 40, 0L)
-      .collect().map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong)).toMap
-    out shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    val rows = GraphOps.connectedComponentsBounded(
+        Seq((1, 2), (2, 3), (5, 6)).toDF("x", "y"), 0L)
+      .collect()
+    rows.head.get(0) shouldBe a[Integer] // the input type, not widened
+    rows.map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toMap shouldBe
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+  }
+
+  test("negative ids: the star loop and the local finish give the same labels") {
+    // the star potential is shifted by the graph minimum, so negative ids
+    // need no precondition; the shift is applied to the decimal sum on the
+    // driver, so ids spanning the whole long range cannot wrap either
+    val path = Seq((-5L, -4L), (-4L, -3L), (-3L, 7L), (7L, 8L))
+    val pathLabels = Map(-5L -> -5L, -4L -> -5L, -3L -> -5L, 7L -> -5L, 8L -> -5L)
+    cc(path) shouldBe pathLabels
+    route shouldBe "distributed"
+    ccLocal(path) shouldBe pathLabels
+    route shouldBe "local-finish"
+    // with an UNSHIFTED potential (the raw id sum) this graph reads
+    // unchanged after round one — deduping a negative-sum edge offsets
+    // the replacements — and the loop stopped with -7 labelled -9
+    val falseFixpoint = Seq((-4L, -7L), (-9L, -7L), (0L, -4L), (-4L, -11L), (-7L, 0L),
+      (-9L, -7L), (0L, -9L))
+    cc(falseFixpoint) shouldBe Seq(-11L, -9L, -7L, -4L, 0L).map(_ -> -11L).toMap
+    val random = lcgEdges(4242L, 150, 70L, base = -35L)
+    cc(random) shouldBe ccLocal(random)
+    val wide = Seq((Long.MinValue, 0L), (0L, Long.MaxValue), (Long.MaxValue - 1, -1L),
+      (Long.MinValue + 1, Long.MinValue + 2))
+    cc(wide) shouldBe ccLocal(wide)
+    cc(wide)(Long.MaxValue) shouldBe Long.MinValue
   }
 
   // ---- bounded local finisher (the round-floor cut) -------------------
 
   test("the public default finishes a small graph locally and matches the distributed loop") {
-    var x = 98765L
-    def next(): Long = { x = (x * 6364136223846793005L + 1442695040888963407L) >>> 1; x }
-    val edges = (1 to 200).map { _ => (next() % 90, next() % 90) }
-      .filter { case (a, b) => a != b }
+    val edges = lcgEdges(98765L, 200, 90L)
     val localLabels = ccLocal(edges)
-    GraphOps.lastRoute.get() shouldBe "local-finish"
+    route shouldBe "local-finish"
     localLabels shouldBe cc(edges)
-    localLabels shouldBe ccStar(edges)
   }
 
   test("local finish handles negative ids, duplicates, self-loops and chains exactly") {
     val edges = Seq((-5L, -4L), (-4L, -3L), (7L, 7L), (1L, 2L), (2L, 1L), (2L, 3L))
     ccLocal(edges) shouldBe Map(
       -5L -> -5L, -4L -> -5L, -3L -> -5L, 7L -> 7L, 1L -> 1L, 2L -> 1L, 3L -> 1L)
-    GraphOps.lastRoute.get() shouldBe "local-finish"
-    // a long chain (the star-direct shape) also lands local under the default
+    route shouldBe "local-finish"
+    // a long chain also lands local under the default
     val chain = (1L until 300L).map(i => (i, i + 1))
     ccLocal(chain) shouldBe (1L to 300L).map(_ -> 1L).toMap
-    GraphOps.lastRoute.get() shouldBe "local-finish"
+    GraphOps.lastRoute.get() shouldBe (("local-finish", 299L))
   }
 
   test("local finish preserves Int-typed id columns (the Int-id output contract)") {
@@ -215,20 +178,21 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
     // the driver union-find closes — same labels as the fixpoint path
     import spark.implicits._
     val clique = for (a <- 1L to 60L; b <- (a + 1) to 60L) yield (a, b)
-    val out = GraphOps.connectedComponentsStarBounded(clique.toDF("x", "y"), 40, 200L)
+    val out = GraphOps.connectedComponentsBounded(clique.toDF("x", "y"), 200L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     out shouldBe (1L to 60L).map(_ -> 1L).toMap
-    GraphOps.lastStarFinish.get() shouldBe "local-midloop"
-    GraphOps.lastStarRounds.get() should be >= 1
+    GraphOps.lastRoute.get() shouldBe (("local-midloop", 1770L))
   }
 
   test("star loop finishes at ENTRY when the whole canonical set fits the cap") {
+    // every edge given twice: 98 canonical rows exceed the cap of 60 at
+    // entry, but the 49 distinct edges the star loop starts from fit it
     import spark.implicits._
     val chain = (1L until 50L).map(i => (i, i + 1))
-    val out = GraphOps.connectedComponentsStarBounded(chain.toDF("x", "y"), 40, 100L)
+    val out = GraphOps.connectedComponentsBounded((chain ++ chain).toDF("x", "y"), 60L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     out shouldBe (1L to 50L).map(_ -> 1L).toMap
-    GraphOps.lastStarFinish.get() shouldBe "local-entry"
+    GraphOps.lastRoute.get() shouldBe (("local-entry", 98L))
   }
 
   test("star rounds preserve the node set (the invariant the mid-loop local finish relies on)") {
@@ -264,11 +228,10 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("d63's gate shape: the local default equals the forced-distributed star end-to-end") {
-    // the oracle gates d63 on the public (now local-finish) path; this
-    // pin keeps the DISTRIBUTED contraction equal to it on the real
-    // chain-block edge list, so the correctness artifact's coverage of
-    // the star loop is preserved by spec where the gate no longer
-    // drives it
+    // the oracle gates d63 on the public (local-finish) path; this pin
+    // keeps the DISTRIBUTED contraction equal to it on the real
+    // chain-block edge list, so the star loop's coverage on the gate's
+    // shape is kept by spec where the gate does not drive it
     val sf = "/root/testdata/sf0.001"
     val ids = graft.Tables.documents(spark, sf).select(col("doc_id"))
     val edges = ids
@@ -279,9 +242,10 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
       .persist()
     val viaDefault = GraphOps.d63ChainComponents(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    GraphOps.lastRoute.get() shouldBe "local-finish"
-    val viaStar = GraphOps.connectedComponentsStarBounded(edges, 40, 0L)
+    route shouldBe "local-finish"
+    val viaStar = GraphOps.connectedComponentsBounded(edges, 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    route shouldBe "distributed"
     edges.unpersist()
     viaStar shouldBe viaDefault
   }

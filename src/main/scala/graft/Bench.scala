@@ -327,14 +327,6 @@ object Bench {
     case c => c.toString
   }
 
-  /** A broken query must still fail the bench loudly (rc != 0 — a failed
-    * round must never parse as a clean measurement), but the artifact has
-    * to be SELF-DIAGNOSING: one concise JSON line naming the failing query
-    * and the ROOT exception message, printed LAST so it survives the
-    * driver's bounded tail capture, and persisted to bench_last.json. The
-    * raw rethrow it replaces dumped a 40-frame analyzer stack whose tail
-    * contained no query name and no message.
-    */
   /** The failure artifact's one JSON line: query name + ROOT exception
     * class + message (cause chain unwound, message bounded so the line
     * always fits a tail window).
@@ -349,6 +341,14 @@ object Bench {
       s""","message":"${jsonEscape(msg)}"}}"""
   }
 
+  /** A broken query must still fail the bench loudly (rc != 0 — a failed
+    * round must never parse as a clean measurement), but the artifact has
+    * to be SELF-DIAGNOSING: one concise JSON line naming the failing query
+    * and the ROOT exception message, printed LAST so it survives the
+    * driver's bounded tail capture, and persisted to bench_last.json. The
+    * raw rethrow it replaces dumped a 40-frame analyzer stack whose tail
+    * contained no query name and no message.
+    */
   private def emitFailureAndExit(lastJson: java.nio.file.Path, sfDir: String,
       qf: QueryFailed): Nothing = {
     val json = failureJson(sfDir, qf.query, qf.getCause)

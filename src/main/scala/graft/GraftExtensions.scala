@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.FunctionRegistryBridge
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 import graft.functions._
@@ -140,12 +139,4 @@ object GraftExtensions {
         intArg("cms_agg", "depth")(args(3)))
         .toAggregateExpression()
     })
-
-  /** Programmatic registration into an already-running session (the
-    * extensions config only applies at session build time).
-    */
-  def registerAll(spark: SparkSession): Unit =
-    all.foreach { case (name, info, builder) =>
-      FunctionRegistryBridge.register(spark, name, info, builder)
-    }
 }

@@ -28,8 +28,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    sampled per query — a scaling table built from these numbers
   *    carries the bench artifact's contention evidence;
   *  - `jobs`: one warm run, then the measured run's Spark job count,
-  *    per-job task counts and every completed stage in stage-id order
-  *    (tasks, wall) — a stable listing two runs can diff; the number to watch
+  *    per-job task counts and every completed stage (tasks, wall), jobs
+  *    sorted by (description, tasks) and stages by (name, tasks), not by
+  *    id — AQE submits broadcast subqueries concurrently, so adjacent
+  *    jobs and stages trade ids between runs; sorted, the listing is one
+  *    two runs can diff once ids and walls are stripped; the number to watch
   *    when a query's wall looks wrong but its plan looks right (the r15
   *    finding that d55/d50 are orchestration floors, not data costs);
   *  - `exec`: [[ExecAudit.executedStats]] of the post-AQE executed plan;
@@ -136,8 +139,10 @@ object Probe {
           import scala.jdk.CollectionConverters._
           val (jobs, stages) = (jobLog.asScala.toSeq, stageLog.asScala.toSeq)
           println(f"QUERY $name wall $wall%.2f s jobs ${jobs.size} stages ${stages.size}")
-          jobs.foreach { case (id, d, t) => println(f"  job $id%4d tasks $t%3d  $d") }
-          stages.sortBy(_._1).foreach { case (id, n, w, t) =>
+          jobs.sortBy { case (id, d, t) => (d, t, id) }.foreach { case (id, d, t) =>
+            println(f"  job $id%4d tasks $t%3d  $d")
+          }
+          stages.sortBy { case (id, n, _, t) => (n, t, id) }.foreach { case (id, n, w, t) =>
             println(f"  stage $id%4d tasks $t%3d $w%6d ms  $n")
           }
         }

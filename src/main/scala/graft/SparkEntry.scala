@@ -170,9 +170,6 @@ object SparkEntry {
     "q_approx_stats" -> (ops.RelationalOps.qApproxStats _),
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
   /** Unrolled DuckDB replay of [[ops.VectorOps]]' IVF-PQ pipeline —
     * d21's iterative-oracle technique lifted to the subspace grid. The
     * k-MEDIANS codebook update (component medians rounded to 6 dp,
@@ -293,12 +290,6 @@ object SparkEntry {
       "SELECT q_id, n_id, round(sim, 6) AS sim, rn FROM r WHERE rn <= 10"
   }
 
-  /** s15's replay: d35's PQ training + full-corpus encode (packed to the
-    * 4-bit-per-code long), the exact-integer coarse assignment (s14's
-    * CTEs), and the per-cell (n, id_sum, code_sum) rollup. Per-row math
-    * against literal quantizers makes streaming == batch regardless of
-    * shard interleaving.
-    */
   /** The shared containment replay (d49 pairs / d51 clusters): the same
     * 8-word windows hashed to 60-bit md5 prefixes (the d28 identity),
     * stop-windows above the 256-doc cap excluded from both sides of the
@@ -570,6 +561,12 @@ object SparkEntry {
       "k AS (SELECT count(*) // 4 AS k FROM documents), " +
       "r AS (SELECT doc_id, score, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rk FROM sc)"
 
+  /** s15's replay: d35's PQ training + full-corpus encode (packed to the
+    * 4-bit-per-code long), the exact-integer coarse assignment (s14's
+    * CTEs), and the per-cell (n, id_sum, code_sum) rollup. Per-row math
+    * against literal quantizers makes streaming == batch regardless of
+    * shard interleaving.
+    */
   private def streamPqIngestOracleSql: String = {
     val iters = (0 until 3).map { i =>
       s"j$i AS (SELECT s.vec_id, s.m, s.v, c.cid, c.cv FROM sub s JOIN cb$i c ON s.m = c.m), " +
@@ -598,6 +595,9 @@ object SparkEntry {
       "SELECT p.ccid AS cell, count(*) AS n, CAST(sum(p.vec_id) AS BIGINT) AS id_sum, CAST(sum(ck.code_key) AS BIGINT) AS code_sum FROM pick p JOIN ck USING (vec_id) WHERE p.rn = 1 GROUP BY cell"
   }
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops.
+    */
   def oracleSql: Map[String, String] = Map(
     "s15_stream_pq_ingest" -> streamPqIngestOracleSql,
     "d13_ann_ivf_kmeans" -> kmeansOracleSql,

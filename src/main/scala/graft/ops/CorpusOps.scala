@@ -151,6 +151,13 @@ object CorpusOps {
       .select(col("a_id"), col("b_id"), round(col("j"), 6).as("jaccard"))
   }
 
+  /** [[d14NgramJaccard]]'s one live lowered-text cache (the
+    * [[d2DocsCache]] trade for d14's own projection — its filter
+    * differs, so the two sites cannot share a plan): signature kernel
+    * plus both verify join sides read ONE document scan.
+    */
+  private val d14DocsCache = new ReplaceOnCallCache
+
   /** Character 8-gram Jaccard near-dup pairs — the n-gram variant of the
     * dedup family (d2 = word shingles, d14 = char grams; char grams catch
     * near-dups that word tokenization misses: joined/split words,
@@ -167,13 +174,6 @@ object CorpusOps {
     * background collisions ~30x — the verify set stays O(true pairs),
     * not O(N²).
     */
-  /** [[d14NgramJaccard]]'s one live lowered-text cache (the
-    * [[d2DocsCache]] trade for d14's own projection — its filter
-    * differs, so the two sites cannot share a plan): signature kernel
-    * plus both verify join sides read ONE document scan.
-    */
-  private val d14DocsCache = new ReplaceOnCallCache
-
   def d14NgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val docsT = d14DocsCache.register(scanWide(docs)
@@ -222,11 +222,6 @@ object CorpusOps {
     math.max(session, math.min(4096L, docs.count() * rowsPerDoc / 100000L).toInt)
   }
 
-  /** Widen `df`'s layout to `parts` on `keys` when above the session
-    * width; no-op otherwise, so session-scale plans are untouched. The
-    * downstream groupBy/join on the same keys reuses the layout (hash
-    * distribution satisfied) rather than exchanging a second time.
-    */
   /** Round-robin widen a NARROW batch scan before a CPU-heavy per-row
     * kernel (BPE merge chains, md5-per-token LM scoring, PQ argmin
     * encoding): parquet splits at row-group granularity, so a
@@ -249,6 +244,11 @@ object CorpusOps {
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }
 
+  /** Widen `df`'s layout to `parts` on `keys` when above the session
+    * width; no-op otherwise, so session-scale plans are untouched. The
+    * downstream groupBy/join on the same keys reuses the layout (hash
+    * distribution satisfied) rather than exchanging a second time.
+    */
   private def widened(df: DataFrame, parts: Int, keys: Column*): DataFrame =
     if (parts > df.sparkSession.sessionState.conf.numShufflePartitions)
       df.repartition(parts, keys: _*)
@@ -276,6 +276,26 @@ object CorpusOps {
       minBands, parts)
   }
 
+  /** Band-bucket size above which [[candidatePairsFromBands]] routes a
+    * bucket through salted sub-bucket pair generation. Banding keeps
+    * TYPICAL buckets tiny (background-collision analysis at d2/d14/d16),
+    * but boilerplate-heavy crawl corpora concentrate real buckets
+    * (template pages, empty docs, licence headers): a bucket of n docs
+    * costs O(n) per-task memory in the grouped kernel, so an unguarded
+    * million-doc bucket is an executor OOM. 4096 payloads is a few
+    * hundred KB buffered — far below task memory — while the salted path
+    * it triggers bounds memory at ~2x this cap regardless of n.
+    */
+  private[ops] val BandBucketCap = 4096L
+
+  /** Route taken by the most recent [[candidatePairsFromBands]] call —
+    * "cold" (no hot buckets) or "hot" (sampled hot buckets salted, the
+    * rest cold) — observability for the skew-guard specs, the GraphOps
+    * `lastRoute` convention. Test-only visibility; results are identical
+    * on both routes.
+    */
+  @volatile private[ops] var lastBandRoute: String = ""
+
   /** The shared candidate self-join over a banded
     * `(doc_id, band_id, band_key, extras...)` table: docs sharing a band
     * meet in an equi-join on the band key — never all-pairs. Extra columns
@@ -289,41 +309,8 @@ object CorpusOps {
     * pairs match many bands while background pairs almost always match
     * exactly one. minBands = 1 is plain LSH (dedup only).
     */
-  /** Band-bucket size above which [[candidatePairsFromBands]] routes a
-    * bucket through salted sub-bucket pair generation. Banding keeps
-    * TYPICAL buckets tiny (background-collision analysis at d2/d14/d16),
-    * but boilerplate-heavy crawl corpora concentrate real buckets
-    * (template pages, empty docs, licence headers): a bucket of n docs
-    * costs O(n) per-task memory in the grouped kernel, so an unguarded
-    * million-doc bucket is an executor OOM. 4096 payloads is a few
-    * hundred KB buffered — far below task memory — while the salted path
-    * it triggers bounds memory at ~2x this cap regardless of n.
-    */
-  private[ops] val BandBucketCap = 4096L
-
-  /** Ceiling on DISTINCT hot buckets the per-bucket salted split handles
-    * (the hot key list is collected to the driver to size each bucket's
-    * salt fan-out — 64k keys x 24 bytes is ~1.5 MB, a bounded model-sized
-    * collect). A corpus exceeding it is pathological everywhere, and the
-    * kernel falls back to salting EVERY bucket at one uniform fan-out
-    * sized from the largest sampled bucket instead of splitting — slower,
-    * but expected per-task memory stays <= ~2 x cap payloads (the bound
-    * degrades proportionally only past the 4096 replication clamp, i.e.
-    * >8M-doc buckets) and the pair set is unchanged.
-    */
-  private[ops] val MaxHotBandBuckets = 65536
-
-  /** Route taken by the most recent [[candidatePairsFromBands]] call —
-    * "cold" (no hot buckets), "split:<k>" (k hot buckets salted, rest
-    * cold) or "salted-all" — observability for the skew-guard specs, the
-    * GraphOps `lastRoute` convention. Test-only visibility; results are
-    * identical on every route.
-    */
-  @volatile private[ops] var lastBandRoute: String = ""
-
   private[ops] def candidatePairsFromBands(banded: DataFrame, minBands: Int = 1,
-      parts: Int = 0, hotCap: Long = BandBucketCap,
-      maxHot: Int = MaxHotBandBuckets): DataFrame = {
+      parts: Int = 0, hotCap: Long = BandBucketCap): DataFrame = {
     val extras = banded.columns.filterNot(Set("doc_id", "band_id", "band_key"))
     val names = Seq("a_id", "b_id") ++ extras.flatMap(c => Seq(s"a_$c", s"b_$c"))
     val payload = struct((Seq("doc_id") ++ extras).map(col): _*)
@@ -389,6 +376,10 @@ object CorpusOps {
         .select(out: _*)
       diag.unionByName(cross)
     }
+    def bucketPairs(df: DataFrame): DataFrame =
+      pairsOf(widened(df, parts, col("band_id"), col("band_key"))
+        .groupBy(col("band_id"), col("band_key"))
+        .agg(collect_list(payload).as("bucket")))
     // Skew detection: a count pre-pass over a DETERMINISTIC 1-in-64 doc
     // sample. The sample predicate is a plain filter on doc_id, so Catalyst
     // pushes it below the signature projection and the pre-pass computes
@@ -403,72 +394,35 @@ object CorpusOps {
     // misses the cutoff (P(Binomial(hotCap, 1/64) < 16) ~ 1e-14 at the
     // default cap, growing only for sub-cap buckets that need no guard)
     // falls on the unguarded O(bucket) path — whp is the contract, the
-    // same class of guarantee the salt spread itself gives. Hot keys are
-    // a bounded driver collect (<= corpus/hotCap buckets, further capped
-    // at MaxHotBandBuckets); the common no-skew case takes the original
-    // single-aggregation plan verbatim. Note the pre-pass is an EAGER
-    // Spark job on every call — callers that only need the plan (none
-    // today; every consumer executes it) still pay it. Streaming callers
-    // (none today) skip detection: an eager action on an unbounded frame
-    // is illegal, and the streaming neardup family has its own stateful
-    // path.
+    // same class of guarantee the salt spread itself gives. The hot table
+    // stays a lazy DataFrame — nothing but the one `limit(1)` emptiness
+    // check reaches the driver, however many buckets are hot — and the
+    // common no-skew case takes the original single-aggregation plan
+    // verbatim. The check is an EAGER Spark job on every call, so a
+    // streaming `banded` fails here, loudly; the streaming near-dup family
+    // has its own stateful path.
     val SampleMod = 64L
-    val sampledHot =
-      if (banded.isStreaming) None
-      else Some(banded.filter(pmod(xxhash64(col("doc_id")), lit(SampleMod)) === 0)
-        .groupBy(col("band_id"), col("band_key"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= math.max(1L, hotCap / (SampleMod * 4))))
-    val hotKeys = sampledHot match {
-      case None => Array.empty[org.apache.spark.sql.Row]
-      case Some(df) => df.limit(maxHot + 1).collect()
-    }
+    val hot = SkewJoin.hotKeys(
+      banded.filter(pmod(xxhash64(col("doc_id")), lit(SampleMod)) === 0),
+      math.max(1L, hotCap / (SampleMod * 4)), col("band_id"), col("band_key"))
     val pairs =
-      if (hotKeys.isEmpty) {
+      if (hot.limit(1).collect().isEmpty) {
         lastBandRoute = "cold"
-        pairsOf(widened(banded, parts, col("band_id"), col("band_key"))
-          .groupBy(col("band_id"), col("band_key"))
-          .agg(collect_list(payload).as("bucket")))
-      } else if (hotKeys.length > maxHot) {
-        lastBandRoute = "salted-all"
-        // size the uniform fan-out from the LARGEST sampled bucket (one
-        // extra tiny agg, paid only on this pathological route) so the
-        // expected sub-bucket class stays <= ~hotCap docs even when the
-        // >65536 hot buckets include extreme ones — a fixed s left
-        // per-task buffering at O(n/s), unbounded in n (r12 ADVICE). The
-        // 4096 clamp bounds replication fan-out; past it (a >8M-doc
-        // bucket among >65536 hot ones) the class-size bound degrades
-        // proportionally — that corpus is dominated by its own O(n^2)
-        // pair output, not by buffering.
-        val maxNHat = sampledHot.get.agg(max(col("n"))).head().getLong(0) * SampleMod
-        val s = math.min(4096L, math.max(256L, (2 * maxNHat + hotCap - 1) / hotCap)).toInt
-        saltedPairs(banded.withColumn("s", lit(s)))
+        bucketPairs(banded)
       } else {
-        lastBandRoute = s"split:${hotKeys.length}"
-        val spark = banded.sparkSession
-        val bkSchema = banded.select(col("band_id"), col("band_key")).schema
-        val hotSchema = org.apache.spark.sql.types.StructType(bkSchema.fields :+
-          org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.IntegerType, nullable = false))
-        val hotRows = hotKeys.toSeq.map { r =>
-          // n-hat = sampled count x SampleMod; s >= 2n/hotCap keeps
-          // expected sub-buckets at <= ~2*hotCap docs (sampling noise is
-          // within 2x whp at these means). The 4096 clamp bounds
-          // replication (fan-out is s per doc) — a bucket needing more
-          // holds >8M docs and is dominated by its own O(n^2) pair
-          // output, not by the salt replicas.
-          val nHat = r.getLong(2) * SampleMod
-          val s = math.min(4096L, math.max(2L, (2 * nHat + hotCap - 1) / hotCap)).toInt
-          org.apache.spark.sql.Row(r.get(0), r.get(1), s)
-        }
-        val hotDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(hotRows, 1), hotSchema)
-        val cold = banded.join(broadcast(hotDf.select(col("band_id"), col("band_key"))),
-          Seq("band_id", "band_key"), "left_anti")
-        val coldPairs = pairsOf(widened(cold, parts, col("band_id"), col("band_key"))
-          .groupBy(col("band_id"), col("band_key"))
-          .agg(collect_list(payload).as("bucket")))
-        coldPairs.unionByName(
-          saltedPairs(banded.join(broadcast(hotDf), Seq("band_id", "band_key"))))
+        lastBandRoute = "hot"
+        // n-hat = sampled count x SampleMod; s >= 2n/hotCap keeps expected
+        // sub-buckets at <= ~2*hotCap docs (sampling noise is within 2x
+        // whp at these means). The 4096 clamp bounds replication (fan-out
+        // is s per doc) — a bucket needing more holds >8M docs and is
+        // dominated by its own O(n^2) pair output, not by the salt
+        // replicas. The joins carry no broadcast hint: the planner (AQE
+        // at run time) sizes the hot table like any other join side.
+        val fanOut = hot.select(col("band_id"), col("band_key"),
+          least(lit(4096L), greatest(lit(2L),
+            expr(s"(${2 * SampleMod} * `count` + ${hotCap - 1}) div $hotCap"))).cast("int").as("s"))
+        bucketPairs(banded.join(fanOut, Seq("band_id", "band_key"), "left_anti"))
+          .unionByName(saltedPairs(banded.join(fanOut, Seq("band_id", "band_key"))))
       }
     val grouped = widened(pairs, parts, col("a_id"), col("b_id"))
       .groupBy(names.map(col): _*)
@@ -546,8 +500,8 @@ object CorpusOps {
     * signals (length, stopword rate, mean word length) combined into one
     * bounded score. Every input is an exact integer count divided once,
     * so the score is deterministic under any execution order.
-    */
-  /** The d11/d18 quality score at 6 dp, computed ENTIRELY in exact int64
+    *
+    * The d11/d18 quality score at 6 dp, computed ENTIRELY in exact int64
     * arithmetic: q = 0.4·min(1, n/100) + 0.3·(1 − stop/n) +
     * 0.3·min(1, len/(8n)) over common denominator 2000n gives
     * ppm = 10^6·(8n·min(n,100) + 600(n−stop) + 75·min(8n,len)) div 2000n,
@@ -628,6 +582,14 @@ object CorpusOps {
   def d32QualityDecilesCutoff(spark: SparkSession, sfDir: String): DataFrame =
     qualityDecilesKmv(Tables.documents(spark, sfDir), k = 1024)
 
+  /** [[qualityDecilesKmv]]'s one live scored-projection cache: the
+    * quality score re-tokenizes text through three interpreted lambdas
+    * per row, and both the KMV cutoff aggregate and the final
+    * assignment join consumed it from separate text scans (the
+    * tokenBudgetOver persist-first contract, applied here).
+    */
+  private val d32ScoredCache = new ReplaceOnCallCache
+
   /** Parameterized core of the KMV decile form — deterministic cutoffs
     * from a bottom-k-by-hash sample ([[graft.functions.BottomKPairs]]:
     * one bounded mergeable aggregate per language, map-side combined;
@@ -639,14 +601,6 @@ object CorpusOps {
     * one bucket (the documented value-semantics trade vs ntile's
     * rank-splitting).
     */
-  /** [[qualityDecilesKmv]]'s one live scored-projection cache: the
-    * quality score re-tokenizes text through three interpreted lambdas
-    * per row, and both the KMV cutoff aggregate and the final
-    * assignment join consumed it from separate text scans (the
-    * tokenBudgetOver persist-first contract, applied here).
-    */
-  private val d32ScoredCache = new ReplaceOnCallCache
-
   private[graft] def qualityDecilesKmv(docs: DataFrame, k: Int): DataFrame = {
     val scored = d32ScoredCache.register(scanWide(docs) // the d39 quality-lambda note
       .select(col("doc_id"), col("lang"), expr(QualityPpmSql).as("q_ppm")))
@@ -837,8 +791,8 @@ object CorpusOps {
     * under (negligible) prefix collisions. Shingle lists are distinct per
     * document, so count(*) after the equi-join is the distinct
     * shared-gram count.
-    */
-  /** d20 consumes the gram stream twice (eval-side distinct + train-side
+    *
+    * d20 consumes the gram stream twice (eval-side distinct + train-side
     * probe) from two scans ON PURPOSE: both consumers shuffle only tiny
     * post-filter subsets (the ~1% eval distinct and the broadcast-join
     * matches), so the r15 gram-hash cache traded two cheap kernel passes
@@ -1534,11 +1488,6 @@ object CorpusOps {
     redactPii(planted)
   }
 
-  /** Scrub [[EmailRe]]/[[IpRe]]/[[PhoneRe]] from any `(doc_id, t)`
-    * input — see [[d38PiiRedact]]. Redaction order: email, then IP,
-    * then phone (emails can contain digit runs; nothing a later pattern
-    * matches overlaps an earlier placeholder).
-    */
   /** Corpus EXPORT layout — the write path that hands a prepared corpus
     * to training: hive-partitioned by `lang` (the column every
     * downstream mixture/curriculum job filters on), RANGE-partitioned by
@@ -1567,6 +1516,11 @@ object CorpusOps {
       .partitionBy("lang")
       .parquet(outDir)
 
+  /** Scrub [[EmailRe]]/[[IpRe]]/[[PhoneRe]] from any `(doc_id, t)`
+    * input — see [[d38PiiRedact]]. Redaction order: email, then IP,
+    * then phone (emails can contain digit runs; nothing a later pattern
+    * matches overlaps an earlier placeholder).
+    */
   def redactPii(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         regexp_count(col("t"), lit(EmailRe)).cast("long").as("n_email"),
@@ -1585,6 +1539,13 @@ object CorpusOps {
     * the cumulative sum decompose across buckets.
     */
   private val BudgetBucketPpm = 125000L
+
+  /** [[d39TokenBudget]]'s one live scored-projection cache —
+    * [[tokenBudgetOver]] consumes its input twice (offsets aggregate +
+    * rank join) and names the persist-first contract for expensive
+    * inputs; this caller's quality lambda chain is exactly that.
+    */
+  private val d39ScoredCache = new ReplaceOnCallCache
 
   /** Token-budget corpus selection: the "take the best documents until
     * the token budget is full" step of curriculum/budgeted pre-training
@@ -1610,13 +1571,6 @@ object CorpusOps {
     * global window over the identical order and matches bit for bit,
     * proving the bucket decomposition exact.
     */
-  /** [[d39TokenBudget]]'s one live scored-projection cache —
-    * [[tokenBudgetOver]] consumes its input twice (offsets aggregate +
-    * rank join) and names the persist-first contract for expensive
-    * inputs; this caller's quality lambda chain is exactly that.
-    */
-  private val d39ScoredCache = new ReplaceOnCallCache
-
   def d39TokenBudget(spark: SparkSession, sfDir: String): DataFrame =
     tokenBudgetOver(
       // widened: the quality score re-tokenizes the text through three
@@ -1734,29 +1688,6 @@ object CorpusOps {
     */
   private[graft] val OrderBucketWidth = 1L << 52
 
-  /** Reproducible stratified training-order interleave — the "global
-    * shuffle" every pre-training pipeline runs before packing: documents
-    * are ordered by a seeded per-doc hash draw (never `rand()`, which
-    * cannot give the same corpus twice), stratified so round k of the
-    * schedule holds the k-th pick of EVERY source — sources interleave
-    * evenly from the first batch instead of clumping, and an exhausted
-    * source simply drops out of later rounds. Output: (doc_id, source,
-    * round, slot); the training order is ORDER BY (round, slot) — a
-    * total ORDER, deliberately not a dense global index (densifying is
-    * d27/d39's prefix-sum job if a consumer needs one; a loader sorts).
-    *
-    * SCALE: the naive within-source rank is one window partitioned by
-    * source — parallelism collapses to #sources, a real skew at corpus
-    * scale. The rank here decomposes over the DRAW SPACE instead (the
-    * d39 bucket technique, re-derived for a hash ordering): bucket =
-    * draw div 2^52 (256 buckets), per-(source, bucket) counts roll into
-    * broadcast prefix offsets (O(sources × 256) rows — the only
-    * single-partition window runs over THAT tiny relation), and each
-    * (source, bucket) partition ranks locally + offset. Parallelism is
-    * sources × 256 regardless of corpus size; document rows shuffle
-    * exactly once (into their rank partition). The md5 draw is uniform,
-    * so buckets are balanced by construction.
-    */
   /** Temperature-scaled mixture sampling — the standard multilingual
     * curation step (mT5/XLM-R's `p_l ∝ n_l^α`, here α = 0.5): each
     * language's share of a half-corpus budget follows the SQUARE ROOT
@@ -1879,6 +1810,29 @@ object CorpusOps {
       .drop("off") // internal: a chained bucketRank must not collide on it
   }
 
+  /** Reproducible stratified training-order interleave — the "global
+    * shuffle" every pre-training pipeline runs before packing: documents
+    * are ordered by a seeded per-doc hash draw (never `rand()`, which
+    * cannot give the same corpus twice), stratified so round k of the
+    * schedule holds the k-th pick of EVERY source — sources interleave
+    * evenly from the first batch instead of clumping, and an exhausted
+    * source simply drops out of later rounds. Output: (doc_id, source,
+    * round, slot); the training order is ORDER BY (round, slot) — a
+    * total ORDER, deliberately not a dense global index (densifying is
+    * d27/d39's prefix-sum job if a consumer needs one; a loader sorts).
+    *
+    * SCALE: the naive within-source rank is one window partitioned by
+    * source — parallelism collapses to #sources, a real skew at corpus
+    * scale. The rank here decomposes over the DRAW SPACE instead (the
+    * d39 bucket technique, re-derived for a hash ordering): bucket =
+    * draw div 2^52 (256 buckets), per-(source, bucket) counts roll into
+    * broadcast prefix offsets (O(sources × 256) rows — the only
+    * single-partition window runs over THAT tiny relation), and each
+    * (source, bucket) partition ranks locally + offset. Parallelism is
+    * sources × 256 regardless of corpus size; document rows shuffle
+    * exactly once (into their rank partition). The md5 draw is uniform,
+    * so buckets are balanced by construction.
+    */
   def d42InterleaveOrder(spark: SparkSession, sfDir: String): DataFrame =
     interleaveOrderOver(Tables.documents(spark, sfDir).select(col("doc_id"), col("source")))
 
@@ -2037,13 +1991,6 @@ object CorpusOps {
           .cast("int")))
   }
 
-  /** The trained gate for the s16 streaming twin: the dense weight table
-    * and the batch selection's admission threshold (the k-th selected
-    * score — a stream cannot rank, so the gate admits score >= cutoff,
-    * i.e. every document that ties the boundary). Both derive
-    * deterministically from the batch corpus, the s14/s15
-    * train-in-batch / apply-at-ingest discipline.
-    */
   /** Token capacity of one training chunk in [[d50TrainingPlan]]. */
   private[graft] val PlanChunkTokens = 2048L
 
@@ -2053,6 +2000,19 @@ object CorpusOps {
     * by construction).
     */
   private val PlanRoundBucket = 64L
+
+  /** d50's three live stage caches ([[ReplaceOnCallCache]] lifetime
+    * contract), persisted MEMORY_AND_DISK_SER: each stage is O(selected
+    * docs) rows of fixed-width integers, so at 100 TB the serialized
+    * spill-ready tier keeps a memory-pressured executor degrading to
+    * disk instead of evicting and recomputing the text-reading base
+    * projection (D50PersistSpec pins tier and eviction survival).
+    */
+  private val d50CanonCache = new ReplaceOnCallCache
+  private val d50SelectedCache = new ReplaceOnCallCache
+  private val d50OrderedCache = new ReplaceOnCallCache
+  private[graft] def d50Caches = Seq(d50CanonCache, d50SelectedCache, d50OrderedCache)
+  private val D50Tier = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** The composed TRAINING PLAN — the d18 composition idea applied to
     * the curation-to-loader handoff, end to end in one query: exact-dup
@@ -2079,19 +2039,6 @@ object CorpusOps {
     * broadcast back. The DuckDB oracle replays all four stages with
     * plain global windows — matching it proves every decomposition.
     */
-  /** d50's three live stage caches ([[ReplaceOnCallCache]] lifetime
-    * contract), persisted MEMORY_AND_DISK_SER: each stage is O(selected
-    * docs) rows of fixed-width integers, so at 100 TB the serialized
-    * spill-ready tier keeps a memory-pressured executor degrading to
-    * disk instead of evicting and recomputing the text-reading base
-    * projection (D50PersistSpec pins tier and eviction survival).
-    */
-  private val d50CanonCache = new ReplaceOnCallCache
-  private val d50SelectedCache = new ReplaceOnCallCache
-  private val d50OrderedCache = new ReplaceOnCallCache
-  private[graft] def d50Caches = Seq(d50CanonCache, d50SelectedCache, d50OrderedCache)
-  private val D50Tier = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-
   def d50TrainingPlan(spark: SparkSession, sfDir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val fpW = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
@@ -2365,9 +2312,6 @@ object CorpusOps {
   private[graft] def trainedPplModel(spark: SparkSession, sfDir: String): (Array[Long], Array[Long]) =
     TrainedModelCache.getOrTrain("ppl-lm", sfDir)(pplModel(lmDocs(spark, sfDir)))
 
-  /** [[d47PplFilter]]'s core over any `(doc_id, is_target, text)`
-    * relation — parameterized for the ScalaCheck property pin.
-    */
   /** Per-document bigram-LM scoring shared by d47's terciles and the
     * s21 at-ingest gate: `(doc_id, n_bigrams, avg_fx)` as a zero-shuffle
     * projection through the fused [[graft.functions.LmScoreFx]] kernel
@@ -2458,6 +2402,9 @@ object CorpusOps {
           element_at(ctxLit, (pmod(h1, lit(DsirBuckets.toLong)) + 1).cast("int")) +
           lit(PplTermOffset))
 
+  /** [[d47PplFilter]]'s core over any `(doc_id, is_target, text)`
+    * relation — parameterized for the ScalaCheck property pin.
+    */
   private[graft] def pplFilterOver(docs: DataFrame): DataFrame = {
     val (bigWts, ctxWts) = pplModel(docs)
     pplFilterWith(docs, bigWts, ctxWts)
@@ -2549,6 +2496,13 @@ object CorpusOps {
     (bigWts, ctxWts, cutoff)
   }
 
+  /** The trained gate for the s16 streaming twin: the dense weight table
+    * and the batch selection's admission threshold (the k-th selected
+    * score — a stream cannot rank, so the gate admits score >= cutoff,
+    * i.e. every document that ties the boundary). Both derive
+    * deterministically from the batch corpus, the s14/s15
+    * train-in-batch / apply-at-ingest discipline.
+    */
   private[graft] def dsirGate(spark: SparkSession, sfDir: String): (Array[Long], Long) = {
     val wts = trainedDsirWeights(spark, sfDir)
     val cutRow = d45DsirSelect(spark, sfDir)

@@ -47,9 +47,7 @@ object GraphOps {
     * as packed primitive long pairs (2^21 longs = 16 MB of array
     * payload; the transient driver footprint is that plus the
     * union-find's LongMap, ~48 B/node open-addressed — ~64 MB worst
-    * case at the cap, not the raw 16 MB). The explicit-bound
-    * discipline of the hot-key collect (`CorpusOps.MaxHotBandBuckets`).
-    * Above it the star loop runs distributed, so no deployment-scale
+    * case at the cap, not the raw 16 MB). Above it the star loop runs distributed, so no deployment-scale
     * graph ever lands on the driver at entry; its shrinking edge set
     * may cross the cap mid-run, which is exactly the point (the tail
     * rounds are the floor-bound ones).

@@ -29,11 +29,13 @@ object SkewJoin {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** The hot keys of `df.groupBy(key)` above a count threshold — the
-    * observation step that decides whether salting is worth a replicate.
+  /** The hot keys of `df.groupBy(keys)` with their `count`, at or above a
+    * count threshold — the observation step that decides whether salting
+    * is worth a replicate. Lazy: the caller decides what, if anything, to
+    * materialize.
     */
-  def hotKeys(df: DataFrame, key: Column, threshold: Long): DataFrame =
-    df.groupBy(key).count().filter(col("count") >= threshold)
+  def hotKeys(df: DataFrame, threshold: Long, keys: Column*): DataFrame =
+    df.groupBy(keys: _*).count().filter(col("count") >= threshold)
 
   /** Correctness-gate query: salted join of orders (skew side) with
     * customer (replicated side) — result identical to the plain join,

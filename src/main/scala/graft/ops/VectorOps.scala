@@ -248,15 +248,6 @@ object VectorOps {
       .select(col("r.vec_id").as("vec_id"), col("r.v").as("v"))
   }
 
-  /** SRP-LSH near-duplicate pairs over any `(vec_id, v: array<double>)`
-    * corpus — the sub-quadratic HIGH-threshold complement to
-    * [[d9EmbedNeardup]]'s exact blocked self-join: signature per row (one
-    * fused kernel pass, no shuffle), band into equi-join keys, exact-cosine
-    * verify only the candidates. Candidate generation is an equi-join on
-    * (band_id, band_key) — never all-pairs — and the banded shuffle carries
-    * only (id, band_id, key); vectors are joined back for the O(candidates)
-    * verify, so nothing O(N·dim) is ever broadcast or replicated.
-    */
   /** [[srpNearDupPairs]]'s one live corpus cache: the `(vec_id, v)`
     * relation feeds the signature kernel AND both verify join sides —
     * `Probe scan` read SIX embedding scans for d16 (the planted-corpus
@@ -266,6 +257,15 @@ object VectorOps {
     */
   private val srpCorpusCache = new ReplaceOnCallCache
 
+  /** SRP-LSH near-duplicate pairs over any `(vec_id, v: array<double>)`
+    * corpus — the sub-quadratic HIGH-threshold complement to
+    * [[d9EmbedNeardup]]'s exact blocked self-join: signature per row (one
+    * fused kernel pass, no shuffle), band into equi-join keys, exact-cosine
+    * verify only the candidates. Candidate generation is an equi-join on
+    * (band_id, band_key) — never all-pairs — and the banded shuffle carries
+    * only (id, band_id, key); vectors are joined back for the O(candidates)
+    * verify, so nothing O(N·dim) is ever broadcast or replicated.
+    */
   def srpNearDupPairs(rawCorpus: DataFrame, threshold: Double, seed: Long = SrpSeed): DataFrame = {
     val corpus = srpCorpusCache.register(rawCorpus)
     // coalesce: provably non-nullable band keys, else the optimizer pushes
@@ -293,29 +293,10 @@ object VectorOps {
   def d16SrpNeardup(spark: SparkSession, sfDir: String): DataFrame =
     srpNearDupPairs(plantedCorpus(spark, sfDir), SrpThreshold)
 
-  /** Distributed Lloyd's k-means over the embedding column — a REAL coarse
-    * quantizer for IVF (d7 uses the precomputed `label` column as its
-    * cells; this trains cells from the vectors themselves). Each iteration
-    * is one broadcast join of the k×dim centroid table against the corpus
-    * (argmin via a `min(struct(dist, cid))` aggregate — deterministic,
-    * ties to the lowest cid) and one (cid, dim, value) explode/groupBy for
-    * the centroid update. Centroids live in a k×dim driver-side array
-    * between iterations — the standard driver-resident centroid model
-    * (Spark MLlib's KMeans does the same); the corpus itself never leaves
-    * the executors. Seeds are the k lowest vec_ids. Training is fully
-    * deterministic end to end: assignment is an argmin over one collected
-    * centroid set with fixed arithmetic, and the mean update accumulates
-    * exact integers (see [[kmeansCentroids]]) so even independent
-    * trainings are bit-identical. At 100 TB: train the quantizer on a
-    * sample, then assign the full corpus with the one final broadcast
-    * pass this returns.
-    *
-    * Returns (vec_id, v, cid).
-    */
   /** One assignment pass: nearest trained centroid per vector (squared
     * L2, sequential accumulation; ties break to the lowest cid).
-    */
-  /** Argmin cell assignment as a zero-shuffle literal projection (see
+    *
+    * Argmin cell assignment as a zero-shuffle literal projection (see
     * [[nearestCidLit]]). The earlier join-the-centroid-table form cost a
     * BroadcastNestedLoopJoin plus a full-corpus groupBy shuffle PER
     * ITERATION; folding the k centroids into the expression leaves the
@@ -325,7 +306,16 @@ object VectorOps {
   def assignToCentroids(e: DataFrame, centroids: Seq[(Int, Seq[Double])]): DataFrame =
     e.select(col("vec_id"), col("v"), nearestCidLit(centroids).as("cid"))
 
-  /** The trained centroid table after `iters` Lloyd iterations.
+  /** The trained centroid table after `iters` Lloyd iterations —
+    * distributed k-means over the embedding column, a REAL coarse
+    * quantizer for IVF (d7 uses the precomputed `label` column as its
+    * cells; this trains cells from the vectors themselves). Each
+    * iteration assigns every vector with [[assignToCentroids]] and
+    * updates all centroids in one (cid, dim) aggregation. Centroids live
+    * in a k×dim driver-side array between iterations — the standard
+    * driver-resident centroid model (Spark MLlib's KMeans does the same);
+    * the corpus itself never leaves the executors. Seeds are the k lowest
+    * vec_ids.
     *
     * The mean update uses EXACT INTEGER accumulation (each coordinate
     * floor-quantized to 2^20ths and summed as longs — [[labelCentroidsExact]]'s
@@ -355,9 +345,6 @@ object VectorOps {
     }
     centroids
   }
-
-  def kmeansAssign(e: DataFrame, k: Int, iters: Int): DataFrame =
-    assignToCentroids(e, kmeansCentroids(e, k, iters))
 
   /** Sample-trained k-means assignment — the 100 TB form the
     * [[kmeansCentroids]] doc promises: Lloyd iterations touch only a
@@ -392,8 +379,8 @@ object VectorOps {
     * correct (it recomputes from lineage, just uncached). An input the
     * CALLER already persisted is used as-is and never unpersisted here —
     * their cache, their lifetime (and two alternating pipelines over
-    * caller-cached assignments don't thrash). [[releaseCellCache]] frees
-    * the last function-owned cache deterministically. At 100 TB the
+    * caller-cached assignments don't thrash); `clearCache()` frees the
+    * function-owned cache with every other. At 100 TB the
     * assignment is written once to a table rather than cached, as the
     * [[kmeansAssignSampled]] doc describes.
     */
@@ -414,13 +401,7 @@ object VectorOps {
     */
   private val lastCellCache = new ReplaceOnCallCache
 
-  /** Release the last [[annIvfOverCells]] assignment cache (no-op when
-    * none is live). Harness `scrub`s call `clearCache()` which also
-    * covers it; this is the targeted form for library users.
-    */
-  def releaseCellCache(): Unit = lastCellCache.release()
-
-  /** IVF ANN over TRAINED cells: [[kmeansAssign]] quantizes the corpus,
+  /** IVF ANN over TRAINED cells: [[kmeansAssignSampled]] quantizes the corpus,
     * then each query probes only its own cell and exact-reranks. Both join
     * sides derive from the single centroid set that training collected, so
     * query and corpus always agree on cells. Oracle-checked end to end
@@ -436,29 +417,6 @@ object VectorOps {
     annIvfOverCells(kmeansAssignSampled(embeddings(spark, sfDir), k = 8, iters = 3,
       sampleMod = 4))
 
-  /** d34: IVF ANN with MULTI-CELL probing (`nprobe` = 2) — the standard
-    * IVF refinement d7 lacks: probing ONLY the query's own cell misses
-    * true neighbors that sit just across a cell boundary, so real IVF
-    * indexes rank cells by centroid distance and probe the nearest few.
-    * Per query: rank all cells by squared distance to the cell centroid
-    * (ties by label), probe the top 2, exact-rerank top-k — recall can
-    * only improve over single-probe at ~2x the probe cost, still
-    * 2/n_cells of the corpus instead of all of it.
-    *
-    * Centroids are derived with EXACT integer arithmetic so the oracle
-    * is bit-identical: each coordinate is floor-quantized to 2^20ths and
-    * summed as longs (order-free, unlike float summation, whose
-    * accumulation order differs across engines and would flip near-tied
-    * cell rankings), then divided once — one deterministic double per
-    * coordinate. Distance/cosine folds run in array order, the same
-    * fold-order-parity the d7/d21 oracles already pin.
-    *
-    * SCALE: the centroid table is k rows (one tiny aggregate); the
-    * per-query cell ranking is a k-row broadcast cross join; the probe
-    * is a broadcast equi-join on the cell id — the corpus never
-    * shuffles and is scanned once, exactly d7's shape with a 2-cell
-    * probe set.
-    */
   /** Exact-integer per-label centroid table — see [[d34AnnIvfProbes]]'s
     * scaladoc for why floor-quantized long sums (order-free) matter.
     * Returns (c_label, cv).
@@ -489,6 +447,29 @@ object VectorOps {
       .select(col("q_id"), col("qv"), col("c_label"))
   }
 
+  /** d34: IVF ANN with MULTI-CELL probing (`nprobe` = 2) — the standard
+    * IVF refinement d7 lacks: probing ONLY the query's own cell misses
+    * true neighbors that sit just across a cell boundary, so real IVF
+    * indexes rank cells by centroid distance and probe the nearest few.
+    * Per query: rank all cells by squared distance to the cell centroid
+    * (ties by label), probe the top 2, exact-rerank top-k — recall can
+    * only improve over single-probe at ~2x the probe cost, still
+    * 2/n_cells of the corpus instead of all of it.
+    *
+    * Centroids are derived with EXACT integer arithmetic so the oracle
+    * is bit-identical: each coordinate is floor-quantized to 2^20ths and
+    * summed as longs (order-free, unlike float summation, whose
+    * accumulation order differs across engines and would flip near-tied
+    * cell rankings), then divided once — one deterministic double per
+    * coordinate. Distance/cosine folds run in array order, the same
+    * fold-order-parity the d7/d21 oracles already pin.
+    *
+    * SCALE: the centroid table is k rows (one tiny aggregate); the
+    * per-query cell ranking is a k-row broadcast cross join; the probe
+    * is a broadcast equi-join on the cell id — the corpus never
+    * shuffles and is scanned once, exactly d7's shape with a 2-cell
+    * probe set.
+    */
   def d34AnnIvfProbes(spark: SparkSession, sfDir: String): DataFrame = {
     val e = embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < NumQueries)
@@ -520,25 +501,6 @@ object VectorOps {
   private val KMedK = 8
   private val KMedIters = 2
 
-  /** Nearest-centroid id as a pure per-row EXPRESSION over literal
-    * centroids — no join, no shuffle: the corpus never moves during
-    * assignment. `array_min` over `(d, cid)` structs orders by distance
-    * then cid (= the oracle's `ORDER BY d, cid` tie-break); the inner
-    * distance is a fixed-order sequential fold, bit-identical to the
-    * oracle's list_sum comprehension.
-    *
-    * The k×dim centroid matrix enters as ONE `typedlit` literal (an
-    * array<struct<cid, cv>> value), not a k×dim tree of per-coordinate
-    * `lit` nodes: the earlier per-coordinate form built ~1000 Catalyst
-    * nodes PER TRAINING ITERATION (each with fresh literal values, so
-    * nothing caches across iterations), and driver-side
-    * analysis/optimization of those trees — not executor compute and not
-    * codegen (disabling wholestage codegen leaves the cold time
-    * unchanged) — dominated d13's ~11 s first execution. One literal node
-    * makes the tree size O(k) regardless of dim. Same struct-min
-    * semantics, bit-identical assignments (d21's DuckDB oracle pins this:
-    * it reproduces training through this expression hash-exactly).
-    */
   /** The batch-trained coarse quantizer as a driver-side constant — the
     * exact-integer per-label centroid table of [[d34AnnIvfProbes]],
     * collected for reuse as a STATIC side in streaming ingest (s14): a
@@ -596,15 +558,15 @@ object VectorOps {
   def d46SemDedup(spark: SparkSession, sfDir: String): DataFrame =
     semDedupOver(embeddings(spark, sfDir))
 
-  /** [[d46SemDedup]]'s core over any `(vec_id, v, label)` relation —
-    * parameterized for the ScalaCheck property pin.
-    */
   /** [[semDedupOver]]'s one live per-cell block cache (the grouped
     * block lists feed both replicated join sides —
     * [[ReplaceOnCallCache]] lifetime contract).
     */
   private val d46BlockCache = new ReplaceOnCallCache
 
+  /** [[d46SemDedup]]'s core over any `(vec_id, v, label)` relation —
+    * parameterized for the ScalaCheck property pin.
+    */
   private[graft] def semDedupOver(e: DataFrame): DataFrame = {
     // widened: the per-cell quadratic cosine filter runs on the PROBE
     // side of a broadcast join, i.e. at raw scan parallelism — one
@@ -926,35 +888,6 @@ object VectorOps {
   private val PqK = 16
   private val PqCand = 50
 
-  /** d35: IVF-PQ — PRODUCT-QUANTIZED ANN, the storage-side half of the
-    * standard 100 TB vector-search layout (IVF prunes which vectors to
-    * score — d7/d13/d34; PQ compresses HOW each is scored). Each vector
-    * splits into [[PqM]] subvectors; a per-subspace codebook ([[PqK]]
-    * centroids, sample-trained Lloyd's with k-medians updates — see
-    * [[pqCodebooks]]) encodes the corpus as [[PqM]] small codes.
-    * Search is ASYMMETRIC DISTANCE (ADC): per query, one [[PqM]]×[[PqK]]
-    * table of exact subvector-to-centroid distances is precomputed, and
-    * a corpus vector's approximate distance is just [[PqM]] table
-    * lookups summed — no per-pair float math over the raw dims. The top
-    * [[PqCand]] ADC candidates per query are then EXACT-reranked by
-    * cosine to the final top-k (the standard ADC + rerank pipeline).
-    *
-    * SCALE: this is the operator that makes 100 TB ANN feasible at all —
-    * the scored representation is 8 codes/vector (vs 512 bytes of raw
-    * doubles, a 64× read-volume cut), the codebooks are
-    * [[PqM]]×[[PqK]]×[[PqSubDim]] literals folded into the encode
-    * expression (tree O(M·K), zero shuffle, corpus scanned in place),
-    * and the query tables are a 20-row broadcast. Exact rerank touches
-    * only O(queries × PqCand) raw vectors.
-    *
-    * Oracle-checked end to end (the ADVICE r9 gap): the k-MEDIANS
-    * codebook update makes training order-independent, so the DuckDB
-    * oracle replays all [[PqM]]×3 trainings, the encoding, the ADC
-    * ranking and the exact rerank hash-exactly (d21's
-    * iterative-oracle precedent, lifted to the subspace grid).
-    * VectorOpsSpec additionally pins ADC-candidate recall against
-    * brute force, rerank exactness, and determinism.
-    */
   /** All [[PqM]] per-subspace codebooks trained TOGETHER: the naive form
     * (one [[kmeansCentroids]] loop per subspace) runs M×iters tiny jobs
     * whose scheduling overhead dominates at any data size — 8 subspaces
@@ -1034,6 +967,35 @@ object VectorOps {
       .select(col("q_id"), col("n_id"), cosine(col("qv"), col("v")).as("sim")))
   }
 
+  /** d35: IVF-PQ — PRODUCT-QUANTIZED ANN, the storage-side half of the
+    * standard 100 TB vector-search layout (IVF prunes which vectors to
+    * score — d7/d13/d34; PQ compresses HOW each is scored). Each vector
+    * splits into [[PqM]] subvectors; a per-subspace codebook ([[PqK]]
+    * centroids, sample-trained Lloyd's with k-medians updates — see
+    * [[pqCodebooks]]) encodes the corpus as [[PqM]] small codes.
+    * Search is ASYMMETRIC DISTANCE (ADC): per query, one [[PqM]]×[[PqK]]
+    * table of exact subvector-to-centroid distances is precomputed, and
+    * a corpus vector's approximate distance is just [[PqM]] table
+    * lookups summed — no per-pair float math over the raw dims. The top
+    * [[PqCand]] ADC candidates per query are then EXACT-reranked by
+    * cosine to the final top-k (the standard ADC + rerank pipeline).
+    *
+    * SCALE: this is the operator that makes 100 TB ANN feasible at all —
+    * the scored representation is 8 codes/vector (vs 512 bytes of raw
+    * doubles, a 64× read-volume cut), the codebooks are
+    * [[PqM]]×[[PqK]]×[[PqSubDim]] literals folded into the encode
+    * expression (tree O(M·K), zero shuffle, corpus scanned in place),
+    * and the query tables are a 20-row broadcast. Exact rerank touches
+    * only O(queries × PqCand) raw vectors.
+    *
+    * Oracle-checked end to end (the ADVICE r9 gap): the k-MEDIANS
+    * codebook update makes training order-independent, so the DuckDB
+    * oracle replays all [[PqM]]×3 trainings, the encoding, the ADC
+    * ranking and the exact rerank hash-exactly (d21's
+    * iterative-oracle precedent, lifted to the subspace grid).
+    * VectorOpsSpec additionally pins ADC-candidate recall against
+    * brute force, rerank exactness, and determinism.
+    */
   def d35AnnIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = embeddings(spark, sfDir)

@@ -4,6 +4,7 @@ import graft.streaming.ShardLayout
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset => ConnectorOffset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.FileSourceBridge
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
@@ -379,10 +380,29 @@ final class RecordAdmission(conf: org.apache.hadoop.conf.Configuration,
 
 object GraftShardsSource {
 
-  /** Name of the persisted `latest` subscribe-point snapshot inside the
-    * source's checkpoint metadata directory.
+  /** Name of the `latest` subscribe-point snapshot log inside the
+    * source's checkpoint metadata directory. Dot-prefixed: that directory
+    * also holds the inner file source's log, and tools that read that log
+    * take every entry not starting with a dot for one of its batch files.
     */
-  val LatestSnapshotFile = "graft-latest-seek"
+  val LatestSnapshotLog = ".graft-latest-seek"
+
+  /** The snapshot as a one-batch Spark metadata log, one `shard,end`
+    * line per snapshotted shard. Batch 0 is published through the
+    * session's `CheckpointFileManager` (`createAtomic`, no overwrite) —
+    * the same manager and atomic-publish contract as the offsets WAL.
+    */
+  private final class LatestSeekLog(spark: SparkSession, path: String)
+      extends HDFSMetadataLog[List[(Int, Long)]](spark, path) {
+    override def serialize(ends: List[(Int, Long)], out: java.io.OutputStream): Unit =
+      out.write(ends.map { case (s, m) => s"$s,$m" }.mkString("\n").getBytes("UTF-8"))
+    override def deserialize(in: java.io.InputStream): List[(Int, Long)] =
+      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.nonEmpty).map { l =>
+          val Array(s, m) = l.split(',')
+          (s.toInt, m.toLong)
+        }.toList
+  }
 
   /** The frozen per-shard end sequence for `startingPosition=latest`:
     * resolved ONCE, at first query start (one per-shard max aggregate —
@@ -391,25 +411,15 @@ object GraftShardsSource {
     * restart replays against the ORIGINAL subscribe point. Without the
     * persistence a restart would re-resolve "latest" against a stream
     * that has since advanced and silently skip records the first
-    * incarnation had already admitted.
+    * incarnation had already admitted. A concurrent first start on the
+    * same checkpoint fails in the log's no-overwrite publish, as it does
+    * in Spark's own logs.
     */
   def loadOrResolveLatestEnds(spark: SparkSession, metadataPath: String,
       cfg: GraftShardsConfig): Seq[(Int, Long)] = {
-    val file = new org.apache.hadoop.fs.Path(metadataPath, LatestSnapshotFile)
-    val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def read(): Seq[(Int, Long)] = {
-      val in = fs.open(file)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map { l =>
-          val Array(s, m) = l.split(',')
-          (s.toInt, m.toLong)
-        }.toList
-      finally in.close()
-    }
-
-    if (fs.exists(file)) read()
-    else {
+    val log = new LatestSeekLog(spark,
+      new org.apache.hadoop.fs.Path(metadataPath, LatestSnapshotLog).toString)
+    log.get(0).getOrElse {
       // the canonical LATEST use case subscribes BEFORE the producer has
       // written anything: a not-yet-existing (or empty) stream directory
       // is an empty snapshot — every shard is new, everything passes
@@ -427,15 +437,8 @@ object GraftShardsSource {
           // shard, it passes through whole like a post-subscribe shard
           .filterNot(_.isNullAt(1))
           .map(r => (r.getInt(0), r.getLong(1))).toList.sorted
-      val tmp = new org.apache.hadoop.fs.Path(metadataPath, s".$LatestSnapshotFile.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(ends.map { case (s, m) => s"$s,$m" }.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      // rename is the atomic publish; losing the race to a concurrent
-      // creator is fine — theirs is equally valid, use it
-      if (fs.rename(tmp, file)) ends
-      else if (fs.exists(file)) { fs.delete(tmp, false); read() }
-      else sys.error(s"graft-shards: cannot persist latest-seek snapshot at $file")
+      // add is false only when batch 0 already exists: read that one
+      if (log.add(0, ends)) ends else log.get(0).get
     }
   }
 

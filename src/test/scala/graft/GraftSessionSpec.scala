@@ -54,4 +54,19 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec with Matchers {
       }
     sites shouldBe Seq("GraftSession.scala" -> 1)
   }
+
+  test("no scaladoc under src/main is stacked directly on another") {
+    // a `/** ... */` block followed, after blank lines only, by another
+    // block documents nothing: the second one is the definition's doc
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val stacked = files.flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.map(_.trim).toIndexedSeq
+      lines.indices.filter { i =>
+        val next = lines.indexWhere(_.nonEmpty, i + 1)
+        lines(i).endsWith("*/") && next >= 0 && lines(next).startsWith("/**")
+      }.map(i => s"$f:${i + 1}")
+    }
+    stacked shouldBe empty
+  }
 }

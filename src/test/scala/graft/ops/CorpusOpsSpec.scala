@@ -679,7 +679,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
         .select(col("a_id"), col("b_id"), col("a_fp"), col("b_fp"))
         .as[(Long, Long, Long, Long)].collect().toSet
     val salted = run(1, 50)
-    CorpusOps.lastBandRoute should startWith("split:") // the guard actually fired
+    CorpusOps.lastBandRoute shouldBe "hot" // the guard actually fired
     val unsalted = run(1, Long.MaxValue)
     CorpusOps.lastBandRoute shouldBe "cold"
     salted shouldBe unsalted
@@ -694,27 +694,35 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
       (for (a <- 0L until 10L; b <- (a + 1) until 10L) yield (a, b)).toSet
   }
 
-  test("band skew guard: the salted-all fallback sizes its fan-out from the largest bucket and keeps the pair set") {
+  test("band skew guard: several hot buckets, each with its own fan-out, keep the pair set on the one hot path") {
     import spark.implicits._
-    // three hot buckets (120, 300 and 80 docs over a forced cap of 50)
-    // with maxHot forced to 2 — the >MaxHotBandBuckets régime at test
-    // scale: everything routes down the uniform-salt path, fan-out sized
-    // from the LARGEST sampled bucket (no fixed 256)
+    // three buckets over a forced cap of 50 (120, 300 and 80 docs) plus
+    // cold singletons; the hot table is never collected, however many
+    // buckets it holds
     val rows =
       (0L until 120L).map(i => (i, 0, 111L)) ++
         (1000L until 1300L).map(i => (i, 0, 222L)) ++
         (2000L until 2080L).map(i => (i, 1, 333L)) ++
         (3000L until 3050L).map(i => (i, 1, 9000L + i))
     val banded = rows.toDF("doc_id", "band_id", "band_key")
-    def pairSet(maxHot: Int, cap: Long) =
-      CorpusOps.candidatePairsFromBands(banded, 1, 0, cap, maxHot)
+    // the guard's 1-in-64 doc sample flags a bucket at cap 50 when it
+    // holds one sampled doc: it samples the 300- and 80-doc buckets (and
+    // one singleton) but none of the 120 docs, so two planted buckets are
+    // salted, each at its own fan-out, next to a 120-doc bucket on the
+    // cold side of the same plan
+    val sampled = banded.filter(pmod(xxhash64(col("doc_id")), lit(64L)) === 0)
+      .select(col("band_key")).as[Long].collect().toSet
+    sampled should contain allOf (222L, 333L)
+    sampled should not contain 111L
+    def pairSet(cap: Long) =
+      CorpusOps.candidatePairsFromBands(banded, 1, 0, cap)
         .as[(Long, Long)].collect().toSet
-    val fallback = pairSet(2, 50)
-    CorpusOps.lastBandRoute shouldBe "salted-all"
-    val cold = pairSet(65536, Long.MaxValue)
+    val hot = pairSet(50)
+    CorpusOps.lastBandRoute shouldBe "hot"
+    val cold = pairSet(Long.MaxValue)
     CorpusOps.lastBandRoute shouldBe "cold"
-    fallback shouldBe cold
-    fallback.size shouldBe 120 * 119 / 2 + 300 * 299 / 2 + 80 * 79 / 2
+    hot shouldBe cold
+    hot.size shouldBe 120 * 119 / 2 + 300 * 299 / 2 + 80 * 79 / 2
   }
 
   test("band skew guard: a planted mass-duplicate bucket over the DEFAULT cap survives with the exact pair count") {
@@ -728,6 +736,6 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec with Matchers {
     val banded = rows.toDF("doc_id", "band_id", "band_key")
     val pairs = CorpusOps.candidatePairsFromBands(banded)
     pairs.count() shouldBe n * (n - 1) / 2
-    CorpusOps.lastBandRoute shouldBe "split:1"
+    CorpusOps.lastBandRoute shouldBe "hot"
   }
 }

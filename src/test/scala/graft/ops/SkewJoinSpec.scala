@@ -21,7 +21,7 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("hotKeys surfaces heavy hitters") {
     val hot = SkewJoin.hotKeys(
-      graft.Tables.events(spark, sf001), col("user_id"), threshold = 1)
+      graft.Tables.events(spark, sf001), threshold = 1, col("user_id"))
     assert(hot.count() == graft.Tables.events(spark, sf001).select("user_id").distinct().count())
   }
 }

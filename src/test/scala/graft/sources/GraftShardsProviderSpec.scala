@@ -676,6 +676,27 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
       viaListFiles - one
   }
 
+  test("latest: the first start publishes its snapshot through the session's checkpoint file manager") {
+    // the snapshot is batch 0 of a Spark metadata log, so it goes through
+    // whatever `CheckpointFileManager` the session installs — the same
+    // no-overwrite createAtomic publish as the offsets WAL — rather than
+    // a hand-rolled create + rename on the raw file system
+    val base = newBase()
+    val dir = shardDir(base)
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val prior = spark.conf.getOption(key)
+    CountingCheckpointFileManager.created.clear()
+    spark.conf.set(key, classOf[CountingCheckpointFileManager].getName)
+    val got =
+      try collectIds(open(dir, "latest"), s"$base/ckpt")
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(got.isEmpty, s"latest must skip the pre-subscribe records, got ${got.take(5)}")
+    import scala.jdk.CollectionConverters._
+    val snapshots = CountingCheckpointFileManager.created.asScala.toSeq
+      .filter(_.getParent.getName == GraftShardsSource.LatestSnapshotLog)
+    snapshots.map(_.getName) shouldBe Seq("0")
+  }
+
   test("format stream checkpoints like any source: WAL offsets commit per epoch") {
     val base = newBase()
     val dir = shardDir(base)
@@ -684,4 +705,21 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     assert(StreamControl.checkpointOffsets(s"$base/ckpt") ==
       StreamControl.checkpointCommits(s"$base/ckpt"))
   }
+}
+
+/** A `FileSystem`-based checkpoint file manager that records the path of
+  * every `createAtomic` call, installed by name through
+  * `spark.sql.streaming.checkpointFileManagerClass`.
+  */
+class CountingCheckpointFileManager(path: org.apache.hadoop.fs.Path,
+    conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager(path, conf) {
+  override def createAtomic(p: org.apache.hadoop.fs.Path, overwriteIfPossible: Boolean) = {
+    CountingCheckpointFileManager.created.add(p)
+    super.createAtomic(p, overwriteIfPossible)
+  }
+}
+
+object CountingCheckpointFileManager {
+  val created = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]
 }

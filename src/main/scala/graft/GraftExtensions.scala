@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -7,23 +8,34 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 import graft.functions._
+import graft.streaming.GraftCheckpointFileManager
 
-/** SQL surface for the native kernels: registered via
+/** The graft session hook, loaded through
   * `spark.sql.extensions=graft.GraftExtensions` (the standard
   * SparkSessionExtensions deployment hook — works from spark-submit
-  * conf with no code change), so `spark.sql("SELECT cosine_sim(a, b)
-  * ...")` and the Column API hit the SAME Catalyst expressions, codegen
-  * included. Static parameters (band shapes, seeds, moduli) are passed
-  * as SQL literals (foldable expressions — `array(...)` of constants
-  * folds too) and extracted at resolution time, mirroring how Spark's
-  * own parameterized builtins (e.g. `approx_count_distinct`) take
-  * constant arguments.
+  * conf with no code change). It does two things when a session is built:
+  *
+  *  - installs [[GraftCheckpointFileManager]] on the SparkContext's
+  *    Hadoop configuration, once and only where no manager class is set
+  *    there, so every streaming checkpoint and state store on `file:`
+  *    does fork-free `java.nio` I/O; a session-level
+  *    `spark.sql.streaming.checkpointFileManagerClass` still wins;
+  *  - registers the SQL surface for the native kernels, so
+  *    `spark.sql("SELECT cosine_sim(a, b) ...")` and the Column API hit
+  *    the SAME Catalyst expressions, codegen included. Static parameters
+  *    (band shapes, seeds, moduli) are passed as SQL literals (foldable
+  *    expressions — `array(...)` of constants folds too) and extracted at
+  *    resolution time, mirroring how Spark's own parameterized builtins
+  *    (e.g. `approx_count_distinct`) take constant arguments.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    // applied while the session is built, after its SparkContext is up
+    GraftCheckpointFileManager.install(SparkContext.getOrCreate().hadoopConfiguration)
     GraftExtensions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+  }
 }
 
 object GraftExtensions {

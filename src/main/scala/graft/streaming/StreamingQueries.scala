@@ -145,13 +145,19 @@ object StreamingQueries {
     *    that NEED the finalization batch (eager eviction for the bounded
     *    trackers' state plateau) must re-enable it — the bounded-tracker
     *    spec harness owns its own confs, not this scope.
-    *  - `checkpoint.fileChecksum.enabled=false`: Spark 4.1 writes a
-    *    checksum sidecar per checkpoint file (offset log, commit log,
-    *    every state delta — the test logs' ChecksumCheckpointFileManager
-    *    warnings). These gate runs checkpoint to a FRESH temp dir per run
-    *    and never recover from it, so the sidecars are pure small-file
-    *    I/O (2× the checkpoint file count) with nothing to protect; a
-    *    durable production checkpoint keeps the default.
+    *  - `checkpoint.fileChecksum.enabled=false`: Spark 4.1's state stores
+    *    write a checksum file next to every delta and snapshot
+    *    (`ChecksumCheckpointFileManager`) and read it back on load. These
+    *    gate runs checkpoint to a FRESH temp dir per run and never
+    *    recover from it, so the checksums protect nothing here; a durable
+    *    production checkpoint keeps the default. Re-measured once the
+    *    checkpoint files went through the fork-free
+    *    [[GraftCheckpointFileManager]] (`plans/r23/`: `Probe time` at
+    *    sf0.1, 4 cores, median of 4 warm runs over 2 alternating blocks
+    *    per side): s13 4.17 CPU-s with the entry vs 5.02 without (wall
+    *    1.38 vs 1.58 s), a delta above the with-entry runs' own 0.76
+    *    CPU-s range; s9 (+0.58) and s12 (+0.73) lean the same way inside
+    *    their ranges, s2 and s6 lean the other way inside theirs.
     */
   private val ScopedStreamConfs = Seq(
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",

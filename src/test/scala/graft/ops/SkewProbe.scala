@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * Usage: Test/runMain graft.ops.SkewProbe [nHot]
   *
   * Memory: the default 15,000-doc bucket enumerates 112,496,500 pairs per
-  * run, 4 runs. At `GraftSession`'s default of 32 local cores it needs a
-  * 6g driver heap: with `SPARK_DRIVER_MEM=4g` one of two runs died with
-  * `OutOfMemoryError: Java heap space` in stage 16, while
+  * run, 4 runs. At `GraftSession`'s default of 32 local cores give it a
+  * 6g driver heap: of two invocations with `SPARK_DRIVER_MEM=4g`, one died
+  * with `OutOfMemoryError: Java heap space` in stage 16, while one with
   * `SPARK_DRIVER_MEM=6g` completed all 4 runs (~11 min on a 4-core
   * host). At 4 cores it completes at 4g (~16 min):
   * `SPARK_GRAFT_CPUS=4 SPARK_DRIVER_MEM=4g sbt "Test/runMain graft.ops.SkewProbe"`.

@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.SparkConfBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 import graft.functions._
@@ -13,13 +15,27 @@ import graft.streaming.GraftCheckpointFileManager
 /** The graft session hook, loaded through
   * `spark.sql.extensions=graft.GraftExtensions` (the standard
   * SparkSessionExtensions deployment hook — works from spark-submit
-  * conf with no code change). It does two things when a session is built:
+  * conf with no code change). It does three things when a session is
+  * built:
   *
   *  - installs [[GraftCheckpointFileManager]] on the SparkContext's
   *    Hadoop configuration, once and only where no manager class is set
   *    there, so every streaming checkpoint and state store on `file:`
   *    does fork-free `java.nio` I/O; a session-level
   *    `spark.sql.streaming.checkpointFileManagerClass` still wins;
+  *  - sets `spark.sql.artifact.isolation.enabled=false` on the
+  *    SparkContext's live conf where it is unset, before the new
+  *    session's SQL conf exists, so graft sessions and their clones share
+  *    the executors' default class loader. Every streaming query runs on
+  *    a clone of its session, and an isolated clone tags its jobs with
+  *    its own session UUID, so the executors built a new class loader for
+  *    every query start and restart; Spark's codegen cache is keyed by
+  *    class loader, so each run compiled every generated class again (32
+  *    per run of the `perfbench` pipeline, with Janino's failed class
+  *    lookups going to the driver over RPC). Isolation only separates
+  *    artifacts added to a session (`addArtifact`, session jars); graft
+  *    adds none, so giving it up changes nothing graft uses. An explicit
+  *    setting, on the builder or the SparkContext, still wins;
   *  - registers the SQL surface for the native kernels, so
   *    `spark.sql("SELECT cosine_sim(a, b) ...")` and the Column API hit
   *    the SAME Catalyst expressions, codegen included. Static parameters
@@ -31,7 +47,10 @@ import graft.streaming.GraftCheckpointFileManager
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // applied while the session is built, after its SparkContext is up
-    GraftCheckpointFileManager.install(SparkContext.getOrCreate().hadoopConfiguration)
+    // and before the session's shared state and SQL conf exist
+    val sc = SparkContext.getOrCreate()
+    GraftCheckpointFileManager.install(sc.hadoopConfiguration)
+    SparkConfBridge.live(sc).setIfMissing(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
     GraftExtensions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }

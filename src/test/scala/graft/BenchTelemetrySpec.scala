@@ -164,6 +164,20 @@ class BenchTelemetrySpec extends AnyFunSuite with Matchers {
     Bench.parseReferenceCpu("not json at all") shouldBe Map.empty
   }
 
+  test("row telemetry: jitSec and codegenCompiles parse next to the existing fields") {
+    val m = Bench.Measure(sec = 1.5, cpuSec = 4.56, gcSec = 0.01, spin = Bench.Spin(1.02, 24.1),
+      stealSec = 0.0, jitSec = 1.25, codegenCompiles = 7L)
+    val json = """{"telemetry":{""" +
+      Bench.telemetryRow("s2_x", m, passes = 2, suspect = false, extra = ""","coldSec":3.0000""") + "," +
+      Bench.telemetryRow("d1_x", m.copy(jitSec = -1.0, codegenCompiles = 0L), 3, suspect = true, "") + "}}"
+    Bench.parseRowField(json, "jitSec") shouldBe Map("s2_x" -> 1.25, "d1_x" -> -1.0)
+    Bench.parseRowField(json, "codegenCompiles") shouldBe Map("s2_x" -> 7.0, "d1_x" -> 0.0)
+    // the earlier fields read as before
+    Bench.parseReferenceCpu(json) shouldBe Map("s2_x" -> 4.56, "d1_x" -> 4.56)
+    Bench.parseRowField(json, "coldSec") shouldBe Map("s2_x" -> 3.0)
+    Bench.parseRowField(json, "passes") shouldBe Map("s2_x" -> 2.0, "d1_x" -> 3.0)
+  }
+
   test("cpu anomaly tripwire: >3x the committed prior-round CPU, replication-scaled") {
     // the r14 d26 case: 300 CPU-s against a ~10 CPU-s reference must trip
     assert(Bench.cpuAnomalous(Some(10.1), 300.0, replication = 1))

@@ -1,16 +1,52 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SparkConfBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** The SQL function surface. The shared spec session is built with
+/** The session hook: the SQL function surface and the artifact-isolation
+  * default. The shared spec session is built with
   * `spark.sql.extensions=graft.GraftExtensions` (SparkSpec), so these
   * tests exercise the REAL deployment path: class-name loading +
   * injectFunction at session build, then resolution of SQL calls through
   * the injected builders.
   */
 class GraftExtensionsSpec extends AnyFunSuite with SparkSpec with Matchers {
+
+  private val isolation = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+
+  /** The isolation conf of a new session built on the shared SparkContext
+    * through `GraftSession.builder` (the confs `perfbench`'s `StreamBench`
+    * also sets, none of them about artifacts) plus `confs`. The key is
+    * first removed from the context's live conf, so only
+    * `GraftExtensions.apply` can put it back; the live conf and the
+    * default and active session are restored afterwards.
+    */
+  private def isolationOfNewSession(confs: (String, String)*): String = {
+    val live = SparkConfBridge.live(spark.sparkContext)
+    val prior = live.getOption(isolation)
+    live.remove(isolation)
+    try {
+      val builder = confs.foldLeft(GraftSession.builder(4)) { case (b, (k, v)) => b.config(k, v) }
+      builder.create().conf.get(isolation)
+    } finally {
+      prior.fold(live.remove(isolation))(live.set(isolation, _))
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("a session built through the graft extensions is not artifact-isolated") {
+    spark.conf.get(isolation) shouldBe "false"
+    isolationOfNewSession() shouldBe "false"
+  }
+
+  test("an explicit artifact-isolation setting on the builder wins over the extension") {
+    isolationOfNewSession(isolation -> "true") shouldBe "true"
+  }
 
   private def withViews[T](body: => T): T = {
     graft.Tables.embeddings(spark, sf001)

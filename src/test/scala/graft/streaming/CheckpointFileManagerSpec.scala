@@ -22,7 +22,8 @@ import scala.jdk.CollectionConverters._
   * invisible until `close()` publishes it, a no-overwrite publish never
   * replaces, an overwrite swaps whole files, and every checkpoint and
   * state-store file operation of a stateful query runs without forking a
-  * child process.
+  * child process. A restart on the same checkpoint reuses the classes
+  * its first run compiled.
   */
 class CheckpointFileManagerSpec extends AnyFunSuite with SparkSpec with Matchers {
 
@@ -159,6 +160,32 @@ class CheckpointFileManagerSpec extends AnyFunSuite with SparkSpec with Matchers
     stateFiles.filter(_.startsWith(".")) shouldBe empty
   }
 
+  test("a restart on the same checkpoint compiles no class in its first batch") {
+    val base = newDir()
+    val shards = base.resolve("shards").toString
+    val events = ShardLayout.Events.source(spark, sf001)
+    ShardLayout.Events.append(events.filter(col("event_id") % 2 === 0), shards)
+    val ckpt = base.resolve("ckpt").toString
+    // (batch id, codegen compiles so far), read after the batch's sink job
+    val seen = mutable.Buffer.empty[(Long, Long)]
+    def run(): Unit = {
+      val q = startTracker(shards, ckpt, 10000, Trigger.AvailableNow()) { (batchId, _) =>
+        seen.synchronized(seen += batchId -> graft.Bench.codegenCompiles)
+      }
+      q.awaitTermination()
+      q.exception shouldBe None
+    }
+    run()
+    ShardLayout.Events.append(events.filter(col("event_id") % 2 === 1), shards)
+    val beforeRestart = graft.Bench.codegenCompiles
+    run()
+    val batches = seen.synchronized(seen.toSeq)
+    batches.map(_._1) shouldBe Seq(0L, 1L)
+    // the restart's planning and first batch hit the codegen cache, which
+    // Spark keys by class loader: one executor loader per session
+    batches(1)._2 - beforeRestart shouldBe 0L
+  }
+
   test("fork guard: three stateful micro-batches on a file: checkpoint start no process") {
     val base = newDir()
     val shards = base.resolve("shards").toString
@@ -183,7 +210,9 @@ class CheckpointFileManagerSpec extends AnyFunSuite with SparkSpec with Matchers
     got.synchronized(got.toSeq) shouldBe Seq(0L, 1L, 2L)
     // Spark deletes a dropped session's artifact directory (every query
     // runs on a session clone) with `rm -rf` from a cleaner thread, at
-    // a time set by GC, not by this query; it is not checkpoint I/O
+    // a time set by GC, not by this query; it is not checkpoint I/O. A
+    // non-isolated session skips only the job-artifact cleanup, not this
+    // delete, so graft sessions still fork it
     val starts = RecordingFile.readAllEvents(dump).asScala
       .filter(_.getEventType.getName == "jdk.ProcessStart")
       .map(_.getString("command"))

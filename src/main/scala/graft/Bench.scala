@@ -20,8 +20,10 @@ import scala.jdk.CollectionConverters._
   *  - cross-query residue is scrubbed after every run
   *    (`GraftSession.scrub`): the ~39 streaming queries each load
   *    state-store providers keyed by their fresh-per-run checkpoint dir
-  *    into `StateStore.loadedProviders` (never evicted on query stop —
-  *    s2 alone pins ~100k dedup keys per run) and register a
+  *    into `StateStore.loadedProviders` (s2 alone holds ~100k dedup keys
+  *    per run; Spark evicts a stopped run's providers only at its next
+  *    maintenance tick, and graft's `StateStoreRelease` listener frees them
+  *    asynchronously, after the run's terminated event) and register a
   *    `graft_mem_*` memory-sink temp view whose rows
   *    `clearCache()` does not drop. Left in place, 195 query executions
   *    accumulate enough heap that GC pressure inflates allocation-heavy

@@ -6,16 +6,16 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.SparkConfBridge
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 import graft.functions._
-import graft.streaming.GraftCheckpointFileManager
+import graft.streaming.{GraftCheckpointFileManager, StateStoreRelease}
 
 /** The graft session hook, loaded through
   * `spark.sql.extensions=graft.GraftExtensions` (the standard
   * SparkSessionExtensions deployment hook — works from spark-submit
-  * conf with no code change). It does three things when a session is
+  * conf with no code change). It does four things when a session is
   * built:
   *
   *  - installs [[GraftCheckpointFileManager]] on the SparkContext's
@@ -36,6 +36,13 @@ import graft.streaming.GraftCheckpointFileManager
   *    artifacts added to a session (`addArtifact`, session jars); graft
   *    adds none, so giving it up changes nothing graft uses. An explicit
   *    setting, on the builder or the SparkContext, still wins;
+  *  - appends [[StateStoreRelease]] to the static
+  *    `spark.sql.streaming.streamingQueryListeners` on the SparkContext's
+  *    live conf, once, keeping any listener already named there (the test
+  *    session's `GraftStats`). Each new session's `StreamingQueryManager`
+  *    reads that key from the context's conf, so every graft session
+  *    frees a stream run's state-store providers when the run terminates
+  *    instead of at Spark's next maintenance tick;
   *  - registers the SQL surface for the native kernels, so
   *    `spark.sql("SELECT cosine_sim(a, b) ...")` and the Column API hit
   *    the SAME Catalyst expressions, codegen included. Static parameters
@@ -50,7 +57,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // and before the session's shared state and SQL conf exist
     val sc = SparkContext.getOrCreate()
     GraftCheckpointFileManager.install(sc.hadoopConfiguration)
-    SparkConfBridge.live(sc).setIfMissing(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
+    val live = SparkConfBridge.live(sc)
+    live.setIfMissing(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
+    val listenersKey = StaticSQLConf.STREAMING_QUERY_LISTENERS.key
+    val listeners = live.get(listenersKey, "").split(',').map(_.trim).filter(_.nonEmpty)
+    val release = classOf[StateStoreRelease].getName
+    if (!listeners.contains(release)) live.set(listenersKey, (listeners :+ release).mkString(","))
     GraftExtensions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }

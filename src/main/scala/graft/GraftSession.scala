@@ -30,11 +30,16 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
 
   /** Drop cross-query residue between measured runs: cached relations,
-    * every state-store provider the streaming queries loaded (never
-    * evicted on query stop) and the `graft_mem_*` memory-sink views, whose
-    * rows `clearCache()` does not release. Left in place, they accumulate
-    * enough heap that later runs in the JVM measure GC pressure (see
-    * Bench's scaladoc).
+    * every state-store provider the streaming queries loaded and the
+    * `graft_mem_*` memory-sink views, whose rows `clearCache()` does not
+    * release. Left in place, they accumulate enough heap that later runs
+    * in the JVM measure GC pressure (see Bench's scaladoc).
+    *
+    * The providers are unloaded here although
+    * [[graft.streaming.StateStoreRelease]] frees each stream run's at its
+    * termination: that release is asynchronous (it follows the run's
+    * terminated event on the listener bus), and Bench needs one that has
+    * finished before the next measured run starts.
     */
   def scrub(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

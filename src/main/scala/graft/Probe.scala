@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The diagnostics CLI over the registered queries — one session
@@ -38,7 +39,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - `exec`: [[ExecAudit.executedStats]] of the post-AQE executed plan;
   *    with `out`, the executed plan is written to `<out>/exec_<q>.txt`;
   *  - `state`: per-micro-batch state rows/memory per stateful operator
-  *    from StreamingQueryProgress, for streaming queries;
+  *    from StreamingQueryProgress, for streaming queries, and for each
+  *    stream run once it has terminated, how many state-store providers
+  *    are still loaded for it (0 unless the release leaks);
   *  - `plan`: the formatted physical plan, printed, or with `out` written
   *    to `<out>/<q>_<tag>.txt` — the `plans/rNN/` before/after evidence;
   *  - `dump`: the query's result as one parquet file under `<out>/<q>`,
@@ -159,9 +162,15 @@ object Probe {
         }
 
       case "state" =>
+        // runs started and, once terminated, the providers still loaded for
+        // each: read after the session's StateStoreRelease has had its turn
+        val started = new java.util.concurrent.atomic.AtomicInteger
+        val ended = new java.util.concurrent.LinkedBlockingQueue[(java.util.UUID, Int)]
         spark.streams.addListener(new StreamingQueryListener {
-          override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+          override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+            started.incrementAndGet()
+          override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+            ended.add(e.runId -> StateStoreBridge.loaded(e.runId).size)
           override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
             val p = e.progress
             p.stateOperators.zipWithIndex.foreach { case (op, i) =>
@@ -174,6 +183,11 @@ object Probe {
         for (name <- names) {
           println(s"QUERY $name")
           println(f"DONE $name wall ${runNoop(name, name)}%.2f s")
+          for (_ <- 1 to started.getAndSet(0))
+            Option(ended.poll(60, java.util.concurrent.TimeUnit.SECONDS)) match {
+              case Some((run, n)) => println(s"RELEASE $name run=$run loadedProviders=$n")
+              case None => println(s"RELEASE $name no terminated event within 60 s")
+            }
           GraftSession.scrub(spark)
         }
 

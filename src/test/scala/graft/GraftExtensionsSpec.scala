@@ -3,16 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SparkConfBridge
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** The session hook: the SQL function surface and the artifact-isolation
-  * default. The shared spec session is built with
-  * `spark.sql.extensions=graft.GraftExtensions` (SparkSpec), so these
-  * tests exercise the REAL deployment path: class-name loading +
-  * injectFunction at session build, then resolution of SQL calls through
-  * the injected builders.
+import graft.streaming.{GraftStats, StateStoreRelease}
+
+/** The session hook: the SQL function surface, the artifact-isolation
+  * default and the state-store release listener. The shared spec session
+  * is built with `spark.sql.extensions=graft.GraftExtensions`
+  * (SparkSpec), so these tests exercise the REAL deployment path:
+  * class-name loading + injectFunction at session build, then resolution
+  * of SQL calls through the injected builders.
   */
 class GraftExtensionsSpec extends AnyFunSuite with SparkSpec with Matchers {
 
@@ -46,6 +48,37 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("an explicit artifact-isolation setting on the builder wins over the extension") {
     isolationOfNewSession(isolation -> "true") shouldBe "true"
+  }
+
+  private val listeners = StaticSQLConf.STREAMING_QUERY_LISTENERS.key
+
+  /** The listener classes of a new session built through
+    * `GraftSession.builder`, which names no listener, on the shared
+    * SparkContext whose live conf names `prior` listeners; the live conf
+    * and the default and active session are restored afterwards.
+    */
+  private def listenersOfNewSession(prior: String*): Seq[Class[_]] = {
+    val live = SparkConfBridge.live(spark.sparkContext)
+    val saved = live.getOption(listeners)
+    if (prior.isEmpty) live.remove(listeners) else live.set(listeners, prior.mkString(","))
+    try GraftSession.builder(4).create().streams.listListeners().toSeq.map(_.getClass)
+    finally {
+      saved.fold(live.remove(listeners))(live.set(listeners, _))
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("a session built through the graft extensions lists the state-store release listener") {
+    listenersOfNewSession() shouldBe Seq(classOf[StateStoreRelease])
+  }
+
+  test("the release listener is appended after a listener already named on the context, once") {
+    val both = Seq(classOf[GraftStats], classOf[StateStoreRelease])
+    // SparkSpec names GraftStats on the builder of the shared session
+    spark.streams.listListeners().toSeq.map(_.getClass) shouldBe both
+    listenersOfNewSession(classOf[GraftStats].getName) shouldBe both
+    listenersOfNewSession(both.map(_.getName): _*) shouldBe both
   }
 
   private def withViews[T](body: => T): T = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.UUID
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** ConsumerStats re-expressed as a `StreamingQueryListener` (O15).
@@ -23,103 +23,79 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * `progress.stateOperators` — `numRowsTotal` is the state a restart
   * would restore (in-flight), `numRowsUpdated` the rows this epoch wrote
   * before its commit. Both are summed across the query's stateful
-  * operators and published PER QUERY ([[stateRows]], keyed by query id) —
-  * the reference's `recordNrOf*` hooks live on a per-consumer stats
-  * instance, so a session-wide listener must keep per-query resolution
-  * or two concurrent queries' depths would overwrite each other. The
-  * unkeyed [[stateRowsTotal]]/[[stateRowsUpdated]] convenience gauges
-  * keep the last-observed-any-query overwrite semantics and are only
-  * meaningful in single-query sessions.
+  * operators.
+  *
+  * Every observation lands in ONE record per query ([[QueryStats]], read
+  * with [[of]]): the reference's hooks live on a per-consumer stats
+  * instance, so a session-wide listener keeps per-query resolution or two
+  * concurrent queries' observations would overwrite each other.
   *
   * Registered session-wide via the `streamingQueryListeners` static conf
   * (the reflective `ConsumerStats` config hook), so nothing here may grow
-  * with listener lifetime: the per-query identity sets are bounded
-  * ([[GraftStats.BoundedIdSet]] — newest [[GraftStats.IdCapacity]]
-  * retained, oldest evicted), which covers their purpose (asserting a
-  * RECENT query was observed) without leaking one UUID per query forever
-  * in a long-lived session.
+  * with listener lifetime: the records are bounded
+  * ([[GraftStats.BoundedIdMap]] — newest [[GraftStats.IdCapacity]]
+  * queries retained, oldest evicted).
   *
   * Thread-safe: listener callbacks fire on the streaming listener bus.
   */
 final class GraftStats extends StreamingQueryListener {
   import GraftStats._
 
-  val started = new AtomicBoolean(false)
-  val terminated = new AtomicBoolean(false)
-  val failed = new AtomicBoolean(false)
-  val batches = new AtomicLong(0) // checkpointAcked analog: committed epochs
-  val rows = new AtomicLong(0)    // trackRecord analog
-  // state-depth gauges (last observed; 0 until a stateful batch reports).
-  // Unkeyed pair = last stateful progress from ANY query (single-query
-  // convenience); the per-query map is the ConsumerStats-parity surface.
-  val stateRowsTotal = new AtomicLong(0)   // recordNrOfInFlightRecords analog
-  val stateRowsUpdated = new AtomicLong(0) // recordNrOfProcessedUncheckpointedRecords analog
-  // query id -> (in-flight state rows, rows updated this epoch); bounded
-  // like the identity sets (newest IdCapacity queries retained)
-  val stateRows = new BoundedIdMap[(Long, Long)](IdCapacity)
-  // PER-SHARD gauges — the `ShardConsumerId(stream, app, shardId)` analog
-  // (ShardConsumerId.scala:3-9): the reference keys its ConsumerStats
-  // instance per shard, so a user debugging ONE hot shard can see it.
-  // Populated from the `observedMetrics` a [[GraftStats.observeShardRows]]
-  // tap emits per micro-batch (no side channel: the metric rides the
-  // standard progress event, per query by construction).
-  //  - shardRowsLastBatch: rows per shard in the LAST (most recently
-  //    reported, i.e. still-uncommitted-at-report-time) epoch — the
-  //    per-shard recordNrOfProcessedUncheckpointedRecords analog;
-  //  - shardRowsTotal: cumulative rows per shard over the query's
-  //    lifetime — the per-shard trackRecord counter.
-  // Bounded: IdCapacity queries (LRU), map values O(shard count).
-  val shardRowsLastBatch = new BoundedIdMap[Map[Int, Long]](IdCapacity)
-  val shardRowsTotal = new BoundedIdMap[Map[Int, Long]](IdCapacity)
-  // per-query identity, like the reference's per-consumer stats instance
-  // (reportInitialization/reportShutdown know WHICH consumer): lets a
-  // caller assert a SPECIFIC query was observed, not just that the
-  // cumulative flags are set. Bounded — see class doc.
-  val startedIds = new BoundedIdSet(IdCapacity)
-  val terminatedIds = new BoundedIdSet(IdCapacity)
+  private val queries = new BoundedIdMap(IdCapacity, QueryStats())
 
-  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
-    started.set(true)
-    startedIds.add(e.id)
-  }
+  /** The record of query `id`, once its start was observed. */
+  def of(id: UUID): Option[QueryStats] = queries.get(id)
+
+  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+    queries.update(e.id)(_.copy(started = true))
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-    batches.incrementAndGet()
-    rows.addAndGet(e.progress.numInputRows)
-    val ops = e.progress.stateOperators
-    if (ops != null && ops.nonEmpty) {
-      val total = ops.map(_.numRowsTotal).sum
-      val updated = ops.map(_.numRowsUpdated).sum
-      stateRowsTotal.set(total)
-      stateRowsUpdated.set(updated)
-      stateRows.put(e.progress.id, (total, updated))
-    }
-    // per-shard gauges from the observeShardRows tap (absent unless the
+    val p = e.progress
+    val ops = Option(p.stateOperators).getOrElse(Array.empty)
+    // per-shard rows from the observeShardRows tap (absent unless the
     // query was instrumented; empty batches report an empty map)
-    val observed = e.progress.observedMetrics
-    if (observed != null && observed.containsKey(ShardRowsMetric)) {
-      val row = observed.get(ShardRowsMetric)
-      val perShard = row.getAs[scala.collection.Map[Int, Long]](ShardRowsField).toMap
-      shardRowsLastBatch.put(e.progress.id, perShard)
-      val merged = shardRowsTotal.get(e.progress.id).getOrElse(Map.empty)
-      val cumulative = perShard.foldLeft(merged) { case (acc, (s, n)) =>
-        acc.updated(s, acc.getOrElse(s, 0L) + n)
-      }
-      shardRowsTotal.put(e.progress.id, cumulative)
+    val perShard = Option(p.observedMetrics).filter(_.containsKey(ShardRowsMetric))
+      .map(_.get(ShardRowsMetric).getAs[scala.collection.Map[Int, Long]](ShardRowsField).toMap)
+    queries.update(p.id) { s =>
+      val counted = s.copy(batches = s.batches + 1, rows = s.rows + p.numInputRows)
+      val gauged = if (ops.isEmpty) counted else counted.copy(
+        stateRowsTotal = ops.map(_.numRowsTotal).sum, stateRowsUpdated = ops.map(_.numRowsUpdated).sum)
+      perShard.fold(gauged)(m => gauged.copy(shardRowsLastBatch = m,
+        shardRowsTotal = m.foldLeft(gauged.shardRowsTotal) { case (acc, (shard, n)) =>
+          acc.updated(shard, acc.getOrElse(shard, 0L) + n)
+        }))
     }
   }
 
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
-    terminated.set(true)
-    terminatedIds.add(e.id)
-    if (e.exception.isDefined) failed.set(true)
-  }
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+    queries.update(e.id)(_.copy(terminated = true, failed = e.exception.isDefined))
 }
 
 object GraftStats {
 
-  /** Identity-set bound: far above any plausible concurrent-query count,
-    * far below "one UUID per query for the life of the session".
+  /** What [[GraftStats]] observed of one query.
+    *
+    * @param batches            checkpointAcked analog: committed epochs
+    * @param rows               trackRecord analog: input rows
+    * @param stateRowsTotal     recordNrOfInFlightRecords analog, last
+    *                           stateful batch (0 until one reports)
+    * @param stateRowsUpdated   recordNrOfProcessedUncheckpointedRecords
+    *                           analog, last stateful batch
+    * @param shardRowsLastBatch rows per shard in the last reported epoch —
+    *                           the per-shard uncheckpointed-records analog
+    * @param shardRowsTotal     rows per shard over the query's lifetime —
+    *                           the per-shard trackRecord counter, the
+    *                           `ShardConsumerId(stream, app, shardId)`
+    *                           analog (ShardConsumerId.scala:3-9) that lets
+    *                           a user see ONE hot shard
+    */
+  final case class QueryStats(started: Boolean = false, terminated: Boolean = false,
+      failed: Boolean = false, batches: Long = 0L, rows: Long = 0L,
+      stateRowsTotal: Long = 0L, stateRowsUpdated: Long = 0L,
+      shardRowsLastBatch: Map[Int, Long] = Map.empty, shardRowsTotal: Map[Int, Long] = Map.empty)
+
+  /** Record bound: far above any plausible concurrent-query count, far
+    * below "one record per query for the life of the session".
     */
   val IdCapacity = 256
 
@@ -144,34 +120,20 @@ object GraftStats {
     df.observe(ShardRowsMetric,
       graft.functions.CountByKey.countByKey(shardCol).as(ShardRowsField))
 
-  /** Insertion-ordered set of query ids capped at `max` entries — oldest
-    * evicted first (re-adding an id refreshes its position). Synchronized:
-    * listener callbacks can race a reader thread.
+  /** Insertion-ordered map of query records capped at `max` entries —
+    * oldest evicted first (an update refreshes its position); an update
+    * of an absent id starts from `zero`. The
+    * listener is session-lived, so nothing here may grow with
+    * queries-ever-started. Synchronized: listener callbacks can race a
+    * reader thread.
     */
-  final class BoundedIdSet(max: Int) {
-    private val set = new java.util.LinkedHashSet[java.util.UUID]()
-    def add(id: java.util.UUID): Unit = synchronized {
-      set.remove(id)
-      set.add(id)
-      if (set.size > max) { val it = set.iterator(); it.next(); it.remove() }
-    }
-    def contains(id: java.util.UUID): Boolean = synchronized(set.contains(id))
-    def size: Int = synchronized(set.size)
-  }
-
-  /** Insertion-ordered query-id map capped at `max` entries — oldest
-    * evicted first (updating an id refreshes its position). Same bound
-    * discipline as [[BoundedIdSet]]: the listener is session-lived, so
-    * nothing here may grow with queries-ever-started.
-    */
-  final class BoundedIdMap[V](max: Int) {
-    private val m = new java.util.LinkedHashMap[java.util.UUID, V]()
-    def put(id: java.util.UUID, v: V): Unit = synchronized {
-      m.remove(id)
-      m.put(id, v)
+  final class BoundedIdMap[V](max: Int, zero: V) {
+    private val m = new java.util.LinkedHashMap[UUID, V]()
+    def update(id: UUID)(f: V => V): Unit = synchronized {
+      m.put(id, f(Option(m.remove(id)).getOrElse(zero)))
       if (m.size > max) { val it = m.keySet().iterator(); it.next(); it.remove() }
     }
-    def get(id: java.util.UUID): Option[V] = synchronized(Option(m.get(id)))
+    def get(id: UUID): Option[V] = synchronized(Option(m.get(id)))
     def size: Int = synchronized(m.size)
   }
 }

@@ -14,6 +14,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * batch overwrites its own previous (possibly partial) output instead of
   * appending a duplicate.
   *
+  * Partial-batch policy (pinned by StreamingSpec): a batch's write job
+  * clears its directory, writes under `_temporary` and publishes at job
+  * commit (Spark's default v1 file committer). A job that fails in any
+  * task is aborted and publishes nothing, so until the restart
+  * [[readAll]] returns exactly the batches whose write job committed,
+  * none of the failed one. A replay of a batch that was already written
+  * hides that batch from [[readAll]] between the clear and its commit.
+  *
   * At 100 TB this is the standard pattern: per-epoch atomic-rename commits
   * into a partitioned table, or a transactional sink keyed by epoch.
   */

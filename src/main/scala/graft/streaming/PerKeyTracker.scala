@@ -23,12 +23,15 @@ object PerKeyTracker {
   final case class Event(event_id: Long, user_id: Long)
   final case class KeyState(n: Long, min_id: Long, max_id: Long)
 
-  private def update(
-      key: Long, rows: Iterator[Event], state: GroupState[KeyState]): (Long, KeyState) = {
-    val prev = state.getOption.getOrElse(KeyState(0L, Long.MaxValue, Long.MinValue))
-    val next = rows.foldLeft(prev) { (s, r) =>
+  /** `rows` folded into a key's state, or into the empty state. */
+  private def fold(prev: Option[KeyState], rows: Iterator[Event]): KeyState =
+    rows.foldLeft(prev.getOrElse(KeyState(0L, Long.MaxValue, Long.MinValue))) { (s, r) =>
       KeyState(s.n + 1, math.min(s.min_id, r.event_id), math.max(s.max_id, r.event_id))
     }
+
+  private def update(
+      key: Long, rows: Iterator[Event], state: GroupState[KeyState]): (Long, KeyState) = {
+    val next = fold(state.getOption, rows)
     state.update(next)
     (key, next)
   }
@@ -59,10 +62,7 @@ object PerKeyTracker {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[(Long, KeyState)] = {
-      val prev = if (st.exists()) st.get() else KeyState(0L, Long.MaxValue, Long.MinValue)
-      val next = rows.foldLeft(prev) { (s, r) =>
-        KeyState(s.n + 1, math.min(s.min_id, r.event_id), math.max(s.max_id, r.event_id))
-      }
+      val next = fold(Option.when(st.exists())(st.get()), rows)
       st.update(next)
       Iterator.single((key, next))
     }

@@ -2,11 +2,10 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.streaming.{ShardLayout, StreamControl}
-import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import graft.streaming.StreamRuns._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.connector.read.streaming.{Offset => ConnectorOffset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import scala.collection.mutable
@@ -21,40 +20,7 @@ import scala.collection.mutable
   */
 class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
 
-  private def newBase(): String = Files.createTempDirectory("graft-src-spec-").toString
-
-  private def shardDir(base: String): String = {
-    val dir = s"$base/shards"
-    ShardLayout.Events.materialize(spark, sf001, dir)
-    dir
-  }
-
   private def batchEvents = graft.Tables.events(spark, sf001)
-
-  private def open(dir: String, position: String, extra: Map[String, String] = Map.empty): DataFrame = {
-    val r = spark.readStream.format("graft-shards")
-      .option("path", dir)
-      .option("startingPosition", position)
-    extra.foreach { case (k, v) => r.option(k, v) }
-    r.load()
-  }
-
-  private def collectIds(df: DataFrame, ckpt: String): Seq[Long] = {
-    val got = mutable.Buffer.empty[Long]
-    val q = df.select("event_id")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val ids = b.collect().map(_.getLong(0))
-        got.synchronized { got ++= ids }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
-    got.synchronized(got.toVector)
-  }
 
   // ---- options validation: config errors fail at load(), clearly ----
 
@@ -110,13 +76,13 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("trim_horizon: full replay equals the batch table") {
     val base = newBase()
-    val ids = collectIds(open(shardDir(base), "trim_horizon"), s"$base/ckpt")
+    val ids = eventIds(open(spark, eventShards(spark, sf001, base), "trim_horizon"), s"$base/ckpt")
     ids.sorted shouldBe batchEvents.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
   }
 
   test("at_timestamp: delivery starts at the event-time position") {
     val base = newBase()
-    val ids = collectIds(open(shardDir(base), "at_timestamp:2024-01-15"), s"$base/ckpt")
+    val ids = eventIds(open(spark, eventShards(spark, sf001, base), "at_timestamp:2024-01-15"), s"$base/ckpt")
     val expected = batchEvents.filter(col("ts") >= lit("2024-01-15").cast("timestamp"))
       .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(expected.nonEmpty && expected.size < batchEvents.count())
@@ -125,16 +91,8 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("maxFilesPerTrigger: admission control reaches the inner file source") {
     val base = newBase()
-    val dir = shardDir(base)
-    var batches = 0
-    val q = open(dir, "trim_horizon", Map("maxFilesPerTrigger" -> "1"))
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) => batches += 1; b.count(); () }
-      .start()
-    q.awaitTermination()
+    val batches = collect(open(spark, eventShards(spark, sf001, base), "trim_horizon",
+      Map("maxFilesPerTrigger" -> "1")).select("event_id"), s"$base/ckpt")(_.getLong(0)).all.size
     // one shard file per micro-batch: at least one batch per shard
     assert(batches >= ShardLayout.Events.numShards,
       s"expected >=${ShardLayout.Events.numShards} single-file batches, got $batches")
@@ -150,13 +108,13 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
 
     // tranche 1 exists BEFORE the subscribe: must never be delivered
     ShardLayout.Events.append(events.filter(col("event_id") <= c1), dir, 4)
-    val got1 = collectIds(open(dir, "latest"), ckpt)
+    val got1 = eventIds(open(spark, dir, "latest"), ckpt)
     assert(got1.isEmpty, s"latest must skip the pre-subscribe records, got ${got1.take(5)}")
 
     // tranche 2 appended after the subscribe: delivered on the next run
     ShardLayout.Events.append(
       events.filter(col("event_id") > c1 && col("event_id") <= c2), dir, 4)
-    val got2 = collectIds(open(dir, "latest"), ckpt)
+    val got2 = eventIds(open(spark, dir, "latest"), ckpt)
     got2.sorted shouldBe ids.filter(i => i > c1 && i <= c2).toSeq
 
     // tranche 3 + RESTART from the same checkpoint: the snapshot file —
@@ -165,7 +123,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // nothing already delivered is re-delivered (offsets) and nothing
     // pre-subscribe leaks in (snapshot)
     ShardLayout.Events.append(events.filter(col("event_id") > c2), dir, 4)
-    val got3 = collectIds(open(dir, "latest"), ckpt)
+    val got3 = eventIds(open(spark, dir, "latest"), ckpt)
     got3.sorted shouldBe ids.filter(_ > c2).toSeq
     assert(StreamControl.checkpointOffsets(ckpt) == StreamControl.checkpointCommits(ckpt))
   }
@@ -179,20 +137,8 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val df = graft.streaming.StreamingQueries.shardStream(spark, dir,
       graft.streaming.ShardLayout.Corpus.schema)
     df.schema shouldBe graft.streaming.ShardLayout.Corpus.schema
-    val got = mutable.Buffer.empty[Long]
-    val q = df.select("doc_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val ids = b.collect().map(_.getLong(0))
-        got.synchronized { got ++= ids }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    got.synchronized(got.toVector).sorted shouldBe graft.Tables.documents(spark, sf001)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    collect(df.select("doc_id"), s"$base/ckpt")(_.getLong(0)).rows.sorted shouldBe
+      graft.Tables.documents(spark, sf001).select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
   }
 
   test("caller schema: every column is bound by NAME, wherever `shard` sits") {
@@ -201,34 +147,22 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // projection in getBatch, both schemas below swap two columns' values
     import org.apache.spark.sql.types.StructType
     val base = newBase()
-    val dir = shardDir(base)
+    val dir = eventShards(spark, sf001, base)
     val fields = ShardLayout.Events.schema.fields
     val (head, tail) = fields.init.splitAt(2) // (event_id, ts), (user_id, ...)
     val shardFirst = StructType(fields.last +: fields.init)
     val shardMid = StructType(head ++ (fields.last +: tail))
     Seq(shardFirst, shardMid).zipWithIndex.foreach { case (schema, i) =>
-      val got = mutable.Buffer.empty[org.apache.spark.sql.Row]
-      val q = spark.readStream.format("graft-shards").schema(schema)
+      val got = collect(spark.readStream.format("graft-shards").schema(schema)
         .option("path", dir)
         .option("startingPosition", "trim_horizon")
-        .load()
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt$i")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val rows = b.collect()
-          got.synchronized { got ++= rows }
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+        .load(), s"$base/ckpt$i")(identity).rows
       val want = spark.read.schema(ShardLayout.Events.schema).parquet(dir)
         .select(schema.fieldNames.map(col).toSeq: _*).collect()
-      def byId(rows: Seq[org.apache.spark.sql.Row]) =
+      def byId(rows: Seq[Row]) =
         rows.map(r => r.getAs[Long]("event_id") -> r.toSeq).toMap
       got.size shouldBe want.length
-      byId(got.toSeq) shouldBe byId(want.toSeq)
+      byId(got) shouldBe byId(want.toSeq)
     }
   }
 
@@ -240,12 +174,12 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/not-yet-written"
     val ckpt = s"$base/ckpt"
-    val got1 = collectIds(open(dir, "latest"), ckpt)
+    val got1 = eventIds(open(spark, dir, "latest"), ckpt)
     assert(got1.isEmpty, s"empty subscribe must deliver nothing, got ${got1.take(5)}")
 
     val events = batchEvents
     ShardLayout.Events.append(events, dir, 4)
-    val got2 = collectIds(open(dir, "latest"), ckpt)
+    val got2 = eventIds(open(spark, dir, "latest"), ckpt)
     got2.sorted shouldBe events.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
   }
 
@@ -287,17 +221,9 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // retained record each batch, which at 100 TB is the difference
     // between a seek and a full-stream rescan
     val base = newBase()
-    val dir = shardDir(base)
-    var lastPlan = ""
-    val q = open(dir, "at_timestamp:2024-01-15")
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-      .start()
-    q.awaitTermination()
-    lastPlan = org.apache.spark.sql.graftbridge.StreamPlanBridge.lastExecutedPlan(q)
+    val q = drain(open(spark, eventShards(spark, sf001, base), "at_timestamp:2024-01-15")
+      .select("event_id"), s"$base/ckpt")(discard)
+    val lastPlan = org.apache.spark.sql.graftbridge.StreamPlanBridge.lastExecutedPlan(q)
     assert(lastPlan.nonEmpty, "no executed micro-batch plan captured")
     assert(lastPlan.contains("PushedFilters: [") &&
       lastPlan.contains("GreaterThanOrEqual(ts"),
@@ -313,14 +239,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     ShardLayout.Events.append(batchEvents, dir, 4) // retained pre-subscribe history
-    val q = open(dir, "latest")
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-      .start()
-    q.awaitTermination()
+    val q = drain(open(spark, dir, "latest").select("event_id"), s"$base/ckpt")(discard)
     val lastPlan = org.apache.spark.sql.graftbridge.StreamPlanBridge.lastExecutedPlan(q)
     assert(lastPlan.nonEmpty, "no executed micro-batch plan captured")
     assert(lastPlan.contains("PushedFilters: [") &&
@@ -338,26 +257,16 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val cut = ids(ids.length / 2)
     ShardLayout.Events.append(batchEvents.filter(col("event_id") <= cut), dir, 4)
     val ckpt = s"$base/ckpt"
-    collectIds(open(dir, "latest"), ckpt) shouldBe empty
+    eventIds(open(spark, dir, "latest"), ckpt) shouldBe empty
     // appended after subscribe, into 4 new shards too: all of it flows
     ShardLayout.Events.append(batchEvents.filter(col("event_id") > cut), dir, 8)
-    val got = mutable.Buffer.empty[Long]
-    val q = open(dir, "latest")
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        got.synchronized { got ++= b.collect().map(_.getLong(0)) }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val got = new Batches[Long]
+    val q = drain(open(spark, dir, "latest").select("event_id"), ckpt)(got.sink(_.getLong(0)))
     val lastPlan = org.apache.spark.sql.graftbridge.StreamPlanBridge.lastExecutedPlan(q)
     assert(lastPlan.contains("FileScan"), s"no executed micro-batch plan captured:\n$lastPlan")
     assert(!lastPlan.contains("BroadcastExchange") && !lastPlan.contains("Join"),
       s"latest cut still joins the snapshot:\n$lastPlan")
-    got.synchronized(got.sorted.toVector) shouldBe ids.filter(_ > cut).toVector
+    got.rows.sorted shouldBe ids.filter(_ > cut).toVector
   }
 
   test("options: seek-column validation is case-insensitive, like Spark's column resolution") {
@@ -392,26 +301,12 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val dir = s"$base/shards"
     ShardLayout.Events.append(batchEvents, dir, 4) // 4 files, ~250 records each
     val cap = 300L
-    val batchSizes = mutable.Buffer.empty[Long]
-    val got = mutable.Buffer.empty[Long]
-    val q = open(dir, "trim_horizon", Map("maxRecordsPerTrigger" -> cap.toString))
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val ids = b.collect().map(_.getLong(0))
-        batchSizes.synchronized { batchSizes += ids.length.toLong }
-        got.synchronized { got ++= ids }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
-    val sizes = batchSizes.synchronized(batchSizes.toVector)
+    val got = collect(open(spark, dir, "trim_horizon", Map("maxRecordsPerTrigger" -> cap.toString))
+      .select("event_id"), s"$base/ckpt")(_.getLong(0))
+    val sizes = got.all.map(_._2.size)
     assert(sizes.count(_ > 0) >= 2, s"cap must split the drain into multiple batches, got $sizes")
     sizes.foreach(s => assert(s <= cap, s"batch of $s records exceeds the $cap cap: $sizes"))
-    got.synchronized(got.toVector).sorted shouldBe
+    got.rows.sorted shouldBe
       batchEvents.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
   }
 
@@ -419,18 +314,10 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     ShardLayout.Events.append(batchEvents, dir, 4)
-    var batches = 0
     // record cap admits everything; the 1-file cap must still hold
-    val q = open(dir, "trim_horizon",
+    val batches = collect(open(spark, dir, "trim_horizon",
         Map("maxRecordsPerTrigger" -> "1000000", "maxFilesPerTrigger" -> "1"))
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) => if (b.count() > 0) batches += 1; () }
-      .start()
-    q.awaitTermination()
-    assert(q.exception.isEmpty)
+      .select("event_id"), s"$base/ckpt")(_.getLong(0)).all.count(_._2.nonEmpty)
     assert(batches >= 4, s"expected >=4 single-file batches under the composed limits, got $batches")
   }
 
@@ -443,33 +330,16 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val dir = s"$base/shards"
     ShardLayout.Events.append(batchEvents, dir, 4)
     val cap = 300L
-    val got = mutable.Buffer.empty[Long]
-    val sizes = mutable.Buffer.empty[Long]
-    def drain(stopAfterBatches: Int): Boolean = {
-      var batches = 0
-      val q = open(dir, "trim_horizon", Map("maxRecordsPerTrigger" -> cap.toString))
-        .select("event_id")
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val ids = b.collect().map(_.getLong(0))
-          got.synchronized { got ++= ids }
-          sizes.synchronized { sizes += ids.length.toLong }
-          batches += 1
-          if (batches >= stopAfterBatches) throw new RuntimeException("injected stop")
-          ()
-        }
-        .start()
-      try { q.awaitTermination(); true } catch { case _: Exception => false }
-    }
-    // first incarnation dies after one committed-side batch; the batch
-    // that threw did NOT commit, so its rows redeliver to the successor
-    assert(!drain(stopAfterBatches = 2), "first incarnation must die mid-drain")
-    assert(drain(Int.MaxValue), "successor must drain to completion")
-    sizes.synchronized(sizes.toVector).foreach(s => assert(s <= cap, s"batch of $s exceeds cap"))
+    val ckpt = s"$base/ckpt"
+    val got = new Batches[Long]
+    // the first incarnation dies after batch 1's sink, one committed batch
+    // in; batch 1 did NOT commit, so its rows redeliver to the successor
+    val sink = failOnce(1)(got.sink[Row](_.getLong(0)))
+    crashAndRestart(ckpt)(start(open(spark, dir, "trim_horizon", Map("maxRecordsPerTrigger" -> cap.toString))
+      .select("event_id"), ckpt)(sink))
+    got.all.foreach { case (_, b) => assert(b.size <= cap, s"batch of ${b.size} exceeds cap") }
     // the one uncommitted batch redelivers: distinct ids == full stream
-    got.synchronized(got.toVector).distinct.sorted shouldBe
+    got.rows.distinct.sorted shouldBe
       batchEvents.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
   }
 
@@ -511,9 +381,7 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
       body
       spark.sparkContext.setJobDescription(sentinel)
       try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(sentinel), "listener never saw the sentinel job")
+      within(30)(assert(seen.contains(sentinel), "listener never saw the sentinel job"))
     } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     seen.asScala.toSeq.takeWhile(_ != sentinel)
@@ -532,29 +400,16 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     for (t <- 0 until 10) ShardLayout.Events.append(events.filter(pmod(col("event_id"), lit(10)) === t), dir, 4)
     val files = partFileCount(dir)
     assert(files > 32, s"fixture must exceed the discovery threshold, got $files files")
-    val got = mutable.Buffer.empty[(Long, Int)]
-    val batchFiles = mutable.Buffer.empty[Int]
+    val got = new Batches[(Long, Int, String)]
     val jobs = jobDescriptions {
-      val q = open(dir, "trim_horizon", Map("maxFilesPerTrigger" -> (files * 2).toString))
-        .select(col("event_id"), col("shard"), input_file_name())
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val all = b.collect()
-          batchFiles.synchronized { batchFiles += all.map(_.getString(2)).distinct.length }
-          val rows = all.map(r => (r.getLong(0), r.getInt(1)))
-          got.synchronized { got ++= rows }
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      drain(open(spark, dir, "trim_horizon", Map("maxFilesPerTrigger" -> (files * 2).toString))
+        .select(col("event_id"), col("shard"), input_file_name()), s"$base/ckpt")(
+        got.sink(r => (r.getLong(0), r.getInt(1), r.getString(2))))
     }
-    batchFiles.synchronized(batchFiles.toVector) shouldBe Vector(files)
+    got.all.map(_._2.map(_._3).distinct.size) shouldBe Vector(files)
     val listing = jobs.filter(_.startsWith("Listing leaf files"))
     assert(listing.isEmpty, s"micro-batch ran listing jobs: $listing")
-    got.synchronized(got.toVector).sorted shouldBe
+    got.rows.map(r => (r._1, r._2)).sorted shouldBe
       events.select(col("event_id"), pmod(col("user_id"), lit(4)).cast("int"))
         .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
   }
@@ -568,36 +423,21 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     val events = batchEvents
     ShardLayout.Events.append(events, dir, 4)
     val ckpt = s"$base/ckpt"
-    def run(failFirst: Boolean): (Seq[Long], Seq[String]) = {
-      val got = mutable.Buffer.empty[Long]
-      val inputs = mutable.Buffer.empty[String]
-      val q = open(dir, "trim_horizon", Map("maxFilesPerTrigger" -> "100"))
-        .select(col("event_id"), input_file_name())
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val all = b.collect()
-          inputs.synchronized { inputs ++= all.map(_.getString(1)).distinct }
-          if (failFirst) throw new RuntimeException("injected stop before commit")
-          got.synchronized { got ++= all.map(_.getLong(0)) }
-          ()
-        }
-        .start()
-      try q.awaitTermination() catch { case _: Exception if failFirst => () }
-      if (!failFirst) assert(q.exception.isEmpty, s"replay failed: ${q.exception}")
-      (got.synchronized(got.toVector), inputs.synchronized(inputs.toVector))
-    }
-    val (_, admitted) = run(failFirst = true)
+    val stream = open(spark, dir, "trim_horizon", Map("maxFilesPerTrigger" -> "100"))
+      .select(col("event_id"), input_file_name())
+    def decode(r: Row) = (r.getLong(0), r.getString(1))
+    val first = new Batches[(Long, String)]
+    crashes(start(stream, ckpt)(failOnce(0)(first.sink(decode))), ckpt)
+    val admitted = first.rows.map(_._2).distinct
     assert(admitted.size >= 2, s"batch 0 must admit several files, got $admitted")
     assert(StreamControl.checkpointCommits(ckpt) == 0, "batch 0 must stay uncommitted")
     val gone = new org.apache.hadoop.fs.Path(new java.net.URI(admitted.head))
     val goneIds = spark.read.parquet(gone.toString).select("event_id").collect().map(_.getLong(0)).toSet
     val fs = gone.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(goneIds.nonEmpty && fs.delete(gone, false))
-    val (ids, replayed) = run(failFirst = false)
-    replayed.toSet shouldBe admitted.toSet - admitted.head
-    ids.sorted shouldBe events.select("event_id").collect().map(_.getLong(0))
+    val replay = collect(stream, ckpt)(decode).rows
+    replay.map(_._2).toSet shouldBe admitted.toSet - admitted.head
+    replay.map(_._1).sorted shouldBe events.select("event_id").collect().map(_.getLong(0))
       .filterNot(goneIds).sorted.toSeq
   }
 
@@ -682,13 +522,13 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // no-overwrite createAtomic publish as the offsets WAL — rather than
     // a hand-rolled create + rename on the raw file system
     val base = newBase()
-    val dir = shardDir(base)
+    val dir = eventShards(spark, sf001, base)
     val key = "spark.sql.streaming.checkpointFileManagerClass"
     val prior = spark.conf.getOption(key)
     CountingCheckpointFileManager.created.clear()
     spark.conf.set(key, classOf[CountingCheckpointFileManager].getName)
     val got =
-      try collectIds(open(dir, "latest"), s"$base/ckpt")
+      try eventIds(open(spark, dir, "latest"), s"$base/ckpt")
       finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(got.isEmpty, s"latest must skip the pre-subscribe records, got ${got.take(5)}")
     import scala.jdk.CollectionConverters._
@@ -699,8 +539,8 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("format stream checkpoints like any source: WAL offsets commit per epoch") {
     val base = newBase()
-    val dir = shardDir(base)
-    collectIds(open(dir, "trim_horizon", Map("maxFilesPerTrigger" -> "2")), s"$base/ckpt")
+    eventIds(open(spark, eventShards(spark, sf001, base), "trim_horizon",
+      Map("maxFilesPerTrigger" -> "2")), s"$base/ckpt")
     assert(StreamControl.checkpointOffsets(s"$base/ckpt") > 0)
     assert(StreamControl.checkpointOffsets(s"$base/ckpt") ==
       StreamControl.checkpointCommits(s"$base/ckpt"))

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Prop, Test => SCTest}
@@ -47,10 +46,10 @@ class BoundedDupPositionsPropSpec extends AnyFunSuite with SparkSpec with Matche
     val prop = Prop.forAll(genScenario) { sc =>
       val all = docsDf(spark, sc)
       val parts = tranches(all, sc)
-      val base = Files.createTempDirectory("graft-prop-").toString
+      val base = StreamRuns.newBase()
       val dir = s"$base/shards"
 
-      val got = mutable.Buffer.empty[(Long, Long)]
+      val got = new StreamRuns.Batches[(Long, Long)]
       val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
       parts.foreach { t =>
         ShardLayout.Corpus.append(t, dir)
@@ -59,7 +58,7 @@ class BoundedDupPositionsPropSpec extends AnyFunSuite with SparkSpec with Matche
             ttlMs = sc.ttlSec * 1000L),
           r => (r.getLong(0), r.getLong(1)), got, tracker)
       }
-      val g = got.synchronized(got.toSet)
+      val g = got.rows.toSet
 
       val allMarks = batchMarks(all)
       val inTranche = parts.map(batchMarks).reduce(_ union _)

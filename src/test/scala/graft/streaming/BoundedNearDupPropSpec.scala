@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,10 +34,10 @@ class BoundedNearDupPropSpec extends AnyFunSuite with SparkSpec with Matchers {
     val prop = Prop.forAll(genScenario) { sc =>
       val all = docsDf(spark, sc)
       val parts = tranches(all, sc)
-      val base = Files.createTempDirectory("graft-ndprop-").toString
+      val base = StreamRuns.newBase()
       val dir = s"$base/shards"
 
-      val got = mutable.Buffer.empty[(Long, Long)]
+      val got = new StreamRuns.Batches[(Long, Long)]
       val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
       parts.foreach { t =>
         ShardLayout.Corpus.append(t, dir)
@@ -47,7 +46,7 @@ class BoundedNearDupPropSpec extends AnyFunSuite with SparkSpec with Matchers {
             ttlMs = sc.ttlSec * 1000L),
           r => (r.getLong(0), r.getLong(1)), got, tracker)
       }
-      val g = got.synchronized(got.toSet)
+      val g = got.rows.toSet
 
       val allPairs = batchPairs(all)
       val inTranche = parts.map(batchPairs).reduce(_ union _)

@@ -2,20 +2,20 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StateOperatorProgress, Trigger}
+import org.apache.spark.sql.streaming.StateOperatorProgress
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 import org.scalacheck.Gen
 import scala.collection.mutable
 
 /** The ONE test harness for the bounded stateful trackers
   * (`StreamingQueries.boundedDupPositions` / `boundedNearDupPairs`):
-  * corpus generation, tranche cuts, and the scoped-conf
-  * `AvailableNow` runner the example-based `StreamingSpec` tests and
-  * both ScalaCheck property specs share. The deployment-contract conf
-  * handling lives HERE and only here — a future conf change has exactly
-  * one place to land.
+  * corpus generation, tranche cuts, and the scoped-conf `AvailableNow`
+  * runner (on [[StreamRuns]]) the example-based `StreamingSpec` tests
+  * and both ScalaCheck property specs share. The deployment-contract
+  * conf handling lives HERE and only here — a future conf change has
+  * exactly one place to land.
   *
-  * Why the runner sets two confs, scoped around `start()`:
+  * Why the runner sets two confs, scoped around the query's start:
   *
   *  - `multipleWatermarkPolicy=max` — the trackers' deployment contract
   *    (see their scaladoc): the emissions-side watermark node observes a
@@ -93,31 +93,20 @@ object BoundedTrackerHarness {
 
   /** One `AvailableNow` run of `tracker` over the current corpus dir,
     * resuming from `ckpt`, under the deployment-contract confs (scoped
-    * around `start()` — see class doc). Emitted rows land in `got` via
+    * around the start — see class doc). Emitted rows land in `got` via
     * `decode`; the fMGWS operator's per-batch state progress lands in
     * `progress`.
     */
   def runTranche[A](spark: SparkSession, dir: String, ckpt: String,
       tracker: DataFrame => DataFrame, decode: Row => A,
-      got: mutable.Buffer[A],
+      got: StreamRuns.Batches[A],
       progress: mutable.Buffer[StateOperatorProgress]): Unit = {
     val q = StreamingQueries.withConfs(spark, Seq(
         "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
         "spark.sql.streaming.multipleWatermarkPolicy" -> "max")) {
-      tracker(StreamingQueries.shardStream(spark, dir, schemaTs))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val rows = df.collect().toSeq.map(decode)
-          got.synchronized { got ++= rows }
-          ()
-        }
-        .start()
+      StreamRuns.start(tracker(StreamingQueries.shardStream(spark, dir, schemaTs)), ckpt)(got.sink(decode))
     }
-    q.awaitTermination()
-    assert(q.exception.isEmpty, s"tranche run failed: ${q.exception}")
+    StreamRuns.await(q)
     progress ++= q.recentProgress.flatMap(_.stateOperators)
       .filter(_.operatorName.toLowerCase.contains("flatmapgroups"))
   }

@@ -1,18 +1,17 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.streaming.StreamRuns._
 import graft.streaming.StreamingQueries.shardStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StateStoreBridge
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import scala.collection.mutable
@@ -106,52 +105,24 @@ class CheckpointFileManagerSpec extends AnyFunSuite with SparkSpec with Matchers
     Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSeq shouldBe Seq("1.delta")
   }
 
-  private def trackerTruth: Map[Long, PerKeyTracker.KeyState] =
-    graft.Tables.events(spark, sf001)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), min(col("event_id")).as("mn"), max(col("event_id")).as("mx"))
-      .collect()
-      .map(r => r.getLong(0) -> PerKeyTracker.KeyState(r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-
-  private def startTracker(shards: String, ckpt: String, maxFiles: Int, trigger: Trigger)(
-      sink: (Long, Seq[(Long, PerKeyTracker.KeyState)]) => Unit) =
+  /** A `dropDuplicates` + `PerKeyTracker` stream over `shards`. */
+  private def tracker(shards: String, maxFiles: Int) =
     PerKeyTracker.track(shardStream(spark, shards, maxFilesPerTrigger = Some(maxFiles)).dropDuplicates("event_id"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (ds: Dataset[(Long, PerKeyTracker.KeyState)], batchId: Long) =>
-        sink(batchId, ds.collect().toSeq)
-      }
-      .start()
 
   test("production confs: a dropDuplicates + tracker query commits, restarts and reloads its state") {
     // session defaults, so Spark's ChecksumCheckpointFileManager wraps
     // this manager for the state stores
     spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") shouldBe "true"
-    val base = newDir()
-    val shards = base.resolve("shards").toString
-    ShardLayout.Events.materialize(spark, sf001, shards)
-    val ckpt = base.resolve("ckpt").toString
-    val finalStates = mutable.Map.empty[Long, PerKeyTracker.KeyState]
-    @volatile var crashed = false
-    def start() = startTracker(shards, ckpt, 2, Trigger.AvailableNow()) { (batchId, rows) =>
-      rows.foreach { case (k, s) => finalStates.synchronized { finalStates(k) = s } }
-      if (batchId == 2L && !crashed) {
-        crashed = true
-        throw new RuntimeException("crash after the sink, before the commit")
-      }
-    }
-    intercept[Exception](start().awaitTermination())
-    StreamControl.checkpointOffsets(ckpt) shouldBe StreamControl.checkpointCommits(ckpt) + 1
+    val base = newBase()
+    val shards = eventShards(spark, sf001, base)
+    val ckpt = s"$base/ckpt"
+    val got = new Batches[(Long, PerKeyTracker.KeyState)]
+    val sink = failOnce(2)(got.sink[(Long, PerKeyTracker.KeyState)](identity))
     // the restart must load batch 1's state from its files
-    StateStoreBridge.unloadAll()
-    val q = start()
-    q.awaitTermination()
-    q.exception shouldBe None
-    StreamControl.checkpointOffsets(ckpt) shouldBe StreamControl.checkpointCommits(ckpt)
-    finalStates.toMap shouldBe trackerTruth
+    crashAndRestart(ckpt, between = StateStoreBridge.unloadAll()) {
+      start(tracker(shards, 2), ckpt, mode = "update")(sink)
+    }
+    got.rows.toMap shouldBe perKeyTruth(spark, sf001)
 
     val stateFiles = Files.walk(Paths.get(ckpt, "state")).iterator.asScala
       .filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
@@ -161,19 +132,16 @@ class CheckpointFileManagerSpec extends AnyFunSuite with SparkSpec with Matchers
   }
 
   test("a restart on the same checkpoint compiles no class in its first batch") {
-    val base = newDir()
-    val shards = base.resolve("shards").toString
+    val base = newBase()
+    val shards = s"$base/shards"
     val events = ShardLayout.Events.source(spark, sf001)
     ShardLayout.Events.append(events.filter(col("event_id") % 2 === 0), shards)
-    val ckpt = base.resolve("ckpt").toString
+    val ckpt = s"$base/ckpt"
     // (batch id, codegen compiles so far), read after the batch's sink job
     val seen = mutable.Buffer.empty[(Long, Long)]
-    def run(): Unit = {
-      val q = startTracker(shards, ckpt, 10000, Trigger.AvailableNow()) { (batchId, _) =>
-        seen.synchronized(seen += batchId -> graft.Bench.codegenCompiles)
-      }
-      q.awaitTermination()
-      q.exception shouldBe None
+    def run(): Unit = drain(tracker(shards, 10000), ckpt, "update") { (ds, batchId) =>
+      ds.collect()
+      seen.synchronized(seen += batchId -> graft.Bench.codegenCompiles)
     }
     run()
     ShardLayout.Events.append(events.filter(col("event_id") % 2 === 1), shards)
@@ -187,27 +155,21 @@ class CheckpointFileManagerSpec extends AnyFunSuite with SparkSpec with Matchers
   }
 
   test("fork guard: three stateful micro-batches on a file: checkpoint start no process") {
-    val base = newDir()
-    val shards = base.resolve("shards").toString
-    ShardLayout.Events.materialize(spark, sf001, shards)
+    val base = newBase()
+    val shards = eventShards(spark, sf001, base)
     val files = ShardLayout.partFiles(shards).size
-    val got = mutable.Buffer.empty[Long]
+    val got = new Batches[(Long, PerKeyTracker.KeyState)]
     val recording = new Recording()
     recording.enable("jdk.ProcessStart")
-    val dump = base.resolve("forks.jfr")
+    val dump = Paths.get(base, "forks.jfr")
     recording.start()
-    try {
-      val q = startTracker(shards, base.resolve("ckpt").toString, (files + 2) / 3, Trigger.AvailableNow()) {
-        (batchId, _) => got.synchronized(got += batchId)
-      }
-      q.awaitTermination()
-      q.exception shouldBe None
-    } finally {
+    try drain(tracker(shards, (files + 2) / 3), s"$base/ckpt", "update")(got.sink(identity))
+    finally {
       recording.stop()
       recording.dump(dump)
       recording.close()
     }
-    got.synchronized(got.toSeq) shouldBe Seq(0L, 1L, 2L)
+    got.ids shouldBe Seq(0L, 1L, 2L)
     // Spark deletes a dropped session's artifact directory (every query
     // runs on a session clone) with `rm -rf` from a cleaner thread, at
     // a time set by GC, not by this query; it is not checkpoint I/O. A

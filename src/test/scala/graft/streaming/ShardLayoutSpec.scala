@@ -1,12 +1,11 @@
 package graft.streaming
 
 import graft.SparkSpec
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import scala.jdk.CollectionConverters._
 
 /** Pins the one writer of the sharded stream ([[ShardLayout.append]]) for
   * every layout: the records a consumer reads back through
@@ -17,26 +16,17 @@ import org.scalatest.matchers.should.Matchers
   */
 class ShardLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
 
-  private def newDir(): String = Files.createTempDirectory("graft-layout-spec-").toString
-
-  /** The whole stream at `dir`, read through graft-shards into a memory sink. */
+  /** The whole stream at `dir`, read through graft-shards. */
   private def readBack(layout: ShardLayout, dir: String): DataFrame = {
-    val mem = s"graft_mem_layout_${layout.name}_${System.nanoTime()}"
-    StreamingQueries.shardStream(spark, dir, layout.schema)
-      .writeStream
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", s"${newDir()}/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    spark.table(mem)
+    val rows = StreamRuns.collect(StreamingQueries.shardStream(spark, dir, layout.schema),
+      s"${StreamRuns.newBase()}/ckpt")(identity).rows
+    spark.createDataFrame(rows.asJava, rows.head.schema)
   }
 
   for (layout <- Seq(ShardLayout.Events, ShardLayout.Corpus, ShardLayout.Embeddings)) {
 
     test(s"${layout.name}: read back through graft-shards, the stream is the source table routed by pmod(${layout.key}, ${layout.numShards})") {
-      val dir = s"${newDir()}/shards"
+      val dir = s"${StreamRuns.newBase()}/shards"
       layout.materialize(spark, sf001, dir)
       val got = readBack(layout, dir)
       val want = layout.source(spark, sf001)
@@ -48,7 +38,7 @@ class ShardLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
     }
 
     test(s"${layout.name}: an append's new part files have strictly ascending mtimes in name order, above every earlier file") {
-      val dir = s"${newDir()}/shards"
+      val dir = s"${StreamRuns.newBase()}/shards"
       layout.materialize(spark, sf001, dir)
       val before = ShardLayout.partFiles(dir).map(f => f.getAbsolutePath -> f.lastModified).toMap
       // a 2-shard tranche: range partitioning over the session's 4 cores

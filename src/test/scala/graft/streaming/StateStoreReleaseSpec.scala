@@ -1,17 +1,15 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.streaming.StreamRuns._
 import graft.streaming.StreamingQueries.shardStream
-import java.nio.file.Files
 import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.StateStoreBridge
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import scala.collection.mutable
 
 /** [[StateStoreRelease]] on the test session: a terminated run's
   * state-store providers are unloaded by the time a later-registered
@@ -20,8 +18,6 @@ import scala.collection.mutable
   * cancelled task holds does not stall the listener bus.
   */
 class StateStoreReleaseSpec extends AnyFunSuite with SparkSpec with Matchers {
-
-  private def newDir(): java.nio.file.Path = Files.createTempDirectory("graft-release-")
 
   /** A listener registered after the session's own: one latch per run,
     * counted down when the run's terminated event reaches it.
@@ -42,42 +38,23 @@ class StateStoreReleaseSpec extends AnyFunSuite with SparkSpec with Matchers {
     try body(t) finally spark.streams.removeListener(t)
   }
 
-  private def trackerTruth: Map[Long, PerKeyTracker.KeyState] =
-    graft.Tables.events(spark, sf001)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), min(col("event_id")).as("mn"), max(col("event_id")).as("mx"))
-      .collect()
-      .map(r => r.getLong(0) -> PerKeyTracker.KeyState(r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-
   test("a failed run's providers are unloaded at its termination, the restart's at its stop") {
-    val base = newDir()
-    val shards = base.resolve("shards").toString
-    ShardLayout.Events.materialize(spark, sf001, shards)
-    val ckpt = base.resolve("ckpt").toString
-    val finalStates = mutable.Map.empty[Long, PerKeyTracker.KeyState]
-    @volatile var crashed = false
+    val base = newBase()
+    val shards = eventShards(spark, sf001, base)
+    val ckpt = s"$base/ckpt"
+    val got = new Batches[(Long, PerKeyTracker.KeyState)]
+    val sink = failOnce(1)(got.sink[(Long, PerKeyTracker.KeyState)](identity))
     withTerminations { ends =>
-      def start() =
-        PerKeyTracker.track(shardStream(spark, shards, maxFilesPerTrigger = Some(2)).dropDuplicates("event_id"))
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (ds: Dataset[(Long, PerKeyTracker.KeyState)], batchId: Long) =>
-            ds.collect().foreach { case (k, s) => finalStates.synchronized { finalStates(k) = s } }
-            if (batchId == 1L && !crashed) {
-              crashed = true
-              throw new RuntimeException("crash after the sink write, before the commit")
-            }
-          }
-          .start()
+      def run() = start(
+        PerKeyTracker.track(shardStream(spark, shards, maxFilesPerTrigger = Some(2)).dropDuplicates("event_id")),
+        ckpt, Trigger.ProcessingTime(0L), "update")(sink)
 
-      val first = start()
-      intercept[Exception](first.awaitTermination())
+      val first = run()
+      crashes(first, ckpt)
       ends.await(first.runId, 30) shouldBe true
       StateStoreBridge.loaded(first.runId) shouldBe empty
 
-      val second = start()
+      val second = run()
       second.processAllAvailable()
       // the dedup's and the tracker's providers, loaded in this JVM
       StateStoreBridge.loaded(second.runId) should not be empty
@@ -86,23 +63,19 @@ class StateStoreReleaseSpec extends AnyFunSuite with SparkSpec with Matchers {
       StateStoreBridge.loaded(second.runId) shouldBe empty
       second.exception shouldBe None
     }
-    finalStates.toMap shouldBe trackerTruth
+    got.rows.toMap shouldBe perKeyTruth(spark, sf001)
   }
 
   test("stopping a RocksDB query mid-batch returns, and later listeners get its termination promptly") {
-    val base = newDir()
-    val shards = base.resolve("shards").toString
-    ShardLayout.Events.materialize(spark, sf001, shards)
+    val base = newBase()
+    val shards = eventShards(spark, sf001, base)
     StateStoreReleaseSpec.inTask = new CountDownLatch(1)
     withTerminations { ends =>
       val q = StreamingQueries.withConfs(spark, Seq("spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-        PerKeyTracker.trackTws(shardStream(spark, shards, maxFilesPerTrigger = Some(1)))
-          .toDF("user_id", "state")
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", base.resolve("ckpt").toString)
-          .foreachBatch { (df: DataFrame, _: Long) =>
+        val tracker = PerKeyTracker.trackTws(shardStream(spark, shards, maxFilesPerTrigger = Some(1)))
+        start(tracker.toDF("user_id", "state"), s"$base/ckpt", Trigger.ProcessingTime(0L), "update") {
+          (df: DataFrame, _: Long) =>
             // a task holds its RocksDB instance lock until its rows are
             // drained; park there, deaf to the stop's interrupt, so the
             // release's close waits for the lock after the run is gone
@@ -116,16 +89,13 @@ class StateStoreReleaseSpec extends AnyFunSuite with SparkSpec with Matchers {
               }
               rows.foreach(_ => ())
             }
-          }
-          .start()
+        }
       }
       StateStoreReleaseSpec.inTask.await(60, TimeUnit.SECONDS) shouldBe true
       q.stop()
       // a close on the bus would hold this event until the parked task ends
       ends.await(q.runId, StateStoreReleaseSpec.ParkSeconds / 3) shouldBe true
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(4 * StateStoreReleaseSpec.ParkSeconds)
-      while (StateStoreBridge.loaded(q.runId).nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      StateStoreBridge.loaded(q.runId) shouldBe empty
+      within(4 * StateStoreReleaseSpec.ParkSeconds.toInt)(StateStoreBridge.loaded(q.runId) shouldBe empty)
     }
   }
 }

@@ -1,10 +1,13 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.streaming.GraftStats.QueryStats
+import graft.streaming.StreamRuns._
 import graft.streaming.StreamingQueries.{shardStream, withConfs}
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StateOperatorProgress, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import scala.collection.mutable
@@ -16,23 +19,7 @@ import scala.collection.mutable
   * inspectable sink (C10) and exactly-once via the idempotent
   * foreachBatch sink (O5's replacement, SURVEY.md §7.4).
   */
-object StreamingSpec {
-  // cross-run state for the crash-injection sinks (single forked test JVM)
-  val received: mutable.Buffer[(Long, Seq[Long])] = mutable.Buffer.empty
-  @volatile var crashOnBatch: Long = -1L
-  @volatile var crashed: Boolean = false
-}
-
 class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
-  import StreamingSpec._
-
-  private def newBase(): String = Files.createTempDirectory("graft-spec-").toString
-
-  private def shardDir(base: String): String = {
-    val dir = s"$base/shards"
-    ShardLayout.Events.materialize(spark, sf001, dir)
-    dir
-  }
 
   private def batchEventIds = graft.Tables.events(spark, sf001)
     .select("event_id").collect().map(_.getLong(0)).toSeq
@@ -44,79 +31,67 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
+  /** Files under `ckpt/state` whose name ends with `.changelog`. */
+  private def changelogs(ckpt: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(java.nio.file.Paths.get(ckpt, "state"))
+    try walk.iterator().asScala.count(_.getFileName.toString.endsWith(".changelog"))
+    finally walk.close()
+  }
+
+  /** The sf0.001 events in three tranches cut at the ts terciles. */
+  private def eventTranches: Seq[DataFrame] = {
+    val events = graft.Tables.events(spark, sf001)
+    val Seq(c1, c2) = events
+      .selectExpr("percentile(cast(ts as double), array(0.3333, 0.6667)) as c")
+      .head().getSeq[Double](0)
+    val t = col("ts").cast("double")
+    Seq(events.filter(t <= c1), events.filter(t > c1 && t <= c2), events.filter(t > c2))
+  }
+
+  /** The sf0.001 documents on a synthetic clock, one per second, in three
+    * ~167 s tranches against a 60 s horizon.
+    */
+  private def docTranches: (DataFrame, Seq[DataFrame]) = {
+    val docs = graft.Tables.documents(spark, sf001)
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
+    (docs, Seq(
+      docs.filter(col("doc_id") < 167),
+      docs.filter(col("doc_id") >= 167 && col("doc_id") < 334),
+      docs.filter(col("doc_id") >= 334)))
+  }
+
   test("at-least-once: crash after side effect, restart replays exactly the uncommitted batch") {
     val base = newBase()
-    val shards = shardDir(base)
+    val shards = eventShards(spark, sf001, base)
     val ckpt = s"$base/ckpt"
-    received.clear(); crashed = false; crashOnBatch = 2L
+    val received = new Batches[Long]
+    // crash AFTER the side effect but BEFORE the epoch commit — the
+    // worker-death / lease-lost scenario; the restart resumes at batch 2
+    val sink = failOnce(2)(received.sink[Row](_.getLong(0)))
+    crashAndRestart(ckpt)(start(shardStream(spark, shards, maxFilesPerTrigger = Some(1))
+      .select("event_id"), ckpt)(sink))
 
-    def start() = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ids = df.collect().map(_.getLong(0)).toSeq
-        received.synchronized { received += ((batchId, ids)) }
-        // crash AFTER the side effect but BEFORE the epoch commit —
-        // the worker-death / lease-lost scenario
-        if (batchId == crashOnBatch && !crashed) {
-          crashed = true
-          throw new RuntimeException(s"injected failure in batch $batchId")
-        }
-      }
-      .start()
-
-    val q1 = start()
-    intercept[Exception] { q1.awaitTermination() }
-    assert(q1.exception.isDefined, "worker death must surface through query.exception")
-
-    // WAL discipline: batch 2's offsets were written (intent), not committed
-    val offsetsAfterCrash = StreamControl.checkpointOffsets(ckpt)
-    val commitsAfterCrash = StreamControl.checkpointCommits(ckpt)
-    assert(offsetsAfterCrash == commitsAfterCrash + 1,
-      s"expected exactly one uncommitted epoch, got offsets=$offsetsAfterCrash commits=$commitsAfterCrash")
-
-    // restart from the same checkpoint: resumes at batch 2, replays it
-    val q2 = start()
-    q2.awaitTermination()
-    assert(StreamControl.checkpointOffsets(ckpt) == StreamControl.checkpointCommits(ckpt))
-
-    val deliveredBatchIds = received.map(_._1)
-    assert(deliveredBatchIds.count(_ == crashOnBatch) == 2, "uncommitted batch must be redelivered")
-    deliveredBatchIds.filter(_ < crashOnBatch).groupBy(identity).foreach { case (_, g) =>
+    val deliveredBatchIds = received.ids
+    assert(deliveredBatchIds.count(_ == 2L) == 2, "uncommitted batch must be redelivered")
+    deliveredBatchIds.filter(_ < 2L).groupBy(identity).foreach { case (_, g) =>
       assert(g.size == 1, "committed batches must NOT be redelivered")
     }
 
     // duplicates exist (at-least-once), and dedup == the batch ground truth
-    val all = received.flatMap(_._2)
+    val all = received.rows
     assert(all.size > all.distinct.size)
     all.distinct.sorted shouldBe batchEventIds.sorted
   }
 
   test("exactly-once: idempotent foreachBatch sink collapses the replayed batch") {
     val base = newBase()
-    val shards = shardDir(base)
+    val shards = eventShards(spark, sf001, base)
     val ckpt = s"$base/ckpt"
     val out = s"$base/out"
-    crashed = false; crashOnBatch = 2L
-
-    def start() = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
-      .select("event_id", "user_id", "event_type")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        IdempotentSink.writeBatch(df, batchId, out)
-        if (batchId == crashOnBatch && !crashed) {
-          crashed = true
-          throw new RuntimeException("crash after sink write, before commit")
-        }
-      }
-      .start()
-
-    intercept[Exception] { start().awaitTermination() }
-    val q2 = start(); q2.awaitTermination()
+    val sink = failOnce[Row](2)((df, batchId) => IdempotentSink.writeBatch(df, batchId, out))
+    crashAndRestart(ckpt)(start(shardStream(spark, shards, maxFilesPerTrigger = Some(1))
+      .select("event_id", "user_id", "event_type"), ckpt)(sink))
 
     // batch 2 was written twice, but the second write overwrote the first:
     // end-to-end output is exactly the batch ground truth
@@ -126,6 +101,31 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       .select("event_id").collect().map(_.getLong(0)).toSeq
     ids.size shouldBe ids.distinct.size
     ids.sorted shouldBe batchEventIds.sorted
+  }
+
+  test("sink partial-batch policy: a task failing inside batch 2's write job publishes none of batch 2") {
+    // batch 2's first write job dies in one task after its sibling tasks
+    // committed theirs; what readAll shows until the restart is the
+    // sink's partial-batch policy (IdempotentSink's doc)
+    val base = newBase()
+    val shards = eventShards(spark, sf001, base)
+    val ckpt = s"$base/ckpt"
+    val out = s"$base/out"
+    def rows(dir: String) = IdempotentSink.readAll(spark, dir, PerKeySchema).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var beforeRestart = Set.empty[(Long, Long, Long, Long)]
+    crashAndRestart(ckpt, between = { beforeRestart = rows(out) }) {
+      start(flatPerKey(PerKeyTracker.track(shardStream(spark, shards, maxFilesPerTrigger = Some(1)))),
+          ckpt, mode = "update") { (df: DataFrame, batchId: Long) =>
+        val failing = batchId == 2L && failed.compareAndSet(false, true)
+        IdempotentSink.writeBatch(if (failing) StreamingSpec.failPartitionZero(df) else df, batchId, out)
+      }
+    }
+    // until the restart: exactly the committed batches 0 and 1
+    assert(beforeRestart.nonEmpty, "batches 0 and 1 must have written rows")
+    beforeRestart shouldBe rows(s"$out/batch_id=0") ++ rows(s"$out/batch_id=1")
+    sinkPerKey(spark, out) shouldBe perKeyTruth(spark, sf001)
   }
 
   test("degraded checkpoint store: completes under injected latency; a failed commit recovers by replay") {
@@ -138,53 +138,28 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // aborts the epoch — recovery is restart-and-replay from the WAL,
     // lossless under at-least-once delivery.
     val base = newBase()
-    val shards = shardDir(base)
+    val shards = eventShards(spark, sf001, base)
     spark.sparkContext.hadoopConfiguration
       .set("fs.flaky.impl", classOf[FlakyCheckpointFs].getName)
-    val got = mutable.Buffer.empty[Long]
-
-    def start(ckpt: String) = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val ids = df.collect().map(_.getLong(0))
-        got.synchronized { got ++= ids }
-        ()
-      }
-      .start()
+    val stream = shardStream(spark, shards, maxFilesPerTrigger = Some(1)).select("event_id")
 
     FlakyCheckpointFs.delayedOps.set(0)
     FlakyCheckpointFs.latencyMs = 15
     FlakyCheckpointFs.failNextCommit = false
     try {
       // regime 1: every checkpoint op delayed — completes in one run
-      val q1 = start(s"flaky://$base/ckpt-slow")
-      q1.awaitTermination()
-      assert(q1.exception.isEmpty, s"latency alone must not fail the query: ${q1.exception}")
+      eventIds(stream, s"flaky://$base/ckpt-slow").sorted shouldBe batchEventIds.sorted
       assert(FlakyCheckpointFs.delayedOps.get >= 5,
         s"expected >=5 degraded checkpoint ops, saw ${FlakyCheckpointFs.delayedOps.get}")
-      got.synchronized(got.toVector).sorted shouldBe batchEventIds.sorted
 
-      // regime 2: the next commit-log write FAILS outright mid-stream
-      got.clear()
+      // regime 2: the next commit-log write FAILS outright mid-stream; the
+      // epoch stays uncommitted, and a restart against the SAME
+      // degraded-store checkpoint replays it and completes
+      val got = new Batches[Long]
       FlakyCheckpointFs.failNextCommit = true
-      val q2 = start(s"flaky://$base/ckpt-fail")
-      intercept[Exception] { q2.awaitTermination() }
-      assert(q2.exception.isDefined, "a failed commit write must surface through query.exception")
-      // the epoch stayed uncommitted: offset intent written, commit absent
-      assert(StreamControl.checkpointOffsets(s"$base/ckpt-fail") ==
-        StreamControl.checkpointCommits(s"$base/ckpt-fail") + 1)
-
-      // restart against the SAME degraded-store checkpoint: replays the
-      // uncommitted epoch and completes
-      val q3 = start(s"flaky://$base/ckpt-fail")
-      q3.awaitTermination()
-      assert(q3.exception.isEmpty)
-      assert(StreamControl.checkpointOffsets(s"$base/ckpt-fail") ==
-        StreamControl.checkpointCommits(s"$base/ckpt-fail"))
-      val all = got.synchronized(got.toVector)
+      val ckpt = s"flaky://$base/ckpt-fail"
+      crashAndRestart(ckpt)(start(stream, ckpt)(got.sink(_.getLong(0))))
+      val all = got.rows
       assert(all.size > all.distinct.size, "the uncommitted epoch must have been redelivered")
       all.distinct.sorted shouldBe batchEventIds.sorted
     } finally {
@@ -194,9 +169,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("idempotent sink: zero committed batches reads as empty, not an error") {
-    val out = Files.createTempDirectory("graft-empty-sink-").toString
     val schema = org.apache.spark.sql.types.StructType.fromDDL("event_id BIGINT, n BIGINT")
-    val df = IdempotentSink.readAll(spark, out, schema)
+    val df = IdempotentSink.readAll(spark, newBase(), schema)
     df.count() shouldBe 0
     df.schema.fieldNames shouldBe Array("event_id", "n")
   }
@@ -208,19 +182,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // from the checkpoint alone — no query restart — and must agree with
     // the batch ground truth
     val base = newBase()
-    val dir = shardDir(base)
     val ckpt = s"$base/ckpt"
-    val q = shardStream(spark, dir)
+    drain(shardStream(spark, eventShards(spark, sf001, base))
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(s"state_inspect_${System.nanoTime()}")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .agg(count(lit(1)).as("n")), ckpt, "complete")(discard)
 
     // schema: key struct(grouping cols), value struct(agg buffer), partition_id
     val got = spark.read.format("statestore").load(ckpt)
@@ -234,29 +199,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("listener stats mirror ConsumerStats hooks: init, per-batch rows, shutdown") {
     val base = newBase()
-    val shards = shardDir(base)
+    val shards = eventShards(spark, sf001, base)
     val stats = new GraftStats
     spark.streams.addListener(stats)
     try {
-      val q = shardStream(spark, shards)
-        .groupBy(col("event_type")).count()
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(s"stats_${System.nanoTime()}")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val q = drain(shardStream(spark, shards)
+        .groupBy(col("event_type")).count(), s"$base/ckpt", "complete")(discard)
       // listener bus is async; progress events may trail termination
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while ((!stats.terminated.get() || stats.rows.get() < batchEventIds.size) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      assert(stats.started.get())
-      assert(stats.terminated.get())
-      assert(!stats.failed.get())
-      assert(stats.batches.get() >= 1)
-      assert(stats.rows.get() == batchEventIds.size)
+      val s = within(10) {
+        stats.of(q.id).filter(s => s.terminated && s.rows >= batchEventIds.size).get
+      }
+      assert(s.started)
+      assert(!s.failed)
+      assert(s.batches >= 1)
+      assert(s.rows == batchEventIds.size)
     } finally spark.streams.removeListener(stats)
   }
 
@@ -271,27 +227,16 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // programmatically, and that its hooks observe this test's query.
     val stats = spark.streams.listListeners().collectFirst { case g: GraftStats => g }
     assert(stats.isDefined, "the conf-named listener class must be constructed and attached")
-    val g = stats.get
-    val rows0 = g.rows.get()
     val base = newBase()
-    val shards = shardDir(base)
-    val q = shardStream(spark, shards)
-      .select("event_id")
-      .writeStream
-      .format("noop")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // listener bus is async; progress events may trail termination.
-    // cumulative flags would be vacuous here (earlier tests already set
-    // them) — assert per-query identity and the rows DELTA instead.
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while ((!g.terminatedIds.contains(q.id) || g.rows.get() - rows0 < batchEventIds.size) &&
-      System.nanoTime() < deadline) Thread.sleep(50)
-    assert(g.startedIds.contains(q.id), "conf-built listener must observe THIS query's start")
-    assert(g.terminatedIds.contains(q.id), "conf-built listener must observe THIS query's termination")
-    assert(g.rows.get() - rows0 >= batchEventIds.size)
+    val q = drain(shardStream(spark, eventShards(spark, sf001, base))
+      .select("event_id"), s"$base/ckpt")(discard)
+    // listener bus is async; progress events may trail termination
+    val s = within(10) {
+      stats.get.of(q.id).filter(s => s.terminated && s.rows >= batchEventIds.size).get
+    }
+    assert(s.started, "conf-built listener must observe THIS query's start")
+    assert(s.terminated, "conf-built listener must observe THIS query's termination")
+    assert(s.rows >= batchEventIds.size)
   }
 
   test("listener state-depth gauges: stateOperators populate the in-flight/uncheckpointed analogs") {
@@ -300,56 +245,33 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // are state-depth gauges; Spark reports them per batch via
     // progress.stateOperators (numRowsTotal / numRowsUpdated). Run a
     // stateful query (s2's dedup shape — every event writes one state
-    // row) and assert the conf-registered listener published them.
+    // row) and assert the listener published them.
     val stats = new GraftStats
     spark.streams.addListener(stats)
     val base = newBase()
-    val shards = shardDir(base)
+    val shards = eventShards(spark, sf001, base)
     try {
-      val q = shardStream(spark, shards)
+      val q = drain(shardStream(spark, shards)
         .dropDuplicates(Seq("event_id"))
-        .groupBy(col("event_type")).count()
-        .writeStream
-        .outputMode("complete")
-        .format("noop")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .groupBy(col("event_type")).count(), s"$base/ckpt", "complete")(discard)
       // listener bus is async; progress events may trail termination
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (stats.stateRowsTotal.get() == 0 && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      val first = within(10)(stats.of(q.id).filter(s => s.terminated && s.stateRowsTotal > 0).get)
       // dedup state holds one row per distinct event_id; the aggregation
       // adds per-type rows on top — the in-flight gauge must see at least
       // the dedup store's depth, and the per-epoch updated gauge must
       // have observed writes
-      assert(stats.stateRowsTotal.get() >= batchEventIds.size,
-        s"in-flight gauge ${stats.stateRowsTotal.get()} < ${batchEventIds.size} dedup state rows")
-      assert(stats.stateRowsUpdated.get() > 0, "uncheckpointed-rows gauge never observed an update")
-      // per-query resolution (the reference's stats are per-consumer):
-      // the gauge pair must be retrievable by THIS query's id...
-      val firstDepth = stats.stateRows.get(q.id)
-      assert(firstDepth.exists(_._1 >= batchEventIds.size),
-        s"per-query gauge for ${q.id} missing or shallow: $firstDepth")
-      // ...and must survive a SECOND stateful query reporting a much
-      // smaller depth (the unkeyed gauges, by contract, get overwritten)
-      val q2 = shardStream(spark, shards)
-        .groupBy(col("event_type")).count()
-        .writeStream
-        .outputMode("complete")
-        .format("noop")
-        .option("checkpointLocation", s"$base/ckpt2")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-      val deadline2 = System.nanoTime() + 10_000_000_000L
-      while (stats.stateRows.get(q2.id).isEmpty && System.nanoTime() < deadline2)
-        Thread.sleep(50)
-      val secondDepth = stats.stateRows.get(q2.id)
-      assert(secondDepth.exists(d => d._1 > 0 && d._1 < batchEventIds.size),
-        s"second query's own gauge wrong: $secondDepth")
-      assert(stats.stateRows.get(q.id) == firstDepth,
+      assert(first.stateRowsTotal >= batchEventIds.size,
+        s"in-flight gauge ${first.stateRowsTotal} < ${batchEventIds.size} dedup state rows")
+      assert(first.stateRowsUpdated > 0, "uncheckpointed-rows gauge never observed an update")
+      // per-query resolution (the reference's stats are per-consumer): a
+      // SECOND stateful query reporting a much smaller depth gets its own
+      // gauge and leaves the first query's alone
+      val q2 = drain(shardStream(spark, shards)
+        .groupBy(col("event_type")).count(), s"$base/ckpt2", "complete")(discard)
+      val second = within(10)(stats.of(q2.id).filter(s => s.terminated && s.stateRowsTotal > 0).get)
+      assert(second.stateRowsTotal < batchEventIds.size,
+        s"second query's own gauge wrong: $second")
+      assert(stats.of(q.id).contains(first),
         "a concurrent query's progress must not clobber another query's gauge")
     } finally spark.streams.removeListener(stats)
   }
@@ -363,59 +285,44 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val stats = new GraftStats
     spark.streams.addListener(stats)
     val base = newBase()
-    val eventShards = shardDir(base)
+    val shards = eventShards(spark, sf001, base)
     val docShards = s"$base/docshards"
     ShardLayout.Corpus.materialize(spark, sf001, docShards)
     try {
       // q1: per-type event counts after exact dedup (s2's shape);
       // q2: per-lang distinct-fingerprint corpus dedup (s7's shape);
       // 1-file triggers force many batches so the executions interleave
-      val q1 = shardStream(spark, eventShards, maxFilesPerTrigger = Some(1))
+      val events = new Batches[(String, Long)]
+      val docs = new Batches[(String, Long)]
+      val q1 = start(shardStream(spark, shards, maxFilesPerTrigger = Some(1))
         .dropDuplicates(Seq("event_id"))
-        .groupBy(col("event_type")).count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_mem_conc_events")
-        .option("checkpointLocation", s"$base/ckpt1")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      val q2 = shardStream(spark, docShards, ShardLayout.Corpus.schema, maxFilesPerTrigger = Some(1))
+        .groupBy(col("event_type")).count(), s"$base/ckpt1", mode = "complete")(
+        events.sink(r => r.getString(0) -> r.getLong(1)))
+      val q2 = start(shardStream(spark, docShards, ShardLayout.Corpus.schema, maxFilesPerTrigger = Some(1))
         .select(col("lang"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
         .dropDuplicates(Seq("lang", "fp"))
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_unique"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_mem_conc_docs")
-        .option("checkpointLocation", s"$base/ckpt2")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q1.awaitTermination(); q2.awaitTermination()
-      assert(q1.exception.isEmpty && q2.exception.isEmpty)
+        .groupBy(col("lang")).agg(count(lit(1)).as("n_unique")), s"$base/ckpt2", mode = "complete")(
+        docs.sink(r => r.getString(0) -> r.getLong(1)))
+      await(q1); await(q2)
 
-      // each result equals ITS batch ground truth — no cross-talk
-      val gotEvents = spark.table("graft_mem_conc_events")
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // each result (a complete-mode query's last batch) equals ITS batch
+      // ground truth — no cross-talk
       val wantEvents = graft.Tables.events(spark, sf001)
         .groupBy(col("event_type")).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      gotEvents shouldBe wantEvents
-      val gotDocs = spark.table("graft_mem_conc_docs")
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      events.last.toMap shouldBe wantEvents
       val wantDocs = graft.Tables.documents(spark, sf001)
         .select(col("lang"), graft.ops.CorpusOps.fingerprint(col("text")).as("fp"))
         .groupBy(col("lang")).agg(countDistinct(col("fp")).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      gotDocs shouldBe wantDocs
+      docs.last.toMap shouldBe wantDocs
 
-      // the listener observed BOTH queries distinctly
-      assert(stats.startedIds.contains(q1.id) && stats.startedIds.contains(q2.id))
-      assert(stats.terminatedIds.contains(q1.id) && stats.terminatedIds.contains(q2.id))
-      // listener bus is async; per-query gauges may trail termination
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while ((stats.stateRows.get(q1.id).isEmpty || stats.stateRows.get(q2.id).isEmpty) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      assert(stats.stateRows.get(q1.id).exists(_._1 > 0),
-        s"q1's own state gauge missing: ${stats.stateRows.get(q1.id)}")
-      assert(stats.stateRows.get(q2.id).exists(_._1 > 0),
-        s"q2's own state gauge missing: ${stats.stateRows.get(q2.id)}")
+      // the listener observed BOTH queries distinctly; per-query gauges
+      // may trail termination on the async bus
+      within(10) {
+        for (q <- Seq(q1, q2)) assert(stats.of(q.id).exists(s => s.started && s.terminated &&
+          s.stateRowsTotal > 0), s"query ${q.id}'s own record incomplete: ${stats.of(q.id)}")
+      }
     } finally spark.streams.removeListener(stats)
   }
 
@@ -435,40 +342,31 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     ShardLayout.Events.append(events, dirA, 4) // 4-shard stream
     ShardLayout.Events.append(events, dirB, 2) // different shard set => different gauge shape
     try {
-      def run(dir: String, ckpt: String) = GraftStats.observeShardRows(
-          shardStream(spark, dir),
-          col("shard"))
-        .select("event_id")
-        .writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      def run(dir: String, ckpt: String) = start(
+        GraftStats.observeShardRows(shardStream(spark, dir), col("shard")).select("event_id"), ckpt)(discard)
       val qA = run(dirA, s"$base/ckptA")
       val qB = run(dirB, s"$base/ckptB")
-      qA.awaitTermination(); qB.awaitTermination()
-      assert(qA.exception.isEmpty && qB.exception.isEmpty)
-      // listener bus is async; gauges may trail termination
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while ((stats.shardRowsTotal.get(qA.id).isEmpty || stats.shardRowsTotal.get(qB.id).isEmpty) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
+      await(qA); await(qB)
 
       def expected(numShards: Int): Map[Int, Long] = events
         .groupBy(pmod(col("user_id"), lit(numShards)).cast("int").as("s")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
+      // listener bus is async; gauges may trail termination
+      val (a, b) = within(10) {
+        (stats.of(qA.id).filter(s => s.terminated && s.shardRowsTotal.nonEmpty).get,
+          stats.of(qB.id).filter(s => s.terminated && s.shardRowsTotal.nonEmpty).get)
+      }
       // 4-shard run: per-shard cumulative rows == the routing ground truth
-      val gaugeA = stats.shardRowsTotal.get(qA.id)
-      assert(gaugeA.contains(expected(4)), s"4-shard gauge wrong: $gaugeA vs ${expected(4)}")
+      assert(a.shardRowsTotal == expected(4), s"4-shard gauge wrong: ${a.shardRowsTotal} vs ${expected(4)}")
       // isolation: B's gauge is B's own 2-shard breakdown, untouched by A
-      val gaugeB = stats.shardRowsTotal.get(qB.id)
-      assert(gaugeB.contains(expected(2)), s"2-shard gauge wrong: $gaugeB vs ${expected(2)}")
+      assert(b.shardRowsTotal == expected(2), s"2-shard gauge wrong: ${b.shardRowsTotal} vs ${expected(2)}")
       // the last-epoch (uncheckpointed analog) gauge reports a subset of
       // the same shards with counts bounded by the cumulative gauge
-      val lastA = stats.shardRowsLastBatch.get(qA.id)
-      assert(lastA.isDefined)
-      lastA.get.foreach { case (s, n) =>
-        assert(gaugeA.get.contains(s) && n <= gaugeA.get(s),
-          s"last-batch gauge inconsistent with cumulative: $lastA vs $gaugeA")
+      assert(a.shardRowsLastBatch.nonEmpty)
+      a.shardRowsLastBatch.foreach { case (s, n) =>
+        assert(a.shardRowsTotal.contains(s) && n <= a.shardRowsTotal(s),
+          s"last-batch gauge inconsistent with cumulative: ${a.shardRowsLastBatch} vs ${a.shardRowsTotal}")
       }
     } finally spark.streams.removeListener(stats)
   }
@@ -485,30 +383,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val ids = batchEventIds.sorted
     val cut = ids(ids.size / 2)
     ShardLayout.Events.append(events.filter(col("event_id") <= cut), dir, 2)
+    def shardRows(id: java.util.UUID)(ok: QueryStats => Boolean) =
+      within(10)(stats.of(id).filter(ok).get.shardRowsTotal)
     try {
-      val q = GraftStats.observeShardRows(
-          shardStream(spark, dir),
-          col("shard"))
-        .select("event_id")
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.ProcessingTime("100 milliseconds"))
-        .start()
+      val q = start(GraftStats.observeShardRows(shardStream(spark, dir), col("shard")).select("event_id"),
+        s"$base/ckpt", Trigger.ProcessingTime("100 milliseconds"))(discard)
       q.processAllAvailable()
-      val deadline0 = System.nanoTime() + 10_000_000_000L
-      while (stats.shardRowsTotal.get(q.id).forall(_.isEmpty) &&
-        System.nanoTime() < deadline0) Thread.sleep(50)
-      val before = stats.shardRowsTotal.get(q.id).getOrElse(Map.empty)
+      val before = shardRows(q.id)(_.shardRowsTotal.nonEmpty)
       assert(before.keySet == Set(0, 1), s"pre-split gauge shards: $before")
 
       // SPLIT 2 -> 4 under the live query: children 2 and 3 appear
       ShardLayout.Events.append(events.filter(col("event_id") > cut), dir, 4)
       q.processAllAvailable()
       StreamControl.stopGracefully(q)
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (stats.shardRowsTotal.get(q.id).forall(_.size < 4) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      val after = stats.shardRowsTotal.get(q.id).getOrElse(Map.empty)
+      val after = shardRows(q.id)(s => s.terminated && s.shardRowsTotal.size >= 4)
       assert(after.keySet == Set(0, 1, 2, 3), s"post-split gauge shards: $after")
       assert(after.values.sum == ids.size.toLong, s"gauge total ${after.values.sum} != ${ids.size}")
     } finally spark.streams.removeListener(stats)
@@ -517,17 +405,17 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("listener identity sets are bounded: oldest query ids evict at capacity") {
     // GraftStats is registered session-wide via the streamingQueryListeners
     // static conf; a long-lived session launches unbounded queries, so the
-    // per-query identity sets must not grow with listener lifetime
-    val s = new GraftStats.BoundedIdSet(GraftStats.IdCapacity)
+    // per-query records must not grow with listener lifetime
+    val m = new GraftStats.BoundedIdMap(GraftStats.IdCapacity, QueryStats())
     val ids = (0 until GraftStats.IdCapacity + 10).map(_ => java.util.UUID.randomUUID())
-    ids.foreach(s.add)
-    s.size shouldBe GraftStats.IdCapacity
-    ids.take(10).foreach(id => assert(!s.contains(id), "oldest ids must be evicted"))
-    ids.drop(10).foreach(id => assert(s.contains(id), "recent ids must be retained"))
-    // re-adding refreshes recency: the refreshed id survives the next evictions
-    s.add(ids(10))
-    (0 until 5).foreach(_ => s.add(java.util.UUID.randomUUID()))
-    assert(s.contains(ids(10)))
+    ids.foreach(m.update(_)(_.copy(started = true)))
+    m.size shouldBe GraftStats.IdCapacity
+    ids.take(10).foreach(id => assert(m.get(id).isEmpty, "oldest ids must be evicted"))
+    ids.drop(10).foreach(id => assert(m.get(id).isDefined, "recent ids must be retained"))
+    // an update refreshes recency: the refreshed id survives the next evictions
+    m.update(ids(10))(_.copy(batches = 1))
+    (0 until 5).foreach(_ => m.update(java.util.UUID.randomUUID())(identity))
+    m.get(ids(10)) shouldBe Some(QueryStats(started = true, batches = 1))
   }
 
   test("RocksDB changelog checkpointing: per-batch deltas commit, crash-restore replays them") {
@@ -540,80 +428,34 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // state by replaying changelogs, and the end-to-end result must equal
     // the batch ground truth.
     val base = newBase()
-    val shards = shardDir(base)
+    val shards = eventShards(spark, sf001, base)
     val ckpt = s"$base/ckpt"
     val out = s"$base/out"
-    @volatile var crashedOnce = false
+    val sink = failOnce[Row](2)((df, batchId) => IdempotentSink.writeBatch(df, batchId, out))
     withConfs(spark, RocksDbChangelogConfs) {
-      def start() = PerKeyTracker.trackTws(
-          shardStream(spark, shards, maxFilesPerTrigger = Some(1)))
-        .toDF("user_id", "state")
-        .select(col("user_id"), col("state.n").as("n"),
-          col("state.min_id").as("min_id"), col("state.max_id").as("max_id"))
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          IdempotentSink.writeBatch(df, batchId, out)
-          if (batchId == 2L && !crashedOnce) {
-            crashedOnce = true
-            throw new RuntimeException("crash after sink write, before changelog-backed commit")
-          }
-        }
-        .start()
-
-      intercept[Exception] { start().awaitTermination() }
-      val q2 = start(); q2.awaitTermination()
-      assert(q2.exception.isEmpty)
+      crashAndRestart(ckpt)(start(flatPerKey(PerKeyTracker.trackTws(
+        shardStream(spark, shards, maxFilesPerTrigger = Some(1)))), ckpt, mode = "update")(sink))
     }
 
     // the checkpoint really is changelog-based: per-batch .changelog
     // deltas exist under the state dir
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt, "state"))
-    val changelogs = try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.count(_.getFileName.toString.endsWith(".changelog"))
-    } finally walk.close()
-    assert(changelogs > 0, "changelog checkpointing must write per-batch .changelog deltas")
+    assert(changelogs(ckpt) > 0, "changelog checkpointing must write per-batch .changelog deltas")
 
     // end-to-end: the replayed epoch collapsed in the idempotent sink and
     // the changelog-restored state finished the aggregation exactly
-    val sinkSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "user_id BIGINT, n BIGINT, min_id BIGINT, max_id BIGINT")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n").desc)
-    val got = IdempotentSink.readAll(spark, out, sinkSchema)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select("user_id", "n", "min_id", "max_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val truth = graft.Tables.events(spark, sf001)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), min(col("event_id")).as("min_id"),
-        max(col("event_id")).as("max_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    got shouldBe truth
+    sinkPerKey(spark, out) shouldBe perKeyTruth(spark, sf001)
   }
 
   test("graceful stop: ProcessingTime query drains and stops at a batch boundary") {
     val base = newBase()
-    val shards = shardDir(base)
-    val mem = s"inspect_${System.nanoTime()}"
-    val q = shardStream(spark, shards, maxFilesPerTrigger = Some(2))
-      .groupBy(col("event_type")).count()
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(mem)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .start()
+    val live = new Batches[Long]
+    val q = start(shardStream(spark, eventShards(spark, sf001, base), maxFilesPerTrigger = Some(2))
+      .groupBy(col("event_type")).count(), s"$base/ckpt", Trigger.ProcessingTime("100 milliseconds"),
+      "complete")(live.sink(_.getLong(1)))
     q.processAllAvailable()
     // C10 Inspectable: results visible mid-stream, while the query is live
     assert(q.isActive)
-    val live = spark.table(mem).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(live.values.sum == batchEventIds.size)
+    assert(live.last.sum == batchEventIds.size)
     StreamControl.stopGracefully(q)
     assert(!q.isActive)
     assert(q.exception.isEmpty)
@@ -621,48 +463,19 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("per-key state persists across micro-batches (mapGroupsWithState tracker)") {
     val base = newBase()
-    val shards = shardDir(base)
-    val finalStates = mutable.Map.empty[Long, PerKeyTracker.KeyState]
-    val q = PerKeyTracker.track(
-        shardStream(spark, shards, maxFilesPerTrigger = Some(2)))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[(Long, PerKeyTracker.KeyState)], _: Long) =>
-        // later batches overwrite: the tracker emits cumulative state
-        ds.collect().foreach { case (k, s) => finalStates.synchronized { finalStates(k) = s } }
-      }
-      .start()
-    q.awaitTermination()
-
-    val truth = graft.Tables.events(spark, sf001)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), min(col("event_id")).as("mn"), max(col("event_id")).as("mx"))
-      .collect()
-      .map(r => r.getLong(0) -> PerKeyTracker.KeyState(r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    finalStates.toMap shouldBe truth
+    val got = collect(PerKeyTracker.track(
+        shardStream(spark, eventShards(spark, sf001, base), maxFilesPerTrigger = Some(2))),
+      s"$base/ckpt", "update")(identity)
+    // later batches overwrite: the tracker emits cumulative state
+    got.rows.toMap shouldBe perKeyTruth(spark, sf001)
   }
 
   test("per-key arrival order within a shard is sequence order (ordered-shard fidelity)") {
     val base = newBase()
-    val shards = shardDir(base)
-    val arrivals = mutable.Buffer.empty[(Long, Long)] // (user_id, event_id)
-    val q = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
-      .select("user_id", "event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        // one file (= one shard chunk) per batch; collect preserves the
-        // file's row order
-        val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
-        arrivals.synchronized { arrivals ++= rows }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    // one file (= one shard chunk) per batch; collect preserves the
+    // file's row order
+    val arrivals = collect(shardStream(spark, eventShards(spark, sf001, base), maxFilesPerTrigger = Some(1))
+      .select("user_id", "event_id"), s"$base/ckpt")(r => (r.getLong(0), r.getLong(1))).rows
     arrivals.groupBy(_._1).foreach { case (user, seq) =>
       val ids = seq.map(_._2)
       assert(ids == ids.sorted, s"user $user observed out-of-order arrivals")
@@ -675,42 +488,33 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // the survivor takes over its shards with completeness intact
     // (KinesisSourceTest.scala:129-180). Spark's lease-takeover analog:
     // the checkpoint IS the lease — a successor consumer (fresh query
-    // instance) started on the dead consumer's checkpointLocation resumes
-    // at its first uncommitted epoch. A is killed ABRUPTLY while an epoch
-    // is open (held open deterministically by a latch), so the takeover
+    // instance) started on the dead consumer's checkpoint resumes at its
+    // first uncommitted epoch. A is killed ABRUPTLY while an epoch is
+    // open (held open deterministically by a latch), so the takeover
     // exercises the uncommitted-epoch path, not a graceful drain. Both
     // consumers read the packaged graft-shards source, the entry point a
     // library user deploys.
     val base = newBase()
-    val shards = shardDir(base)
+    val stream = shardStream(spark, eventShards(spark, sf001, base), maxFilesPerTrigger = Some(1))
+      .select("event_id")
     val ckpt = s"$base/ckpt"
-    val deliveries = mutable.Buffer.empty[(String, Long, Seq[Long])]
+    val (a, b) = (new Batches[Long], new Batches[Long])
     val reachedHeldEpoch = new java.util.concurrent.CountDownLatch(1)
     val releaseHeldEpoch = new java.util.concurrent.CountDownLatch(1)
 
-    def start(who: String, holdBatch: Long) = shardStream(spark, shards, maxFilesPerTrigger = Some(1))
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ids = df.collect().map(_.getLong(0)).toSeq
-        deliveries.synchronized { deliveries += ((who, batchId, ids)) }
-        if (batchId == holdBatch) {
-          reachedHeldEpoch.countDown()
-          // hold the epoch open until A is killed. The kill's interrupt
-          // MUST propagate — swallowing it would let this epoch commit
-          // after the "kill" and the takeover would vacuously have
-          // nothing to replay. The 10 s backstop only guards a hang; if
-          // it fires, the epoch commits and the == 2 assertion below
-          // fails loudly.
-          releaseHeldEpoch.await(10, java.util.concurrent.TimeUnit.SECONDS)
-        }
-        ()
+    val qA = start(stream, ckpt) { (df: DataFrame, batchId: Long) =>
+      a.sink[Row](_.getLong(0))(df, batchId)
+      if (batchId == 2L) {
+        reachedHeldEpoch.countDown()
+        // hold the epoch open until A is killed. The kill's interrupt
+        // MUST propagate — swallowing it would let this epoch commit
+        // after the "kill" and the takeover would vacuously have
+        // nothing to replay. The 10 s backstop only guards a hang; if
+        // it fires, the epoch commits and the == 2 assertion below
+        // fails loudly.
+        releaseHeldEpoch.await(10, java.util.concurrent.TimeUnit.SECONDS)
       }
-      .start()
-
-    val qA = start("A", holdBatch = 2L)
+    }
     reachedHeldEpoch.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
     qA.stop() // the kill: abrupt, epoch 2 open; interrupts the held await
     releaseHeldEpoch.countDown()
@@ -719,26 +523,22 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     assert(commitsAtTakeover == 2L,
       s"A must die with epoch 2 OPEN (committed prefix = epochs 0-1), got $commitsAtTakeover")
 
-    val qB = start("B", holdBatch = -1L)
-    qB.awaitTermination()
-    assert(qB.exception.isEmpty)
+    drain(stream, ckpt)(b.sink(_.getLong(0)))
     assert(StreamControl.checkpointOffsets(ckpt) == StreamControl.checkpointCommits(ckpt))
 
-    val d = deliveries.synchronized(deliveries.toVector)
-    val aIds = d.filter(_._1 == "A").flatMap(_._3)
-    val bIds = d.filter(_._1 == "B").flatMap(_._3)
+    val (aIds, bIds) = (a.rows, b.rows)
     assert(aIds.nonEmpty, "A must have processed a prefix")
     assert(bIds.nonEmpty, "B must have taken over the remainder")
     // B resumes EXACTLY at A's first uncommitted epoch — the lease handoff
-    d.filter(_._1 == "B").map(_._2).min shouldBe commitsAtTakeover
+    b.ids.min shouldBe commitsAtTakeover
     // no gap: together they deliver the full stream
     (aIds ++ bIds).distinct.sorted shouldBe batchEventIds.sorted
     // bounded overlap: EXACTLY the epoch A died holding is redelivered —
     // committed epochs never, the open epoch always
-    val heldEpochIds = d.filter(r => r._1 == "A" && r._2 == 2L).flatMap(_._3).toSet
+    val heldEpochIds = a.all.filter(_._1 == 2L).flatMap(_._2).toSet
     assert(heldEpochIds.nonEmpty, "A must have entered the held epoch before dying")
     aIds.toSet.intersect(bIds.toSet) shouldBe heldEpochIds
-    val committedByA = d.filter(r => r._1 == "A" && r._2 < commitsAtTakeover).flatMap(_._3).toSet
+    val committedByA = a.all.filter(_._1 < commitsAtTakeover).flatMap(_._2).toSet
     assert(committedByA.intersect(bIds.toSet).isEmpty,
       "epochs A committed must not be redelivered to B")
   }
@@ -748,23 +548,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // non-empty exclusive set and the union is complete
     // (KinesisSourceTest.scala:101-127, 261-271)
     val base = newBase()
-    val shards = shardDir(base)
-    def consume(which: String, pred: org.apache.spark.sql.Column): Seq[Long] = {
-      val got = mutable.Buffer.empty[Long]
-      val q = shardStream(spark, shards)
-        .filter(pred)
-        .select("event_id")
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt-$which")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          val ids = df.collect().map(_.getLong(0))
-          got.synchronized { got ++= ids }
-          ()
-        }
-        .start()
-      q.awaitTermination(); got.toSeq
-    }
+    val shards = eventShards(spark, sf001, base)
+    def consume(which: String, pred: org.apache.spark.sql.Column): Seq[Long] =
+      eventIds(shardStream(spark, shards).filter(pred), s"$base/ckpt-$which")
     val a = consume("a", col("shard") < ShardLayout.Events.numShards / 2)
     val b = consume("b", col("shard") >= ShardLayout.Events.numShards / 2)
     assert(a.nonEmpty && b.nonEmpty)
@@ -778,37 +564,16 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // evicted, so dedup state is O(watermark window), not O(stream)
     val base = newBase()
     val dir = s"$base/shards"
-    val events = graft.Tables.events(spark, sf001)
-    val tsCuts = events
-      .selectExpr("percentile(cast(ts as double), array(0.3333, 0.6667)) as c")
-      .head().getSeq[Double](0)
-    def tranche(lo: Option[Double], hi: Option[Double]) = {
-      val t = events
-      val lof = lo.map(v => t.filter(col("ts").cast("double") > v)).getOrElse(t)
-      hi.map(v => lof.filter(col("ts").cast("double") <= v)).getOrElse(lof)
-    }
-    val tranches = Seq(
-      tranche(None, Some(tsCuts(0))),
-      tranche(Some(tsCuts(0)), Some(tsCuts(1))),
-      tranche(Some(tsCuts(1)), None))
+    val tranches = eventTranches
 
     // every record written TWICE: at-least-once delivery with duplicates
     ShardLayout.Events.append(tranches.head.union(tranches.head), dir, 4)
-    val got = mutable.Buffer.empty[Long]
-    val q = shardStream(spark, dir)
+    val got = new Batches[Long]
+    val q = start(shardStream(spark, dir)
       .withWatermark("ts", "1 minute")
       .dropDuplicatesWithinWatermark("event_id")
-      .select("event_id")
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = df.collect().map(_.getLong(0))
-        got.synchronized { got ++= rows }
-        ()
-      }
-      .start()
+      .select("event_id"), s"$base/ckpt", Trigger.ProcessingTime("100 milliseconds"), "update")(
+      got.sink(_.getLong(0)))
     q.processAllAvailable()
     tranches.tail.foreach { t =>
       ShardLayout.Events.append(t.union(t), dir, 4)
@@ -818,8 +583,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     StreamControl.stopGracefully(q)
 
     // duplicates collapsed: every event delivered exactly once
-    val g = got.synchronized(got.toVector)
-    g.sorted shouldBe batchEventIds.sorted
+    got.rows.sorted shouldBe batchEventIds.sorted
     // state is bounded by the watermark window: eviction must have kicked
     // in, so the dedup state never held one row per record ever seen
     assert(stateRows.exists(_ > 0), "dedup must keep some state")
@@ -837,22 +601,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     * runner itself live in [[BoundedTrackerHarness]] (shared with the
     * property specs).
     */
-  private def runBoundedDupTranche(dir: String, ckpt: String,
-      got: mutable.Buffer[(Long, Long)],
-      tracker: mutable.Buffer[org.apache.spark.sql.streaming.StateOperatorProgress]): Unit =
+  private def runBoundedDupTranche(dir: String, ckpt: String, got: Batches[(Long, Long)],
+      tracker: mutable.Buffer[StateOperatorProgress]): Unit =
     BoundedTrackerHarness.runTranche(spark, dir, ckpt,
       StreamingQueries.boundedDupPositions(_, "60 seconds", ttlMs = 60000L),
       r => (r.getLong(0), r.getLong(1)), got, tracker)
 
-  private def appendDocTranche(t: org.apache.spark.sql.DataFrame, dir: String): Unit =
-    ShardLayout.Corpus.append(t, dir)
-
-  private def dupGramRel(t: org.apache.spark.sql.DataFrame) = t
+  private def dupGramRel(t: DataFrame) = t
     .select(col("doc_id"), posexplode(graft.functions.WordWindowMd5.wordWindowMd5(
       lower(trim(col("text"))), 8)))
     .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("gh"))
 
-  private def dupMarkedWithin(t: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+  private def dupMarkedWithin(t: DataFrame): Set[(Long, Long)] = {
     val g = dupGramRel(t)
     g.join(g.groupBy("gh").count().filter(col("count") >= 2).select("gh"), "gh")
       .select("doc_id", "pos").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -861,9 +621,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
   /** [[runBoundedDupTranche]]'s sibling for the bounded NEAR-DUP tracker
     * (`boundedNearDupPairs`) — same shared harness runner.
     */
-  private def runBoundedNearDupTranche(dir: String, ckpt: String,
-      got: mutable.Buffer[(Long, Long, Double)],
-      tracker: mutable.Buffer[org.apache.spark.sql.streaming.StateOperatorProgress]): Unit =
+  private def runBoundedNearDupTranche(dir: String, ckpt: String, got: Batches[(Long, Long, Double)],
+      tracker: mutable.Buffer[StateOperatorProgress]): Unit =
     BoundedTrackerHarness.runTranche(spark, dir, ckpt,
       StreamingQueries.boundedNearDupPairs(_, "60 seconds", ttlMs = 60000L),
       r => (r.getLong(0), r.getLong(1), r.getDouble(2)), got, tracker)
@@ -874,28 +633,22 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // O(docs ever seen)
     val base = newBase()
     val dir = s"$base/shards"
-    // same synthetic clock as the dup-span tests: one document per
-    // second, three ~167 s tranches against a 60 s horizon
-    val docs = graft.Tables.documents(spark, sf001)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-    val tranches = Seq(
-      docs.filter(col("doc_id") < 167),
-      docs.filter(col("doc_id") >= 167 && col("doc_id") < 334),
-      docs.filter(col("doc_id") >= 334))
+    // same synthetic clock as the dup-span tests
+    val (_, tranches) = docTranches
     val allPairs = graft.ops.CorpusOps.d2MinhashLsh(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val distinctBuckets = graft.ops.CorpusOps.bandedGramRows(
         graft.Tables.documents(spark, sf001))
       .select("band_key").distinct().count()
 
-    val got = mutable.Buffer.empty[(Long, Long, Double)]
-    val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
+    val got = new Batches[(Long, Long, Double)]
+    val tracker = mutable.Buffer.empty[StateOperatorProgress]
     tranches.foreach { t =>
-      appendDocTranche(t, dir)
+      ShardLayout.Corpus.append(t, dir)
       runBoundedNearDupTranche(dir, s"$base/ckpt", got, tracker)
     }
 
-    val g = got.synchronized(got.toSet)
+    val g = got.rows.toSet
     // sound: never a pair the full-history batch answer doesn't have
     assert(g.subsetOf(allPairs), s"false pairs: ${g.diff(allPairs).take(5)}")
     // complete inside the horizon: both members of a within-tranche pair
@@ -909,9 +662,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // the plateau: TTL eviction ran, and live buckets never approached
     // the distinct-bucket count of the whole corpus (the unbounded
     // form's terminal state)
-    assert(tracker.nonEmpty, "tracker progress must be observable")
-    assert(tracker.map(_.numRowsRemoved).sum > 0, "TTL must evict bucket state")
-    val maxState = tracker.map(_.numRowsTotal).max
+    val progress = tracker.toVector
+    assert(progress.nonEmpty, "tracker progress must be observable")
+    assert(progress.map(_.numRowsRemoved).sum > 0, "TTL must evict bucket state")
+    val maxState = progress.map(_.numRowsTotal).max
     assert(maxState > 0 && maxState < distinctBuckets,
       s"state grew to $maxState of $distinctBuckets distinct buckets — unbounded")
   }
@@ -925,27 +679,22 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // same contract the default-store test pins
     val base = newBase()
     val dir = s"$base/shards"
-    val docs = graft.Tables.documents(spark, sf001)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-    val tranches = Seq(
-      docs.filter(col("doc_id") < 167),
-      docs.filter(col("doc_id") >= 167 && col("doc_id") < 334),
-      docs.filter(col("doc_id") >= 334))
+    val (_, tranches) = docTranches
     val allPairs = graft.ops.CorpusOps.d2MinhashLsh(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-    val got = mutable.Buffer.empty[(Long, Long, Double)]
-    val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
+    val got = new Batches[(Long, Long, Double)]
+    val tracker = mutable.Buffer.empty[StateOperatorProgress]
     withConfs(spark, RocksDbChangelogConfs) {
       tranches.foreach { t =>
-        appendDocTranche(t, dir)
+        ShardLayout.Corpus.append(t, dir)
         runBoundedNearDupTranche(dir, s"$base/ckpt", got, tracker)
       }
     }
 
     // same contract as the default-store test: sound, in-tranche
     // complete, TTL evicts
-    val g = got.synchronized(got.toSet)
+    val g = got.rows.toSet
     assert(g.subsetOf(allPairs), s"false pairs: ${g.diff(allPairs).take(5)}")
     val inTranche = tranches.map { t =>
       graft.ops.CorpusOps.nearDupPairs(t)
@@ -956,12 +705,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     assert(tracker.map(_.numRowsRemoved).sum > 0,
       "TTL must evict bucket state on the RocksDB store")
     // and the checkpoint really is changelog-based
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$base/ckpt", "state"))
-    val changelogs = try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.count(_.toString.endsWith(".changelog"))
-    } finally walk.close()
-    assert(changelogs > 0, "no .changelog deltas under the state dir")
+    assert(changelogs(s"$base/ckpt") > 0, "no .changelog deltas under the state dir")
   }
 
   test("bounded near-dup tracker: initial-state bootstrap resumes against an existing batch corpus") {
@@ -990,12 +734,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     ShardLayout.Corpus.append(tranche2, dir) // the stream sees ONLY new arrivals
-    val got = mutable.Buffer.empty[(Long, Long)]
-    val progress = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
+    val got = new Batches[(Long, Long)]
     BoundedTrackerHarness.runTranche[(Long, Long)](spark, dir, s"$base/ckpt",
       df => StreamingQueries.boundedNearDupPairs(df, "10 seconds", ttlMs = 600000L,
         initialCorpus = Some(tranche1)),
-      r => (r.getLong(0), r.getLong(1)), got, progress)
+      r => (r.getLong(0), r.getLong(1)), got, mutable.Buffer.empty[StateOperatorProgress])
 
     // ground truth: batch d2 over BOTH tranches, minus tranche-1-internal
     val batchBoth = graft.ops.CorpusOps.nearDupPairs(all)
@@ -1003,7 +746,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     assert(batchBoth == Set((3L, 9L), (5L, 20L), (12L, 25L), (21L, 27L)),
       s"planted corpus ground truth surprising: $batchBoth")
     val expected = batchBoth.filterNot { case (a, b) => a < 20 && b < 20 }
-    got.synchronized(got.toSet) shouldBe expected
+    got.rows.toSet shouldBe expected
   }
 
   test("bounded dup-span tracker: event-time TTL plateaus state; in-horizon marking stays exact") {
@@ -1013,26 +756,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     // synthetic ingest time: one document per second, so doc_id IS the
-    // event-time axis; three time-ordered tranches of ~167 s against a
-    // 60 s horizon — recurrences within a tranche are inside the horizon,
-    // grams idle longer than the TTL get evicted between tranches
-    val docs = graft.Tables.documents(spark, sf001)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-    val tranches = Seq(
-      docs.filter(col("doc_id") < 167),
-      docs.filter(col("doc_id") >= 167 && col("doc_id") < 334),
-      docs.filter(col("doc_id") >= 334))
+    // event-time axis; recurrences within a tranche are inside the
+    // horizon, grams idle longer than the TTL get evicted between tranches
+    val (docs, tranches) = docTranches
     val allMarked = dupMarkedWithin(docs)
     val distinctGrams = dupGramRel(docs).select("gh").distinct().count()
 
-    val got = mutable.Buffer.empty[(Long, Long)]
-    val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
+    val got = new Batches[(Long, Long)]
+    val tracker = mutable.Buffer.empty[StateOperatorProgress]
     tranches.foreach { t =>
-      appendDocTranche(t, dir)
+      ShardLayout.Corpus.append(t, dir)
       runBoundedDupTranche(dir, s"$base/ckpt", got, tracker)
     }
 
-    val g = got.synchronized(got.toSet)
+    val g = got.rows.toSet
     // sound: never marks a position the full-history batch answer doesn't
     assert(g.subsetOf(allMarked),
       s"false marks: ${g.diff(allMarked).take(5)} not in the batch dup set")
@@ -1044,9 +781,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       s"missed in-horizon marks: ${inTranche.diff(g).take(5)}")
     // the plateau: TTL eviction ran, and per-gram state never approached
     // one row per distinct window ever seen (the unbounded form's cost)
-    assert(tracker.nonEmpty, "tracker progress must be observable")
-    assert(tracker.map(_.numRowsRemoved).sum > 0, "TTL must evict state rows")
-    val maxState = tracker.map(_.numRowsTotal).max
+    val progress = tracker.toVector
+    assert(progress.nonEmpty, "tracker progress must be observable")
+    assert(progress.map(_.numRowsRemoved).sum > 0, "TTL must evict state rows")
+    val maxState = progress.map(_.numRowsTotal).max
     assert(maxState > 0 && maxState < distinctGrams,
       s"state grew to $maxState of $distinctGrams distinct windows — unbounded")
   }
@@ -1075,14 +813,14 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       docs.filter(col("doc_id") >= 160))
     val distinctGrams = dupGramRel(docs).select("gh").distinct().count()
 
-    val got = mutable.Buffer.empty[(Long, Long)]
-    val tracker = mutable.Buffer.empty[org.apache.spark.sql.streaming.StateOperatorProgress]
+    val got = new Batches[(Long, Long)]
+    val tracker = mutable.Buffer.empty[StateOperatorProgress]
     tranches.foreach { t =>
-      appendDocTranche(t, dir)
+      ShardLayout.Corpus.append(t, dir)
       runBoundedDupTranche(dir, s"$base/ckpt", got, tracker)
     }
 
-    assert(got.synchronized(got.isEmpty), s"unique corpus must mark nothing, got ${got.take(5)}")
+    assert(got.rows.isEmpty, s"unique corpus must mark nothing, got ${got.rows.take(5)}")
     assert(tracker.map(_.numRowsRemoved).sum > 0,
       "TTL must evict even when no duplicate ever advances the marks-side watermark")
     val lastState = tracker.last.numRowsTotal
@@ -1098,18 +836,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     val events = graft.Tables.events(spark, sf001)
-    val tsCuts = events
-      .selectExpr("percentile(cast(ts as double), array(0.3333, 0.6667)) as c")
-      .head().getSeq[Double](0)
-    def tranche(lo: Option[Double], hi: Option[Double]) = {
-      val t = events
-      val lof = lo.map(v => t.filter(col("ts").cast("double") > v)).getOrElse(t)
-      hi.map(v => lof.filter(col("ts").cast("double") <= v)).getOrElse(lof)
-    }
-    val tranches = Seq(
-      tranche(None, Some(tsCuts(0))),
-      tranche(Some(tsCuts(0)), Some(tsCuts(1))),
-      tranche(Some(tsCuts(1)), None))
+    val tranches = eventTranches
 
     ShardLayout.Events.append(tranches.head, dir, 4)
     val src = shardStream(spark, dir)
@@ -1119,22 +846,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val clicks = src.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"), col("event_id").as("c_id"))
       .withWatermark("c_ts", "1 minute")
-    val got = mutable.Buffer.empty[(Long, Long)]
-    val q = purchases.join(clicks,
+    val got = new Batches[(Long, Long)]
+    val q = start(purchases.join(clicks,
         col("user_id") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
         col("c_ts") <= col("p_ts"))
-      .select("p_id", "c_id")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
-        got.synchronized { got ++= rows }
-        ()
-      }
-      .start()
+      .select("p_id", "c_id"), s"$base/ckpt", Trigger.ProcessingTime("100 milliseconds"))(
+      got.sink(r => (r.getLong(0), r.getLong(1))))
     q.processAllAvailable()
     tranches.tail.foreach { t =>
       ShardLayout.Events.append(t, dir, 4)
@@ -1154,8 +872,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
           col("c_ts") <= col("p_ts"))
         .select("p_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toVector
     }
-    val g = got.synchronized(got.toVector)
-    g.sorted shouldBe expected.sorted
+    got.rows.sorted shouldBe expected.sorted
     // join state is evicted by the watermark: it never held every
     // purchase/click row ever seen
     val totalPc = events
@@ -1173,36 +890,17 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = newBase()
     val dir = s"$base/shards"
     val events = graft.Tables.events(spark, sf001)
-    val tsCuts = events
-      .selectExpr("percentile(cast(ts as double), array(0.3333, 0.6667)) as c")
-      .head().getSeq[Double](0)
-    def tranche(lo: Option[Double], hi: Option[Double]) = {
-      val t = events
-      val lof = lo.map(v => t.filter(col("ts").cast("double") > v)).getOrElse(t)
-      hi.map(v => lof.filter(col("ts").cast("double") <= v)).getOrElse(lof)
-    }
-    val tranches = Seq(
-      tranche(None, Some(tsCuts(0))),
-      tranche(Some(tsCuts(0)), Some(tsCuts(1))),
-      tranche(Some(tsCuts(1)), None))
+    val tranches = eventTranches
 
     ShardLayout.Events.append(tranches.head, dir, 4)
-    val got = mutable.Buffer.empty[(Long, java.sql.Timestamp, Long)]
-    val q = shardStream(spark, dir)
+    val got = new Batches[(Long, java.sql.Timestamp, Long)]
+    val q = start(shardStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "1 hour"), col("user_id"))
       .agg(min(col("ts")).as("session_start"), count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_start"), col("n_events"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = df.collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2)))
-        got.synchronized { got ++= rows }
-        ()
-      }
-      .start()
+      .select(col("user_id"), col("session_start"), col("n_events")),
+      s"$base/ckpt", Trigger.ProcessingTime("100 milliseconds"))(
+      got.sink(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))))
     q.processAllAvailable()
     tranches.tail.foreach { t =>
       ShardLayout.Events.append(t, dir, 4)
@@ -1218,7 +916,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       .select(col("user_id"), col("session_start"), col("n_events"))
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
 
-    val g = got.synchronized(got.toVector)
+    val g = got.rows
     assert(g.nonEmpty, "the advancing watermark must close and emit early sessions")
     g.size shouldBe g.toSet.size // each closed session emitted exactly once
     assert(g.toSet.subsetOf(batchSessions),
@@ -1239,26 +937,17 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val cut = ids(ids.size / 2)
     ShardLayout.Events.append(events.filter(col("event_id") <= cut), dir, 4)
 
-    val got = mutable.Buffer.empty[Long]
-    val q = shardStream(spark, dir, startingPosition = "latest")
-      .select("event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = df.collect().map(_.getLong(0))
-        got.synchronized { got ++= rows }
-        ()
-      }
-      .start()
+    val got = new Batches[Long]
+    val q = start(shardStream(spark, dir, startingPosition = "latest").select("event_id"),
+      s"$base/ckpt", Trigger.ProcessingTime("100 milliseconds"))(got.sink(_.getLong(0)))
     q.processAllAvailable()
-    got.synchronized(assert(got.isEmpty, "latest must skip everything before the subscribe point"))
+    assert(got.rows.isEmpty, "latest must skip everything before the subscribe point")
 
     // appended after open: delivered — including into a NEW shard set (8)
     ShardLayout.Events.append(events.filter(col("event_id") > cut), dir, 8)
     q.processAllAvailable()
     StreamControl.stopGracefully(q)
-    got.synchronized(got.sorted.toVector) shouldBe ids.filter(_ > cut).toVector
+    got.rows.sorted shouldBe ids.filter(_ > cut).toVector
   }
 
   test("re-sharding: stream stays complete across a shard split (4->8) and merge (8->2)") {
@@ -1274,37 +963,24 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val (c1, c2) = (ids(ids.size / 3), ids(2 * ids.size / 3))
     ShardLayout.Events.append(events.filter(col("event_id") <= c1), dir, 4)
 
-    val arrivals = mutable.Buffer.empty[(Int, Long)] // (shard, event_id)
-    val q = shardStream(spark, dir)
-      .select("shard", "event_id")
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = df.collect().map(r => (r.getInt(0), r.getLong(1)))
-        arrivals.synchronized { arrivals ++= rows }
-        ()
-      }
-      .start()
+    val arrivals = new Batches[(Int, Long)] // (shard, event_id)
+    val q = start(shardStream(spark, dir).select("shard", "event_id"), s"$base/ckpt",
+      Trigger.ProcessingTime("100 milliseconds"))(arrivals.sink(r => (r.getInt(0), r.getLong(1))))
     q.processAllAvailable()
-    arrivals.synchronized {
-      assert(arrivals.map(_._2).toSet == ids.filter(_ <= c1).toSet)
-      assert(arrivals.forall(_._1 < 4), "pre-split tranche must live in 4 shards")
-    }
+    assert(arrivals.rows.map(_._2).toSet == ids.filter(_ <= c1).toSet)
+    assert(arrivals.rows.forall(_._1 < 4), "pre-split tranche must live in 4 shards")
 
     // SPLIT 4->8: child shards appear as new dirs under the live stream
     ShardLayout.Events.append(events.filter(col("event_id") > c1 && col("event_id") <= c2), dir, 8)
     q.processAllAvailable()
-    arrivals.synchronized {
-      assert(arrivals.exists(_._1 >= 4), "split children must be discovered and consumed")
-    }
+    assert(arrivals.rows.exists(_._1 >= 4), "split children must be discovered and consumed")
 
     // MERGE 8->2: later records collapse back into two shards
     ShardLayout.Events.append(events.filter(col("event_id") > c2), dir, 2)
     q.processAllAvailable()
     StreamControl.stopGracefully(q)
 
-    val got = arrivals.synchronized(arrivals.toVector)
+    val got = arrivals.rows
     got.map(_._2).toSet shouldBe ids.toSet                 // nothing lost
     got.size shouldBe got.map(_._2).distinct.size          // nothing duplicated
     // each record observed from exactly one shard (exclusive routing)
@@ -1594,5 +1270,40 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       }
     }
     offenders shouldBe empty
+  }
+
+  test("every stream under src/test starts through StreamRuns") {
+    // the harness is the one place a spec starts a query, so an injection
+    // point added there reaches every delivery spec; a query started
+    // anywhere else in src/test is a path the harness does not cover
+    import scala.jdk.CollectionConverters._
+    val tokens = Seq("write" + "Stream", "\"checkpoint" + "Location\"")
+    val walk = Files.walk(java.nio.file.Paths.get("src/test"))
+    val offenders = try walk.iterator().asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "StreamRuns.scala")
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if tokens.exists(line.contains) => s"${f.getFileName}:${i + 1}"
+        }
+      }
+    finally walk.close()
+    offenders shouldBe empty
+  }
+}
+
+object StreamingSpec {
+
+  /** `df` whose partition-0 task fails a second into its run, after its
+    * sibling tasks (the batch's other partitions) have had time to commit.
+    */
+  def failPartitionZero(df: DataFrame): DataFrame = {
+    require(df.rdd.getNumPartitions > 1, "the failing task needs sibling tasks")
+    df.mapPartitions { (rows: Iterator[Row]) =>
+      if (org.apache.spark.TaskContext.getPartitionId() == 0) {
+        Thread.sleep(1000)
+        throw new RuntimeException("injected task failure inside the sink's write job")
+      }
+      rows
+    }(org.apache.spark.sql.Encoders.row(df.schema))
   }
 }
